@@ -10,8 +10,25 @@ Commands:
 
 - ``link``     batch linkage: transcripts parquet -> clusters + resolved
                entities + registry + lineage metrics
-- ``stream``   incremental linkage over a growing transcripts directory
+- ``stream``   incremental linkage over a growing transcripts directory;
+               raises if it does not finish within ``--timeout`` seconds
 - ``package``  build the --py-files zip
+
+``link`` writes the tables ``clusters``, ``resolved``, ``registry`` and
+``dropped_blocks`` under ``--output``, and ``metrics.json`` with the keys:
+
+- ``turns.rows``, ``pairs.candidates``, ``scored.rows``, ``scored.matches``:
+  the pipeline's row counts (``PipelineMetrics``)
+- ``n_clusters``: the number of clusters
+- ``resolve_stages``: conversations per resolve stage
+  (``sig``/``prefix``/``synonym``/``new``), stages with none left out
+- ``profile_partitions``: rows per partition of the profiles
+- ``dropped_blocks``: blocks dropped for exceeding the size cap
+
+The tail's counts (``n_clusters``, ``resolve_stages``, ``dropped_blocks``)
+are ``Observation``s on the table writes the command does anyway, so they
+add no Spark jobs; only ``profile_partitions`` runs an aggregation of its
+own.
 """
 
 from __future__ import annotations
@@ -42,11 +59,12 @@ def _cmd_package(args: argparse.Namespace) -> None:
 
 
 def _cmd_link(args: argparse.Namespace) -> None:
-    from pyspark.sql import SparkSession
+    from pyspark.sql import Observation, SparkSession
     from pyspark.sql import functions as F
 
-    from addressparser_spark.plans.pipeline import run_linkage
+    from addressparser_spark.plans.pipeline import partition_histogram, run_linkage
     from addressparser_spark.operators.resolve import (
+        RESOLVE_STAGES,
         cascade_registry_additions,
         resolve_cascade,
     )
@@ -67,29 +85,39 @@ def _cmd_link(args: argparse.Namespace) -> None:
         spark, store, iceberg_table=getattr(args, "registry_table", None)
     )
     registry = writer.read()
-    # three consumers (resolved table, registry merge, stage metrics); the
-    # try/finally releases the cache when main() is called in-process —
-    # without it a second link on the same SparkSession pins executor memory
-    resolved = resolve_cascade(result.clusters, result.profiles, registry).cache()
+    # clusters feed their own write and resolve; resolved feeds its write and
+    # the registry merge. The try/finally releases every persisted frame when
+    # main() is called in-process — without it a second link on the same
+    # SparkSession pins executor memory
+    clusters = result.clusters.cache()
+    resolved = resolve_cascade(clusters, result.profiles, registry).cache()
     try:
-        store.write("clusters", result.clusters)
-        store.write("resolved", resolved)
+        store.write("clusters", clusters)
+        # a cluster_id is its members' min conv_id: one row per cluster has
+        # conv_id == cluster_id
+        obs_resolved = Observation("resolved")
+        store.write("resolved", resolved.observe(
+            obs_resolved,
+            F.count(F.when(F.col("conv_id") == F.col("cluster_id"), 1)).alias("n_clusters"),
+            *(F.count(F.when(F.col("resolve_stage") == s, 1)).alias(s) for s in RESOLVE_STAGES),
+        ))
         writer.merge(cascade_registry_additions(resolved, result.profiles, registry))
-        store.write("dropped_blocks", result.dropped_blocks)
+        obs_dropped = Observation("dropped_blocks")
+        store.write("dropped_blocks", result.dropped_blocks.observe(
+            obs_dropped, F.count(F.lit(1)).alias("rows")
+        ))
         metrics = result.metrics.resolve()
-        metrics["n_clusters"] = result.clusters.select("cluster_id").distinct().count()
+        observed = obs_resolved.get
+        metrics["n_clusters"] = int(observed["n_clusters"])
         metrics["resolve_stages"] = {
-            r["resolve_stage"]: int(r["n"])
-            for r in resolved.groupBy("resolve_stage")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
+            s: int(observed[s]) for s in RESOLVE_STAGES if observed[s]
         }
+        metrics["profile_partitions"] = partition_histogram(result.profiles)
+        metrics["dropped_blocks"] = int(obs_dropped.get["rows"])
     finally:
-        resolved.unpersist()
-    from addressparser_spark.plans.pipeline import partition_histogram
-
-    metrics["profile_partitions"] = partition_histogram(result.profiles)
-    metrics["dropped_blocks"] = result.dropped_blocks.count()
+        for df in (resolved, clusters, result.scored, result.pairs,
+                   result.blocks, result.profiles):
+            df.unpersist()
     with open(os.path.join(args.output, "metrics.json"), "w") as f:
         json.dump(metrics, f)
     print(json.dumps(metrics))
@@ -108,7 +136,11 @@ def _cmd_stream(args: argparse.Namespace) -> None:
         registry_dir=os.path.join(args.output, "registry"),
         checkpoint_dir=os.path.join(args.output, "stream_checkpoint"),
     )
-    q.awaitTermination(args.timeout)
+    if not q.awaitTermination(args.timeout):
+        # the query runs availableNow: a timeout means a partial result,
+        # which must not exit 0
+        q.stop()
+        raise TimeoutError(f"stream did not finish within {args.timeout}s")
 
 
 def main(argv: list[str] | None = None) -> None:

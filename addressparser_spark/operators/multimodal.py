@@ -337,10 +337,12 @@ def _gif_content(payload: bytes) -> tuple[float, int, float] | None:
 
     The first compressed-codec content decoder: walks the logical screen
     descriptor + global color table, skips extension blocks, reads the
-    first non-interlaced image descriptor (local palette honored), LZW-
-    decodes the index stream and maps indices through the palette to luma
-    ``(r + g + b) // 3``. Anything else (interlace, truncation, bad codes,
-    out-of-palette indices) returns None — header dims still come from
+    first image descriptor (local palette honored), LZW-decodes the index
+    stream and maps indices through the palette to luma
+    ``(r + g + b) // 3``. Interlaced images decode too: interlace only
+    permutes row order, and all three stats are order-invariant folds over
+    the pixels. Anything else (truncation, bad codes, out-of-palette
+    indices, no palette) returns None — header dims still come from
     ``_gif_dims``, so stats degrade to NULL, never to a crash. Rounding is
     the same integer half-up at 6 decimals as ``_wav_content`` (pixel
     counts here make exact ties reachable).

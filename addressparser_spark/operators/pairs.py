@@ -69,6 +69,13 @@ def candidate_pairs(
     blocks on the plain path. The pair SET is identical either way (salting
     only re-partitions the enumeration), so every downstream oracle is
     unaffected.
+
+    The probe is eager: ``salt_hot_blocks=None`` runs one Spark job when
+    this function is called, not when the returned frame is used. On an
+    un-persisted ``blocks`` that job recomputes the whole block lineage.
+    ``run_linkage`` hands in a view of its already-persisted block table
+    (with ``persist=False``), so the probe's job fills that one copy and
+    the MinHash lineage is not recomputed for it.
     """
     if persist:
         blocks = blocks.persist(StorageLevel.MEMORY_AND_DISK)

@@ -28,6 +28,9 @@ CASCADE_REGISTRY_SCHEMA = (
     "syn_key string"
 )
 
+# the values of ``resolve_cascade``'s ``resolve_stage``, strongest first
+RESOLVE_STAGES = ("sig", "prefix", "synonym", "new")
+
 
 def cluster_representatives(clusters: DataFrame, profiles: DataFrame) -> DataFrame:
     """(cluster_id, rep_conv_id, sig): one row per cluster.

@@ -15,9 +15,9 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation
-from pyspark.sql import functions as F
-
 from pyspark.sql import Window
+from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from ..operators import blocking, pairs as pairs_op, scoring
 from ..operators.clustering import assign_clusters, connected_components
@@ -92,13 +92,16 @@ def heavy_pairs(profiles: DataFrame, num_hashes: int, rows_per_band: int,
     """Heavy stage candidates: prefix + MinHash keys only, same-sig pairs
     dropped (the light stage already linked them).
 
-    Pass ``blocks`` (a possibly-persisted full block table) to reuse the
-    MinHash computation across consumers instead of re-deriving it.
+    Pass ``blocks`` (an already-persisted full block table) to reuse the
+    MinHash computation across consumers instead of re-deriving it; the
+    caller then owns its persistence. Without it the block table is built
+    here and persisted by ``candidate_pairs``.
     """
-    if blocks is None:
+    owned = blocks is None
+    if owned:
         blocks = blocking.block_table(profiles, num_hashes, rows_per_band)
     blocks = blocks.filter(F.col("src") != "sig")
-    cand = pairs_op.candidate_pairs(blocks, max_block_size)
+    cand = pairs_op.candidate_pairs(blocks, max_block_size, persist=owned)
     sigs_a = profiles.select(F.col("conv_id").alias("conv_a"), F.col("sig").alias("_sig_a"))
     sigs_b = profiles.select(F.col("conv_id").alias("conv_b"), F.col("sig").alias("_sig_b"))
     return (
@@ -163,6 +166,12 @@ def run_linkage(
     search re-expressed set-based. Cluster output is identical either way
     (same-sig pairs would score 'exact' anyway); the funnel just removes
     them from the quadratic stage.
+
+    The full block table is persisted once (``MEMORY_AND_DISK``) and shared
+    by the cap split (``dropped_blocks``) and the pair generation, so the
+    MinHash sketch and explode run once per pipeline. The caller releases
+    the persisted frames (``profiles``, ``blocks``, ``pairs``, ``scored``)
+    when it is done with them.
     """
     metrics = PipelineMetrics()
 
@@ -172,15 +181,17 @@ def run_linkage(
     metrics.observations["turns"] = obs_turns
 
     profiles = blocking.conv_profiles(turns).cache()
-    blocks = blocking.block_table(profiles, num_hashes, rows_per_band)
-    kept, dropped = pairs_op.capped_blocks(blocks, max_block_size)
+    # the MinHash sketch+explode is the most expensive blocking step: persist
+    # it once so the cap split and the pair generation both read this copy
+    blocks = blocking.block_table(profiles, num_hashes, rows_per_band).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    _, dropped = pairs_op.capped_blocks(blocks, max_block_size)
     if escalate:
-        # reuse the block table computed above: the MinHash sketch+explode is
-        # the most expensive blocking step and must run once per pipeline
         cand = heavy_pairs(profiles, num_hashes, rows_per_band, max_block_size,
                            blocks=blocks)
     else:
-        cand = pairs_op.candidate_pairs(blocks, max_block_size)
+        cand = pairs_op.candidate_pairs(blocks, max_block_size, persist=False)
     obs_pairs = Observation("pairs")
     cand = cand.observe(obs_pairs, F.count(F.lit(1)).alias("candidates")).cache()
     metrics.observations["pairs"] = obs_pairs

@@ -18,8 +18,10 @@ Nothing else in the engine imports a storage library directly.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def read_parallel(spark: SparkSession, path: str) -> DataFrame:
@@ -80,7 +82,10 @@ class TableStore:
     def read_or_empty(self, name: str, schema: str) -> DataFrame:
         if self.exists(name):
             return self.read(name)
-        return self.spark.createDataFrame([], schema)
+        # the false filter makes it an empty LocalRelation to Catalyst, which
+        # then prunes every join, aggregate and union over it (an empty
+        # registry costs no jobs) instead of scanning an empty parallelize
+        return self.spark.createDataFrame([], schema).where(F.lit(False))
 
     def write(self, name: str, df: DataFrame, partition_by: list[str] | None = None) -> None:
         w = df.write.mode("overwrite")
@@ -124,10 +129,14 @@ class TableStore:
         return self.spark.table(name)
 
     def replace(self, name: str, df: DataFrame) -> None:
-        """Overwrite a table that ``df`` may itself read from (stage + swap)."""
-        staged = self._path(name) + ".staging"
-        df.write.mode("overwrite").parquet(staged)
-        self.spark.read.parquet(staged).write.mode("overwrite").parquet(self._path(name))
-        import shutil
+        """Overwrite a table that ``df`` may itself read from (stage + swap).
 
-        shutil.rmtree(staged, ignore_errors=True)
+        ``df`` is written in full to ``<name>.staging`` first, so every read
+        of the old table is over before it is touched; the staged directory
+        then replaces the target by a rename, with no second Spark write.
+        """
+        target = self._path(name)
+        staged = target + ".staging"
+        df.write.mode("overwrite").parquet(staged)
+        shutil.rmtree(target, ignore_errors=True)
+        os.rename(staged, target)

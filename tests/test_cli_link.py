@@ -9,20 +9,51 @@ the idempotent-rerun guarantee the deterministic md5 ids exist for.
 from __future__ import annotations
 
 import json
+import shutil
+
+import pytest
 
 from addressparser_spark import cli
 
 
-def test_link_twice_resolves_from_registry(spark, tmp_path, capsys):
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.fixture(scope="module")
+def first_link(spark, sf_dir, tmp_path_factory):
+    """One `link` into an empty registry: (transcripts dir, output dir,
+    metrics, whether the session's cache was empty afterwards)."""
     # the CLI consumes a transcripts parquet; derive one from the test data
     from addressparser_spark.data.transcripts import transcripts_df
 
-    tdir = str(tmp_path / "transcripts")
-    transcripts_df(spark, "/root/testdata/sf0.001").write.parquet(tdir)
-    out = tmp_path / "out"
-
+    base = tmp_path_factory.mktemp("cli_link")
+    tdir = str(base / "transcripts")
+    transcripts_df(spark, sf_dir).write.parquet(tdir)
+    out = base / "out"
+    spark.catalog.clearCache()  # frames other tests left cached
     cli.main(["link", "--input", tdir, "--output", str(out)])
-    m1 = json.loads(open(out / "metrics.json").read())
+    released = _cache_empty(spark)
+    metrics = json.loads(open(out / "metrics.json").read())
+    return tdir, out, metrics, released
+
+
+def test_link_releases_every_persisted_frame(first_link):
+    # a second in-process link must not find the first one's frames pinned
+    assert first_link[3]
+
+
+def test_observed_metrics_match_written_tables(spark, first_link):
+    _, out, m, _ = first_link
+    clusters = spark.read.parquet(str(out / "clusters"))
+    assert m["n_clusters"] == clusters.select("cluster_id").distinct().count()
+    assert m["dropped_blocks"] == spark.read.parquet(str(out / "dropped_blocks")).count()
+    resolved = spark.read.parquet(str(out / "resolved"))
+    assert sum(m["resolve_stages"].values()) == resolved.count()
+
+
+def test_link_twice_resolves_from_registry(spark, tmp_path, first_link):
+    tdir, out, m1, _ = first_link
     assert m1["resolve_stages"] == {"new": 167}
     assert m1["n_clusters"] == 117  # 100 base + 17 _d1 hard-negative singletons
 
@@ -33,8 +64,6 @@ def test_link_twice_resolves_from_registry(spark, tmp_path, capsys):
 
     out2 = tmp_path / "out2"
     # second run: same input, registry carried over from run 1
-    import shutil
-
     shutil.copytree(out / "registry", out2 / "registry")
     cli.main(["link", "--input", tdir, "--output", str(out2)])
     m2 = json.loads(open(out2 / "metrics.json").read())
@@ -51,3 +80,24 @@ def test_link_twice_resolves_from_registry(spark, tmp_path, capsys):
     reg2 = spark.read.parquet(str(out2 / "registry"))
     assert reg1.count() == reg2.count() == 117
     assert set(reg2.columns) >= {"entity_id", "rep_conv_id", "sig", "prefix_key", "syn_key"}
+
+
+def test_stream_raises_on_timeout(spark, tmp_path, monkeypatch):
+    """`cli stream` must not exit 0 when its query did not finish."""
+    from addressparser_spark.streaming import incremental
+
+    class Unfinished:
+        stopped = False
+
+        def awaitTermination(self, timeout):
+            return False  # still running when the timeout elapsed
+
+        def stop(self):
+            self.stopped = True
+
+    q = Unfinished()
+    monkeypatch.setattr(incremental, "incremental_linkage", lambda *a, **k: q)
+    with pytest.raises(TimeoutError):
+        cli.main(["stream", "--input", str(tmp_path), "--output", str(tmp_path),
+                  "--timeout", "1"])
+    assert q.stopped
