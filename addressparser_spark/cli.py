@@ -4,7 +4,12 @@ Deployment shape per the north rule: zip the package
 (``python -m addressparser_spark.cli package /tmp/engine.zip``), then
 
     spark-submit --py-files /tmp/engine.zip \
+        --jars addressparser_spark/jars/jw-udf.jar \
         -m ... cli.py link --input <transcripts> --output <dir>
+
+``link`` and ``stream`` score pairs with the JVM kernels in that jar and
+raise ``RuntimeError`` before running any job when it is not on the
+classpath.
 
 Commands:
 
@@ -50,12 +55,10 @@ def _cmd_package(args: argparse.Namespace) -> None:
                     full = os.path.join(root, f)
                     z.write(full, os.path.relpath(full, repo_root))
     print(args.out)
+    # the JVM scoring kernels ride --jars (a --py-files zip is not on the JVM
+    # classpath); link and stream raise without them
     jar = os.path.join(pkg_root, "jars", "jw-udf.jar")
-    if os.path.exists(jar):
-        # the JVM scoring kernels ride --jars (a --py-files zip is not on the
-        # JVM classpath); without it the engine silently uses the
-        # value-identical Catalyst/pandas fallbacks
-        print(f"hint: add --jars {jar} for the JVM scoring kernels", file=sys.stderr)
+    print(f"hint: add --jars {jar} (required by link and stream)", file=sys.stderr)
 
 
 def _cmd_link(args: argparse.Namespace) -> None:
@@ -68,16 +71,19 @@ def _cmd_link(args: argparse.Namespace) -> None:
         cascade_registry_additions,
         resolve_cascade,
     )
+    from addressparser_spark.session import register_kernels
     from addressparser_spark.sources.registry_writer import registry_writer
     from addressparser_spark.sources.tables import TableStore
 
+    # a bare builder, not get_spark: spark-submit's --master and --jars must
+    # win over get_spark's local master and spark.jars
     spark = SparkSession.builder.appName("transcript-linkage").getOrCreate()
+    register_kernels(spark)
     store = TableStore(spark, args.output)
     transcripts = spark.read.parquet(args.input)
     result = run_linkage(
         transcripts,
         checkpoint_dir=os.path.join(args.output, "cc_checkpoints"),
-        with_jw=not args.no_jw,
     )
     # MERGE seam: Iceberg MERGE INTO when --registry-table names a catalog
     # table and the jar is present; parquet anti-join+union emulation here
@@ -126,9 +132,12 @@ def _cmd_link(args: argparse.Namespace) -> None:
 def _cmd_stream(args: argparse.Namespace) -> None:
     from pyspark.sql import SparkSession
 
+    from addressparser_spark.session import register_kernels
     from addressparser_spark.streaming.incremental import incremental_linkage
 
     spark = SparkSession.builder.appName("transcript-linkage-stream").getOrCreate()
+    # the stream's edge-only scoring plan still calls intersect_count_java
+    register_kernels(spark)
     q = incremental_linkage(
         spark,
         input_dir=args.input,
@@ -154,7 +163,6 @@ def main(argv: list[str] | None = None) -> None:
     ln = sub.add_parser("link", help="batch linkage")
     ln.add_argument("--input", required=True)
     ln.add_argument("--output", required=True)
-    ln.add_argument("--no-jw", action="store_true")
     ln.add_argument(
         "--registry-table",
         default=None,

@@ -1,55 +1,19 @@
-"""Pairwise string-similarity functions.
+"""Pure-Python Jaro-Winkler: the reference the JVM kernel is tested against.
 
-- Token/shingle-set Jaccard + containment: pure Catalyst array expressions.
-- Levenshtein: Spark built-in (JVM, ``F.levenshtein``) — never Python.
-- Jaro-Winkler: Spark has no built-in, so it ships as a compiled JVM UDF
-  (``java/JaroWinkler.java`` -> ``jars/jw-udf.jar``, registered as
-  ``jw_java`` by ``session.get_spark``): no Python workers, no Arrow hop —
-  the pairwise scoring stage stays entirely JVM-side, which is what lets its
-  throughput scale linearly with cores. When the jar is absent the
-  Arrow-batched pandas UDF below is the fallback (never a row-at-a-time
-  ``F.udf``), mirroring the reference's pairwise comparator slot
-  (``AddressComparer.cs:107-268``). Both implementations match the classic
-  Winkler formulation (prefix<=4, p=0.1, boost only when jaro > 0.7) with the
-  same IEEE-754 operation order — and DuckDB's ``jaro_winkler_similarity``
-  computes the identical value, letting the driver oracle verify either path
-  bit-for-bit (tests/test_similarity_jvm.py proves three-way equality).
+Pairwise scoring computes Jaro-Winkler in the JVM (``java/JaroWinkler.java``,
+called by the fused ``text_sim_java`` kernel in ``operators/scoring.py``);
+Spark has no built-in. This module keeps the same algorithm in plain Python —
+the classic Winkler formulation (prefix<=4, p=0.1, boost only when
+jaro > 0.7) with the same IEEE-754 operation order — so the tests can check
+the kernel bit-for-bit against it and against DuckDB's
+``jaro_winkler_similarity`` (``tests/test_similarity_jvm.py``,
+``tests/test_properties.py``). It mirrors the reference's pairwise
+comparator slot (``AddressComparer.cs:107-268``).
 """
 
 from __future__ import annotations
 
 from bisect import bisect_left
-
-import pandas as pd
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
-
-
-def jaccard_col(a: Column, b: Column) -> Column:
-    """Set Jaccard of two array columns (JVM-side)."""
-    inter = F.size(F.array_intersect(a, b))
-    union = F.size(F.array_union(a, b))
-    return F.when(union == 0, F.lit(1.0)).otherwise(inter / union)
-
-
-def containment_col(a: Column, b: Column) -> Column:
-    """|A ∩ B| / min(|A|,|B|) — high when one side is a truncation of the other."""
-    inter = F.size(F.array_intersect(a, b))
-    m = F.least(F.size(a), F.size(b))
-    return F.when(m == 0, F.lit(1.0)).otherwise(inter / m)
-
-
-def levenshtein_sim_col(a: Column, b: Column, max_len: int = 96) -> Column:
-    """Normalized Levenshtein similarity on length-capped prefixes (JVM).
-
-    The cap bounds the O(n*m) DP the same way the reference chunks queries at
-    150 chars (``Parser.cs:43-57``).
-    """
-    ta, tb = F.substring(a, 1, max_len), F.substring(b, 1, max_len)
-    mx = F.greatest(F.length(ta), F.length(tb))
-    return F.when(mx == 0, F.lit(1.0)).otherwise(1.0 - F.levenshtein(ta, tb) / mx)
 
 
 def _jaro(s1: str, s2: str) -> float:
@@ -111,26 +75,3 @@ def jaro_winkler_py(s1: str | None, s2: str | None) -> float:
             prefix += 1
         jaro += prefix * 0.1 * (1.0 - jaro)
     return jaro
-
-
-@F.pandas_udf(DoubleType())
-def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series([jaro_winkler_py(x, y) for x, y in zip(a, b)], dtype="float64")
-
-
-def jaro_winkler_col(a: Column, b: Column, max_len: int = 96) -> Column:
-    """JW on length-capped prefixes: JVM UDF when registered, pandas fallback.
-
-    The two paths are bit-identical (same algorithm, same double op order),
-    so which one a session ends up with never changes results — only whether
-    the scoring stage needs Python workers.
-    """
-    from pyspark.sql import SparkSession
-
-    from ..session import JW_FUNC, register_jw
-
-    ta, tb = F.substring(a, 1, max_len), F.substring(b, 1, max_len)
-    spark = SparkSession.getActiveSession()
-    if spark is not None and register_jw(spark):
-        return F.call_function(JW_FUNC, ta, tb)
-    return jaro_winkler_udf(ta, tb)

@@ -783,10 +783,10 @@ def _flac_content(payload: bytes) -> tuple[float, int, float] | None:
         if payload[off : off + 1] != b"\x02":  # subframe: 0 pad, VERBATIM, no waste
             return None
         off += 1
+        if off + blocksize + 2 > len(payload):
+            return None  # truncated samples or frame CRC-16 footer
         samples = payload[off : off + blocksize]
-        if len(samples) < blocksize:
-            return None
-        off += blocksize + 2  # skip frame CRC-16
+        off += blocksize + 2  # skip frame CRC-16 (bounds-checked, not verified)
         total_sum += sum(samples)
         nz += blocksize - samples.count(0)
         m = max(samples)

@@ -16,22 +16,20 @@ Verdicts (first match wins):
 
 ``jaccard``/``containment`` derive from one set-intersection count per pair;
 ``lev_sim`` is normalized capped-prefix Levenshtein; ``jw`` is Jaro-Winkler.
-All three run as compiled JVM kernels when the shipped jar is loaded
-(``java/``: merge-walk intersect over sorted hashes, two-row-DP Levenshtein,
-Jaro-Winkler — value-identical to the Catalyst/pandas fallbacks, no Python
-workers, no per-row hash-set allocation; that allocation churn was the
-measured cause of sub-linear core scaling). The cascade itself depends only
-on sig/jaccard/containment, so the verdict is reproducible in the ANSI-SQL
-oracle.
+All three run as compiled JVM kernels from the shipped jar (``java/``:
+merge-walk intersect over sorted hashes, and one fused kernel for
+two-row-DP Levenshtein plus Jaro-Winkler) — no Python workers and no per-row
+hash-set allocation, whose churn was the measured cause of sub-linear core
+scaling. The cascade itself depends only on sig/jaccard/containment, so the
+verdict is reproducible in the ANSI-SQL oracle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.similarity import jaro_winkler_col, levenshtein_sim_col
-from ..session import INTERSECT_FUNC, LEVSIM_FUNC, TEXTSIM_FUNC, register_jw
+from ..session import INTERSECT_FUNC, TEXTSIM_FUNC
 
 JACCARD_NEAR = 0.9
 CONTAIN_NEAR = 0.9
@@ -61,10 +59,9 @@ def _slim_profiles(profiles: DataFrame) -> DataFrame:
 def score_pairs(
     pairs: DataFrame,
     profiles: DataFrame,
-    with_jw: bool = True,
     broadcast_profiles: bool = False,
 ) -> DataFrame:
-    """(conv_a, conv_b, jaccard, containment, lev_sim[, jw], verdict).
+    """(conv_a, conv_b, jaccard, containment, lev_sim, jw, verdict).
 
     Join strategy is pinned explicitly: Catalyst misestimates the exploded
     pair side (Generate keeps the pre-explode row count), which can flip the
@@ -93,17 +90,9 @@ def score_pairs(
     )
     # one set-intersection count per pair; Jaccard and containment both derive
     # from it arithmetically (|A∪B| = |A|+|B|-|A∩B| since the sets are
-    # distinct) — no array_union materialization. JVM merge-walk kernel over
-    # the sorted sh_hash arrays when available; array_intersect fallback is
-    # value-identical (sortedness doesn't change set overlap).
-    spark = SparkSession.getActiveSession()
-    use_jvm = spark is not None and register_jw(spark)
-    inter = (
-        F.call_function(INTERSECT_FUNC, F.col("sh_a"), F.col("sh_b"))
-        if use_jvm
-        else F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    )
-    j = j.withColumn("inter", inter)
+    # distinct) — no array_union materialization. The JVM merge-walk kernel
+    # needs the sh_hash arrays sorted (blocking.conv_profiles sorts them).
+    j = j.withColumn("inter", F.call_function(INTERSECT_FUNC, F.col("sh_a"), F.col("sh_b")))
     na, nb = F.size("sh_a"), F.size("sh_b")
     union = na + nb - F.col("inter")
     j = j.withColumn(
@@ -119,33 +108,15 @@ def score_pairs(
             6,
         ),
     )
-    if use_jvm and with_jw:
-        # fused kernel: one string decode yields [lev_sim, jw] — halves the
-        # per-pair allocation rate, which is what GC-bound core scaling sees
-        j = j.withColumn(
-            "ts", F.call_function(TEXTSIM_FUNC, F.col("text_a"), F.col("text_b"))
-        )
-        # null alignment with the unfused paths: TextSim returns NULL for a
-        # null input (it cannot carry per-element nulls in double[]), while
-        # the standalone JaroWinkler kernel and the pandas fallback define
-        # jw(null) = 0.0 and LevSim defines lev_sim(null) = null — so jw is
-        # coalesced here and lev_sim is left null-propagating.
-        j = j.withColumn("lev_sim", F.round(F.col("ts")[0], 6)).withColumn(
-            "jw", F.round(F.coalesce(F.col("ts")[1], F.lit(0.0)), 6)
-        )
-    elif use_jvm:
-        j = j.withColumn(
-            "lev_sim",
-            F.round(F.call_function(LEVSIM_FUNC, F.col("text_a"), F.col("text_b")), 6),
-        )
-    else:
-        j = j.withColumn(
-            "lev_sim", F.round(levenshtein_sim_col(F.col("text_a"), F.col("text_b")), 6)
-        )
-        if with_jw:
-            j = j.withColumn(
-                "jw", F.round(jaro_winkler_col(F.col("text_a"), F.col("text_b")), 6)
-            )
+    # fused kernel: one string decode per side yields [lev_sim, jw], which
+    # keeps the per-pair allocation rate (what GC-bound core scaling sees) low
+    j = j.withColumn("ts", F.call_function(TEXTSIM_FUNC, F.col("text_a"), F.col("text_b")))
+    # null contract: a null text gives lev_sim null and jw 0.0. TextSim
+    # returns NULL for a null input (a double[] cannot carry per-element
+    # nulls), so lev_sim propagates it and jw is coalesced.
+    j = j.withColumn("lev_sim", F.round(F.col("ts")[0], 6)).withColumn(
+        "jw", F.round(F.coalesce(F.col("ts")[1], F.lit(0.0)), 6)
+    )
     verdict = (
         F.when(F.col("sig_a") == F.col("sig_b"), "exact")
         .when(F.col("jaccard") >= JACCARD_NEAR, "near_dup")
@@ -153,8 +124,9 @@ def score_pairs(
         .when(F.col("jaccard") >= JACCARD_PARTIAL, "partial")
         .otherwise("far")
     )
-    cols = ["conv_a", "conv_b", "jaccard", "containment", "lev_sim"] + (["jw"] if with_jw else [])
-    return j.withColumn("verdict", verdict).select(*cols, "verdict")
+    return j.withColumn("verdict", verdict).select(
+        "conv_a", "conv_b", "jaccard", "containment", "lev_sim", "jw", "verdict"
+    )
 
 
 VERDICT_RANK = {"exact": 5, "near_dup": 4, "resumption": 3, "partial": 2, "far": 1}
@@ -232,4 +204,4 @@ def compare_convs(transcripts: DataFrame, conv_a: str, conv_b: str) -> DataFrame
     )
     sub = transcripts.filter(F.col("conv_id").isin(conv_a, conv_b))
     profiles = blocking.conv_profiles(blocking.normalize_turns(sub))
-    return score_pairs(pair, profiles, with_jw=True, broadcast_profiles=True)
+    return score_pairs(pair, profiles, broadcast_profiles=True)

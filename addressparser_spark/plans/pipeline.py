@@ -157,7 +157,6 @@ def run_linkage(
     num_hashes: int = blocking.NUM_HASHES,
     rows_per_band: int = blocking.ROWS_PER_BAND,
     max_block_size: int = pairs_op.MAX_BLOCK_SIZE,
-    with_jw: bool = True,
     escalate: bool = True,
 ) -> LinkageResult:
     """Full pipeline. ``escalate=True`` runs the light->heavy funnel: exact
@@ -196,7 +195,7 @@ def run_linkage(
     cand = cand.observe(obs_pairs, F.count(F.lit(1)).alias("candidates")).cache()
     metrics.observations["pairs"] = obs_pairs
 
-    scored = scoring.score_pairs(cand, profiles, with_jw=with_jw)
+    scored = scoring.score_pairs(cand, profiles)
     obs_scored = Observation("scored")
     scored = scored.observe(
         obs_scored,

@@ -67,7 +67,7 @@ def er_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def er_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _profiles(spark, sf_dir)
     cand = pairs_op.candidate_pairs(_blocks(spark, sf_dir), persist=False)
-    return scoring.score_pairs(cand, p, with_jw=True)
+    return scoring.score_pairs(cand, p)
 
 
 def _funnel_clusters(p: DataFrame, blocks: DataFrame | None = None) -> DataFrame:
@@ -78,7 +78,7 @@ def _funnel_clusters(p: DataFrame, blocks: DataFrame | None = None) -> DataFrame
 
     cand = heavy_pairs(p, blocking.NUM_HASHES, blocking.ROWS_PER_BAND,
                        pairs_op.MAX_BLOCK_SIZE, blocks=blocks)
-    scored = scoring.score_pairs(cand, p, with_jw=False)
+    scored = scoring.score_pairs(cand, p)
     return funnel_clusters_from(p, scoring.matched_edges(scored))
 
 
@@ -264,7 +264,7 @@ def er_choose_candidate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R1 proper: multi-feature ranking cascade — one composed row_number."""
     p = _profiles(spark, sf_dir)
     cand = pairs_op.candidate_pairs(_blocks(spark, sf_dir), persist=False)
-    scored = scoring.score_pairs(cand, p, with_jw=True)
+    scored = scoring.score_pairs(cand, p)
     return scoring.choose_candidate(scored, p)
 
 

@@ -3,7 +3,8 @@
 Local-mode settings mirror what a 1000-executor cluster deployment would set
 per-executor: AQE on (skew-join splitting for hot blocking keys), shuffle
 partitions sized to cores (overridden to ~2-3x total cores on a real cluster),
-Arrow enabled for the pandas-UDF scoring path, and a pinned UTC session
+Arrow enabled for the ``mapInPandas``/``applyInPandasWithState`` operators,
+the JVM scoring-kernel jar on the classpath, and a pinned UTC session
 timezone so results compare bit-for-bit against the DuckDB oracle.
 """
 
@@ -11,50 +12,40 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
+from pyspark.sql.types import ArrayType, DoubleType, IntegerType
 
-# JVM scoring-kernel jar (built by java/build.sh, committed): Jaro-Winkler,
-# merge-walk intersect count, and two-row-DP Levenshtein similarity. Loading
-# it at session build time lets the pairwise scoring stage run with zero
-# Python workers and no per-row hash-set churn — the Catalyst/pandas paths
-# remain as fallbacks when the jar is absent (e.g. spark-submit without
-# --jars). Every JVM kernel is value-identical to its fallback, so which
-# path a session gets never changes results.
+# JVM scoring-kernel jar (built by java/build.sh, committed): the merge-walk
+# intersect count and the fused [levenshtein_sim, jaro_winkler] text kernel.
+# Pairwise scoring has no other implementation, so every session that scores
+# needs it: get_spark puts it on the classpath, and spark-submit deployments
+# pass it with --jars.
 JW_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jars", "jw-udf.jar")
-JW_FUNC = "jw_java"
 INTERSECT_FUNC = "intersect_count_java"
-LEVSIM_FUNC = "lev_sim_java"
 TEXTSIM_FUNC = "text_sim_java"  # fused [lev_sim, jw] — one decode per pair
 
 _JVM_FUNCS = (
-    (JW_FUNC, "addressparser.JaroWinkler", "double"),
-    (INTERSECT_FUNC, "addressparser.IntersectCount", "int"),
-    (LEVSIM_FUNC, "addressparser.LevSim", "double"),
-    (TEXTSIM_FUNC, "addressparser.TextSim", "array<double>"),
+    (INTERSECT_FUNC, "addressparser.IntersectCount", IntegerType()),
+    (TEXTSIM_FUNC, "addressparser.TextSim", ArrayType(DoubleType())),
 )
 
 
-def register_jw(spark: SparkSession) -> bool:
-    """Register the JVM scoring kernels if the jar is loaded.
+def register_kernels(spark: SparkSession) -> None:
+    """Register the JVM scoring kernels in ``spark``; safe to call repeatedly.
 
-    Returns True when the JVM path is usable in this session. Safe to call
-    repeatedly; safe on sessions built without the jar (returns False).
+    Raises ``RuntimeError`` when a kernel class does not load, which means
+    the session was built without the jar on its classpath.
     """
-    try:
-        if spark.catalog.functionExists(JW_FUNC):
-            return True
-        from pyspark.sql.types import ArrayType, DoubleType, IntegerType
-
-        types = {
-            "double": DoubleType(),
-            "int": IntegerType(),
-            "array<double>": ArrayType(DoubleType()),
-        }
-        for name, cls, rt in _JVM_FUNCS:
-            spark.udf.registerJavaFunction(name, cls, types[rt])
-        return True
-    except Exception:
-        return False
+    for name, cls, rt in _JVM_FUNCS:
+        try:
+            spark.udf.registerJavaFunction(name, cls, rt)
+        except AnalysisException as e:
+            raise RuntimeError(
+                f"JVM scoring kernel {cls} did not load: pass "
+                f"addressparser_spark/jars/jw-udf.jar to Spark with --jars "
+                f"(get_spark loads {JW_JAR})"
+            ) from e
 
 
 def get_spark(
@@ -92,12 +83,11 @@ def get_spark(
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
+        .config("spark.jars", JW_JAR)
     )
-    if os.path.exists(JW_JAR):
-        b = b.config("spark.jars", JW_JAR)
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    register_jw(spark)
+    register_kernels(spark)
     return spark

@@ -13,10 +13,8 @@ twin — the hardest correctness gate available:
 - and the collected output must hash-match the batch oracle.
 
 A streaming engine whose answers equal the batch engine's on the same
-input is the property the reference's nightly-batch users actually need
-when they move to incremental runs (reference entry point
-``AddressParser/Program.cs:31-74`` re-runs the FULL parse nightly; the
-streaming path here replaces that with O(new data) work at equal output).
+input is what lets a batch consumer move to incremental runs: O(new data)
+work per run at equal output.
 
 Scale notes: the per-batch file split is a test-harness artifact — in
 production the source is an Iceberg/Kafka stream and the same code runs
@@ -25,6 +23,7 @@ unchanged. Nothing here collects to the driver except O(1) cut points.
 
 from __future__ import annotations
 
+import atexit
 import glob
 import os
 import shutil
@@ -170,6 +169,9 @@ def stream_incremental_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = F.crc32(F.substring("conv_id", 1, 11)) % 2
 
     work = tempfile.mkdtemp(prefix="stream_inc_linkage_")
+    # the returned frame reads out_dir lazily, so the tree lives until exit;
+    # registered now so the failure and timeout paths below are covered too
+    atexit.register(shutil.rmtree, work, ignore_errors=True)
     in_dir = os.path.join(work, "in")
     out_dir = os.path.join(work, "out")
     stage = os.path.join(work, "stage")
@@ -192,6 +194,4 @@ def stream_incremental_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise TimeoutError(
             "stream_incremental_linkage did not finish within 900s"
         )
-    # NOTE: out_dir parquet is the returned frame's backing store — the temp
-    # tree must outlive the caller's collect, so no cleanup here.
     return spark.read.parquet(out_dir).select("conv_id", "cluster_id", "entity_id")

@@ -119,7 +119,7 @@ def link_batch(
     """
     profiles = blocking.conv_profiles(blocking.normalize_turns(batch)).cache()
     cand = pairs_op.candidate_pairs(blocking.block_table(profiles))
-    scored = scoring.score_pairs(cand, profiles, with_jw=False, broadcast_profiles=True)
+    scored = scoring.score_pairs(cand, profiles, broadcast_profiles=True)
     comp = connected_components(scoring.matched_edges(scored))
     clusters = assign_clusters(profiles, comp)
     resolved = resolve_entities(clusters, profiles, registry)

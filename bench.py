@@ -154,13 +154,13 @@ def _scaling_worker(cores: int) -> None:
     """Time the pairwise-scoring stage (the metric's numerator) in isolation.
 
     Profiles are materialized (cached + counted) before the clock starts, so
-    the measured region is exactly: pair join + Jaccard/containment +
-    Levenshtein + Arrow-batched Jaro-Winkler + verdict, over a deterministic
+    the measured region is exactly: pair join + JVM-kernel Jaccard/containment
+    + Levenshtein + Jaro-Winkler + verdict, over a deterministic
     dense pair set (conv k x conv k+1..k+PAIR_FANOUT).
     """
     from addressparser_spark.data.synth import synth_transcripts
     from addressparser_spark.operators import blocking, scoring
-    from addressparser_spark.session import get_spark, register_jw
+    from addressparser_spark.session import get_spark
     from pyspark.sql import functions as F
 
     spark = get_spark(app=f"bench-scaling-{cores}", cores=cores,
@@ -171,15 +171,6 @@ def _scaling_worker(cores: int) -> None:
     t = synth_transcripts(spark, n_convs=BENCH_CONVS)
     profiles = blocking.conv_profiles(blocking.normalize_turns(t)).cache()
     profiles.count()  # materialize outside the timed region
-
-    if not register_jw(spark):
-        # pandas-UDF fallback only: warm the Python workers (process spawn +
-        # pandas import) so the timed region measures scoring, not startup.
-        # The JVM jw_java path needs no warm-up and no Python workers at all.
-        from addressparser_spark.functions.similarity import jaro_winkler_udf
-        spark.range(cores * 4, numPartitions=cores * 2).select(
-            jaro_winkler_udf(F.lit("warm"), F.lit("warm")).alias("w")
-        ).agg(F.sum("w")).collect()
 
     # parquet-cached profiles arrive in few partitions (tiny table + AQE
     # coalesce); spread BEFORE the x100 explode or the scoring stage runs on
@@ -208,9 +199,7 @@ def _scaling_worker(cores: int) -> None:
         ).filter(F.col("conv_b") < F.lit(f"conv_{BENCH_CONVS:08d}"))
 
     def _score(fanout: int) -> int:
-        scored = scoring.score_pairs(
-            _pairs(fanout), profiles, with_jw=True, broadcast_profiles=True
-        )
+        scored = scoring.score_pairs(_pairs(fanout), profiles, broadcast_profiles=True)
         # aggregate over every computed column so Catalyst can't prune the scorer
         row = scored.agg(
             F.count(F.lit(1)).alias("n"),
@@ -264,10 +253,10 @@ def _scaling_worker(cores: int) -> None:
 
 
 def _scaling_round(cores: int) -> dict:
-    # taskset pins the whole process tree (JVM + Python UDF workers) to
-    # `cores` CPUs — local[N] alone bounds only JVM task threads, while
-    # pandas-UDF workers are separate OS processes and would silently use
-    # extra cores, corrupting the N-vs-4N comparison.
+    # taskset pins the whole process tree (driver, JVM and its GC/JIT
+    # threads) to `cores` CPUs — local[N] alone bounds only JVM task threads,
+    # so the rest would silently use extra cores, corrupting the N-vs-4N
+    # comparison.
     cmd = [sys.executable, os.path.abspath(__file__), "--scaling-worker", str(cores)]
     if os.path.exists("/usr/bin/taskset"):
         cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd

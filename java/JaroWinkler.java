@@ -1,35 +1,22 @@
 package addressparser;
 
-import org.apache.spark.sql.api.java.UDF2;
-
 /**
- * Jaro-Winkler similarity as a JVM UDF — the fast path for the pairwise
- * scoring stage (the throughput numerator of the N-vs-4N scaling metric).
+ * Jaro-Winkler similarity over code points, the jw half of the fused TextSim
+ * scoring kernel.
  *
  * Exactly mirrors the Python reference implementation in
  * addressparser_spark/functions/similarity.py (classic Winkler formulation:
  * prefix &le; 4, p = 0.1, boost only when jaro &gt; 0.7), which in turn
  * matches DuckDB's jaro_winkler_similarity on ASCII input — so the driver
- * oracle keeps verifying the scored output no matter which path computed it.
- * All arithmetic is IEEE-754 double in the same operation order as the
- * Python code, and strings are compared by Unicode code point (Python str
- * semantics), so results agree bit-for-bit.
+ * oracle verifies the scored output. All arithmetic is IEEE-754 double in
+ * the same operation order as the Python code, and strings are compared by
+ * Unicode code point (Python str semantics), so results agree bit-for-bit.
  *
  * Mirrors the reference comparator slot (AddressComparer.cs:107-268): the
  * one genuinely scalar-per-pair computation in the pipeline, pushed to the
  * JVM so the scoring stage needs no Python workers at all.
  */
-public class JaroWinkler implements UDF2<String, String, Double> {
-
-    @Override
-    public Double call(String s1, String s2) {
-        if (s1 == null || s2 == null) {
-            return 0.0;
-        }
-        int[] a = s1.codePoints().toArray();
-        int[] b = s2.codePoints().toArray();
-        return jaroWinkler(a, b, s1.equals(s2));
-    }
+final class JaroWinkler {
 
     static double jaroWinkler(int[] a, int[] b, boolean equal) {
         double jaro = jaro(a, b, equal);

@@ -1,27 +1,17 @@
 package addressparser;
 
-import org.apache.spark.sql.api.java.UDF2;
-
 /**
- * Normalized Levenshtein similarity: 1 - dist / max(|a|, |b|), code points.
+ * Normalized Levenshtein similarity: 1 - dist / max(|a|, |b|), code points —
+ * the lev_sim half of the fused TextSim scoring kernel.
  *
- * Value-identical to the Catalyst expression
+ * Equal to the Catalyst expression
  *   when(mx == 0, 1.0).otherwise(1.0 - levenshtein(a, b) / mx)
  * (Spark's levenshtein is code-point based; the division is double/double),
  * but ~3-5x faster: a two-row DP over int[] code points with no UTF-8
- * re-decoding per cell. Null in -> null out, matching Catalyst null
- * propagation. Inputs are pre-capped (TEXT_CAP) by the caller, so the DP is
- * bounded.
+ * re-decoding per cell. Inputs are pre-capped (TEXT_CAP) by the caller, so
+ * the DP is bounded.
  */
-public class LevSim implements UDF2<String, String, Double> {
-
-    @Override
-    public Double call(String s1, String s2) {
-        if (s1 == null || s2 == null) {
-            return null;
-        }
-        return levSim(s1.codePoints().toArray(), s2.codePoints().toArray());
-    }
+final class LevSim {
 
     static double levSim(int[] a, int[] b) {
         int n1 = a.length;

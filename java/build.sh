@@ -1,12 +1,13 @@
 #!/bin/sh
-# Rebuild the JVM Jaro-Winkler UDF jar shipped at
-# addressparser_spark/jars/jw-udf.jar (the jar is committed so deployments
-# without a JDK still get the fast path; rerun this after editing the .java).
+# Rebuild the JVM scoring-kernel jar shipped at
+# addressparser_spark/jars/jw-udf.jar. Pairwise scoring requires it, so it is
+# committed for deployments without a JDK; rerun this after editing any
+# .java here (tests/test_similarity_jvm.py checks the jar's classes match).
 set -e
 cd "$(dirname "$0")"
 SPARK_JARS=$(python -c "import pyspark, os; print(os.path.join(os.path.dirname(pyspark.__file__), 'jars'))")
 rm -rf build
 mkdir -p build ../addressparser_spark/jars
-javac -encoding UTF-8 -cp "$SPARK_JARS/*" -d build JaroWinkler.java IntersectCount.java LevSim.java TextSim.java
+javac -encoding UTF-8 -cp "$SPARK_JARS/*" -d build *.java
 jar cf ../addressparser_spark/jars/jw-udf.jar -C build .
 echo "built ../addressparser_spark/jars/jw-udf.jar"

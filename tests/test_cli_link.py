@@ -101,3 +101,19 @@ def test_stream_raises_on_timeout(spark, tmp_path, monkeypatch):
         cli.main(["stream", "--input", str(tmp_path), "--output", str(tmp_path),
                   "--timeout", "1"])
     assert q.stopped
+
+
+@pytest.mark.parametrize("cmd", ["link", "stream"])
+def test_cli_raises_without_kernels(spark, tmp_path, monkeypatch, cmd):
+    """Without the kernel jar `link` and `stream` raise before reading their
+    input (which does not exist here), never falling back to other scoring."""
+    from pyspark.sql.types import DoubleType
+
+    from addressparser_spark import session
+
+    monkeypatch.setattr(
+        session, "_JVM_FUNCS", (("missing_java", "addressparser.DoesNotExist", DoubleType()),)
+    )
+    with pytest.raises(RuntimeError, match="jw-udf.jar"):
+        cli.main([cmd, "--input", str(tmp_path / "missing"), "--output", str(tmp_path / "out")])
+    assert not (tmp_path / "out").exists()

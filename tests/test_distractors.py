@@ -66,7 +66,7 @@ def test_synth_generator_mirrors_the_distractor_contract(spark, tmp_path):
     from addressparser_spark.plans.evaluate import pairwise_f1
 
     t = synth_transcripts(spark, n_convs=240)
-    res = run_linkage(t, checkpoint_dir=str(tmp_path / "cc"), with_jw=False)
+    res = run_linkage(t, checkpoint_dir=str(tmp_path / "cc"))
     d1 = res.scored.filter(
         F.col("conv_a").endswith("_d1") | F.col("conv_b").endswith("_d1")
     )

@@ -68,9 +68,9 @@ def test_verdicts_on_true_pairs(result):
 def test_repartition_invariance(spark, sf_dir):
     """Clusters are identical regardless of input partitioning/order."""
     t = transcripts_df(spark, sf_dir)
-    base = {r["conv_id"]: r["cluster_id"] for r in run_linkage(t, with_jw=False).clusters.collect()}
+    base = {r["conv_id"]: r["cluster_id"] for r in run_linkage(t).clusters.collect()}
     shuffled = t.repartition(13).sortWithinPartitions(F.desc("text"))
-    got = {r["conv_id"]: r["cluster_id"] for r in run_linkage(shuffled, with_jw=False).clusters.collect()}
+    got = {r["conv_id"]: r["cluster_id"] for r in run_linkage(shuffled).clusters.collect()}
     assert got == base
 
 

@@ -31,7 +31,7 @@ from addressparser_spark.sources.tables import TableStore, iceberg_available
 @pytest.fixture(scope="module")
 def linked(spark, sf_dir):
     t = transcripts_df(spark, sf_dir)
-    result = run_linkage(t, with_jw=False)
+    result = run_linkage(t)
     profiles = result.profiles
     registry = demo_registry(profiles)
     resolved = resolve_cascade(result.clusters, profiles, registry).cache()

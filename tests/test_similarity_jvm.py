@@ -1,8 +1,10 @@
-"""Three-way Jaro-Winkler parity: JVM UDF == Python reference == DuckDB.
+"""The JVM scoring kernels: parity with the Python reference and DuckDB.
 
-The JVM path (java/JaroWinkler.java) is the production fast path; the driver
-oracle compares against DuckDB. Bit-identity across all three means swapping
-paths can never flip a verdict or a driver hash.
+Pairwise scoring runs only on the kernels in ``jars/jw-udf.jar``: the fused
+``text_sim_java`` ([lev_sim, jw], java/TextSim.java) and the merge-walk
+``intersect_count_java``. The driver oracle compares against DuckDB, so the
+kernel's Jaro-Winkler must equal both ``jaro_winkler_py`` and DuckDB's
+``jaro_winkler_similarity`` bit-for-bit.
 
 Scope note: JVM == Python holds for ALL Unicode (both are codepoint-based).
 DuckDB's ``jaro_winkler_similarity`` walks UTF-8 *bytes*, so its value
@@ -13,15 +15,19 @@ ASCII (byte == codepoint), which is what the scoring path feeds it
 
 from __future__ import annotations
 
+import os
 import random
 import string
+import zipfile
 
 import duckdb
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType
 
+from addressparser_spark import session
 from addressparser_spark.functions.similarity import jaro_winkler_py
-from addressparser_spark.session import JW_FUNC, register_jw
+from addressparser_spark.session import JW_JAR, TEXTSIM_FUNC, register_kernels
 
 
 def _random_pairs(n: int, seed: int = 7, alphabet: str | None = None) -> list[tuple[str, str]]:
@@ -53,14 +59,16 @@ def _random_pairs(n: int, seed: int = 7, alphabet: str | None = None) -> list[tu
     return pairs
 
 
-def test_jvm_matches_python_and_duckdb_ascii(spark):
-    assert register_jw(spark), "JVM JW jar not loaded in test session"
-    pairs = _random_pairs(400)
+def _kernel_jw(spark, pairs: list[tuple[str, str]]) -> dict[tuple[str, str], float]:
+    # the jw column exactly as score_pairs derives it, before rounding
     df = spark.createDataFrame(pairs, ["a", "b"])
-    got = {
-        (r["a"], r["b"]): r["jw"]
-        for r in df.select("a", "b", F.call_function(JW_FUNC, "a", "b").alias("jw")).collect()
-    }
+    jw = F.coalesce(F.call_function(TEXTSIM_FUNC, "a", "b")[1], F.lit(0.0))
+    return {(r["a"], r["b"]): r["jw"] for r in df.select("a", "b", jw.alias("jw")).collect()}
+
+
+def test_jvm_matches_python_and_duckdb_ascii(spark):
+    pairs = _random_pairs(400)
+    got = _kernel_jw(spark, pairs)
     con = duckdb.connect()
     for a, b in pairs:
         py = jaro_winkler_py(a, b)
@@ -79,13 +87,8 @@ def test_jvm_matches_python_and_duckdb_ascii(spark):
 def test_jvm_matches_python_unicode(spark):
     """Codepoint semantics: JVM == Python on multi-byte text too (DuckDB is
     byte-based and intentionally excluded here)."""
-    assert register_jw(spark)
     pairs = _random_pairs(200, seed=11, alphabet=string.ascii_lowercase + " éüñ文𝕏")
-    df = spark.createDataFrame(pairs, ["a", "b"])
-    got = {
-        (r["a"], r["b"]): r["jw"]
-        for r in df.select("a", "b", F.call_function(JW_FUNC, "a", "b").alias("jw")).collect()
-    }
+    got = _kernel_jw(spark, pairs)
     for a, b in pairs:
         assert got[(a, b)] == jaro_winkler_py(a, b), (a, b)
 
@@ -113,41 +116,60 @@ def test_intersect_kernel_matches_catalyst(spark):
     assert bad.count() == 0
 
 
-def test_jvm_null_semantics(spark):
-    assert register_jw(spark)
-    df = spark.createDataFrame([("x", None), (None, None)], "a string, b string")
-    rows = df.select(F.call_function(JW_FUNC, "a", "b").alias("jw")).collect()
-    assert [r["jw"] for r in rows] == [0.0, 0.0]
+def test_score_pairs_null_text_contract(spark):
+    """score_pairs emits lev_sim null and jw 0.0 for a null text, and the
+    kernel values (rounded to 6 places) otherwise."""
+    from addressparser_spark.operators import scoring
+
+    profiles = spark.createDataFrame(
+        [("c1", "s1", [1, 2], "ab", 1), ("c2", "s2", [2, 3], "ba", 1),
+         ("c3", "s3", [3], None, 1), ("c4", "s4", [], "", 1), ("c5", "s5", [], "", 1)],
+        "conv_id string, sig string, sh_hash array<bigint>, concat_text string, n_turns int",
+    )
+    pairs = spark.createDataFrame(
+        [("c1", "c2"), ("c1", "c3"), ("c3", "c3"), ("c4", "c5")], ["conv_a", "conv_b"]
+    )
+    got = {
+        (r["conv_a"], r["conv_b"]): (r["lev_sim"], r["jw"])
+        for r in scoring.score_pairs(pairs, profiles, broadcast_profiles=True).collect()
+    }
+    assert got[("c1", "c3")] == (None, 0.0)
+    assert got[("c3", "c3")] == (None, 0.0)
+    assert got[("c1", "c2")] == (0.0, round(jaro_winkler_py("ab", "ba"), 6))
+    assert got[("c4", "c5")] == (1.0, 1.0)
 
 
-def test_fused_kernel_null_parity(spark):
-    """The fused TextSim extraction convention (scoring.py) must agree with
-    the standalone kernels on nulls: lev_sim(null)=null, jw(null)=0.0."""
-    from addressparser_spark.session import LEVSIM_FUNC, TEXTSIM_FUNC
+def test_register_kernels_raises_without_kernel_class(spark, monkeypatch):
+    """A session that cannot load a kernel fails loudly, naming the jar."""
+    monkeypatch.setattr(
+        session, "_JVM_FUNCS", (("missing_java", "addressparser.DoesNotExist", DoubleType()),)
+    )
+    with pytest.raises(RuntimeError, match="jw-udf.jar"):
+        register_kernels(spark)
 
-    assert register_jw(spark)
-    df = spark.createDataFrame(
-        [("x", None), (None, None), ("ab", "ba"), ("", "")], "a string, b string"
-    ).withColumn("ts", F.call_function(TEXTSIM_FUNC, "a", "b"))
-    rows = df.select(
-        F.col("ts")[0].alias("lev_fused"),
-        F.coalesce(F.col("ts")[1], F.lit(0.0)).alias("jw_fused"),
-        F.call_function(LEVSIM_FUNC, "a", "b").alias("lev_solo"),
-        F.call_function(JW_FUNC, "a", "b").alias("jw_solo"),
-    ).collect()
-    for r in rows:
-        assert r["lev_fused"] == r["lev_solo"], r
-        assert r["jw_fused"] == r["jw_solo"], r
+
+def test_committed_jar_matches_sources():
+    """The committed jar holds exactly one class per java/*.java source, so a
+    source added or removed without rerunning java/build.sh fails here."""
+    java_dir = os.path.join(os.path.dirname(__file__), "..", "java")
+    sources = {f[: -len(".java")] for f in os.listdir(java_dir) if f.endswith(".java")}
+    with zipfile.ZipFile(JW_JAR) as z:
+        classes = {
+            n[len("addressparser/") : -len(".class")]
+            for n in z.namelist()
+            if n.startswith("addressparser/") and n.endswith(".class")
+        }
+    assert classes == sources
 
 
 def test_score_pairs_uses_jvm_path(spark):
-    """The scoring plan must contain no Python/Arrow eval when the jar is loaded."""
+    """The scoring plan contains no Python/Arrow eval."""
     from addressparser_spark.data.transcripts import transcripts_df
     from addressparser_spark.operators import blocking, scoring
 
     t = transcripts_df(spark, "/root/testdata/sf0.001")
     p = blocking.conv_profiles(blocking.normalize_turns(t))
     pair = spark.createDataFrame([("conv_000001", "conv_000002")], ["conv_a", "conv_b"])
-    scored = scoring.score_pairs(pair, p, with_jw=True, broadcast_profiles=True)
+    scored = scoring.score_pairs(pair, p, broadcast_profiles=True)
     plan = scored._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan

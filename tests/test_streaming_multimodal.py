@@ -24,6 +24,31 @@ from addressparser_spark.streaming.incremental import (
 )
 
 
+def test_stream_incremental_linkage_removes_temp_tree(spark, sf_dir, monkeypatch):
+    """The driver query's temp tree is removed at exit, also when the stream
+    fails: the cleanup is registered before anything can raise."""
+    import atexit
+    import os
+
+    from addressparser_spark.streaming import driver_queries
+
+    registered = []
+    monkeypatch.setattr(atexit, "register", lambda fn, *a, **kw: registered.append((fn, a, kw)))
+
+    def fail(*_a, **_kw):
+        raise RuntimeError("stream failed")
+
+    monkeypatch.setattr(driver_queries, "incremental_linkage", fail)
+    with pytest.raises(RuntimeError, match="stream failed"):
+        driver_queries.stream_incremental_linkage(spark, sf_dir)
+    assert len(registered) == 1
+    fn, a, kw = registered[0]
+    work = a[0]
+    assert os.path.isdir(os.path.join(work, "in"))
+    fn(*a, **kw)
+    assert not os.path.exists(work)
+
+
 def test_incremental_linkage_two_batches(spark, sf_dir, tmp_path):
     """Feed the same conversations in two files; registry stays deduped and
     entity ids are stable across batches (content-derived, idempotent)."""
@@ -485,6 +510,10 @@ def test_flac_verbatim_decode():
     good = make_flac(600, samples=_cycle_bytes(7, 4800))
     for i in range(0, len(good), 331):
         _flac_content(good[:i])  # truncation sweep: never raises
+    # a cut inside the last frame's CRC-16 footer leaves every sample intact
+    # but is still a truncated stream
+    assert _flac_content(good[:-1]) is None
+    assert _flac_content(good[:-2]) is None
     # corrupt the first frame's CRC-8 byte: decoder must reject, not misread
     streaminfo_end = 8 + 34
     bad = bytearray(good)

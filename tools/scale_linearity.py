@@ -45,9 +45,7 @@ def run_scale(spark, n_convs: int, checkpoint_base: str) -> dict:
     t = spark.read.parquet(src)
     stages: dict[str, float] = {}
     t0 = time.monotonic()
-    result = run_linkage(
-        t, checkpoint_dir=os.path.join(checkpoint_base, f"cc_{n_convs}"), with_jw=True
-    )
+    result = run_linkage(t, checkpoint_dir=os.path.join(checkpoint_base, f"cc_{n_convs}"))
     n_profiles = result.profiles.count()
     stages["profiles"] = round(time.monotonic() - t0, 2)
 
