@@ -59,9 +59,11 @@ def _random_pairs(n: int, seed: int = 7, alphabet: str | None = None) -> list[tu
     return pairs
 
 
-def _kernel_jw(spark, pairs: list[tuple[str, str]]) -> dict[tuple[str, str], float]:
+def _kernel_jw(
+    spark, pairs: list[tuple[str | None, str | None]]
+) -> dict[tuple[str | None, str | None], float]:
     # the jw column exactly as score_pairs derives it, before rounding
-    df = spark.createDataFrame(pairs, ["a", "b"])
+    df = spark.createDataFrame(pairs, "a string, b string")
     jw = F.coalesce(F.call_function(TEXTSIM_FUNC, "a", "b")[1], F.lit(0.0))
     return {(r["a"], r["b"]): r["jw"] for r in df.select("a", "b", jw.alias("jw")).collect()}
 
@@ -114,6 +116,33 @@ def test_intersect_kernel_matches_catalyst(spark):
         F.size(F.array_intersect("a", "b")).alias("cat"),
     ).filter(F.col("jvm") != F.col("cat"))
     assert bad.count() == 0
+
+
+def test_jvm_null_semantics(spark):
+    """The kernel jw column is 0.0 when either text is null."""
+    got = _kernel_jw(spark, [("x", None), (None, None)])
+    assert list(got.values()) == [0.0, 0.0]
+
+
+def test_fused_kernel_null_parity(spark):
+    """The fused TextSim extraction convention (scoring.py) keeps the null
+    contract: lev_sim(null) is null, and jw equals ``jaro_winkler_py``, which
+    is 0.0 for a null text."""
+    rows = [("x", None), (None, None), ("ab", "ba"), ("", "")]
+    df = spark.createDataFrame(rows, "a string, b string").withColumn(
+        "ts", F.call_function(TEXTSIM_FUNC, "a", "b")
+    )
+    got = df.select(
+        "a",
+        "b",
+        F.col("ts")[0].alias("lev_fused"),
+        F.coalesce(F.col("ts")[1], F.lit(0.0)).alias("jw_fused"),
+    ).collect()
+    assert len(got) == len(rows)
+    lev_expected = {("x", None): None, (None, None): None, ("ab", "ba"): 0.0, ("", ""): 1.0}
+    for r in got:
+        assert r["lev_fused"] == lev_expected[(r["a"], r["b"])], r
+        assert r["jw_fused"] == jaro_winkler_py(r["a"], r["b"]), r
 
 
 def test_score_pairs_null_text_contract(spark):
