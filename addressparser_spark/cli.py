@@ -76,7 +76,8 @@ def _cmd_link(args: argparse.Namespace) -> None:
     from addressparser_spark.sources.tables import TableStore
 
     # a bare builder, not get_spark: spark-submit's --master and --jars must
-    # win over get_spark's local master and spark.jars
+    # win over get_spark's local master and spark.jars. score_pairs registers
+    # the kernels too; registering here fails a missing jar before any job
     spark = SparkSession.builder.appName("transcript-linkage").getOrCreate()
     register_kernels(spark)
     store = TableStore(spark, args.output)
@@ -136,7 +137,8 @@ def _cmd_stream(args: argparse.Namespace) -> None:
     from addressparser_spark.streaming.incremental import incremental_linkage
 
     spark = SparkSession.builder.appName("transcript-linkage-stream").getOrCreate()
-    # the stream's edge-only scoring plan still calls intersect_count_java
+    # fail a missing jar now, not in the first micro-batch: the stream's
+    # edge-only scoring plan still calls intersect_count_java
     register_kernels(spark)
     q = incremental_linkage(
         spark,

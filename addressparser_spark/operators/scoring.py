@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import INTERSECT_FUNC, TEXTSIM_FUNC
+from ..session import INTERSECT_FUNC, TEXTSIM_FUNC, register_kernels
 
 JACCARD_NEAR = 0.9
 CONTAIN_NEAR = 0.9
@@ -70,7 +70,11 @@ def score_pairs(
     sides exchange-partitioned, scales with executors); set
     ``broadcast_profiles=True`` when the profile batch is dimension-sized
     (incremental runs, benchmarks) to skip shuffling pair rows entirely.
+
+    Registers the kernels in the pairs' session first, so any session with
+    the jar on its classpath can score; one without it raises ``RuntimeError``.
     """
+    register_kernels(pairs.sparkSession)
     slim = _slim_profiles(profiles)
     slim = F.broadcast(slim) if broadcast_profiles else slim.hint("shuffle_hash")
     a, b = slim.alias("A"), slim.alias("B")

@@ -19,8 +19,8 @@ from pyspark.sql.types import ArrayType, DoubleType, IntegerType
 # JVM scoring-kernel jar (built by java/build.sh, committed): the merge-walk
 # intersect count and the fused [levenshtein_sim, jaro_winkler] text kernel.
 # Pairwise scoring has no other implementation, so every session that scores
-# needs it: get_spark puts it on the classpath, and spark-submit deployments
-# pass it with --jars.
+# needs it on its classpath: get_spark adds it, and spark-submit deployments
+# pass it with --jars. scoring.score_pairs registers the kernels itself.
 JW_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jars", "jw-udf.jar")
 INTERSECT_FUNC = "intersect_count_java"
 TEXTSIM_FUNC = "text_sim_java"  # fused [lev_sim, jw] — one decode per pair
@@ -34,6 +34,8 @@ _JVM_FUNCS = (
 def register_kernels(spark: SparkSession) -> None:
     """Register the JVM scoring kernels in ``spark``; safe to call repeatedly.
 
+    ``score_pairs`` calls it on every plan it builds; ``get_spark`` and
+    ``cli`` call it once more so a missing jar fails at session build.
     Raises ``RuntimeError`` when a kernel class does not load, which means
     the session was built without the jar on its classpath.
     """

@@ -15,6 +15,7 @@ ASCII (byte == codepoint), which is what the scoring path feeds it
 
 from __future__ import annotations
 
+import hashlib
 import os
 import random
 import string
@@ -124,32 +125,7 @@ def test_jvm_null_semantics(spark):
     assert list(got.values()) == [0.0, 0.0]
 
 
-def test_fused_kernel_null_parity(spark):
-    """The fused TextSim extraction convention (scoring.py) keeps the null
-    contract: lev_sim(null) is null, and jw equals ``jaro_winkler_py``, which
-    is 0.0 for a null text."""
-    rows = [("x", None), (None, None), ("ab", "ba"), ("", "")]
-    df = spark.createDataFrame(rows, "a string, b string").withColumn(
-        "ts", F.call_function(TEXTSIM_FUNC, "a", "b")
-    )
-    got = df.select(
-        "a",
-        "b",
-        F.col("ts")[0].alias("lev_fused"),
-        F.coalesce(F.col("ts")[1], F.lit(0.0)).alias("jw_fused"),
-    ).collect()
-    assert len(got) == len(rows)
-    lev_expected = {("x", None): None, (None, None): None, ("ab", "ba"): 0.0, ("", ""): 1.0}
-    for r in got:
-        assert r["lev_fused"] == lev_expected[(r["a"], r["b"])], r
-        assert r["jw_fused"] == jaro_winkler_py(r["a"], r["b"]), r
-
-
-def test_score_pairs_null_text_contract(spark):
-    """score_pairs emits lev_sim null and jw 0.0 for a null text, and the
-    kernel values (rounded to 6 places) otherwise."""
-    from addressparser_spark.operators import scoring
-
+def _null_contract_frames(spark):
     profiles = spark.createDataFrame(
         [("c1", "s1", [1, 2], "ab", 1), ("c2", "s2", [2, 3], "ba", 1),
          ("c3", "s3", [3], None, 1), ("c4", "s4", [], "", 1), ("c5", "s5", [], "", 1)],
@@ -158,6 +134,16 @@ def test_score_pairs_null_text_contract(spark):
     pairs = spark.createDataFrame(
         [("c1", "c2"), ("c1", "c3"), ("c3", "c3"), ("c4", "c5")], ["conv_a", "conv_b"]
     )
+    return pairs, profiles
+
+
+def test_fused_kernel_null_parity(spark):
+    """score_pairs keeps the fused kernel's null contract: lev_sim is null
+    and jw is 0.0 for a null text, and both are the kernel values rounded to
+    6 places otherwise."""
+    from addressparser_spark.operators import scoring
+
+    pairs, profiles = _null_contract_frames(spark)
     got = {
         (r["conv_a"], r["conv_b"]): (r["lev_sim"], r["jw"])
         for r in scoring.score_pairs(pairs, profiles, broadcast_profiles=True).collect()
@@ -166,6 +152,26 @@ def test_score_pairs_null_text_contract(spark):
     assert got[("c3", "c3")] == (None, 0.0)
     assert got[("c1", "c2")] == (0.0, round(jaro_winkler_py("ab", "ba"), 6))
     assert got[("c4", "c5")] == (1.0, 1.0)
+
+
+def test_score_pairs_registers_kernels_in_any_session(spark, monkeypatch):
+    """A session that never registered the kernels (as a driver-built one)
+    still scores when the jar is on its classpath, and raises naming the jar
+    when a kernel does not load."""
+    import __spark_entry__
+    from addressparser_spark.operators import scoring
+
+    fresh = spark.newSession()
+    assert not fresh.catalog.functionExists(TEXTSIM_FUNC)
+    scored = __spark_entry__.queries()["er_scored_pairs"](fresh, "/root/testdata/sf0.001")
+    assert scored.count() > 0
+
+    monkeypatch.setattr(
+        session, "_JVM_FUNCS", (("missing_java", "addressparser.DoesNotExist", DoubleType()),)
+    )
+    pairs, profiles = _null_contract_frames(spark.newSession())
+    with pytest.raises(RuntimeError, match="jw-udf.jar"):
+        scoring.score_pairs(pairs, profiles)
 
 
 def test_register_kernels_raises_without_kernel_class(spark, monkeypatch):
@@ -178,17 +184,26 @@ def test_register_kernels_raises_without_kernel_class(spark, monkeypatch):
 
 
 def test_committed_jar_matches_sources():
-    """The committed jar holds exactly one class per java/*.java source, so a
-    source added or removed without rerunning java/build.sh fails here."""
+    """The committed jar was built from the current java/*.java: its
+    SOURCES.sha256 manifest (written by java/build.sh) matches every source's
+    hash, and it holds one class per source. A source added, removed or
+    edited without rerunning java/build.sh fails here."""
     java_dir = os.path.join(os.path.dirname(__file__), "..", "java")
-    sources = {f[: -len(".java")] for f in os.listdir(java_dir) if f.endswith(".java")}
+    sources = sorted(f for f in os.listdir(java_dir) if f.endswith(".java"))
+    want = {}
+    for f in sources:
+        with open(os.path.join(java_dir, f), "rb") as fh:
+            want[f] = hashlib.sha256(fh.read()).hexdigest()
     with zipfile.ZipFile(JW_JAR) as z:
+        manifest = z.read("SOURCES.sha256").decode()
         classes = {
             n[len("addressparser/") : -len(".class")]
             for n in z.namelist()
             if n.startswith("addressparser/") and n.endswith(".class")
         }
-    assert classes == sources
+    built = {name: digest for digest, name in (ln.split() for ln in manifest.splitlines())}
+    assert built == want
+    assert classes == {f[: -len(".java")] for f in sources}
 
 
 def test_score_pairs_uses_jvm_path(spark):
