@@ -7,9 +7,10 @@ Deployment shape per the north rule: zip the package
         --jars addressparser_spark/jars/jw-udf.jar \
         -m ... cli.py link --input <transcripts> --output <dir>
 
-``link`` and ``stream`` score pairs with the JVM kernels in that jar and
-raise ``RuntimeError`` before running any job when it is not on the
-classpath.
+``link`` and ``stream`` block and score with the JVM kernels in that jar
+and raise ``RuntimeError`` before running any job when it is not on the
+classpath. Both set ``session.SQL_SETTINGS`` (UTC session time zone, AQE)
+on the session spark-submit built.
 
 Commands:
 
@@ -55,7 +56,7 @@ def _cmd_package(args: argparse.Namespace) -> None:
                     full = os.path.join(root, f)
                     z.write(full, os.path.relpath(full, repo_root))
     print(args.out)
-    # the JVM scoring kernels ride --jars (a --py-files zip is not on the JVM
+    # the JVM kernels ride --jars (a --py-files zip is not on the JVM
     # classpath); link and stream raise without them
     jar = os.path.join(pkg_root, "jars", "jw-udf.jar")
     print(f"hint: add --jars {jar} (required by link and stream)", file=sys.stderr)
@@ -71,14 +72,17 @@ def _cmd_link(args: argparse.Namespace) -> None:
         cascade_registry_additions,
         resolve_cascade,
     )
-    from addressparser_spark.session import register_kernels
+    from addressparser_spark.session import apply_sql_settings, register_kernels
     from addressparser_spark.sources.registry_writer import registry_writer
     from addressparser_spark.sources.tables import TableStore
 
     # a bare builder, not get_spark: spark-submit's --master and --jars must
-    # win over get_spark's local master and spark.jars. score_pairs registers
-    # the kernels too; registering here fails a missing jar before any job
+    # win over get_spark's local master and spark.jars; get_spark's runtime
+    # SQL settings (UTC, AQE) are set on it instead. The kernel columns
+    # register the kernels too; registering here fails a missing jar before
+    # any job
     spark = SparkSession.builder.appName("transcript-linkage").getOrCreate()
+    apply_sql_settings(spark)
     register_kernels(spark)
     store = TableStore(spark, args.output)
     transcripts = spark.read.parquet(args.input)
@@ -133,10 +137,11 @@ def _cmd_link(args: argparse.Namespace) -> None:
 def _cmd_stream(args: argparse.Namespace) -> None:
     from pyspark.sql import SparkSession
 
-    from addressparser_spark.session import register_kernels
+    from addressparser_spark.session import apply_sql_settings, register_kernels
     from addressparser_spark.streaming.incremental import incremental_linkage
 
     spark = SparkSession.builder.appName("transcript-linkage-stream").getOrCreate()
+    apply_sql_settings(spark)
     # fail a missing jar now, not in the first micro-batch: the stream's
     # edge-only scoring plan still calls intersect_count_java
     register_kernels(spark)

@@ -2,9 +2,9 @@
 
 Pipeline position: normalize -> **block** -> pairs -> score -> cluster.
 
-Three complementary key families, unioned (the reference likewise probes
-several key forms at once — formal/official x typed/untyped 4-way UNION,
-``Db/DataContextBase_AddrObject.cs:59-77``):
+Three complementary key families, built together (the reference likewise
+probes several key forms at once — formal/official x typed/untyped 4-way
+UNION, ``Db/DataContextBase_AddrObject.cs:59-77``):
 
 1. ``sig``     — exact signature: md5 over (role '#' norm_text) per turn,
                  '|'-joined in stable ``turn_idx`` order. Catches duplicates
@@ -15,25 +15,31 @@ several key forms at once — formal/official x typed/untyped 4-way UNION,
 3. ``mh<b>``   — MinHash LSH bands over distinct token 3-gram shingles:
                  probabilistic near-duplicate recall.
 
-All expressions are Catalyst-native (md5/min/array ops on the JVM); the only
-shuffle is one groupBy(conv_id) to build signatures, plus one per-band
-explode. Hot blocking keys are handled downstream by the block-size cap +
-AQE skew-join (see pairs.py).
+The only shuffle is the groupBy(conv_id) that builds the profiles. The
+block table is one narrow projection of them: the MinHash sketch is one JVM
+kernel call per conversation (``minhash_md5``, java/MinHashMd5.java; no
+shingle explode, no aggregation), and one explode over an array of
+``(src, block_key)`` structs emits every key family in a single scan. Each
+block row carries its conversation's ``sig`` so the heavy stage can drop
+same-sig pairs without joining the profiles again. Hot blocking keys are
+handled downstream by the block-size cap + AQE skew-join (see pairs.py).
 
 Scale notes (100 TB): signatures are one map-side-combinable aggregation over
 conv_id — convs are bounded (<=~10^3 turns), so collect_list per key is safe;
-the explode for MinHash multiplies rows by NUM_HASHES only on the *distinct
-shingle* level, and band keys are fixed-width md5 strings that hash-partition
-uniformly.
+the sketch costs NUM_HASHES md5s per distinct shingle inside one task, with
+no row multiplication; the block table has 2 + NUM_HASHES/ROWS_PER_BAND rows
+per conversation, and band keys are fixed-width md5 strings that
+hash-partition uniformly.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.normalize import normalize_col
 from ..functions.tokens import distinct_shingles_col, tokens_col
+from ..session import MINHASH_FUNC, kernel
 
 NUM_HASHES = 16
 ROWS_PER_BAND = 2
@@ -90,7 +96,7 @@ def conv_profiles(turns_norm: DataFrame) -> DataFrame:
     # per-row hash set — java/IntersectCount.java) can consume them directly.
     # The STRING shingle set is deliberately NOT kept in the profile: it
     # nearly doubles the cached/shuffled row (it's the text re-materialized)
-    # and only minhash_signature needs it — that one consumer re-derives it
+    # and only the MinHash sketch needs it — that one consumer re-derives it
     # from ``tokens`` (a cheap zip_with) instead.
     prof = prof.withColumn("shingles", distinct_shingles_col(F.col("tokens"), SHINGLE_K))
     prof = prof.withColumn(
@@ -102,56 +108,67 @@ def conv_profiles(turns_norm: DataFrame) -> DataFrame:
     )
 
 
-def minhash_signature(
-    profiles: DataFrame, num_hashes: int = NUM_HASHES
-) -> DataFrame:
-    """(conv_id, mh_00..mh_NN): per-hash-family lexicographic-min of
-    md5('<i>|' || shingle). md5-hex min is an order-preserving stand-in for
-    integer MinHash and is reproducible in any engine (the DuckDB oracle
-    computes the identical value).
+def minhash_col(spark: SparkSession, shingles: Column, num_hashes: int) -> Column:
+    """MinHash sketch of a shingle array: element i is the lexicographic min
+    of md5('<i>|' || shingle). md5-hex min is an order-preserving stand-in
+    for integer MinHash and is reproducible in any engine (the DuckDB oracle
+    computes the identical value with ``min(md5(...))``). NULL for a null or
+    empty array, i.e. when there is no sketch.
     """
+    return kernel(spark, MINHASH_FUNC, shingles, F.lit(num_hashes))
+
+
+def _profile_sketch(profiles: DataFrame, num_hashes: int) -> Column:
     # shingle strings re-derived from tokens (kept out of the cached profile
     # row on purpose — see conv_profiles)
-    ex = profiles.select(
-        "conv_id",
-        F.explode(distinct_shingles_col(F.col("tokens"), SHINGLE_K)).alias("sh"),
-    )
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{i:02d}|"), F.col("sh")))).alias(f"mh_{i:02d}")
-        for i in range(num_hashes)
-    ]
-    return ex.groupBy("conv_id").agg(*aggs)
+    return minhash_col(
+        profiles.sparkSession,
+        distinct_shingles_col(F.col("tokens"), SHINGLE_K),
+        num_hashes,
+    ).alias("mh")
+
+
+def band_key(b: int, hashes: list[Column]) -> Column:
+    """LSH band key = md5('<b>|' || the band's minhashes, '|'-joined):
+    collision iff the band's minhashes all agree."""
+    return F.md5(F.concat_ws("|", F.lit(str(b)), *hashes))
 
 
 def band_keys(
-    minhash: DataFrame,
+    mh: Column,
+    num_hashes: int = NUM_HASHES,
+    rows_per_band: int = ROWS_PER_BAND,
+) -> list[Column]:
+    """One ``struct(src 'mh<b>', block_key)`` per LSH band of the sketch
+    ``mh``; NULL when there is no sketch, so the band rows drop out."""
+    return [
+        F.when(
+            mh.isNotNull(),
+            F.struct(
+                F.lit(f"mh{b}").alias("src"),
+                band_key(b, [mh[i] for i in range(b * rows_per_band, (b + 1) * rows_per_band)])
+                .alias("block_key"),
+            ),
+        )
+        for b in range(num_hashes // rows_per_band)
+    ]
+
+
+def _key_rows(keyed: DataFrame, keys: list[Column], *carry: str) -> DataFrame:
+    """(conv_id, src, block_key, *carry): one row per non-null key struct."""
+    return keyed.select(
+        "conv_id", *carry, F.explode(F.array_compact(F.array(*keys))).alias("k")
+    ).select("conv_id", "k.src", "k.block_key", *carry)
+
+
+def minhash_bands(
+    profiles: DataFrame,
     num_hashes: int = NUM_HASHES,
     rows_per_band: int = ROWS_PER_BAND,
 ) -> DataFrame:
-    """Long-format LSH band keys: (conv_id, block_key) with key source 'mh<b>'.
-
-    Band key = md5('<b>|' || minhashes of the band) — collision iff the band's
-    minhashes all agree.
-    """
-    n_bands = num_hashes // rows_per_band
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(f"mh{b}").alias("src"),
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        F.lit(str(b)),
-                        *[F.col(f"mh_{i:02d}") for i in range(b * rows_per_band, (b + 1) * rows_per_band)],
-                    )
-                ).alias("block_key"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    return minhash.select("conv_id", F.explode(bands).alias("b")).select(
-        "conv_id", F.col("b.src").alias("src"), F.col("b.block_key").alias("block_key")
-    )
+    """Long-format LSH band keys: (conv_id, src 'mh<b>', block_key)."""
+    keyed = profiles.select("conv_id", _profile_sketch(profiles, num_hashes))
+    return _key_rows(keyed, band_keys(F.col("mh"), num_hashes, rows_per_band))
 
 
 def canonical_tokens_col(tokens, synonyms: dict[str, str] | None = None):
@@ -169,6 +186,11 @@ def canonical_tokens_col(tokens, synonyms: dict[str, str] | None = None):
     return F.transform(tokens, lambda t: F.coalesce(m[t], t))
 
 
+def synonym_key_col(tokens: Column, synonyms: dict[str, str] | None = None) -> Column:
+    """md5 of the synonym-canonical token sequence."""
+    return F.md5(F.array_join(canonical_tokens_col(tokens, synonyms), " "))
+
+
 def synonym_blocks(
     profiles: DataFrame, synonyms: dict[str, str] | None = None
 ) -> DataFrame:
@@ -179,11 +201,10 @@ def synonym_blocks(
     recall mechanism the sig/prefix/minhash families can't provide when a
     variant changes many shingles at once.
     """
-    canon = canonical_tokens_col(F.col("tokens"), synonyms)
     return profiles.select(
         "conv_id",
         F.lit("syn").alias("src"),
-        F.md5(F.array_join(canon, " ")).alias("block_key"),
+        synonym_key_col(F.col("tokens"), synonyms).alias("block_key"),
     )
 
 
@@ -193,19 +214,30 @@ def block_table(
     rows_per_band: int = ROWS_PER_BAND,
     synonyms: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Union of all blocking keys: (conv_id, src, block_key).
+    """All blocking keys: (conv_id, src, block_key, sig).
+
+    One select of the profiles computes the sketch, and one explode emits
+    the sig, prefix and band keys; a conversation without a sketch gets no
+    band rows. ``sig`` is the row's conversation signature, carried so the
+    pair self-join can compare it without another profile join.
 
     ``synonyms``: pass a variant->canonical dict to add the 'syn' key family
     (opt-in so the default pipeline's oracle stays byte-stable).
     """
-    sig_keys = profiles.select(
-        "conv_id", F.lit("sig").alias("src"), F.col("sig").alias("block_key")
+    keyed = profiles.select(
+        "conv_id", "sig", "prefix_key", _profile_sketch(profiles, num_hashes)
     )
-    prefix_keys = profiles.select(
-        "conv_id", F.lit("prefix").alias("src"), F.col("prefix_key").alias("block_key")
-    )
-    mh = band_keys(minhash_signature(profiles, num_hashes), num_hashes, rows_per_band)
-    out = sig_keys.unionByName(prefix_keys).unionByName(mh)
+    keys = [
+        F.struct(F.lit("sig").alias("src"), F.col("sig").alias("block_key")),
+        F.struct(F.lit("prefix").alias("src"), F.col("prefix_key").alias("block_key")),
+        *band_keys(F.col("mh"), num_hashes, rows_per_band),
+    ]
+    out = _key_rows(keyed, keys, "sig")
     if synonyms is not None:
-        out = out.unionByName(synonym_blocks(profiles, synonyms))
+        out = out.unionByName(profiles.select(
+            "conv_id",
+            F.lit("syn").alias("src"),
+            synonym_key_col(F.col("tokens"), synonyms).alias("block_key"),
+            "sig",
+        ))
     return out

@@ -10,10 +10,13 @@ standard large-corpus dedup strategies:
                 Hamming distance
 - n-gram Jaccard: character n-gram sets on LSH candidates
 
-Everything is Catalyst expressions (md5 / array ops / windows); each operator
-has an exact DuckDB oracle in ``oracle_docs.py``. At 100 TB the shapes hold:
-one groupBy per sketch, one exploded band join for candidates, block-size cap
-before the quadratic step.
+Everything is Catalyst expressions (md5 / array ops / windows) except the
+MinHash sketch, which is one call per document of the JVM kernel that
+conversation blocking uses (``blocking.minhash_col``, java/MinHashMd5.java):
+no shingle explode and no shuffle. Each operator has an exact DuckDB oracle
+in ``oracle_docs.py``. At 100 TB the shapes hold: the MinHash sketch is
+narrow, SimHash is one groupBy, candidates are one exploded band join, and
+the block-size cap comes before the quadratic step.
 """
 
 from __future__ import annotations
@@ -23,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.normalize import normalize_col
 from ..functions.tokens import distinct_shingles_col, tokens_col
+from .blocking import band_key, minhash_col
 
 DOC_NUM_HASHES = 12
 DOC_ROWS_PER_BAND = 2
@@ -81,12 +85,18 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
 
 
 def doc_minhash(docs: DataFrame, num_hashes: int = DOC_NUM_HASHES) -> DataFrame:
-    ex = doc_shingle_sets(docs).select("doc_id", F.explode("sh").alias("s"))
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{i:02d}|"), F.col("s")))).alias(f"mh_{i:02d}")
-        for i in range(num_hashes)
-    ]
-    return ex.groupBy("doc_id").agg(*aggs)
+    """(doc_id, mh_00..mh_NN): per-hash-family min of md5('<i>|' || shingle).
+
+    ``doc_id`` is the documents' key. A document without shingles (null
+    text) has no sketch and so no row: the kernel returns NULL for it, and
+    the explode of the compacted one-element array emits nothing.
+    """
+    sets = doc_shingle_sets(docs)
+    mh = minhash_col(sets.sparkSession, F.col("sh"), num_hashes)
+    sk = sets.select("doc_id", F.explode(F.array_compact(F.array(mh))).alias("mh"))
+    return sk.select(
+        "doc_id", *[F.col("mh")[i].alias(f"mh_{i:02d}") for i in range(num_hashes)]
+    )
 
 
 def doc_band_keys(
@@ -98,15 +108,9 @@ def doc_band_keys(
         *[
             F.struct(
                 F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        F.lit(str(b)),
-                        *[
-                            F.col(f"mh_{i:02d}")
-                            for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-                        ],
-                    )
+                band_key(
+                    b,
+                    [F.col(f"mh_{i:02d}") for i in range(b * rows_per_band, (b + 1) * rows_per_band)],
                 ).alias("bucket"),
             )
             for b in range(num_hashes // rows_per_band)

@@ -10,8 +10,10 @@ lineage output). Within-threshold skew is left to AQE's skew-join splitting
 
 The pair join is a self equi-join on ``block_key`` — a shuffle hash join on a
 uniformly-distributed md5 key; `conv_a < conv_b` canonicalizes orientation and
-``dropDuplicates`` merges pairs discovered via multiple key families (a pair
-found by both `sig` and an LSH band scores once).
+``distinct`` merges pairs discovered via multiple key families (a pair found
+by both `sig` and an LSH band scores once). Block rows that carry their
+conversation's ``sig`` (``blocking.block_table``) bring it to both sides of
+the pair as ``sig_a``/``sig_b``.
 """
 
 from __future__ import annotations
@@ -53,11 +55,12 @@ def candidate_pairs(
     persist: bool = True,
     salt_hot_blocks: bool | None = None,
 ) -> DataFrame:
-    """(conv_a, conv_b) with conv_a < conv_b, deduped across key families.
+    """(conv_a, conv_b) with conv_a < conv_b, deduped across key families,
+    plus (sig_a, sig_b) when ``blocks`` carries ``sig``.
 
     ``blocks`` fans out into three consumers (size stats, both join sides), so
     it is persisted first — on a cluster this is the stage you'd checkpoint;
-    recomputing the MinHash explode three times is never the right plan.
+    recomputing the MinHash sketch three times is never the right plan.
 
     Residual skew below the cap: blocks the cap keeps can still be ~cap-sized
     (a 100-row block = a 100x100 join cell on one reducer). With
@@ -92,14 +95,23 @@ def candidate_pairs(
     ).select("block_key")
     if salt_hot_blocks is None:
         salt_hot_blocks = bool(hot_df.limit(1).count())
-    a = kept.select(F.col("block_key"), F.col("conv_id").alias("conv_a"))
-    b = kept.select(F.col("block_key"), F.col("conv_id").alias("conv_b"))
+    carry = ["sig"] if "sig" in blocks.columns else []
+
+    def side(s: str) -> DataFrame:
+        return kept.select(
+            "block_key", F.col("conv_id").alias(f"conv_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+        )
+
+    a, b = side("a"), side("b")
     if salt_hot_blocks:
         joined = salted_join(a, b, "block_key", "conv_a", hot=hot_df)
     else:
         joined = a.join(b, "block_key")
+    # sig is a function of the conv id, so deduping on every column is
+    # deduping on the pair, and a filter on the sigs can move below it
     return (
         joined.filter(F.col("conv_a") < F.col("conv_b"))
-        .select("conv_a", "conv_b")
-        .dropDuplicates(["conv_a", "conv_b"])
+        .select("conv_a", "conv_b", *[f"{c}_{s}" for c in carry for s in "ab"])
+        .distinct()
     )

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import INTERSECT_FUNC, TEXTSIM_FUNC, register_kernels
+from ..session import INTERSECT_FUNC, TEXTSIM_FUNC, kernel
 
 JACCARD_NEAR = 0.9
 CONTAIN_NEAR = 0.9
@@ -71,13 +71,19 @@ def score_pairs(
     ``broadcast_profiles=True`` when the profile batch is dimension-sized
     (incremental runs, benchmarks) to skip shuffling pair rows entirely.
 
-    Registers the kernels in the pairs' session first, so any session with
+    The feature columns are one ``select`` over the joined pairs. The
+    kernels are registered in the pairs' session first, so any session with
     the jar on its classpath can score; one without it raises ``RuntimeError``.
     """
-    register_kernels(pairs.sparkSession)
+    spark = pairs.sparkSession
     slim = _slim_profiles(profiles)
     slim = F.broadcast(slim) if broadcast_profiles else slim.hint("shuffle_hash")
     a, b = slim.alias("A"), slim.alias("B")
+    # the join's one select runs both kernels: one set-intersection count per
+    # pair (the merge walk needs the sh_hash arrays sorted, which
+    # blocking.conv_profiles does), and the fused text kernel, whose one
+    # string decode per side yields [lev_sim, jw] and keeps the per-pair
+    # allocation rate (what GC-bound core scaling sees) low
     j = (
         pairs.join(a, F.col("conv_a") == F.col("A.conv_id"))
         .join(b, F.col("conv_b") == F.col("B.conv_id"))
@@ -86,50 +92,39 @@ def score_pairs(
             "conv_b",
             F.col("A.sig").alias("sig_a"),
             F.col("B.sig").alias("sig_b"),
-            F.col("A.sh").alias("sh_a"),
-            F.col("B.sh").alias("sh_b"),
-            F.col("A.text").alias("text_a"),
-            F.col("B.text").alias("text_b"),
+            F.size("A.sh").alias("na"),
+            F.size("B.sh").alias("nb"),
+            kernel(spark, INTERSECT_FUNC, F.col("A.sh"), F.col("B.sh")).alias("inter"),
+            kernel(spark, TEXTSIM_FUNC, F.col("A.text"), F.col("B.text")).alias("ts"),
         )
     )
-    # one set-intersection count per pair; Jaccard and containment both derive
-    # from it arithmetically (|A∪B| = |A|+|B|-|A∩B| since the sets are
-    # distinct) — no array_union materialization. The JVM merge-walk kernel
-    # needs the sh_hash arrays sorted (blocking.conv_profiles sorts them).
-    j = j.withColumn("inter", F.call_function(INTERSECT_FUNC, F.col("sh_a"), F.col("sh_b")))
-    na, nb = F.size("sh_a"), F.size("sh_b")
-    union = na + nb - F.col("inter")
-    j = j.withColumn(
-        "jaccard",
-        F.round(F.when(union == 0, F.lit(1.0)).otherwise(F.col("inter") / union), 6),
-    )
-    j = j.withColumn(
-        "containment",
-        F.round(
-            F.when(F.least(na, nb) == 0, F.lit(1.0)).otherwise(
-                F.col("inter") / F.least(na, nb)
-            ),
-            6,
-        ),
-    )
-    # fused kernel: one string decode per side yields [lev_sim, jw], which
-    # keeps the per-pair allocation rate (what GC-bound core scaling sees) low
-    j = j.withColumn("ts", F.call_function(TEXTSIM_FUNC, F.col("text_a"), F.col("text_b")))
-    # null contract: a null text gives lev_sim null and jw 0.0. TextSim
-    # returns NULL for a null input (a double[] cannot carry per-element
-    # nulls), so lev_sim propagates it and jw is coalesced.
-    j = j.withColumn("lev_sim", F.round(F.col("ts")[0], 6)).withColumn(
-        "jw", F.round(F.coalesce(F.col("ts")[1], F.lit(0.0)), 6)
+    # Jaccard and containment both derive from the intersection count
+    # arithmetically (|A∪B| = |A|+|B|-|A∩B| since the sets are distinct) —
+    # no array_union materialization
+    inter, na, nb = F.col("inter"), F.col("na"), F.col("nb")
+    union = na + nb - inter
+    jaccard = F.round(F.when(union == 0, F.lit(1.0)).otherwise(inter / union), 6)
+    containment = F.round(
+        F.when(F.least(na, nb) == 0, F.lit(1.0)).otherwise(inter / F.least(na, nb)), 6
     )
     verdict = (
         F.when(F.col("sig_a") == F.col("sig_b"), "exact")
-        .when(F.col("jaccard") >= JACCARD_NEAR, "near_dup")
-        .when(F.col("containment") >= CONTAIN_NEAR, "resumption")
-        .when(F.col("jaccard") >= JACCARD_PARTIAL, "partial")
+        .when(jaccard >= JACCARD_NEAR, "near_dup")
+        .when(containment >= CONTAIN_NEAR, "resumption")
+        .when(jaccard >= JACCARD_PARTIAL, "partial")
         .otherwise("far")
     )
-    return j.withColumn("verdict", verdict).select(
-        "conv_a", "conv_b", "jaccard", "containment", "lev_sim", "jw", "verdict"
+    # null contract: a null text gives lev_sim null and jw 0.0. TextSim
+    # returns NULL for a null input (a double[] cannot carry per-element
+    # nulls), so lev_sim propagates it and jw is coalesced.
+    return j.select(
+        "conv_a",
+        "conv_b",
+        jaccard.alias("jaccard"),
+        containment.alias("containment"),
+        F.round(F.col("ts")[0], 6).alias("lev_sim"),
+        F.round(F.coalesce(F.col("ts")[1], F.lit(0.0)), 6).alias("jw"),
+        verdict.alias("verdict"),
     )
 
 

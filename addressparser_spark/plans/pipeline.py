@@ -92,24 +92,19 @@ def heavy_pairs(profiles: DataFrame, num_hashes: int, rows_per_band: int,
     """Heavy stage candidates: prefix + MinHash keys only, same-sig pairs
     dropped (the light stage already linked them).
 
-    Pass ``blocks`` (an already-persisted full block table) to reuse the
-    MinHash computation across consumers instead of re-deriving it; the
-    caller then owns its persistence. Without it the block table is built
-    here and persisted by ``candidate_pairs``.
+    The block rows carry each side's ``sig``, so the same-sig filter reads
+    the pair rows and never joins ``profiles``. Pass ``blocks`` (an
+    already-persisted full block table) to reuse the MinHash computation
+    across consumers instead of re-deriving it; the caller then owns its
+    persistence. Without it the block table is built here and persisted by
+    ``candidate_pairs``.
     """
     owned = blocks is None
     if owned:
         blocks = blocking.block_table(profiles, num_hashes, rows_per_band)
     blocks = blocks.filter(F.col("src") != "sig")
     cand = pairs_op.candidate_pairs(blocks, max_block_size, persist=owned)
-    sigs_a = profiles.select(F.col("conv_id").alias("conv_a"), F.col("sig").alias("_sig_a"))
-    sigs_b = profiles.select(F.col("conv_id").alias("conv_b"), F.col("sig").alias("_sig_b"))
-    return (
-        cand.join(sigs_a, "conv_a")
-        .join(sigs_b, "conv_b")
-        .filter(F.col("_sig_a") != F.col("_sig_b"))
-        .select("conv_a", "conv_b")
-    )
+    return cand.filter(F.col("sig_a") != F.col("sig_b")).select("conv_a", "conv_b")
 
 
 @dataclass
@@ -168,7 +163,7 @@ def run_linkage(
 
     The full block table is persisted once (``MEMORY_AND_DISK``) and shared
     by the cap split (``dropped_blocks``) and the pair generation, so the
-    MinHash sketch and explode run once per pipeline. The caller releases
+    MinHash sketch runs once per pipeline. The caller releases
     the persisted frames (``profiles``, ``blocks``, ``pairs``, ``scored``)
     when it is done with them.
     """
@@ -180,8 +175,8 @@ def run_linkage(
     metrics.observations["turns"] = obs_turns
 
     profiles = blocking.conv_profiles(turns).cache()
-    # the MinHash sketch+explode is the most expensive blocking step: persist
-    # it once so the cap split and the pair generation both read this copy
+    # the MinHash sketch is the most expensive blocking step: persist the
+    # block table once so the cap split and the pair generation both read it
     blocks = blocking.block_table(profiles, num_hashes, rows_per_band).persist(
         StorageLevel.MEMORY_AND_DISK
     )

@@ -26,8 +26,9 @@ def _blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same plan-identity caching trick as ``_profiles``: every query that
     rebuilds this exact plan hits one shared cache entry, so the MinHash
-    explode+agg — the most expensive blocking step — runs once per
-    session/sf, not once per query.
+    sketch — the most expensive blocking step — runs once per session/sf,
+    not once per query. Its rows carry ``sig`` too; queries
+    that output it select the oracle's columns.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -52,16 +53,17 @@ def er_exact_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def er_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _profiles(spark, sf_dir)
-    return blocking.band_keys(blocking.minhash_signature(p))
+    return blocking.minhash_bands(_profiles(spark, sf_dir))
 
 
 def er_block_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _blocks(spark, sf_dir)
+    return _blocks(spark, sf_dir).select("conv_id", "src", "block_key")
 
 
 def er_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return pairs_op.candidate_pairs(_blocks(spark, sf_dir), persist=False)
+    return pairs_op.candidate_pairs(_blocks(spark, sf_dir), persist=False).select(
+        "conv_a", "conv_b"
+    )
 
 
 def er_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -4,8 +4,13 @@ Local-mode settings mirror what a 1000-executor cluster deployment would set
 per-executor: AQE on (skew-join splitting for hot blocking keys), shuffle
 partitions sized to cores (overridden to ~2-3x total cores on a real cluster),
 Arrow enabled for the ``mapInPandas``/``applyInPandasWithState`` operators,
-the JVM scoring-kernel jar on the classpath, and a pinned UTC session
-timezone so results compare bit-for-bit against the DuckDB oracle.
+the JVM kernel jar on the classpath, and a pinned UTC session timezone so
+results compare bit-for-bit against the DuckDB oracle.
+
+The runtime SQL settings live in one mapping, ``SQL_SETTINGS``:
+``get_spark`` builds with it, and ``apply_sql_settings`` sets it on a
+session someone else built (``cli`` under spark-submit). The kernels are
+called through ``kernel``, which registers them in the session first.
 """
 
 from __future__ import annotations
@@ -13,28 +18,46 @@ from __future__ import annotations
 import os
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import SparkSession
-from pyspark.sql.types import ArrayType, DoubleType, IntegerType
+from pyspark.sql import Column, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType, IntegerType, StringType
 
-# JVM scoring-kernel jar (built by java/build.sh, committed): the merge-walk
-# intersect count and the fused [levenshtein_sim, jaro_winkler] text kernel.
-# Pairwise scoring has no other implementation, so every session that scores
-# needs it on its classpath: get_spark adds it, and spark-submit deployments
-# pass it with --jars. scoring.score_pairs registers the kernels itself.
+# The kernel jar (built by java/build.sh, committed): the merge-walk
+# intersect count and the fused [levenshtein_sim, jaro_winkler] text kernel
+# of pairwise scoring, and the MinHash sketch of blocking and dedup. These
+# operators have no other implementation, so every session that runs them
+# needs the jar on its classpath: get_spark adds it, and spark-submit
+# deployments pass it with --jars.
 JW_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jars", "jw-udf.jar")
 INTERSECT_FUNC = "intersect_count_java"
 TEXTSIM_FUNC = "text_sim_java"  # fused [lev_sim, jw] — one decode per pair
+MINHASH_FUNC = "minhash_md5"  # (shingles, n) -> n md5-hex minhashes
 
 _JVM_FUNCS = (
     (INTERSECT_FUNC, "addressparser.IntersectCount", IntegerType()),
     (TEXTSIM_FUNC, "addressparser.TextSim", ArrayType(DoubleType())),
+    (MINHASH_FUNC, "addressparser.MinHashMd5", ArrayType(StringType())),
 )
+
+# runtime SQL settings: get_spark builds with them, apply_sql_settings sets
+# them on an existing session; neither master nor spark.jars is among them
+SQL_SETTINGS = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # let AQE right-size the output partitioning of cached plans too
+    # (cached conv profiles feed every downstream stage)
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+}
 
 
 def register_kernels(spark: SparkSession) -> None:
-    """Register the JVM scoring kernels in ``spark``; safe to call repeatedly.
+    """Register the JVM kernels in ``spark``; safe to call repeatedly.
 
-    ``score_pairs`` calls it on every plan it builds; ``get_spark`` and
+    ``kernel`` calls it for every kernel column it builds; ``get_spark`` and
     ``cli`` call it once more so a missing jar fails at session build.
     Raises ``RuntimeError`` when a kernel class does not load, which means
     the session was built without the jar on its classpath.
@@ -44,10 +67,23 @@ def register_kernels(spark: SparkSession) -> None:
             spark.udf.registerJavaFunction(name, cls, rt)
         except AnalysisException as e:
             raise RuntimeError(
-                f"JVM scoring kernel {cls} did not load: pass "
+                f"JVM kernel {cls} did not load: pass "
                 f"addressparser_spark/jars/jw-udf.jar to Spark with --jars "
                 f"(get_spark loads {JW_JAR})"
             ) from e
+
+
+def kernel(spark: SparkSession, name: str, *cols: Column) -> Column:
+    """The JVM kernel ``name`` applied to ``cols``, registered in ``spark``
+    first, so any session with the jar on its classpath can run it."""
+    register_kernels(spark)
+    return F.call_function(name, *cols)
+
+
+def apply_sql_settings(spark: SparkSession) -> None:
+    """Set ``SQL_SETTINGS`` on a session built elsewhere (spark-submit)."""
+    for k, v in SQL_SETTINGS.items():
+        spark.conf.set(k, v)
 
 
 def get_spark(
@@ -66,22 +102,14 @@ def get_spark(
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if shuffle_partitions is None:
-        n = os.cpu_count() or 8 if cores == "*" else int(cores)
+        n = (os.cpu_count() or 8) if cores == "*" else int(cores)
         shuffle_partitions = max(8, int(n))
 
     b = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # let AQE right-size the output partitioning of cached plans too
-        # (cached conv profiles feed every downstream stage)
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        .config(map=SQL_SETTINGS)
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")

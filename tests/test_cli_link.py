@@ -20,10 +20,17 @@ def _cache_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+# Spark jobs of one `link` over the sf0.001 transcripts into an empty
+# registry; deterministic for the test session's fixed cores and shuffle
+# partitions
+LINK_JOBS = 44
+
+
 @pytest.fixture(scope="module")
 def first_link(spark, sf_dir, tmp_path_factory):
     """One `link` into an empty registry: (transcripts dir, output dir,
-    metrics, whether the session's cache was empty afterwards)."""
+    metrics, whether the session's cache was empty afterwards, the number
+    of Spark jobs it ran)."""
     # the CLI consumes a transcripts parquet; derive one from the test data
     from addressparser_spark.data.transcripts import transcripts_df
 
@@ -32,10 +39,16 @@ def first_link(spark, sf_dir, tmp_path_factory):
     transcripts_df(spark, sf_dir).write.parquet(tdir)
     out = base / "out"
     spark.catalog.clearCache()  # frames other tests left cached
-    cli.main(["link", "--input", tdir, "--output", str(out)])
+    sc = spark.sparkContext
+    sc.setJobGroup("first_link", "cli link into an empty registry")
+    try:
+        cli.main(["link", "--input", tdir, "--output", str(out)])
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = len(sc.statusTracker().getJobIdsForGroup("first_link"))
     released = _cache_empty(spark)
     metrics = json.loads(open(out / "metrics.json").read())
-    return tdir, out, metrics, released
+    return tdir, out, metrics, released, jobs
 
 
 def test_link_releases_every_persisted_frame(first_link):
@@ -43,8 +56,14 @@ def test_link_releases_every_persisted_frame(first_link):
     assert first_link[3]
 
 
+def test_link_job_count(first_link):
+    """Guards the driver-side job count of `link`: a new per-stage action
+    or probe, or a layer that recomputes a persisted frame, shows up here."""
+    assert first_link[4] == LINK_JOBS
+
+
 def test_observed_metrics_match_written_tables(spark, first_link):
-    _, out, m, _ = first_link
+    _, out, m, *_ = first_link
     clusters = spark.read.parquet(str(out / "clusters"))
     assert m["n_clusters"] == clusters.select("cluster_id").distinct().count()
     assert m["dropped_blocks"] == spark.read.parquet(str(out / "dropped_blocks")).count()
@@ -53,7 +72,7 @@ def test_observed_metrics_match_written_tables(spark, first_link):
 
 
 def test_link_twice_resolves_from_registry(spark, tmp_path, first_link):
-    tdir, out, m1, _ = first_link
+    tdir, out, m1, *_ = first_link
     assert m1["resolve_stages"] == {"new": 167}
     assert m1["n_clusters"] == 117  # 100 base + 17 _d1 hard-negative singletons
 
