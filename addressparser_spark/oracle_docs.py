@@ -596,21 +596,23 @@ FROM ({embedding_dropped_sql(dim)})"""
 def multimodal_features_sql() -> str:
     """Closed-form re-derivation of the six-container decode output.
 
-    Every synthesis parameter in ``operators/multimodal.py`` is a pure
-    function of doc_id (SYNTH_DIMS/SYNTH_MS/SYNTH_FORMATS — imported here,
-    single source of truth), so the expected decode result is plain
-    arithmetic: this oracle never runs the Python decoders. For the PNG
-    branch the per-row luma is ``(doc_id + r) % 256`` with height <= 14,
-    so the wrapped-sum / max / zero-row-count close forms exactly (the
-    sequence wraps past 255 at most once; ``wrap`` counts wrapped rows).
-    Exact-half rounding at 6 decimals is impossible for denominators <= 14,
-    so Python round vs DuckDB round cannot disagree.
+    Every synthesis parameter in ``data/media.py`` is a pure function of
+    doc_id (SYNTH_DIMS/SYNTH_MS/SYNTH_FORMATS — imported here, single
+    source of truth), so the expected decode result is plain arithmetic:
+    this oracle never runs the Python decoders. For the PNG branch the
+    per-row luma is ``(doc_id + r) % 256`` with height <= 14, so the
+    wrapped-sum / max / zero-row-count close forms exactly (the sequence
+    wraps past 255 at most once; ``wrap`` counts wrapped rows). Every row
+    is constant, so the decoder's pixel sums are multiples of the width
+    and its pixel-denominator stats equal these row-denominator ones. No
+    denominator <= 14 has an exact half at 6 decimals, so DuckDB's
+    ``round`` here equals the decoder's integer half-up ``_stats_round6``.
 
     The GIF branch re-derives the pixel stats from the same per-row
     ``(doc_id + r) % 256`` law as PNG (the LZW round-trip is lossless and
     the palette is the grayscale identity, so decoded luma follows the law
     exactly); integer half-up rounding on the row denominator — identical
-    to ``_gif_content``'s pixel-denominator form because the common width
+    to ``_gif``'s pixel-denominator form because the common width
     factor cancels inside the floor division.
 
     The WAV branch re-derives the PCM sample stats the same way: samples
@@ -619,9 +621,9 @@ def multimodal_features_sql() -> str:
     remainder form, and the zero count places the first zero at
     ``(256 - s) % 256`` then every 256 samples. With n up to ~32k exact
     rounding ties ARE reachable, so both engines round half-up in integer
-    arithmetic (see ``_wav_content``) — tie-free and bit-identical.
+    arithmetic (``_stats_round6``) — tie-free and bit-identical.
     """
-    from .operators.multimodal import SYNTH_DIMS, SYNTH_MS
+    from .data.media import SYNTH_DIMS, SYNTH_MS
 
     def dim(spec: tuple[int, int, int]) -> str:
         base, mod, div = spec

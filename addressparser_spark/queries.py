@@ -149,18 +149,20 @@ def text_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real container decode over the six-format synthetic media table.
 
-    ``synth_media`` builds one PNG/JPEG/GIF/WAV/FLAC/MP4 payload per doc_id
-    (every parameter a closed-form function of the id); ``decode_media``
-    then header-parses all six containers, pixel-decodes the PNGs (zlib
-    inflate + scanline unfilter) and sample-decodes the WAV PCM streams.
-    The DuckDB oracle re-derives every expected feature from doc_id
-    arithmetic alone, so a green row proves the whole mapInPandas decode
-    path — magic-byte dispatch, IDAT inflate, all five unfilters, PCM
-    sample stats, duration math — byte-for-byte.
+    ``data.media.synth_media`` builds one PNG/JPEG/GIF/WAV/FLAC/MP4 payload
+    per doc_id, every parameter a closed-form function of the id.
+    ``decode_media`` then parses every container's header and decodes all
+    six contents: PNG pixels (IDAT inflate + the five unfilters), JPEG
+    DC-only blocks (Huffman entropy decode), GIF pixels (LZW), WAV PCM,
+    FLAC verbatim-frame samples and MP4 raw-PCM audio tracks (even mp4 ids
+    are video: dims, NULL stats). The DuckDB oracle re-derives every
+    expected feature from doc_id arithmetic alone, so a green row proves
+    the whole mapInPandas decode path byte-for-byte.
     n_bytes/feature_hash are excluded: they depend on zlib's compressed
     encoding, which no independent oracle can re-derive.
     """
-    from .operators.multimodal import decode_media, synth_media
+    from .data.media import synth_media
+    from .operators.multimodal import decode_media
 
     return decode_media(synth_media(_docs(spark, sf_dir))).select(
         "media_id",

@@ -14,6 +14,8 @@ and covered here with synthetic round dicts. The invariants:
 
 from __future__ import annotations
 
+import pytest
+
 import bench
 
 
@@ -147,3 +149,23 @@ def test_stdout_payload_stays_compact_and_never_leaks_rounds():
     # no scaling phase -> no side file payload
     out2, raw2 = bench._stdout_payload(queries, [36.6], f1, None, "/x/sf0.01")
     assert raw2 is None and "scaling" not in out2 and out2["sf"] == 0.01
+
+
+def test_scaling_cores_fit_the_host(monkeypatch):
+    """The N-vs-4N pair comes from the CPUs the bench may use: 4N never
+    exceeds them, and below 4 CPUs the scaling phase reports why it was
+    skipped instead of pinning workers to CPUs that are not there."""
+    assert bench._scaling_cores(32) == (8, 32)
+    assert bench._scaling_cores(6) == (1, 4)
+    assert bench._scaling_cores(4) == (1, 4)
+    assert bench._scaling_cores(3) is None
+    assert bench.SCALING_CORES == bench._scaling_cores(bench.CPUS)
+
+    monkeypatch.setattr(bench, "SCALING_CORES", None)
+    monkeypatch.setattr(bench, "_scaling_round", lambda cores: pytest.fail("ran a round"))
+    scaling = bench._run_scaling()
+    assert list(scaling) == ["skipped"]
+    f1 = {"tp": 1, "fp": 0, "fn": 0, "tn": 1, "precision": 1.0, "recall": 1.0, "f1": 1.0}
+    out, raw = bench._stdout_payload({"q": 1.0}, [1.0], f1, scaling, "/x/sf0.01", cpus=2)
+    assert raw is None
+    assert out["scaling"] == scaling and out["cpus"] == 2

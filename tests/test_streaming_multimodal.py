@@ -5,16 +5,19 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from addressparser_spark.data.media import make_jpeg, make_png, make_wav
 from addressparser_spark.data.transcripts import transcripts_df
 from addressparser_spark.operators.multimodal import (
     MEDIA_SCHEMA,
-    _png_dims,
-    _wav_duration_ms,
+    _flac,
+    _gif,
+    _jpeg,
+    _Malformed,
+    _mp4,
+    _png,
+    _wav,
     decode_media,
     frame_sample,
-    make_jpeg,
-    make_png,
-    make_wav,
     media_from_documents,
 )
 from addressparser_spark.streaming.incremental import (
@@ -22,6 +25,37 @@ from addressparser_spark.streaming.incremental import (
     incremental_linkage,
     turn_rate_stream,
 )
+
+
+def _walk(container, payload):
+    """(header facts, content stats) of one container walk; None for the
+    part that is malformed."""
+    walk = container(payload)
+    try:
+        header = next(walk)
+    except _Malformed:
+        return None, None
+    try:
+        return header, next(walk)
+    except _Malformed:
+        return header, None
+
+
+def _dims(container, payload):
+    """(width, height) from a container's header, or None."""
+    header = _walk(container, payload)[0]
+    return header and header[:2]
+
+
+def _duration(container, payload):
+    """duration_ms from a container's header, or None."""
+    header = _walk(container, payload)[0]
+    return header and header[2]
+
+
+def _content(container, payload):
+    """(mean, max, nonzero_frac) from a container's content walk, or None."""
+    return _walk(container, payload)[1]
 
 
 def test_stream_incremental_linkage_removes_temp_tree(spark, sf_dir, monkeypatch):
@@ -161,18 +195,16 @@ def test_real_png_wav_decode(spark):
     assert (feats[5]["width"], feats[5]["height"]) == (32, 64)
 
     # parser unit checks: truncated/garbage bytes are rejected, not misparsed
-    assert _png_dims(make_png(7, 9)) == (7, 9)
-    assert _png_dims(make_png(7, 9)[:20]) is None
-    assert _png_dims(b"not a png at all, but 24+ bytes long....") is None
-    assert _wav_duration_ms(make_wav(1234)) == 1234
-    assert _wav_duration_ms(make_wav(1234)[:10]) is None
-    assert _wav_duration_ms(b"RIFFxxxxNOPE" + bytes(32)) is None
+    assert _dims(_png, make_png(7, 9)) == (7, 9)
+    assert _dims(_png, make_png(7, 9)[:20]) is None
+    assert _dims(_png, b"not a png at all, but 24+ bytes long....") is None
+    assert _duration(_wav, make_wav(1234)) == 1234
+    assert _duration(_wav, make_wav(1234)[:10]) is None
+    assert _duration(_wav, b"RIFFxxxxNOPE" + bytes(32)) is None
 
 
 def test_real_jpeg_decode(spark):
     """JPEG payloads decode to TRUE dimensions via the SOF segment walk."""
-    from addressparser_spark.operators.multimodal import _jpeg_dims, make_jpeg
-
     rows = [
         (1, "image", make_jpeg(1024, 768), (len(make_jpeg(1024, 768)), "image/jpeg", "t")),
         # mislabeled kind: magic bytes win over the metadata column
@@ -187,17 +219,17 @@ def test_real_jpeg_decode(spark):
     assert (feats[2]["width"], feats[2]["height"]) == (16, 16)
 
     # parser unit checks: truncation/garbage/EOI-first are rejected
-    assert _jpeg_dims(make_jpeg(7, 9)) == (7, 9)
-    assert _jpeg_dims(make_jpeg(7, 9)[:6]) is None
-    assert _jpeg_dims(b"\xff\xd8\xff\xd9") is None
-    assert _jpeg_dims(b"not a jpeg, just 24+ bytes long....") is None
-    assert _png_dims(make_jpeg(7, 9)) is None
+    assert _dims(_jpeg, make_jpeg(7, 9)) == (7, 9)
+    assert _dims(_jpeg, make_jpeg(7, 9)[:6]) is None
+    assert _dims(_jpeg, b"\xff\xd8\xff\xd9") is None
+    assert _dims(_jpeg, b"not a jpeg, just 24+ bytes long....") is None
+    assert _dims(_png, make_jpeg(7, 9)) is None
 
 
 def test_real_mp4_decode(spark):
     """MP4 payloads decode to TRUE width/height/duration via the moov box
     walk — every media kind (image/audio/video) now has a real parser."""
-    from addressparser_spark.operators.multimodal import _mp4_meta, make_mp4
+    from addressparser_spark.data.media import make_mp4
 
     clip = make_mp4(640, 480, 12500)
     hd = make_mp4(1920, 1080, 7333, timescale=90000)
@@ -215,17 +247,17 @@ def test_real_mp4_decode(spark):
     assert (feats[2]["width"], feats[2]["height"], feats[2]["duration_ms"]) == (1920, 1080, 7333)
 
     # parser unit checks: truncation/garbage never crash, non-MP4 rejects
-    assert _mp4_meta(clip) == (640, 480, 12500)
+    assert _walk(_mp4, clip)[0] == (640, 480, 12500)
     for i in range(0, len(clip), 7):
-        _mp4_meta(clip[:i])  # must not raise
-    assert _mp4_meta(b"not an mp4, merely 24+ bytes long....") is None
-    assert _mp4_meta(b"") is None
+        _walk(_mp4, clip[:i])  # must not raise
+    assert _walk(_mp4, b"not an mp4, merely 24+ bytes long....")[0] is None
+    assert _walk(_mp4, b"")[0] is None
     # frame_sample consumes the REAL duration: 12500ms / 5000ms steps -> 3 offsets
     frames = frame_sample(media.filter(F.col("kind") == "video"), every_ms=5000)
     assert frames.count() == 3
 
     # malformed trak ending in an EMPTY (size==8) tkhd box: the walk must
-    # stop, not raise — _mp4_meta keeps _mp4_boxes's stops-not-raises contract
+    # stop, not raise — the header walk keeps _boxes's stops-not-raises contract
     import struct as _struct
 
     def _box(btype: bytes, data: bytes) -> bytes:
@@ -234,18 +266,13 @@ def test_real_mp4_decode(spark):
     mvhd_ok = clip[clip.index(b"mvhd") - 4 : clip.index(b"mvhd") - 4 + 108]
     empty_tkhd = _box(b"moov", mvhd_ok + _box(b"trak", _box(b"tkhd", b"")))
     malformed = clip[: clip.index(b"moov") - 4] + empty_tkhd
-    assert _mp4_meta(malformed) == (0, 0, 12500)  # duration survives, dims degrade
+    assert _walk(_mp4, malformed)[0] == (0, 0, 12500)  # duration survives, dims degrade
 
 
 def test_real_gif_flac_decode(spark):
     """GIF and FLAC payloads decode to TRUE dimensions/durations via their
     fixed header layouts (logical screen descriptor / STREAMINFO bit-unpack)."""
-    from addressparser_spark.operators.multimodal import (
-        _flac_duration_ms,
-        _gif_dims,
-        make_flac,
-        make_gif,
-    )
+    from addressparser_spark.data.media import make_flac, make_gif
 
     gif = make_gif(320, 200)
     flac = make_flac(2500)
@@ -266,13 +293,13 @@ def test_real_gif_flac_decode(spark):
     assert feats[3]["duration_ms"] == 90_000
 
     # parser unit checks: truncation/garbage rejected, not misparsed
-    assert _gif_dims(make_gif(7, 9)) == (7, 9)
-    assert _gif_dims(make_gif(7, 9)[:8]) is None
-    assert _gif_dims(b"GIF99a" + bytes(8)) is None
-    assert _flac_duration_ms(make_flac(1234)) == 1234
-    assert _flac_duration_ms(make_flac(1234)[:20]) is None
-    assert _flac_duration_ms(b"fLaC" + bytes([0x81]) + bytes(40)) is None  # first block not STREAMINFO
-    assert _flac_duration_ms(b"not flac, just 42+ bytes of padding.......") is None
+    assert _dims(_gif, make_gif(7, 9)) == (7, 9)
+    assert _dims(_gif, make_gif(7, 9)[:8]) is None
+    assert _dims(_gif, b"GIF99a" + bytes(8)) is None
+    assert _duration(_flac, make_flac(1234)) == 1234
+    assert _duration(_flac, make_flac(1234)[:20]) is None
+    assert _duration(_flac, b"fLaC" + bytes([0x81]) + bytes(40)) is None  # first block not STREAMINFO
+    assert _duration(_flac, b"not flac, just 42+ bytes of padding.......") is None
 
 
 def test_media_decode_stub_raises(spark, sf_dir):
@@ -297,10 +324,7 @@ def test_png_pixel_decode_all_filters(spark):
     import struct
     import zlib
 
-    from addressparser_spark.operators.multimodal import (
-        _png_content,
-        _PNG_SIGNATURE,
-    )
+    from addressparser_spark.operators.multimodal import _PNG_SIGNATURE
 
     w, h = 16, 8
     pixels = bytes((x + y * w) % 256 for y in range(h) for x in range(w))
@@ -308,7 +332,7 @@ def test_png_pixel_decode_all_filters(spark):
     want_max = max(pixels)
     want_nonzero = round(sum(1 for v in pixels if v) / len(pixels), 6)
     for ftype in range(5):
-        got = _png_content(make_png(w, h, pixels=pixels, filter_type=ftype))
+        got = _content(_png, make_png(w, h, pixels=pixels, filter_type=ftype))
         assert got == (want_mean, want_max, want_nonzero), f"filter {ftype}"
 
     # RGB color type: luma is the integer channel mean (r+g+b)//3
@@ -326,14 +350,23 @@ def test_png_pixel_decode_all_filters(spark):
         + chunk(b"IDAT", zlib.compress(b"".join(b"\x00" + r for r in rgb_rows)))
         + chunk(b"IEND", b"")
     )
-    mean, mx, nz = _png_content(rgb_png)
+    mean, mx, nz = _content(_png, rgb_png)
     assert (mean, mx, nz) == (round((85 + 85 + 0 + 61) / 4, 6), 85, 0.75)
+
+    # an exact 6-decimal tie: one pixel of luma 1 in 128 has mean 0.0078125.
+    # PNG shares the integer half-up rule, which DuckDB's round agrees with
+    # (float round is half-even and would give 0.007812)
+    import duckdb
+
+    tie = _content(_png, make_png(16, 8, pixels=bytes([1]) + bytes(127)))
+    assert tie == (0.007813, 1, 0.007813)
+    assert duckdb.sql("SELECT round(1 / 128, 6)").fetchone()[0] == tie[0]
 
     # rejects, never crashes: truncation at every offset, garbage, interlace
     full = make_png(w, h, pixels=pixels, filter_type=4)
     for i in range(0, len(full), 11):
-        _png_content(full[:i])
-    assert _png_content(b"not a png but comfortably long enough....") is None
+        _content(_png, full[:i])
+    assert _content(_png, b"not a png but comfortably long enough....") is None
 
     # mapInPandas surface: content stats ride along for the fully-decodable
     # containers (PNG pixels, WAV PCM samples); compressed codecs stay NULL
@@ -358,17 +391,13 @@ def test_png_pixel_decode_all_filters(spark):
 
 
 def test_wav_sample_decode():
-    """_wav_content reads the real PCM byte stream: stats match a brute-force
+    """_wav reads the real PCM byte stream: stats match a brute-force
     fold over the same samples (integer half-up rounding at 6 decimals),
     and non-qualifying payloads (non-PCM fmt, stereo, 16-bit, truncation,
     empty data) degrade to None rather than crash."""
     import struct
 
-    from addressparser_spark.operators.multimodal import (
-        _cycle_bytes,
-        _wav_content,
-        synth_payload,
-    )
+    from addressparser_spark.data.media import _cycle_bytes, synth_payload
 
     def ground_truth(samples: bytes):
         n = len(samples)
@@ -382,36 +411,52 @@ def test_wav_sample_decode():
     for start, d in ((0, 500), (200, 1000), (255, 2719)):
         samples = _cycle_bytes(start, 8 * d)
         assert samples == bytes((start + i) % 256 for i in range(8 * d))
-        assert _wav_content(make_wav(d, samples=samples)) == ground_truth(samples)
+        assert _content(_wav, make_wav(d, samples=samples)) == ground_truth(samples)
 
     # the synth law end-to-end for a wav doc_id (3 mod 6)
     payload = synth_payload(9)  # 9 % 6 == 3 -> wav, d = 500 + 9*37, s = 9
     d = 500 + (9 % 97) * 37
-    assert _wav_content(payload) == ground_truth(_cycle_bytes(9, 8 * d))
+    assert _content(_wav, payload) == ground_truth(_cycle_bytes(9, 8 * d))
 
     good = make_wav(500, samples=_cycle_bytes(1, 4000))
-    assert _wav_content(good) is not None
+    assert _content(_wav, good) is not None
     for i in range(0, len(good), 997):
-        _wav_content(good[:i])  # truncation sweep: never raises
-    assert _wav_content(b"RIFFxxxxWAVE") is None
-    assert _wav_content(good[:44]) is None  # header only, empty data chunk
+        _content(_wav, good[:i])  # truncation sweep: never raises
+    assert _content(_wav, b"RIFFxxxxWAVE") is None
+    assert _content(_wav, good[:44]) is None  # header only, empty data chunk
     # non-PCM format code / stereo / 16-bit all demote to header-only
     bad_fmt = bytearray(good)
     bad_fmt[20:22] = struct.pack("<H", 3)  # IEEE float, not PCM
-    assert _wav_content(bytes(bad_fmt)) is None
+    assert _content(_wav, bytes(bad_fmt)) is None
     stereo = bytearray(good)
     stereo[22:24] = struct.pack("<H", 2)
-    assert _wav_content(bytes(stereo)) is None
+    assert _content(_wav, bytes(stereo)) is None
     wide = bytearray(good)
     wide[34:36] = struct.pack("<H", 16)
-    assert _wav_content(bytes(wide)) is None
+    assert _content(_wav, bytes(wide)) is None
+
+
+def test_truncated_wav_decodes_with_null_stats(spark):
+    """A WAV cut inside its ``fmt `` chunk (20-31 bytes) is not a WAV: each
+    payload gets one row, stub dims and NULL content stats. The earlier
+    decoder read the byte rate past the end and failed the whole task."""
+    wav = make_wav(100)
+    rows = [
+        (n, "audio", wav[:n], (n, "audio/wav", "t")) for n in range(20, 32)
+    ]
+    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
+    feats = decode_media(media, deterministic_fake=True).collect()
+    assert sorted(r["media_id"] for r in feats) == list(range(20, 32))
+    for r in feats:
+        assert (r["mean_luma"], r["max_luma"], r["nonzero_frac"]) == (None, None, None)
 
 
 def test_gif_lzw_round_trip():
     """The LZW pair is a REAL codec: encoder output decodes back to the
     exact input across code-width growth (9->12 bits) and the table-full
     CLEAR/reset path, and the decoder survives truncation/garbage."""
-    from addressparser_spark.operators.multimodal import _lzw_decode, _lzw_encode
+    from addressparser_spark.data.media import _lzw_encode
+    from addressparser_spark.operators.multimodal import _lzw_decode
 
     # varied deterministic stream long enough to fill the 12-bit table and
     # force a mid-stream CLEAR (new dict entry on almost every symbol)
@@ -431,15 +476,10 @@ def test_gif_lzw_round_trip():
 
 
 def test_gif_pixel_decode():
-    """_gif_content decodes real GIF image data: stats match a brute-force
+    """_gif decodes real GIF image data: stats match a brute-force
     fold over the pixels; header-only / interlaced / truncated payloads
     degrade to None."""
-    from addressparser_spark.operators.multimodal import (
-        _gif_content,
-        _gif_dims,
-        make_gif,
-        synth_payload,
-    )
+    from addressparser_spark.data.media import make_gif, synth_payload
 
     def ground_truth(pixels: bytes):
         n = len(pixels)
@@ -453,38 +493,32 @@ def test_gif_pixel_decode():
     for w, h, seed in ((8, 8, 0), (31, 17, 200), (107, 107, 250)):
         pixels = b"".join(bytes([(seed + r) % 256]) * w for r in range(h))
         gif = make_gif(w, h, pixels)
-        assert _gif_dims(gif) == (w, h)
-        assert _gif_content(gif) == ground_truth(pixels)
+        assert _dims(_gif, gif) == (w, h)
+        assert _content(_gif, gif) == ground_truth(pixels)
 
     # synth law end-to-end for a gif doc_id (2 mod 6): w=8+id%100, h=8+(id//3)%100
     payload = synth_payload(2)
     pixels = b"".join(bytes([(2 + r) % 256]) * (8 + 2) for r in range(8 + 0))
-    assert _gif_content(payload) == ground_truth(pixels)
+    assert _content(_gif, payload) == ground_truth(pixels)
 
-    assert _gif_content(make_gif(9, 9)) is None  # header-only: no image data
+    assert _content(_gif, make_gif(9, 9)) is None  # header-only: no image data
     full = make_gif(16, 16, bytes(range(256)))
     for i in range(0, len(full), 101):
-        _gif_content(full[:i])  # truncation sweep: never raises
+        _content(_gif, full[:i])  # truncation sweep: never raises
     # interlaced storage permutes row order; the stats are order-invariant
     # folds, so a four-pass image must yield identical values
     body = bytes(range(256))
     assert make_gif(16, 16, body, interlaced=True) != full  # really reordered
-    assert _gif_content(make_gif(16, 16, body, interlaced=True)) == _gif_content(full)
-    assert _gif_content(b"GIF89a" + bytes(20)) is None
+    assert _content(_gif, make_gif(16, 16, body, interlaced=True)) == _content(_gif, full)
+    assert _content(_gif, b"GIF89a" + bytes(20)) is None
 
 
 def test_flac_verbatim_decode():
-    """_flac_content parses real FLAC frames (sync, header codes, UTF-8
+    """_flac parses real FLAC frames (sync, header codes, UTF-8
     frame number, VERIFIED CRC-8) and reads the verbatim sample stream;
     stats match a brute-force fold. Header-only payloads, CRC corruption,
     truncation and non-verbatim subframes all degrade to None."""
-    from addressparser_spark.operators.multimodal import (
-        _cycle_bytes,
-        _flac_content,
-        _flac_duration_ms,
-        make_flac,
-        synth_payload,
-    )
+    from addressparser_spark.data.media import _cycle_bytes, make_flac, synth_payload
 
     def ground_truth(samples: bytes):
         n = len(samples)
@@ -498,43 +532,41 @@ def test_flac_verbatim_decode():
     for start, d in ((0, 500), (130, 1000), (255, 4108)):  # multi-frame: up to 9 frames
         samples = _cycle_bytes(start, 8 * d)
         flac = make_flac(d, samples=samples)
-        assert _flac_duration_ms(flac) == d
-        assert _flac_content(flac) == ground_truth(samples)
+        assert _duration(_flac, flac) == d
+        assert _content(_flac, flac) == ground_truth(samples)
 
     # synth law end-to-end for a flac doc_id (4 mod 6)
     payload = synth_payload(4)
     d = 500 + (4 % 89) * 41
-    assert _flac_content(payload) == ground_truth(_cycle_bytes(4, 8 * d))
+    assert _content(_flac, payload) == ground_truth(_cycle_bytes(4, 8 * d))
 
-    assert _flac_content(make_flac(700)) is None  # header-only: no frames
+    assert _content(_flac, make_flac(700)) is None  # header-only: no frames
     good = make_flac(600, samples=_cycle_bytes(7, 4800))
     for i in range(0, len(good), 331):
-        _flac_content(good[:i])  # truncation sweep: never raises
+        _content(_flac, good[:i])  # truncation sweep: never raises
     # a cut inside the last frame's CRC-16 footer leaves every sample intact
     # but is still a truncated stream
-    assert _flac_content(good[:-1]) is None
-    assert _flac_content(good[:-2]) is None
+    assert _content(_flac, good[:-1]) is None
+    assert _content(_flac, good[:-2]) is None
     # corrupt the first frame's CRC-8 byte: decoder must reject, not misread
     streaminfo_end = 8 + 34
     bad = bytearray(good)
     # frame starts right after STREAMINFO; header = 2 sync + 1 + 1 + 1 utf8 + 2 bs
     hdr_len = 2 + 1 + 1 + 1 + 2
     bad[streaminfo_end + hdr_len] ^= 0xFF
-    assert _flac_content(bytes(bad)) is None
+    assert _content(_flac, bytes(bad)) is None
     # non-verbatim subframe type byte: reject
     bad2 = bytearray(good)
     bad2[streaminfo_end + hdr_len + 1] = 0x00  # CONSTANT subframe instead
-    assert _flac_content(bytes(bad2)) is None
+    assert _content(_flac, bytes(bad2)) is None
 
 
 def test_mp4_raw_pcm_decode():
-    """_mp4_content walks the real sample tables (hdlr 'soun' -> stsd raw
+    """_mp4 walks the real sample tables (hdlr 'soun' -> stsd raw
     entry -> stsz/stco) and reads uncompressed PCM out of mdat; video-only
     MP4s, compressed entries and broken layouts degrade to None."""
-    from addressparser_spark.operators.multimodal import (
+    from addressparser_spark.data.media import (
         _cycle_bytes,
-        _mp4_content,
-        _mp4_meta,
         make_mp4,
         make_mp4_audio,
         synth_payload,
@@ -552,45 +584,40 @@ def test_mp4_raw_pcm_decode():
     for start, d in ((0, 500), (77, 1337)):
         samples = _cycle_bytes(start, 8 * d)
         clip = make_mp4_audio(d, samples=samples)
-        assert _mp4_meta(clip) == (0, 0, d)  # header facts: audio track, no dims
-        assert _mp4_content(clip) == ground_truth(samples)
+        assert _walk(_mp4, clip)[0] == (0, 0, d)  # header facts: audio track, no dims
+        assert _content(_mp4, clip) == ground_truth(samples)
 
     # synth law end-to-end: doc_id 11 -> mp4 (11%6==5), audio ((11//6)%2==1)
     d11 = 1000 + (11 % 113) * 29
-    assert _mp4_content(synth_payload(11)) == ground_truth(_cycle_bytes(11, 8 * d11))
+    assert _content(_mp4, synth_payload(11)) == ground_truth(_cycle_bytes(11, 8 * d11))
     # doc_id 5 -> mp4 video ((5//6)%2==0): header dims, NULL content
-    assert _mp4_content(synth_payload(5)) is None
-    assert _mp4_meta(synth_payload(5))[2] == 1000 + 5 * 29
+    assert _content(_mp4, synth_payload(5)) is None
+    assert _duration(_mp4, synth_payload(5)) == 1000 + 5 * 29
 
     # multi-chunk layouts: stsc chunk-run map + per-chunk stco offsets,
     # including a short tail chunk — stats identical to the 1-chunk form
     for nch in (3, 7):
         samples = _cycle_bytes(9, 8 * 700)
         multi = make_mp4_audio(700, samples=samples, n_chunks=nch)
-        assert _mp4_content(multi) == ground_truth(samples), nch
+        assert _content(_mp4, multi) == ground_truth(samples), nch
 
     good = make_mp4_audio(600, samples=_cycle_bytes(3, 4800))
     for i in range(0, len(good), 173):
-        _mp4_content(good[:i])  # truncation sweep: never raises
-    assert _mp4_content(make_mp4(640, 480, 2000)) is None  # video-only
+        _content(_mp4, good[:i])  # truncation sweep: never raises
+    assert _content(_mp4, make_mp4(640, 480, 2000)) is None  # video-only
     # compressed-format sample entry: reject
     bad = bytearray(good)
     idx = bad.find(b"raw ")
     bad[idx : idx + 4] = b"mp4a"
-    assert _mp4_content(bytes(bad)) is None
+    assert _content(_mp4, bytes(bad)) is None
 
 
 def test_jpeg_dc_only_decode():
-    """_jpeg_content decodes the real entropy layer (DHT Huffman build, DC
+    """_jpeg decodes the real entropy layer (DHT Huffman build, DC
     prediction, sign extension, byte unstuffing) for the DC-only baseline
     subset; blocks with AC energy, header-only payloads and truncation
     degrade to None."""
-    from addressparser_spark.operators.multimodal import (
-        _jpeg_content,
-        _jpeg_dims,
-        make_jpeg,
-        synth_payload,
-    )
+    from addressparser_spark.data.media import synth_payload
 
     def gt(pixels: bytes):
         n = len(pixels)
@@ -605,22 +632,22 @@ def test_jpeg_dc_only_decode():
     for w, h, seed in ((8, 8, 0), (17, 31, 120), (255, 240, 250), (16, 255, 252)):
         pixels = b"".join(bytes([(seed + r // 8) % 256]) * w for r in range(h))
         j = make_jpeg(w, h, pixels)
-        assert _jpeg_dims(j) == (w, h)
-        assert _jpeg_content(j) == gt(pixels), (w, h, seed)
+        assert _dims(_jpeg, j) == (w, h)
+        assert _content(_jpeg, j) == gt(pixels), (w, h, seed)
 
     # synth law end-to-end for a jpeg doc_id (1 mod 6)
     pix = b"".join(bytes([(1 + r // 8) % 256]) * 17 for r in range(16))
-    assert _jpeg_content(synth_payload(1)) == gt(pix)
+    assert _content(_jpeg, synth_payload(1)) == gt(pix)
 
-    assert _jpeg_content(make_jpeg(9, 9)) is None  # header-only: no scan
+    assert _content(_jpeg, make_jpeg(9, 9)) is None  # header-only: no scan
     full = make_jpeg(32, 24, bytes([7]) * 32 * 24)
     for i in range(0, len(full), 37):
-        _jpeg_content(full[:i])  # truncation sweep: never raises
+        _content(_jpeg, full[:i])  # truncation sweep: never raises
     # corrupt a scan byte: a desynced Huffman stream must degrade (None or
     # a clean parse of whatever validly decodes) — never raise
     bad = bytearray(full)
     bad[-4] ^= 0x55
-    _jpeg_content(bytes(bad))
+    _content(_jpeg, bytes(bad))
 
 
 def test_flac_blocksize_code_variants():
@@ -629,12 +656,8 @@ def test_flac_blocksize_code_variants():
     and the 256<<n family (0b1001 -> 512)."""
     import struct
 
-    from addressparser_spark.operators.multimodal import (
-        _crc8,
-        _crc16,
-        _flac_content,
-        make_flac,
-    )
+    from addressparser_spark.data.media import _crc16, make_flac
+    from addressparser_spark.operators.multimodal import _crc8
 
     def craft(blocks):  # blocks: list of (bs_code_byte, extra, samples)
         total = sum(len(s) for _, _, s in blocks)
@@ -661,24 +684,20 @@ def test_flac_blocksize_code_variants():
     s96 = bytes(range(96))
     # fixed code 0b0001 = 192 samples
     flac = craft([(0x10, b"", s192)])
-    assert _flac_content(flac) == gt(s192)
+    assert _content(_flac, flac) == gt(s192)
     # 256<<1 code 0b1001 = 512 samples, then an 8-bit-form (0b0110) tail
     flac = craft([(0x90, b"", s512), (0x60, bytes([95]), s96)])
-    assert _flac_content(flac) == gt(s512 + s96)
+    assert _content(_flac, flac) == gt(s512 + s96)
     # reserved blocksize code 0b0000 -> reject
-    assert _flac_content(craft([(0x00, b"", s192)])) is None
+    assert _content(_flac, craft([(0x00, b"", s192)])) is None
 
 
 def test_gif_local_color_table():
     """An image with a LOCAL color table (no global one) decodes through
-    the local palette — the descriptor-level branch of _gif_content."""
+    the local palette — the descriptor-level branch of _gif."""
     import struct
 
-    from addressparser_spark.operators.multimodal import (
-        _gif_content,
-        _lzw_encode,
-        make_gif,
-    )
+    from addressparser_spark.data.media import _lzw_encode, make_gif
 
     w = h = 8
     pixels = bytes((40 + i) % 256 for i in range(w * h))
@@ -695,16 +714,16 @@ def test_gif_local_color_table():
         + bytes(v for i in range(256) for v in (i, i, i))
         + bytes([8]) + blocks + b"\x00" + b"\x3b"
     )
-    want = _gif_content(make_gif(w, h, pixels))
+    want = _content(_gif, make_gif(w, h, pixels))
     assert want is not None
-    assert _gif_content(local) == want
+    assert _content(_gif, local) == want
     # no palette anywhere -> None
     no_pal = (
         b"GIF89a" + struct.pack("<HH", w, h) + bytes([0x00, 0x00, 0x00])
         + b"\x2c" + struct.pack("<HHHH", 0, 0, w, h) + bytes([0x00])
         + bytes([8]) + blocks + b"\x00" + b"\x3b"
     )
-    assert _gif_content(no_pal) is None
+    assert _content(_gif, no_pal) is None
 
 
 def test_crafted_malformations_never_raise():
@@ -713,13 +732,8 @@ def test_crafted_malformations_never_raise():
     symbols, FLAC truncated inside the frame-number field."""
     import struct
 
-    from addressparser_spark.operators.multimodal import (
-        _crc8,
-        _flac_content,
-        _jpeg_content,
-        make_flac,
-        make_jpeg,
-    )
+    from addressparser_spark.data.media import make_flac
+    from addressparser_spark.operators.multimodal import _crc8
 
     good = make_jpeg(16, 16, bytes([9]) * 256)
 
@@ -730,23 +744,23 @@ def test_crafted_malformations_never_raise():
     i = good.find(b"\xff\xdb")
     j = good.find(b"\xff", i + 2)
     short_dqt = good[:i] + seg(0xDB, b"\x00" + bytes(10)) + good[j:]
-    assert _jpeg_content(short_dqt) is None
+    assert _content(_jpeg, short_dqt) is None
 
     # DHT declaring 12 symbols but shipping none
     i = good.find(b"\xff\xc4")
     j = good.find(b"\xff", i + 2)
     bad_dht = good[:i] + seg(0xC4, b"\x00" + bytes([0, 12] + [0] * 14)) + good[j:]
-    assert _jpeg_content(bad_dht) is None
+    assert _content(_jpeg, bad_dht) is None
 
     # FLAC whose last bytes end exactly after a frame's UTF-8 number with a
     # 16-bit blocksize code promised but absent
     head = make_flac(192 * 1000 // 8000, 8000)
     hdr = b"\xff\xf8" + bytes([0x60]) + b"\x02" + b"\x00"  # 8-bit form promised
-    assert _flac_content(head + hdr) is None
-    assert _flac_content(head + hdr + bytes([191]) ) is None  # crc byte missing
+    assert _content(_flac, head + hdr) is None
+    assert _content(_flac, head + hdr + bytes([191]) ) is None  # crc byte missing
     # and with a VALID crc over a header whose samples then run out
     hdr2 = b"\xff\xf8" + bytes([0x10]) + b"\x02" + b"\x00"  # fixed 192
-    assert _flac_content(head + hdr2 + bytes([_crc8(hdr2)]) + b"\x02") is None
+    assert _content(_flac, head + hdr2 + bytes([_crc8(hdr2)]) + b"\x02") is None
 
 
 def test_mp4_multi_trak_no_cross_poisoning():
@@ -755,21 +769,17 @@ def test_mp4_multi_trak_no_cross_poisoning():
     sample entry must never pair with another trak's tables."""
     import struct
 
-    from addressparser_spark.operators.multimodal import (
-        _cycle_bytes,
-        _mp4_boxes,
-        _mp4_content,
-        make_mp4_audio,
-    )
+    from addressparser_spark.data.media import _cycle_bytes, make_mp4_audio
+    from addressparser_spark.operators.multimodal import _boxes, _Reader
 
     original = make_mp4_audio(500, samples=_cycle_bytes(5, 4000))
-    assert _mp4_content(original) is not None
-    boxes = {t: (b - 8, e) for t, b, e in _mp4_boxes(original, 0, len(original))}
+    assert _content(_mp4, original) is not None
+    boxes = {t: (b.pos - 8, b.end) for t, b in _boxes(_Reader(original))}
     fstart, fend = boxes[b"ftyp"]
     mstart, mend = boxes[b"moov"]
     dstart, dend = boxes[b"mdat"]
     inner = {
-        t: (b - 8, e) for t, b, e in _mp4_boxes(original, mstart + 8, mend)
+        t: (b.pos - 8, b.end) for t, b in _boxes(_Reader(original, mstart + 8, mend))
     }
     mvhd = original[slice(*inner[b"mvhd"])]
     trak = original[slice(*inner[b"trak"])]
@@ -778,4 +788,4 @@ def test_mp4_multi_trak_no_cross_poisoning():
     body = mvhd + trak_mp4a + trak_no_stsz
     moov = struct.pack(">I", len(body) + 8) + b"moov" + body
     crafted = original[fstart:fend] + moov + original[dstart:dend]
-    assert _mp4_content(crafted) is None
+    assert _content(_mp4, crafted) is None

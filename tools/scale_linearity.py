@@ -26,7 +26,8 @@ from addressparser_spark.plans.evaluate import labeled_pairs, pairwise_f1
 from addressparser_spark.plans.pipeline import run_linkage
 from addressparser_spark.session import get_spark
 
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the CPUs this process may run on, not the machine's count
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 SCALES = [int(s) for s in os.environ.get("SPARK_GRAFT_SCALES", "24000,240000").split(",")]
 
 
