@@ -20,6 +20,10 @@ Commands:
                raises if it does not finish within ``--timeout`` seconds
 - ``package``  build the --py-files zip
 
+``link`` and ``stream`` run the one linkage plan,
+``plans.pipeline.run_linkage``: ``link`` over its whole input, ``stream``
+once per micro-batch.
+
 ``link`` writes the tables ``clusters``, ``resolved``, ``registry`` and
 ``dropped_blocks`` under ``--output``, and ``metrics.json`` with the keys:
 
@@ -126,9 +130,8 @@ def _cmd_link(args: argparse.Namespace) -> None:
         metrics["profile_partitions"] = partition_histogram(result.profiles)
         metrics["dropped_blocks"] = int(obs_dropped.get["rows"])
     finally:
-        for df in (resolved, clusters, result.scored, result.pairs,
-                   result.blocks, result.profiles):
-            df.unpersist()
+        resolved.unpersist()
+        result.unpersist()
     with open(os.path.join(args.output, "metrics.json"), "w") as f:
         json.dump(metrics, f)
     print(json.dumps(metrics))

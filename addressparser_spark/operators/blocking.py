@@ -118,13 +118,13 @@ def minhash_col(spark: SparkSession, shingles: Column, num_hashes: int) -> Colum
     return kernel(spark, MINHASH_FUNC, shingles, F.lit(num_hashes))
 
 
-def _profile_sketch(profiles: DataFrame, num_hashes: int) -> Column:
+def _profile_sketch(profiles: DataFrame) -> Column:
     # shingle strings re-derived from tokens (kept out of the cached profile
     # row on purpose — see conv_profiles)
     return minhash_col(
         profiles.sparkSession,
         distinct_shingles_col(F.col("tokens"), SHINGLE_K),
-        num_hashes,
+        NUM_HASHES,
     ).alias("mh")
 
 
@@ -134,11 +134,7 @@ def band_key(b: int, hashes: list[Column]) -> Column:
     return F.md5(F.concat_ws("|", F.lit(str(b)), *hashes))
 
 
-def band_keys(
-    mh: Column,
-    num_hashes: int = NUM_HASHES,
-    rows_per_band: int = ROWS_PER_BAND,
-) -> list[Column]:
+def band_keys(mh: Column) -> list[Column]:
     """One ``struct(src 'mh<b>', block_key)`` per LSH band of the sketch
     ``mh``; NULL when there is no sketch, so the band rows drop out."""
     return [
@@ -146,11 +142,11 @@ def band_keys(
             mh.isNotNull(),
             F.struct(
                 F.lit(f"mh{b}").alias("src"),
-                band_key(b, [mh[i] for i in range(b * rows_per_band, (b + 1) * rows_per_band)])
+                band_key(b, [mh[i] for i in range(b * ROWS_PER_BAND, (b + 1) * ROWS_PER_BAND)])
                 .alias("block_key"),
             ),
         )
-        for b in range(num_hashes // rows_per_band)
+        for b in range(NUM_HASHES // ROWS_PER_BAND)
     ]
 
 
@@ -161,14 +157,10 @@ def _key_rows(keyed: DataFrame, keys: list[Column], *carry: str) -> DataFrame:
     ).select("conv_id", "k.src", "k.block_key", *carry)
 
 
-def minhash_bands(
-    profiles: DataFrame,
-    num_hashes: int = NUM_HASHES,
-    rows_per_band: int = ROWS_PER_BAND,
-) -> DataFrame:
+def minhash_bands(profiles: DataFrame) -> DataFrame:
     """Long-format LSH band keys: (conv_id, src 'mh<b>', block_key)."""
-    keyed = profiles.select("conv_id", _profile_sketch(profiles, num_hashes))
-    return _key_rows(keyed, band_keys(F.col("mh"), num_hashes, rows_per_band))
+    keyed = profiles.select("conv_id", _profile_sketch(profiles))
+    return _key_rows(keyed, band_keys(F.col("mh")))
 
 
 def canonical_tokens_col(tokens, synonyms: dict[str, str] | None = None):
@@ -209,10 +201,7 @@ def synonym_blocks(
 
 
 def block_table(
-    profiles: DataFrame,
-    num_hashes: int = NUM_HASHES,
-    rows_per_band: int = ROWS_PER_BAND,
-    synonyms: dict[str, str] | None = None,
+    profiles: DataFrame, synonyms: dict[str, str] | None = None
 ) -> DataFrame:
     """All blocking keys: (conv_id, src, block_key, sig).
 
@@ -225,12 +214,12 @@ def block_table(
     (opt-in so the default pipeline's oracle stays byte-stable).
     """
     keyed = profiles.select(
-        "conv_id", "sig", "prefix_key", _profile_sketch(profiles, num_hashes)
+        "conv_id", "sig", "prefix_key", _profile_sketch(profiles)
     )
     keys = [
         F.struct(F.lit("sig").alias("src"), F.col("sig").alias("block_key")),
         F.struct(F.lit("prefix").alias("src"), F.col("prefix_key").alias("block_key")),
-        *band_keys(F.col("mh"), num_hashes, rows_per_band),
+        *band_keys(F.col("mh")),
     ]
     out = _key_rows(keyed, keys, "sig")
     if synonyms is not None:

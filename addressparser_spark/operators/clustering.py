@@ -129,7 +129,6 @@ def connected_components(
     edges: DataFrame,
     checkpoint_dir: str | None = None,
     max_iter: int = 25,
-    resume: bool = True,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``.
 
@@ -144,7 +143,7 @@ def connected_components(
 
     start_it = 0
     resumed = None
-    if checkpoint_dir is not None and resume:
+    if checkpoint_dir is not None:
         start_it, resumed = _resume_iteration(spark, checkpoint_dir)
     if resumed is not None:
         e = resumed
@@ -172,12 +171,3 @@ def connected_components(
     reps = e.select(F.col("dst").alias("node"), F.col("dst").alias("component")).distinct()
     return members.unionByName(reps).distinct()
 
-
-def assign_clusters(nodes: DataFrame, components: DataFrame, id_col: str = "conv_id") -> DataFrame:
-    """Left-join components onto the full node set; singletons are their own cluster."""
-    out = nodes.select(F.col(id_col).alias("conv_id")).distinct().join(
-        components.withColumnRenamed("node", "conv_id"), "conv_id", "left"
-    )
-    return out.select(
-        "conv_id", F.coalesce("component", "conv_id").alias("cluster_id")
-    )

@@ -125,7 +125,7 @@ def bucket_drop_stats(buckets: DataFrame, max_bucket: int = MAX_BUCKET) -> DataF
     """(bucket, bucket_n, pairs_dropped): oversized buckets the cap skipped.
 
     The 'cap + never silent' guardrail for the doc-dedup family — same
-    contract as ``pairs.capped_blocks`` surfaces for conversation blocking
+    contract as ``pairs.dropped_blocks`` surfaces for conversation blocking
     (``er_dropped_blocks``): recall loss from hot buckets is a *metric*, not
     an invisible behavior. Exposed as the ``dedup_dropped_buckets`` query.
     """

@@ -61,19 +61,18 @@ conv_shingles AS (
 """
 
 
-def _minhash_cte(num_hashes: int = NUM_HASHES) -> str:
+def _minhash_cte() -> str:
     cols = ",\n         ".join(
-        f"min(md5('{i:02d}|' || s)) AS mh_{i:02d}" for i in range(num_hashes)
+        f"min(md5('{i:02d}|' || s)) AS mh_{i:02d}" for i in range(NUM_HASHES)
     )
     return f"minhash AS (\n  SELECT conv_id,\n         {cols}\n  FROM conv_shingles GROUP BY conv_id\n)"
 
 
-def _bands_cte(num_hashes: int = NUM_HASHES, rows_per_band: int = ROWS_PER_BAND) -> str:
-    n_bands = num_hashes // rows_per_band
+def _bands_cte() -> str:
     selects = []
-    for b in range(n_bands):
+    for b in range(NUM_HASHES // ROWS_PER_BAND):
         parts = " || '|' || ".join(
-            f"mh_{i:02d}" for i in range(b * rows_per_band, (b + 1) * rows_per_band)
+            f"mh_{i:02d}" for i in range(b * ROWS_PER_BAND, (b + 1) * ROWS_PER_BAND)
         )
         selects.append(
             f"SELECT conv_id, 'mh{b}' AS src, md5('{b}' || '|' || {parts}) AS block_key FROM minhash"

@@ -20,25 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..operators import blocking, pairs as pairs_op, scoring
-from ..operators.clustering import assign_clusters, connected_components
-
-
-def exact_edges(profiles: DataFrame) -> DataFrame:
-    """Light stage: same-signature star edges straight from profiles.
-
-    Mirrors the reference's light mode (exact-key lookup before the expensive
-    full-text search, ``Db/DataContextBase_AddrObject.cs:52-95``): exact
-    duplicates are linked by one window over ``sig`` — no pair generation,
-    no scoring. Edges point members at the per-sig min conv_id, which yields
-    the same connected components as scoring every same-sig pair.
-    """
-    w = Window.partitionBy("sig")
-    reps = profiles.select(
-        "conv_id", F.min("conv_id").over(w).alias("rep")
-    )
-    return reps.filter(F.col("conv_id") != F.col("rep")).select(
-        F.col("conv_id").alias("src"), F.col("rep").alias("dst")
-    )
+from ..operators.clustering import connected_components
 
 
 def sig_representatives(profiles: DataFrame) -> DataFrame:
@@ -87,23 +69,16 @@ def funnel_clusters_from(
     ).select("conv_id", F.coalesce("component", "rep").alias("cluster_id"))
 
 
-def heavy_pairs(profiles: DataFrame, num_hashes: int, rows_per_band: int,
-                max_block_size: int, blocks: DataFrame | None = None) -> DataFrame:
+def heavy_pairs(blocks: DataFrame) -> DataFrame:
     """Heavy stage candidates: prefix + MinHash keys only, same-sig pairs
     dropped (the light stage already linked them).
 
-    The block rows carry each side's ``sig``, so the same-sig filter reads
-    the pair rows and never joins ``profiles``. Pass ``blocks`` (an
-    already-persisted full block table) to reuse the MinHash computation
-    across consumers instead of re-deriving it; the caller then owns its
-    persistence. Without it the block table is built here and persisted by
-    ``candidate_pairs``.
+    ``blocks`` is the full block table, persisted by the caller so the
+    MinHash sketch runs once across its consumers. The block rows carry each
+    side's ``sig``, so the same-sig filter reads the pair rows and never
+    joins the profiles.
     """
-    owned = blocks is None
-    if owned:
-        blocks = blocking.block_table(profiles, num_hashes, rows_per_band)
-    blocks = blocks.filter(F.col("src") != "sig")
-    cand = pairs_op.candidate_pairs(blocks, max_block_size, persist=owned)
+    cand = pairs_op.candidate_pairs(blocks.filter(F.col("src") != "sig"))
     return cand.filter(F.col("sig_a") != F.col("sig_b")).select("conv_a", "conv_b")
 
 
@@ -145,27 +120,30 @@ class LinkageResult:
     clusters: DataFrame
     metrics: PipelineMetrics
 
+    def unpersist(self) -> None:
+        """Release every frame ``run_linkage`` persisted, and ``clusters``
+        if the caller cached it."""
+        for df in (self.clusters, self.scored, self.pairs, self.blocks, self.profiles):
+            df.unpersist()
 
-def run_linkage(
-    transcripts: DataFrame,
-    checkpoint_dir: str | None = None,
-    num_hashes: int = blocking.NUM_HASHES,
-    rows_per_band: int = blocking.ROWS_PER_BAND,
-    max_block_size: int = pairs_op.MAX_BLOCK_SIZE,
-    escalate: bool = True,
-) -> LinkageResult:
-    """Full pipeline. ``escalate=True`` runs the light->heavy funnel: exact
-    duplicates resolve from one window (no scoring), and only non-identical
+
+def run_linkage(transcripts: DataFrame, checkpoint_dir: str | None = None) -> LinkageResult:
+    """The linkage plan: normalize -> profile -> block -> pair -> score ->
+    cluster, as a light->heavy funnel.
+
+    Exact duplicates (same ``sig``) resolve from one window over the
+    profiles, with no pair generation and no scoring; only non-identical
     candidates reach the similarity cascade — the reference's two-phase
-    search re-expressed set-based. Cluster output is identical either way
-    (same-sig pairs would score 'exact' anyway); the funnel just removes
-    them from the quadratic stage.
+    search re-expressed set-based. The light stage ignores the block-size
+    cap: a group of more than ``MAX_BLOCK_SIZE`` identical conversations
+    still forms one cluster, although ``dropped_blocks`` lists its blocks
+    (its ``sig`` block included).
 
     The full block table is persisted once (``MEMORY_AND_DISK``) and shared
-    by the cap split (``dropped_blocks``) and the pair generation, so the
-    MinHash sketch runs once per pipeline. The caller releases
-    the persisted frames (``profiles``, ``blocks``, ``pairs``, ``scored``)
-    when it is done with them.
+    by ``dropped_blocks`` and the pair generation, so the MinHash sketch
+    runs once per pipeline. ``profiles``, ``blocks``, ``pairs`` and
+    ``scored`` come back persisted; the caller releases them with
+    :meth:`LinkageResult.unpersist` when it is done with the result.
     """
     metrics = PipelineMetrics()
 
@@ -176,16 +154,11 @@ def run_linkage(
 
     profiles = blocking.conv_profiles(turns).cache()
     # the MinHash sketch is the most expensive blocking step: persist the
-    # block table once so the cap split and the pair generation both read it
-    blocks = blocking.block_table(profiles, num_hashes, rows_per_band).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    _, dropped = pairs_op.capped_blocks(blocks, max_block_size)
-    if escalate:
-        cand = heavy_pairs(profiles, num_hashes, rows_per_band, max_block_size,
-                           blocks=blocks)
-    else:
-        cand = pairs_op.candidate_pairs(blocks, max_block_size, persist=False)
+    # block table once so the dropped-block stats and the pair generation
+    # both read it
+    blocks = blocking.block_table(profiles).persist(StorageLevel.MEMORY_AND_DISK)
+    dropped = pairs_op.dropped_blocks(blocks)
+    cand = heavy_pairs(blocks)
     obs_pairs = Observation("pairs")
     cand = cand.observe(obs_pairs, F.count(F.lit(1)).alias("candidates")).cache()
     metrics.observations["pairs"] = obs_pairs
@@ -199,16 +172,10 @@ def run_linkage(
     ).cache()
     metrics.observations["scored"] = obs_scored
 
-    if escalate:
-        # contraction shortcut: same-sig stars never enter the CC loop
-        clusters = funnel_clusters_from(
-            profiles, scoring.matched_edges(scored), checkpoint_dir=checkpoint_dir
-        )
-    else:
-        components = connected_components(
-            scoring.matched_edges(scored), checkpoint_dir=checkpoint_dir
-        )
-        clusters = assign_clusters(profiles, components)
+    # contraction shortcut: same-sig stars never enter the CC loop
+    clusters = funnel_clusters_from(
+        profiles, scoring.matched_edges(scored), checkpoint_dir=checkpoint_dir
+    )
 
     return LinkageResult(
         profiles=profiles,

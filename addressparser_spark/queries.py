@@ -7,11 +7,12 @@ column names/types match the DuckDB oracle in ``oracle.py`` exactly
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .data.transcripts import transcripts_df
 from .operators import blocking, pairs as pairs_op, scoring
+from .plans.pipeline import funnel_clusters_from, heavy_pairs, sig_representatives
 
 
 def _profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -47,9 +48,7 @@ def er_conv_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def er_exact_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _profiles(spark, sf_dir)
-    w = Window.partitionBy("sig")
-    return p.select("conv_id", F.min("conv_id").over(w).alias("cluster_id"))
+    return sig_representatives(_profiles(spark, sf_dir)).withColumnRenamed("rep", "cluster_id")
 
 
 def er_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -61,25 +60,22 @@ def er_block_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def er_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return pairs_op.candidate_pairs(_blocks(spark, sf_dir), persist=False).select(
+    return pairs_op.candidate_pairs(_blocks(spark, sf_dir)).select(
         "conv_a", "conv_b"
     )
 
 
 def er_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _profiles(spark, sf_dir)
-    cand = pairs_op.candidate_pairs(_blocks(spark, sf_dir), persist=False)
+    cand = pairs_op.candidate_pairs(_blocks(spark, sf_dir))
     return scoring.score_pairs(cand, p)
 
 
-def _funnel_clusters(p: DataFrame, blocks: DataFrame | None = None) -> DataFrame:
+def _funnel_clusters(p: DataFrame, blocks: DataFrame) -> DataFrame:
     """Light->heavy funnel clustering (oracle-equivalent to scoring all pairs;
     the parity gate proves it against the flat-SQL closure). Same-sig stars
     are contracted out of the CC loop entirely (see ``funnel_clusters_from``)."""
-    from .plans.pipeline import funnel_clusters_from, heavy_pairs
-
-    cand = heavy_pairs(p, blocking.NUM_HASHES, blocking.ROWS_PER_BAND,
-                       pairs_op.MAX_BLOCK_SIZE, blocks=blocks)
+    cand = heavy_pairs(blocks)
     scored = scoring.score_pairs(cand, p)
     return funnel_clusters_from(p, scoring.matched_edges(scored))
 
@@ -240,7 +236,7 @@ def er_eval_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters = _funnel_clusters(p, _blocks(spark, sf_dir))
     # labels stay defined over the FULL candidate-pair set (F1 "at the same
     # blocking key"), independent of the funnel shortcut
-    cand = pairs_op.candidate_pairs(_blocks(spark, sf_dir), persist=False)
+    cand = pairs_op.candidate_pairs(_blocks(spark, sf_dir))
     labels = labeled_pairs(cand, truth_df(spark, sf_dir))
     return pairwise_f1(clusters, labels)
 
@@ -267,7 +263,7 @@ def er_synonym_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
 def er_choose_candidate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R1 proper: multi-feature ranking cascade — one composed row_number."""
     p = _profiles(spark, sf_dir)
-    cand = pairs_op.candidate_pairs(_blocks(spark, sf_dir), persist=False)
+    cand = pairs_op.candidate_pairs(_blocks(spark, sf_dir))
     scored = scoring.score_pairs(cand, p)
     return scoring.choose_candidate(scored, p)
 
@@ -310,8 +306,7 @@ def er_parse_udtf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def er_dropped_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Block-size-cap accounting (never silent): oversized blocks + dropped pairs."""
-    _, dropped = pairs_op.capped_blocks(_blocks(spark, sf_dir))
-    return dropped
+    return pairs_op.dropped_blocks(_blocks(spark, sf_dir))
 
 
 def er_resolve_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -325,8 +320,7 @@ def er_resolve_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.resolve import demo_registry, resolve_cascade
 
     p = _profiles(spark, sf_dir)
-    w = Window.partitionBy("sig")
-    clusters = p.select("conv_id", F.min("conv_id").over(w).alias("cluster_id"))
+    clusters = sig_representatives(p).withColumnRenamed("rep", "cluster_id")
     return resolve_cascade(clusters, p, demo_registry(p))
 
 
@@ -338,8 +332,7 @@ def ops_cap_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import dropped_buckets
     from .operators.substring_join import hot_keys
 
-    _, blocks_dropped = pairs_op.capped_blocks(_blocks(spark, sf_dir))
-    a = blocks_dropped.select(
+    a = pairs_op.dropped_blocks(_blocks(spark, sf_dir)).select(
         F.lit("block_cap").alias("family"),
         F.col("block_key").alias("key"),
         F.col("block_n").alias("group_n"),

@@ -27,12 +27,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.resolve import CASCADE_REGISTRY_SCHEMA
 from .tables import TableStore, iceberg_available
-
-CASCADE_REGISTRY_SCHEMA = (
-    "entity_id string, rep_conv_id string, sig string, prefix_key string, "
-    "syn_key string"
-)
 
 
 class RegistryWriter:

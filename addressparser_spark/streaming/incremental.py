@@ -3,12 +3,13 @@
 Two streaming shapes:
 
 1. :func:`incremental_linkage` — ``readStream`` over a transcripts directory;
-   each micro-batch runs the full linkage pipeline in ``foreachBatch`` and
-   resolves against (then extends) the persistent entity registry — the
-   streaming MERGE pattern. ``foreachBatch`` is the exactly-once seam:
-   every on-disk write is per-epoch and overwrite-idempotent, and entity
-   ids are content-derived (md5 of signature, see operators/resolve.py),
-   so replaying a batch after failure converges to the same state.
+   each micro-batch runs ``run_linkage`` (the same light->heavy funnel as
+   ``cli link``) in ``foreachBatch`` and resolves against (then extends) the
+   persistent entity registry — the streaming MERGE pattern.
+   ``foreachBatch`` is the exactly-once seam: every on-disk write is
+   per-epoch and overwrite-idempotent, and entity ids are content-derived
+   (md5 of signature, see operators/resolve.py), so replaying a batch after
+   failure converges to the same state.
 
 2. :func:`turn_rate_stream` — watermarked sliding-window aggregation over
    turn arrivals (the windowed-agg + late-data operator family).
@@ -41,13 +42,12 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import blocking, pairs as pairs_op, scoring
-from ..operators.clustering import assign_clusters, connected_components
 from ..operators.resolve import (
     REGISTRY_SCHEMA,
     registry_additions,
     resolve_entities,
 )
+from ..plans.pipeline import LinkageResult, run_linkage
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -106,25 +106,20 @@ def _maybe_compact(spark: SparkSession, registry_dir: str, epoch_id: int) -> Non
 
 def link_batch(
     batch: DataFrame, registry: DataFrame
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Run linkage on one micro-batch against the current registry.
+) -> tuple[DataFrame, DataFrame, LinkageResult]:
+    """Run ``run_linkage`` on one micro-batch against the current registry.
 
-    Returns ``(resolved, additions, profiles)``. ``additions`` are the
+    Returns ``(resolved, additions, result)``. ``additions`` are the
     O(batch) registry delta rows (see ``registry_additions``) — the streaming
-    writer appends them as a per-epoch delta, a batch caller folds them with
-    ``merge_registry``. ``profiles`` comes back cached; the caller must
-    ``unpersist()`` it once the epoch's actions have run. Registry lookup is
-    the broadcast reference-dictionary join; profile batches are
-    micro-batch-sized, so the scoring join uses the broadcast path.
+    writer appends them as a per-epoch delta. ``result`` holds the frames
+    ``run_linkage`` persisted; the caller must ``unpersist()`` it once the
+    epoch's actions have run. Registry lookup is the broadcast
+    reference-dictionary join.
     """
-    profiles = blocking.conv_profiles(blocking.normalize_turns(batch)).cache()
-    cand = pairs_op.candidate_pairs(blocking.block_table(profiles))
-    scored = scoring.score_pairs(cand, profiles, broadcast_profiles=True)
-    comp = connected_components(scoring.matched_edges(scored))
-    clusters = assign_clusters(profiles, comp)
-    resolved = resolve_entities(clusters, profiles, registry)
-    additions = registry_additions(resolved, profiles, registry)
-    return resolved, additions, profiles
+    result = run_linkage(batch)
+    resolved = resolve_entities(result.clusters, result.profiles, registry)
+    additions = registry_additions(resolved, result.profiles, registry)
+    return resolved, additions, result
 
 
 def incremental_linkage(
@@ -143,9 +138,9 @@ def incremental_linkage(
         if batch.isEmpty():
             return
         registry = _load_registry(spark, registry_dir)
-        resolved, additions, profiles = link_batch(batch, registry)
+        resolved, additions, result = link_batch(batch, registry)
         # unpersist in finally: a long-running stream otherwise accumulates
-        # one cached profile frame per epoch in the block manager
+        # one set of persisted linkage frames per epoch in the block manager
         try:
             # per-epoch overwrite => replaying an epoch after a crash rewrites
             # the same dir instead of appending duplicates
@@ -156,7 +151,7 @@ def incremental_linkage(
             )
             _maybe_compact(spark, registry_dir, epoch_id)
         finally:
-            profiles.unpersist()
+            result.unpersist()
 
     stream = (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)

@@ -6,7 +6,8 @@ import random
 
 import pytest
 
-from addressparser_spark.operators.clustering import assign_clusters, connected_components
+from addressparser_spark.operators.clustering import connected_components
+from addressparser_spark.plans.pipeline import funnel_clusters_from
 
 
 def _union_find_components(edges: list[tuple[str, str]]) -> dict[str, str]:
@@ -70,10 +71,16 @@ def test_long_path_converges_logarithmically(spark):
 
 
 def test_assign_clusters_includes_singletons(spark):
+    """The funnel's cluster assignment covers every profile: a conversation
+    with no matched edge is its own cluster."""
     edges = spark.createDataFrame([("b", "a")], ["src", "dst"])
-    nodes = spark.createDataFrame([("a",), ("b",), ("solo",)], ["conv_id"])
-    comp = connected_components(edges)
-    got = {r["conv_id"]: r["cluster_id"] for r in assign_clusters(nodes, comp).collect()}
+    profiles = spark.createDataFrame(
+        [("a", "sig_a"), ("b", "sig_b"), ("solo", "sig_solo")], ["conv_id", "sig"]
+    )
+    got = {
+        r["conv_id"]: r["cluster_id"]
+        for r in funnel_clusters_from(profiles, edges).collect()
+    }
     assert got == {"a": "a", "b": "a", "solo": "solo"}
 
 

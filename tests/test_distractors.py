@@ -36,7 +36,7 @@ def test_every_distractor_coblocks_with_its_base(spark, sf_dir):
     t = tr.transcripts_df(spark, sf_dir)
     n_d1 = t.filter(F.col("conv_id").endswith("_d1")).select("conv_id").distinct().count()
     assert n_d1 > 0
-    cand = pairs_op.candidate_pairs(q._blocks(spark, sf_dir), persist=False)
+    cand = pairs_op.candidate_pairs(q._blocks(spark, sf_dir))
     # (base, base_d1) pairs present in the candidate set
     base_d1 = cand.filter(
         F.col("conv_b") == F.concat(F.col("conv_a"), F.lit("_d1"))
@@ -80,7 +80,7 @@ def test_synth_generator_mirrors_the_distractor_contract(spark, tmp_path):
 
 
 def test_distractors_are_labeled_negatives_and_stay_unclustered(spark, sf_dir):
-    cand = pairs_op.candidate_pairs(q._blocks(spark, sf_dir), persist=False)
+    cand = pairs_op.candidate_pairs(q._blocks(spark, sf_dir))
     labels = labeled_pairs(cand, truth_df(spark, sf_dir))
     d1 = labels.filter(
         F.col("conv_a").endswith("_d1") | F.col("conv_b").endswith("_d1")

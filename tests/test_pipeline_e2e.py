@@ -74,6 +74,48 @@ def test_repartition_invariance(spark, sf_dir):
     assert got == base
 
 
+def test_over_cap_exact_duplicates_still_link(spark):
+    """A group of more than MAX_BLOCK_SIZE identical conversations forms one
+    cluster: the light stage links same-sig conversations from a window over
+    the profiles, not from the capped blocks. Every block of the group is
+    over the cap, so ``dropped_blocks`` lists all of them, its ``sig`` block
+    included."""
+    from datetime import datetime
+
+    from addressparser_spark.operators.pairs import MAX_BLOCK_SIZE
+    from addressparser_spark.streaming.incremental import TRANSCRIPT_SCHEMA
+
+    ts = datetime(2024, 1, 1)
+    dup_turns = [
+        ("user", "how do i reset my router password after the firmware update"),
+        ("assistant", "open the admin page choose security then pick reset password and confirm"),
+    ]
+    other_turns = [
+        ("user", "what is the capital of australia and when was it chosen"),
+        ("assistant", "canberra was chosen as a compromise and became the capital in 1913"),
+    ]
+    n_dup = MAX_BLOCK_SIZE + 1
+    convs = [(f"dup_{i:03d}", dup_turns) for i in range(n_dup)] + [("other", other_turns)]
+    t = spark.createDataFrame(
+        [(c, i, role, text, None, ts) for c, turns in convs for i, (role, text) in enumerate(turns)],
+        TRANSCRIPT_SCHEMA,
+    )
+    res = run_linkage(t)
+    try:
+        got = {r["conv_id"]: r["cluster_id"] for r in res.clusters.collect()}
+        assert len(set(got.values())) == 2
+        assert got == {c: ("other" if c == "other" else "dup_000") for c, _ in convs}
+
+        srcs = res.blocks.select("src", "block_key").distinct()
+        dropped = res.dropped_blocks.join(srcs, "block_key").collect()
+        assert sorted(r["src"] for r in dropped) == [
+            "mh0", "mh1", "mh2", "mh3", "mh4", "mh5", "mh6", "mh7", "prefix", "sig"
+        ]
+        assert {r["block_n"] for r in dropped} == {n_dup}
+    finally:
+        res.unpersist()
+
+
 def test_compare_convs_point_api(spark, sf_dir):
     from addressparser_spark.data.transcripts import transcripts_df
     from addressparser_spark.operators.scoring import compare_convs

@@ -19,6 +19,7 @@ from addressparser_spark.data.transcripts import transcripts_df
 from addressparser_spark.functions.normalize import normalize_py
 from addressparser_spark.functions.similarity import jaro_winkler_py
 from addressparser_spark.operators import blocking
+from addressparser_spark.plans.pipeline import run_linkage
 
 TEXTS = st.text(
     alphabet=st.characters(codec="utf-8", exclude_categories=["Cs"]),
@@ -100,14 +101,9 @@ def test_duplicated_conv_joins_same_cluster(spark, sf_dir):
     clone = t.filter(F.col("conv_id") == "conv_000001").withColumn(
         "conv_id", F.lit("conv_000001_clone")
     )
-    clusters = {
-        r["conv_id"]: r["cluster_id"]
-        for r in q._funnel_clusters(
-            blocking.conv_profiles(
-                blocking.normalize_turns(t.unionByName(clone))
-            ).cache()
-        ).collect()
-    }
+    res = run_linkage(t.unionByName(clone))
+    clusters = {r["conv_id"]: r["cluster_id"] for r in res.clusters.collect()}
+    res.unpersist()
     assert clusters["conv_000001_clone"] == clusters["conv_000001"] == "conv_000001"
 
 

@@ -125,9 +125,9 @@ def test_candidate_pairs_salts_near_cap_blocks(spark):
     cold = [(f"b{j}", f"c{j:03d}x{k}") for j in range(40) for k in range(3)]
     blocks = spark.createDataFrame(hot + cold, ["block_key", "conv_id"])
 
-    auto = candidate_pairs(blocks, persist=False)
+    auto = candidate_pairs(blocks)
     assert "xxhash64" in plan(auto)  # probe chose the salted self-join
-    plain = candidate_pairs(blocks, persist=False, salt_hot_blocks=False)
+    plain = candidate_pairs(blocks, salt_hot_blocks=False)
     assert "xxhash64" not in plan(plain)
 
     got = {(r["conv_a"], r["conv_b"]) for r in auto.collect()}
@@ -136,4 +136,4 @@ def test_candidate_pairs_salts_near_cap_blocks(spark):
     assert len(want) == 80 * 79 // 2 + 40 * 3  # hot block pairs + 3 per cold block
 
     uniform = spark.createDataFrame(cold, ["block_key", "conv_id"])
-    assert "xxhash64" not in plan(candidate_pairs(uniform, persist=False))
+    assert "xxhash64" not in plan(candidate_pairs(uniform))

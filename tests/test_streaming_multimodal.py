@@ -83,30 +83,49 @@ def test_stream_incremental_linkage_removes_temp_tree(spark, sf_dir, monkeypatch
     assert not os.path.exists(work)
 
 
-def test_incremental_linkage_two_batches(spark, sf_dir, tmp_path):
-    """Feed the same conversations in two files; registry stays deduped and
-    entity ids are stable across batches (content-derived, idempotent)."""
+@pytest.fixture(scope="module")
+def two_epochs(spark, sf_dir, tmp_path_factory):
+    """``incremental_linkage`` over two files of the same conversations:
+    (output dir, registry dir, whether the session's cache was empty once
+    the stream finished)."""
+    import glob
+    import shutil
+
     t = transcripts_df(spark, sf_dir)
-    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    reg_dir, ck_dir = str(tmp_path / "reg"), str(tmp_path / "ck")
+    base = tmp_path_factory.mktemp("two_epochs")
+    in_dir, out_dir = str(base / "in"), str(base / "out")
+    reg_dir, ck_dir = str(base / "reg"), str(base / "ck")
 
     first = t.filter(F.col("conv_id") < "conv_000050")
     second = t  # superset: re-delivers batch 1 convs plus the rest
     first.coalesce(1).write.parquet(f"{in_dir}/b1")
     second.coalesce(1).write.parquet(f"{in_dir}/b2")
     # flatten: streaming source wants files in one dir
-    import glob
-    import shutil
-
     files = glob.glob(f"{in_dir}/b*/part-*.parquet")
     for i, f in enumerate(sorted(files)):
         shutil.copy(f, f"{in_dir}/batch_{i}.parquet")
     shutil.rmtree(f"{in_dir}/b1")
     shutil.rmtree(f"{in_dir}/b2")
 
+    spark.catalog.clearCache()  # frames other tests left cached
     q = incremental_linkage(spark, in_dir, out_dir, reg_dir, ck_dir)
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), "stream did not finish"
+    released = spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    return out_dir, reg_dir, released
 
+
+def test_incremental_linkage_releases_every_persisted_frame(two_epochs):
+    """Each epoch releases everything its linkage persisted: a long-running
+    stream must not pin one set of frames per micro-batch."""
+    assert two_epochs[2]
+
+
+def test_incremental_linkage_two_batches(spark, two_epochs):
+    """Feed the same conversations in two files; registry stays deduped and
+    entity ids are stable across batches (content-derived, idempotent)."""
+    import glob
+
+    out_dir, reg_dir, _ = two_epochs
     resolved = spark.read.parquet(out_dir)
     registry = _load_registry(spark, reg_dir)
     # registry sigs unique (idempotent merge across overlapping batches)

@@ -79,10 +79,7 @@ def run_scale(spark, n_convs: int, checkpoint_base: str) -> dict:
         "f1": {k: (float(f1_row[k]) if k in ("precision", "recall", "f1") else int(f1_row[k]))
                for k in ("tp", "fp", "fn", "tn", "precision", "recall", "f1")},
     }
-    clusters.unpersist()
-    result.profiles.unpersist()
-    result.pairs.unpersist()
-    result.scored.unpersist()
+    result.unpersist()
     spark.catalog.clearCache()
     return out
 
