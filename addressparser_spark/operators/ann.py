@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .pairs import bucket_pairs, over_cap
+
 TOP_K = 5
 N_QUERIES = 10
 LSH_TABLES = 8
@@ -109,74 +111,57 @@ def _hyperplane_sign(emb: Column, plane: int, dim: int) -> Column:
     return F.when(proj >= 0, "1").otherwise("0")
 
 
-def lsh_buckets_col(
-    emb: Column,
-    dim: int,
-    n_tables: int = LSH_TABLES,
-    bits_per_table: int = LSH_BITS_PER_TABLE,
-) -> Column:
+def lsh_buckets_col(emb: Column, dim: int) -> Column:
     """Array of per-table bucket keys: 't<i>|' + sign bits of that table's planes.
 
     Multi-table LSH: one selective signature has near-zero recall on weakly
     correlated vectors; L independent shorter signatures trade candidate count
     for recall (match in >=1 table). Plane (t, j) uses global index
-    t*bits_per_table + j so tables are independent.
+    t*LSH_BITS_PER_TABLE + j so tables are independent.
     """
     keys = []
-    for t in range(n_tables):
+    for t in range(LSH_TABLES):
         bits = F.concat(
             *[
-                _hyperplane_sign(emb, t * bits_per_table + j, dim)
-                for j in range(bits_per_table)
+                _hyperplane_sign(emb, t * LSH_BITS_PER_TABLE + j, dim)
+                for j in range(LSH_BITS_PER_TABLE)
             ]
         )
         keys.append(F.concat(F.lit(f"t{t}|"), bits))
     return F.array(*keys)
 
 
+def _lsh_rows(embeddings: DataFrame, dim: int) -> DataFrame:
+    """(vec_id, embedding, bucket): one row per vector and LSH table."""
+    return _as_double(embeddings).select(
+        "vec_id",
+        "embedding",
+        F.explode(lsh_buckets_col(F.col("embedding"), dim)).alias("bucket"),
+    )
+
+
 EMB_COSINE_DUP = 0.9
 EMB_MAX_BUCKET = 200
 
 
-def embedding_dup_pairs(
-    embeddings: DataFrame,
-    dim: int,
-    threshold: float = EMB_COSINE_DUP,
-    n_tables: int = LSH_TABLES,
-    bits_per_table: int = LSH_BITS_PER_TABLE,
-    max_bucket: int = EMB_MAX_BUCKET,
-) -> DataFrame:
+def embedding_dup_pairs(embeddings: DataFrame, dim: int) -> DataFrame:
     """(vec_id_a, vec_id_b, cosine, is_dup): embedding-cosine near-dup dedup.
 
     The fifth dedup family (exact / MinHash / SimHash / n-gram Jaccard /
     embedding cosine): ALL-PAIRS near-duplicates, not a per-query top-k —
     candidates come from the multi-table sign-LSH buckets (same precomputed
-    literal hyperplanes as :func:`lsh_topk`), oversized buckets are capped
-    (cap + never silent: :func:`embedding_dropped_buckets`), and the exact
-    cosine re-rank inside buckets decides ``is_dup``. At 10^9 vectors the
-    bucket self-join is the only quadratic step and it is bounded by
-    ``max_bucket**2`` per bucket.
+    literal hyperplanes as :func:`lsh_topk`), buckets over
+    ``EMB_MAX_BUCKET`` vectors are capped (cap + never silent:
+    :func:`embedding_dropped_buckets`), and the exact cosine re-rank inside
+    buckets decides ``is_dup``. At 10^9 vectors the bucket self-join
+    (``pairs.bucket_pairs``) is the only quadratic step and it is bounded by
+    ``EMB_MAX_BUCKET**2`` per bucket.
     """
-    e = _as_double(embeddings).select(
-        "vec_id",
-        "embedding",
-        F.explode(
-            lsh_buckets_col(F.col("embedding"), dim, n_tables, bits_per_table)
-        ).alias("bucket"),
-    )
     from pyspark.storagelevel import StorageLevel
 
-    e = e.persist(StorageLevel.MEMORY_AND_DISK)
-    sizes = e.groupBy("bucket").agg(F.count(F.lit(1)).alias("n"))
-    kept = e.join(sizes.filter(F.col("n") <= max_bucket), "bucket", "left_semi")
-    a = kept.select("bucket", F.col("vec_id").alias("vec_id_a"))
-    b = kept.select("bucket", F.col("vec_id").alias("vec_id_b"))
-    cand = (
-        a.join(b, "bucket")
-        .filter(F.col("vec_id_a") < F.col("vec_id_b"))
-        .select("vec_id_a", "vec_id_b")
-        .dropDuplicates(["vec_id_a", "vec_id_b"])
-    )
+    # the bucket rows feed three consumers (sizes and both join sides)
+    e = _lsh_rows(embeddings, dim).persist(StorageLevel.MEMORY_AND_DISK)
+    cand = bucket_pairs(e.select("bucket", "vec_id"), "bucket", "vec_id", EMB_MAX_BUCKET)
     emb = _as_double(embeddings).select("vec_id", "embedding")
     j = (
         cand.join(
@@ -193,41 +178,19 @@ def embedding_dup_pairs(
         "vec_id_a",
         "vec_id_b",
         cos.alias("cosine"),
-        (cos >= threshold).alias("is_dup"),
+        (cos >= EMB_COSINE_DUP).alias("is_dup"),
     )
 
 
-def embedding_dropped_buckets(
-    embeddings: DataFrame,
-    dim: int,
-    n_tables: int = LSH_TABLES,
-    bits_per_table: int = LSH_BITS_PER_TABLE,
-    max_bucket: int = EMB_MAX_BUCKET,
-) -> DataFrame:
-    """(bucket, bucket_n, pairs_dropped): capped embedding-LSH buckets."""
-    e = _as_double(embeddings).select(
-        "vec_id",
-        F.explode(
-            lsh_buckets_col(F.col("embedding"), dim, n_tables, bits_per_table)
-        ).alias("bucket"),
-    )
-    sizes = e.groupBy("bucket").agg(F.count(F.lit(1)).alias("bucket_n"))
-    return sizes.filter(F.col("bucket_n") > max_bucket).select(
-        "bucket",
-        "bucket_n",
-        ((F.col("bucket_n") * (F.col("bucket_n") - 1)) / 2)
-        .cast("bigint")
-        .alias("pairs_dropped"),
-    )
+def embedding_dropped_buckets(embeddings: DataFrame, dim: int) -> DataFrame:
+    """(bucket, bucket_n, pairs_dropped): the embedding-LSH buckets over
+    ``EMB_MAX_BUCKET`` vectors."""
+    dropped = over_cap(_lsh_rows(embeddings, dim), "bucket", EMB_MAX_BUCKET)
+    return dropped.withColumnRenamed("n", "bucket_n")
 
 
 def lsh_topk(
-    embeddings: DataFrame,
-    dim: int,
-    k: int = TOP_K,
-    n_queries: int = N_QUERIES,
-    n_tables: int = LSH_TABLES,
-    bits_per_table: int = LSH_BITS_PER_TABLE,
+    embeddings: DataFrame, dim: int, k: int = TOP_K, n_queries: int = N_QUERIES
 ) -> DataFrame:
     """(query_id, neighbor_id, cosine, rank): top-k among multi-table LSH candidates.
 
@@ -235,13 +198,7 @@ def lsh_topk(
     bucket equi-join is what survives a 10^9-vector corpus (hash-partitioned
     on the bucket key, candidates deduped across tables, exact re-rank inside).
     """
-    e = _as_double(embeddings).select(
-        "vec_id",
-        "embedding",
-        F.explode(
-            lsh_buckets_col(F.col("embedding"), dim, n_tables, bits_per_table)
-        ).alias("bucket"),
-    )
+    e = _lsh_rows(embeddings, dim)
     q = e.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),

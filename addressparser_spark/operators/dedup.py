@@ -10,23 +10,29 @@ standard large-corpus dedup strategies:
                 Hamming distance
 - n-gram Jaccard: character n-gram sets on LSH candidates
 
-Everything is Catalyst expressions (md5 / array ops / windows) except the
-MinHash sketch, which is one call per document of the JVM kernel that
-conversation blocking uses (``blocking.minhash_col``, java/MinHashMd5.java):
-no shingle explode and no shuffle. Each operator has an exact DuckDB oracle
-in ``oracle_docs.py``. At 100 TB the shapes hold: the MinHash sketch is
-narrow, SimHash is one groupBy, candidates are one exploded band join, and
-the block-size cap comes before the quadratic step.
+Everything is Catalyst expressions (md5 / array ops / windows) except two
+JVM kernels shared with conversation linkage: the MinHash sketch, one call
+per document (``blocking.minhash_col``, java/MinHashMd5.java: no shingle
+explode and no shuffle), and both Jaccards' intersection count, one
+merge walk per pair over sorted hashes (``intersect_count_java``). Each
+operator has an exact DuckDB oracle in ``oracle_docs.py``. At 100 TB the
+shapes hold: the MinHash sketch is narrow, SimHash is one groupBy,
+candidates are one exploded band join, and the bucket cap
+(``pairs.bucket_pairs``) comes before the quadratic step.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from ..functions.normalize import normalize_col
 from ..functions.tokens import distinct_shingles_col, tokens_col
+from ..session import INTERSECT_FUNC, kernel
 from .blocking import band_key, minhash_col
+from .pairs import bucket_pairs, over_cap
+from .scoring import jaccard_col
 
 DOC_NUM_HASHES = 12
 DOC_ROWS_PER_BAND = 2
@@ -84,7 +90,7 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def doc_minhash(docs: DataFrame, num_hashes: int = DOC_NUM_HASHES) -> DataFrame:
+def doc_minhash(docs: DataFrame) -> DataFrame:
     """(doc_id, mh_00..mh_NN): per-hash-family min of md5('<i>|' || shingle).
 
     ``doc_id`` is the documents' key. A document without shingles (null
@@ -92,28 +98,25 @@ def doc_minhash(docs: DataFrame, num_hashes: int = DOC_NUM_HASHES) -> DataFrame:
     the explode of the compacted one-element array emits nothing.
     """
     sets = doc_shingle_sets(docs)
-    mh = minhash_col(sets.sparkSession, F.col("sh"), num_hashes)
+    mh = minhash_col(sets.sparkSession, F.col("sh"), DOC_NUM_HASHES)
     sk = sets.select("doc_id", F.explode(F.array_compact(F.array(mh))).alias("mh"))
     return sk.select(
-        "doc_id", *[F.col("mh")[i].alias(f"mh_{i:02d}") for i in range(num_hashes)]
+        "doc_id", *[F.col("mh")[i].alias(f"mh_{i:02d}") for i in range(DOC_NUM_HASHES)]
     )
 
 
-def doc_band_keys(
-    minhash: DataFrame,
-    num_hashes: int = DOC_NUM_HASHES,
-    rows_per_band: int = DOC_ROWS_PER_BAND,
-) -> DataFrame:
+def doc_band_keys(minhash: DataFrame) -> DataFrame:
+    r = DOC_ROWS_PER_BAND
     bands = F.array(
         *[
             F.struct(
                 F.lit(b).alias("band"),
                 band_key(
                     b,
-                    [F.col(f"mh_{i:02d}") for i in range(b * rows_per_band, (b + 1) * rows_per_band)],
+                    [F.col(f"mh_{i:02d}") for i in range(b * r, (b + 1) * r)],
                 ).alias("bucket"),
             )
-            for b in range(num_hashes // rows_per_band)
+            for b in range(DOC_NUM_HASHES // r)
         ]
     )
     return minhash.select("doc_id", F.explode(bands).alias("b")).select(
@@ -121,67 +124,45 @@ def doc_band_keys(
     )
 
 
-def bucket_drop_stats(buckets: DataFrame, max_bucket: int = MAX_BUCKET) -> DataFrame:
-    """(bucket, bucket_n, pairs_dropped): oversized buckets the cap skipped.
-
-    The 'cap + never silent' guardrail for the doc-dedup family — same
-    contract as ``pairs.dropped_blocks`` surfaces for conversation blocking
-    (``er_dropped_blocks``): recall loss from hot buckets is a *metric*, not
-    an invisible behavior. Exposed as the ``dedup_dropped_buckets`` query.
-    """
-    sizes = buckets.groupBy("bucket").agg(F.count(F.lit(1)).alias("bucket_n"))
-    return sizes.filter(F.col("bucket_n") > max_bucket).select(
-        "bucket",
-        "bucket_n",
-        ((F.col("bucket_n") * (F.col("bucket_n") - 1)) / 2)
-        .cast("bigint")
-        .alias("pairs_dropped"),
-    )
-
-
-def _bucket_pairs(buckets: DataFrame, max_bucket: int = MAX_BUCKET) -> DataFrame:
-    """In-bucket pairs with the block-size guardrail (cap + never silent:
-    the dropped side is observable via :func:`bucket_drop_stats`)."""
-    from pyspark.storagelevel import StorageLevel
-
-    # buckets fan out into 3 consumers (sizes + both self-join sides):
-    # persist instead of recomputing the sketch pipeline three times
+def _candidates(buckets: DataFrame) -> DataFrame:
+    """(doc_id_a, doc_id_b): the in-bucket pairs of ``(doc_id, bucket)``
+    rows under the ``MAX_BUCKET`` cap (cap + never silent: the dropped side
+    is :func:`dropped_buckets`). The buckets feed three consumers (sizes and
+    both join sides), so they are persisted instead of re-sketched."""
     buckets = buckets.persist(StorageLevel.MEMORY_AND_DISK)
-    sizes = buckets.groupBy("bucket").agg(F.count(F.lit(1)).alias("n"))
-    kept = buckets.join(sizes.filter(F.col("n") <= max_bucket), "bucket", "left_semi")
-    a = kept.select("bucket", F.col("doc_id").alias("doc_id_a"))
-    b = kept.select("bucket", F.col("doc_id").alias("doc_id_b"))
-    return (
-        a.join(b, "bucket")
-        .filter(F.col("doc_id_a") < F.col("doc_id_b"))
-        .select("doc_id_a", "doc_id_b")
-        .dropDuplicates(["doc_id_a", "doc_id_b"])
-    )
+    return bucket_pairs(buckets.select("bucket", "doc_id"), "bucket", "doc_id", MAX_BUCKET)
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    num_hashes: int = DOC_NUM_HASHES,
-    rows_per_band: int = DOC_ROWS_PER_BAND,
-    threshold: float = DOC_JACCARD_DUP,
-) -> DataFrame:
-    """(doc_id_a, doc_id_b, jaccard, is_dup): LSH candidates + exact Jaccard."""
-    sets = doc_shingle_sets(docs).select(
-        "doc_id", F.transform("sh", lambda s: F.xxhash64(s)).alias("shh")
-    )
-    cand = _bucket_pairs(doc_band_keys(doc_minhash(docs, num_hashes), num_hashes, rows_per_band))
-    j = (
-        cand.join(sets.select(F.col("doc_id").alias("doc_id_a"), F.col("shh").alias("sh_a")), "doc_id_a")
-        .join(sets.select(F.col("doc_id").alias("doc_id_b"), F.col("shh").alias("sh_b")), "doc_id_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = F.round(F.when(union == 0, F.lit(1.0)).otherwise(inter / union), 6)
-    return j.select(
+def _hashed_set(strings: Column) -> Column:
+    # the intersect kernel merge-walks sorted int64 arrays
+    return F.array_sort(F.transform(strings, lambda s: F.xxhash64(s)))
+
+
+def _jaccard_pairs(cand: DataFrame, sets: DataFrame) -> DataFrame:
+    """(doc_id_a, doc_id_b, jaccard) of each candidate pair over ``sets``
+    rows ``(doc_id, h)``: one ``intersect_count_java`` call per pair, the
+    kernel pairwise ER scoring uses."""
+    def side(s: str) -> DataFrame:
+        return sets.select(F.col("doc_id").alias(f"doc_id_{s}"), F.col("h").alias(f"h_{s}"))
+
+    j = cand.join(side("a"), "doc_id_a").join(side("b"), "doc_id_b").select(
         "doc_id_a",
         "doc_id_b",
-        jac.alias("jaccard"),
-        (jac >= threshold).alias("is_dup"),
+        F.size("h_a").alias("na"),
+        F.size("h_b").alias("nb"),
+        kernel(cand.sparkSession, INTERSECT_FUNC, F.col("h_a"), F.col("h_b")).alias("inter"),
+    )
+    return j.select(
+        "doc_id_a", "doc_id_b", jaccard_col(F.col("inter"), F.col("na"), F.col("nb")).alias("jaccard")
+    )
+
+
+def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
+    """(doc_id_a, doc_id_b, jaccard, is_dup): LSH candidates + exact Jaccard."""
+    sets = doc_shingle_sets(docs).select("doc_id", _hashed_set(F.col("sh")).alias("h"))
+    j = _jaccard_pairs(_candidates(doc_band_keys(doc_minhash(docs))), sets)
+    return j.select(
+        "doc_id_a", "doc_id_b", "jaccard", (F.col("jaccard") >= DOC_JACCARD_DUP).alias("is_dup")
     )
 
 
@@ -229,14 +210,14 @@ def simhash_buckets(simhash: DataFrame) -> DataFrame:
     )
 
 
-def simhash_pairs(docs: DataFrame, max_hamming: int = HAMMING_DUP) -> DataFrame:
+def simhash_pairs(docs: DataFrame) -> DataFrame:
     """(doc_id_a, doc_id_b, hamming, is_dup): banded simhash buckets -> pairs.
 
     Bucket key = one of the 4 8-char simhash bands; two sketches within
     Hamming distance <= 3 share at least one intact band (pigeonhole).
     """
     sh = doc_simhash(docs)
-    cand = _bucket_pairs(simhash_buckets(sh))
+    cand = _candidates(simhash_buckets(sh))
     j = (
         cand.join(sh.select(F.col("doc_id").alias("doc_id_a"), F.col("simhash").alias("s_a")), "doc_id_a")
         .join(sh.select(F.col("doc_id").alias("doc_id_b"), F.col("simhash").alias("s_b")), "doc_id_b")
@@ -252,19 +233,28 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = HAMMING_DUP) -> DataFrame:
         "doc_id_a",
         "doc_id_b",
         ham.alias("hamming"),
-        (ham <= max_hamming).alias("is_dup"),
+        (ham <= HAMMING_DUP).alias("is_dup"),
     )
 
 
-def dropped_buckets(docs: DataFrame, max_bucket: int = MAX_BUCKET) -> DataFrame:
-    """(family, bucket, bucket_n, pairs_dropped) across both sketch families."""
-    mh = bucket_drop_stats(doc_band_keys(doc_minhash(docs)), max_bucket).select(
-        F.lit("minhash_lsh").alias("family"), "bucket", "bucket_n", "pairs_dropped"
+def dropped_buckets(docs: DataFrame) -> DataFrame:
+    """(family, bucket, bucket_n, pairs_dropped): the buckets of both sketch
+    families over the ``MAX_BUCKET`` cap.
+
+    The 'cap + never silent' guardrail for the doc-dedup family — same
+    contract as ``pairs.dropped_blocks`` for conversation blocking: recall
+    lost to hot buckets is a *metric*, not an invisible behavior. Exposed
+    as the ``dedup_dropped_buckets`` query.
+    """
+
+    def capped(family: str, buckets: DataFrame) -> DataFrame:
+        return over_cap(buckets, "bucket", MAX_BUCKET).select(
+            F.lit(family).alias("family"), "bucket", F.col("n").alias("bucket_n"), "pairs_dropped"
+        )
+
+    return capped("minhash_lsh", doc_band_keys(doc_minhash(docs))).unionByName(
+        capped("simhash", simhash_buckets(doc_simhash(docs)))
     )
-    sh = bucket_drop_stats(simhash_buckets(doc_simhash(docs)), max_bucket).select(
-        F.lit("simhash").alias("family"), "bucket", "bucket_n", "pairs_dropped"
-    )
-    return mh.unionByName(sh)
 
 
 # ---------------------------------------------------------------------------
@@ -286,14 +276,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = CHAR_NGRAM) -> DataFrame:
     nd = (
         normalized_docs(docs)
         .withColumn("g0", char_ngrams_col(F.col("norm_text"), n))
-        .select("doc_id", F.transform(F.col("g0"), lambda g: F.xxhash64(g)).alias("g"))
+        .select("doc_id", _hashed_set(F.col("g0")).alias("h"))
     )
-    cand = _bucket_pairs(doc_band_keys(doc_minhash(docs)))
-    j = (
-        cand.join(nd.select(F.col("doc_id").alias("doc_id_a"), F.col("g").alias("g_a")), "doc_id_a")
-        .join(nd.select(F.col("doc_id").alias("doc_id_b"), F.col("g").alias("g_b")), "doc_id_b")
-    )
-    inter = F.size(F.array_intersect("g_a", "g_b"))
-    union = F.size("g_a") + F.size("g_b") - inter
-    jac = F.round(F.when(union == 0, F.lit(1.0)).otherwise(inter / union), 6)
-    return j.select("doc_id_a", "doc_id_b", jac.alias("ngram_jaccard"))
+    j = _jaccard_pairs(_candidates(doc_band_keys(doc_minhash(docs))), nd)
+    return j.withColumnRenamed("jaccard", "ngram_jaccard")

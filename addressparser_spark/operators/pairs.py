@@ -1,19 +1,24 @@
-"""Candidate-pair generation within blocks, with skew guardrails.
+"""Capped-bucket pair generation: the one quadratic step of every family.
 
-The quadratic blowup inside a hot block is the scale risk (a block of n
-conversations yields n(n-1)/2 pairs). Mirroring the reference's candidate-set
-guardrail (short-circuit at 100 candidates, ``AddressSearcher.cs:69``), blocks
-larger than ``MAX_BLOCK_SIZE`` are DROPPED from pair generation and **counted**
-— never silently (the cap + dropped-block metrics surface in the pipeline's
-lineage output). Within-threshold skew is left to AQE's skew-join splitting
-(enabled in session.py).
+A bucket of n rows yields n(n-1)/2 pairs, so a hot key is the scale risk.
+Mirroring the reference's candidate-set guardrail (short-circuit at 100
+candidates, ``AddressSearcher.cs:69``), a key with more than ``cap`` rows is
+DROPPED from pair generation and **counted** by :func:`over_cap` — never
+silently. The cap is the per-key bound: no kept key yields more than
+cap(cap-1)/2 pairs, so a near-cap key is one bounded join cell, and skew
+below the cap is left to AQE's skew-join splitting (enabled in session.py).
 
-The pair join is a self equi-join on ``block_key`` — a shuffle hash join on a
-uniformly-distributed md5 key; `conv_a < conv_b` canonicalizes orientation and
-``distinct`` merges pairs discovered via multiple key families (a pair found
-by both `sig` and an LSH band scores once). Block rows that carry their
-conversation's ``sig`` (``blocking.block_table``) bring it to both sides of
-the pair as ``sig_a``/``sig_b``.
+Every family binds the same two operators with its own key, id and cap:
+
+- ER blocking: ``block_key``, ``conv_id``, ``MAX_BLOCK_SIZE``
+  (:func:`candidate_pairs`, :func:`dropped_blocks`);
+- doc MinHash and SimHash buckets: ``dedup.MAX_BUCKET``;
+- embedding sign-LSH buckets: ``ann.EMB_MAX_BUCKET``;
+- the substring inverted index: ``substring_join.RARE_DF_CAP``.
+
+The pair join is a self equi-join on the key; ``id_a < id_b`` canonicalizes
+orientation and ``distinct`` merges pairs found under several keys (a pair
+found by both ``sig`` and an LSH band scores once).
 """
 
 from __future__ import annotations
@@ -21,82 +26,60 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .salting import salted_join
-
 MAX_BLOCK_SIZE = 100
-# blocks at >= this fraction of the cap count as hot for the pair self-join:
-# the cap bounds the quadratic cell, but a 100-row block is still a 100x100
-# join cell landing on ONE reducer under hash partitioning
-HOT_BLOCK_FRACTION = 0.5
 
 
-def block_sizes(blocks: DataFrame) -> DataFrame:
-    return blocks.groupBy("block_key").agg(F.count(F.lit(1)).alias("block_n"))
+def _sizes(rows: DataFrame, key: str) -> DataFrame:
+    return rows.groupBy(key).agg(F.count(F.lit(1)).alias("n"))
+
+
+def over_cap(rows: DataFrame, key: str, cap: int) -> DataFrame:
+    """(key, n, pairs_dropped): the keys of ``rows`` with more than ``cap``
+    rows, and the n(n-1)/2 pairs the cap kept each from generating."""
+    n = F.col("n")
+    return _sizes(rows, key).filter(n > cap).select(
+        key, "n", (n * (n - 1) / 2).cast("bigint").alias("pairs_dropped")
+    )
+
+
+def bucket_pairs(rows: DataFrame, key: str, id: str, cap: int) -> DataFrame:
+    """(id_a, id_b, *attr_a/attr_b) from rows of ``(key, id, *attrs)``:
+    every pair of ids that share a key with at most ``cap`` rows, once,
+    with ``id_a < id_b``.
+
+    Each attr must be a function of the id (ER's ``sig``); it is carried to
+    both sides as ``<attr>_a``/``<attr>_b``, so deduping on every column is
+    deduping on the pair. ``rows`` feeds three consumers (the key sizes and
+    both join sides), so a caller whose rows are costly persists them first.
+    """
+    attrs = [c for c in rows.columns if c not in (key, id)]
+    kept = rows.join(_sizes(rows, key).filter(F.col("n") <= cap), key, "left_semi")
+
+    def side(s: str) -> DataFrame:
+        return kept.select(key, *[F.col(c).alias(f"{c}_{s}") for c in (id, *attrs)])
+
+    return (
+        side("a").join(side("b"), key)
+        .filter(F.col(f"{id}_a") < F.col(f"{id}_b"))
+        .select(*[f"{c}_{s}" for c in (id, *attrs) for s in "ab"])
+        .distinct()
+    )
 
 
 def dropped_blocks(blocks: DataFrame) -> DataFrame:
     """(block_key, block_n, pairs_dropped): the blocks over the size cap."""
-    return block_sizes(blocks).filter(F.col("block_n") > MAX_BLOCK_SIZE).select(
-        "block_key",
-        "block_n",
-        ((F.col("block_n") * (F.col("block_n") - 1)) / 2).cast("bigint").alias("pairs_dropped"),
-    )
+    return over_cap(blocks, "block_key", MAX_BLOCK_SIZE).withColumnRenamed("n", "block_n")
 
 
-def candidate_pairs(blocks: DataFrame, salt_hot_blocks: bool | None = None) -> DataFrame:
+def candidate_pairs(blocks: DataFrame) -> DataFrame:
     """(conv_a, conv_b) with conv_a < conv_b, deduped across key families,
-    plus (sig_a, sig_b) when ``blocks`` carries ``sig``.
+    plus (sig_a, sig_b) when ``blocks`` carries ``sig``: the ER binding of
+    :func:`bucket_pairs`, capped at ``MAX_BLOCK_SIZE`` rows per block.
 
-    ``blocks`` fans out into three consumers (size stats, both join sides),
+    ``blocks`` fans out into three consumers (block sizes, both join sides),
     so the caller persists it first (``run_linkage`` and ``queries._blocks``
     do): recomputing the MinHash sketch three times is never the right plan.
-
-    Residual skew below the cap: blocks the cap keeps can still be ~cap-sized
-    (a 100-row block = a 100x100 join cell on one reducer). With
-    ``salt_hot_blocks=None`` one O(1) aggregate over the block sizes
-    decides — the same runtime-stats-then-replan move AQE makes, but
-    ahead of the shuffle AQE can only split after materializing. When any
-    near-cap block exists, the self-join routes through ``salted_join``: the
-    a-side salted by conv-id hash, the b-side replicated per salt, cold
-    blocks on the plain path. The pair SET is identical either way (salting
-    only re-partitions the enumeration), so every downstream oracle is
-    unaffected.
-
-    The probe is eager: ``salt_hot_blocks=None`` runs one Spark job when
-    this function is called, not when the returned frame is used. That job
-    reads the caller's persisted copy of ``blocks`` and fills it, so the
-    MinHash lineage is not recomputed for it.
     """
-    # ONE size aggregation feeds the cap filter, the probe and the salted
-    # path's hot set — the shared subtree's shuffle exchange is reused in
-    # the final plan instead of re-aggregating per consumer
-    sizes = block_sizes(blocks)
-    kept = blocks.join(
-        sizes.filter(F.col("block_n") <= MAX_BLOCK_SIZE), "block_key", "left_semi"
-    )
-    hot_threshold = max(2, int(MAX_BLOCK_SIZE * HOT_BLOCK_FRACTION))
-    hot_df = sizes.filter(
-        (F.col("block_n") <= MAX_BLOCK_SIZE) & (F.col("block_n") >= hot_threshold)
-    ).select("block_key")
-    if salt_hot_blocks is None:
-        salt_hot_blocks = bool(hot_df.limit(1).count())
     carry = ["sig"] if "sig" in blocks.columns else []
-
-    def side(s: str) -> DataFrame:
-        return kept.select(
-            "block_key", F.col("conv_id").alias(f"conv_{s}"),
-            *[F.col(c).alias(f"{c}_{s}") for c in carry],
-        )
-
-    a, b = side("a"), side("b")
-    if salt_hot_blocks:
-        joined = salted_join(a, b, "block_key", "conv_a", hot=hot_df)
-    else:
-        joined = a.join(b, "block_key")
-    # sig is a function of the conv id, so deduping on every column is
-    # deduping on the pair, and a filter on the sigs can move below it
-    return (
-        joined.filter(F.col("conv_a") < F.col("conv_b"))
-        .select("conv_a", "conv_b", *[f"{c}_{s}" for c in carry for s in "ab"])
-        .distinct()
-    )
+    rows = blocks.select("block_key", F.col("conv_id").alias("conv"), *carry)
+    return bucket_pairs(rows, "block_key", "conv", MAX_BLOCK_SIZE)

@@ -1,11 +1,12 @@
-"""Explicit skew handling: salted aggregation and hot-key salted joins.
+"""Explicit skew handling: salted two-stage aggregation.
 
 AQE's skew-join splitting (enabled in session.py) handles moderate skew at
-runtime; these operators are the *explicit* layer for pathological keys the
-north rule calls out (e.g. one (role, tool) combination covering 30%+ of all
-rows — the blocking analog of a mega-city in the reference's data).
+runtime; salting is the *explicit* layer for an aggregation over a
+pathological group key (e.g. one (role, tool) combination covering 30%+ of
+all rows — the blocking analog of a mega-city in the reference's data).
+Pair self-joins need no salt: ``pairs.bucket_pairs`` caps every key.
 
-Both transformations are semantics-preserving and deterministic: the salt is
+The transformation is semantics-preserving and deterministic: the salt is
 derived by hashing a distinguishing column (never ``rand()``), so reruns
 produce identical plans and results.
 """
@@ -16,7 +17,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 N_SALTS = 16
-HOT_KEY_THRESHOLD = 100_000
 
 
 def with_salt(df: DataFrame, distinct_col: str, n_salts: int = N_SALTS) -> DataFrame:
@@ -50,54 +50,3 @@ def salted_aggregate(
     return partial.groupBy(*keys).agg(
         *[F.sum(f"__p_{name}").alias(name) for name in aggs]
     )
-
-
-def hot_keys(df: DataFrame, key: str, threshold: int = HOT_KEY_THRESHOLD) -> DataFrame:
-    """Keys whose row count exceeds the threshold (one pass, map-side combine)."""
-    return (
-        df.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > threshold)
-        .select(key)
-    )
-
-
-def salted_join(
-    facts: DataFrame,
-    dim: DataFrame,
-    key: str,
-    distinct_col: str,
-    n_salts: int = N_SALTS,
-    threshold: int = HOT_KEY_THRESHOLD,
-    hot: DataFrame | None = None,
-) -> DataFrame:
-    """Equi-join with hot keys salted, cold keys joined normally.
-
-    Hot fact rows get a deterministic salt; the dim rows for hot keys are
-    replicated n_salts times so every (key, salt) partition finds its match.
-    Cold rows take the plain join. Output = union, column set = facts ∪ dim.
-
-    ``hot``: optional precomputed one-column DataFrame of hot keys. A caller
-    that already aggregated the key distribution (e.g. the candidate-pair
-    probe) passes it down so the plan carries ONE aggregation whose shuffle
-    exchange is reused, instead of a second identical groupBy.
-    """
-    if hot is None:
-        hot = hot_keys(facts, key, threshold)
-    hot = hot.select(key).withColumn("__hot", F.lit(1))
-    facts_tagged = facts.join(F.broadcast(hot), key, "left")
-    hot_facts = facts_tagged.filter(F.col("__hot").isNotNull()).drop("__hot")
-    cold_facts = facts_tagged.filter(F.col("__hot").isNull()).drop("__hot")
-
-    cold_out = cold_facts.join(dim, key)
-
-    dim_hot = dim.join(F.broadcast(hot.select(key)), key, "left_semi")
-    dim_replicated = dim_hot.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    hot_out = (
-        with_salt(hot_facts, distinct_col, n_salts)
-        .join(dim_replicated, [key, "__salt"])
-        .drop("__salt")
-    )
-    return cold_out.unionByName(hot_out)

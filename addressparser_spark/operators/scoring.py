@@ -26,7 +26,7 @@ verdict is reproducible in the ANSI-SQL oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import INTERSECT_FUNC, TEXTSIM_FUNC, kernel
@@ -54,6 +54,14 @@ def _slim_profiles(profiles: DataFrame) -> DataFrame:
         F.substring("concat_text", 1, TEXT_CAP).alias("text"),
         "n_turns",
     )
+
+
+def jaccard_col(inter: Column, na: Column, nb: Column) -> Column:
+    """round(|A∩B| / |A∪B|, 6) from the intersection count and the two set
+    sizes (|A∪B| = |A|+|B|-|A∩B| for distinct-element sets); two empty
+    sets are identical, so their Jaccard is 1.0."""
+    union = na + nb - inter
+    return F.round(F.when(union == 0, F.lit(1.0)).otherwise(inter / union), 6)
 
 
 def score_pairs(
@@ -102,8 +110,7 @@ def score_pairs(
     # arithmetically (|A∪B| = |A|+|B|-|A∩B| since the sets are distinct) —
     # no array_union materialization
     inter, na, nb = F.col("inter"), F.col("na"), F.col("nb")
-    union = na + nb - inter
-    jaccard = F.round(F.when(union == 0, F.lit(1.0)).otherwise(inter / union), 6)
+    jaccard = jaccard_col(inter, na, nb)
     containment = F.round(
         F.when(F.least(na, nb) == 0, F.lit(1.0)).otherwise(inter / F.least(na, nb)), 6
     )

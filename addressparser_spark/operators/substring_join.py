@@ -17,17 +17,18 @@ inverted index as data):
    word-level entries stop being selective on a small vocabulary (exactly
    like the reference only benefits from CONTAINS on discriminative name
    words)
-2. document-frequency cap: only keys with ``df <= rare_df_cap`` join
-   (a hot key's bucket would be quadratic; the cap mirrors the block-size
-   guardrail and the skipped-key volume is observable via :func:`hot_keys`)
+2. document-frequency cap: only keys with ``df <= RARE_DF_CAP`` join
+   (a hot key's bucket would be quadratic; the cap is the block-size
+   guardrail's, and the skipped-key volume is observable via
+   :func:`hot_keys`)
 3. self equi-join on the key = the inverted-index probe (hash-partitions
-   uniformly on the key string)
+   uniformly on the key string); steps 2 and 3 are ``pairs.bucket_pairs``
 4. ``contains`` post-filter: keep pairs where one side's anchor phrase
-   (first ``anchor_tokens`` tokens) appears verbatim inside the other
+   (first ``ANCHOR_TOKENS`` tokens) appears verbatim inside the other
    side's full concatenated text — the LIKE-'%...%' verification.
 
 Every step is Catalyst (explode / groupBy / join / contains); the quadratic
-blow-up is bounded by ``df_cap**2`` pairs per key before dedup.
+blow-up is bounded by ``RARE_DF_CAP**2`` pairs per key before dedup.
 """
 
 from __future__ import annotations
@@ -36,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.tokens import distinct_shingles_col, stem_tokens_col
+from .pairs import bucket_pairs, over_cap
 
 RARE_DF_CAP = 10
 ANCHOR_TOKENS = 8
@@ -60,21 +62,13 @@ def token_index(profiles: DataFrame, stem: bool = True) -> DataFrame:
     )
 
 
-def hot_keys(profiles: DataFrame, df_cap: int = RARE_DF_CAP) -> DataFrame:
+def hot_keys(profiles: DataFrame) -> DataFrame:
     """(key, df): index entries skipped by the df cap — never silent."""
-    idx = token_index(profiles)
-    return (
-        idx.groupBy("key")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > df_cap)
-    )
+    skipped = over_cap(token_index(profiles), "key", RARE_DF_CAP)
+    return skipped.select("key", F.col("n").alias("df"))
 
 
-def substring_pairs(
-    profiles: DataFrame,
-    df_cap: int = RARE_DF_CAP,
-    anchor_tokens: int = ANCHOR_TOKENS,
-) -> DataFrame:
+def substring_pairs(profiles: DataFrame) -> DataFrame:
     """(conv_a, conv_b, a_contains_b, b_contains_a): verified containment pairs.
 
     ``a_contains_b`` = conv_b's anchor phrase occurs inside conv_a's full
@@ -83,23 +77,15 @@ def substring_pairs(
     """
     from pyspark.storagelevel import StorageLevel
 
+    # the index feeds three consumers (df counts and both join sides)
     idx = token_index(profiles).persist(StorageLevel.MEMORY_AND_DISK)
-    df_counts = idx.groupBy("key").agg(F.count(F.lit(1)).alias("df"))
-    rare = idx.join(
-        df_counts.filter(F.col("df") <= df_cap), "key", "left_semi"
-    )
-    a = rare.select("key", F.col("conv_id").alias("conv_a"))
-    b = rare.select("key", F.col("conv_id").alias("conv_b"))
-    cand = (
-        a.join(b, "key")
-        .filter(F.col("conv_a") < F.col("conv_b"))
-        .select("conv_a", "conv_b")
-        .dropDuplicates(["conv_a", "conv_b"])
+    cand = bucket_pairs(
+        idx.select("key", F.col("conv_id").alias("conv")), "key", "conv", RARE_DF_CAP
     )
     payload = profiles.select(
         "conv_id",
         F.col("concat_text").alias("full_text"),
-        F.array_join(F.slice("tokens", 1, anchor_tokens), " ").alias("anchor"),
+        F.array_join(F.slice("tokens", 1, ANCHOR_TOKENS), " ").alias("anchor"),
     )
     j = (
         cand.join(

@@ -80,6 +80,30 @@ def _bands_cte() -> str:
     return "bands AS (\n  " + "\n  UNION ALL\n  ".join(selects) + "\n)"
 
 
+def capped_pairs_cte(name: str, rows: str, key: str, id_: str, cap: int, out: str) -> str:
+    """CTEs ``<name>_kept`` and ``<name>``: the distinct ``(<out>_a,
+    <out>_b)`` pairs of ``id_`` values that share a ``key`` of ``rows`` with
+    at most ``cap`` rows, ``<out>_a < <out>_b`` (twin of
+    ``pairs.bucket_pairs``)."""
+    return f"""{name}_kept AS (
+  SELECT {key}, {id_} FROM {rows}
+  WHERE {key} IN (SELECT {key} FROM {rows} GROUP BY {key} HAVING count(*) <= {cap})
+),
+{name} AS (
+  SELECT DISTINCT a.{id_} AS {out}_a, b.{id_} AS {out}_b
+  FROM {name}_kept a JOIN {name}_kept b USING ({key})
+  WHERE a.{id_} < b.{id_}
+)"""
+
+
+def over_cap_sql(rows: str, key: str, cap: int, n: str) -> str:
+    """``(key, <n>, pairs_dropped)`` for the keys of ``rows`` with more than
+    ``cap`` rows (twin of ``pairs.over_cap`` with ``n`` renamed)."""
+    return f"""SELECT {key}, CAST(count(*) AS BIGINT) AS {n},
+       CAST(count(*) * (count(*) - 1) / 2 AS BIGINT) AS pairs_dropped
+FROM {rows} GROUP BY {key} HAVING count(*) > {cap}"""
+
+
 BLOCKS_CTE = f"""
 blocks AS (
   SELECT conv_id, 'sig' AS src, sig AS block_key FROM profiles
@@ -88,19 +112,7 @@ blocks AS (
   UNION ALL
   SELECT conv_id, src, block_key FROM bands
 ),
-block_n AS (
-  SELECT block_key, count(*) AS n FROM blocks GROUP BY block_key
-),
-kept_blocks AS (
-  SELECT b.conv_id, b.src, b.block_key
-  FROM blocks b JOIN block_n s USING (block_key)
-  WHERE s.n <= {MAX_BLOCK_SIZE}
-),
-cand_pairs AS (
-  SELECT DISTINCT a.conv_id AS conv_a, b.conv_id AS conv_b
-  FROM kept_blocks a JOIN kept_blocks b USING (block_key)
-  WHERE a.conv_id < b.conv_id
-)
+{capped_pairs_cte("cand_pairs", "blocks", "block_key", "conv_id", MAX_BLOCK_SIZE, "conv")}
 """
 
 SCORED_CTE = f"""
@@ -380,9 +392,7 @@ FROM raw_convs""",
 
 def dropped_blocks_sql() -> str:
     return _assemble(
-        f"""SELECT block_key, CAST(n AS BIGINT) AS block_n,
-       CAST(n * (n - 1) / 2 AS BIGINT) AS pairs_dropped
-FROM block_n WHERE n > {MAX_BLOCK_SIZE}""",
+        over_cap_sql("blocks", "block_key", MAX_BLOCK_SIZE, "block_n"),
         NORM_TURNS_CTE,
         PROFILES_CTE,
         SHINGLES_CTE,
@@ -406,21 +416,10 @@ sub_shingles AS (
            CASE WHEN len(stoks) <= {INDEX_SHINGLE_K} THEN [array_to_string(stoks, ' ')]
                 ELSE list_transform(range(1, len(stoks) - {INDEX_SHINGLE_K - 2}),
                                     i -> array_to_string(stoks[i:i+{INDEX_SHINGLE_K - 1}], ' '))
-           END)) AS s
+           END)) AS key
   FROM stem_lists
 ),
-key_df AS (
-  SELECT s AS key, count(*) AS df FROM sub_shingles GROUP BY s
-),
-rare AS (
-  SELECT i.conv_id, i.s AS key FROM sub_shingles i JOIN key_df d ON d.key = i.s
-  WHERE d.df <= {RARE_DF_CAP}
-),
-sub_cand AS (
-  SELECT DISTINCT a.conv_id AS conv_a, b.conv_id AS conv_b
-  FROM rare a JOIN rare b USING (key)
-  WHERE a.conv_id < b.conv_id
-),
+{capped_pairs_cte("sub_cand", "sub_shingles", "key", "conv_id", RARE_DF_CAP, "conv")},
 anchors AS (
   SELECT t.conv_id,
          array_to_string(t.toks[1:{ANCHOR_TOKENS}], ' ') AS anchor,
@@ -446,15 +445,19 @@ WHERE contains(pa.concat_text, pb.anchor) OR contains(pb.concat_text, pa.anchor)
     )
 
 
-def hot_index_keys_sql() -> str:
+def index_over_cap_sql() -> str:
+    """(key, df, pairs_dropped): the index keys over the df cap."""
     return _assemble(
-        f"""SELECT s AS key, CAST(count(*) AS BIGINT) AS df
-FROM sub_shingles GROUP BY s HAVING count(*) > {RARE_DF_CAP}""",
+        over_cap_sql("sub_shingles", "key", RARE_DF_CAP, "df"),
         NORM_TURNS_CTE,
         PROFILES_CTE,
         SHINGLES_CTE,
         SUBSTRING_CTE,
     )
+
+
+def hot_index_keys_sql() -> str:
+    return f"SELECT key, df FROM ({index_over_cap_sql()})"
 
 
 def synonym_blocks_sql() -> str:

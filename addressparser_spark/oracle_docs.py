@@ -8,6 +8,7 @@ assembled from the same constants.
 from __future__ import annotations
 
 from .functions.normalize import normalize_sql_duckdb
+from .oracle import capped_pairs_cte, over_cap_sql
 from .operators.ann import LSH_BITS_PER_TABLE, LSH_TABLES, N_QUERIES, TOP_K
 from .operators.dedup import (
     CHAR_NGRAM,
@@ -77,18 +78,7 @@ def _doc_bands_cte() -> str:
     return "doc_bands AS (\n  " + "\n  UNION ALL\n  ".join(selects) + "\n)"
 
 
-_BUCKET_PAIRS = f"""
-bucket_n AS (SELECT bucket, count(*) AS n FROM buckets GROUP BY bucket),
-kept AS (
-  SELECT b.doc_id, b.bucket FROM buckets b
-  JOIN bucket_n s USING (bucket) WHERE s.n <= {MAX_BUCKET}
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b
-  FROM kept a JOIN kept b USING (bucket)
-  WHERE a.doc_id < b.doc_id
-)
-"""
+_BUCKET_PAIRS = capped_pairs_cte("cand", "buckets", "bucket", "doc_id", MAX_BUCKET, "doc_id")
 
 
 def _assemble(final_select: str, *ctes: str) -> str:
@@ -490,17 +480,9 @@ def dropped_buckets_sql() -> str:
         for b in range(n_bands)
     )
     return _assemble(
-        f"""SELECT * FROM (
-  SELECT 'minhash_lsh' AS family, bucket, n AS bucket_n,
-         CAST(n * (n - 1) / 2 AS BIGINT) AS pairs_dropped
-  FROM (SELECT bucket, count(*) AS n FROM doc_bands GROUP BY bucket)
-  WHERE n > {MAX_BUCKET}
-  UNION ALL
-  SELECT 'simhash' AS family, bucket, n AS bucket_n,
-         CAST(n * (n - 1) / 2 AS BIGINT) AS pairs_dropped
-  FROM (SELECT bucket, count(*) AS n FROM sh_buckets GROUP BY bucket)
-  WHERE n > {MAX_BUCKET}
-)""",
+        f"""SELECT 'minhash_lsh' AS family, * FROM ({over_cap_sql("doc_bands", "bucket", MAX_BUCKET, "bucket_n")})
+UNION ALL
+SELECT 'simhash' AS family, * FROM ({over_cap_sql("sh_buckets", "bucket", MAX_BUCKET, "bucket_n")})""",
         NORM_DOCS_CTE,
         DOC_SHINGLES_CTE,
         _doc_minhash_cte(),
@@ -511,8 +493,8 @@ def dropped_buckets_sql() -> str:
 
 
 def _emb_bucket_ctes(dim: int) -> str:
-    """e0 + eb + bucket_n CTE text shared by the embedding dedup oracle and
-    its dropped-buckets accounting twin (identical plane/bucket math)."""
+    """e0 + eb CTE text shared by the embedding dedup oracle and its
+    dropped-buckets accounting twin (identical plane/bucket math)."""
     n_planes = LSH_TABLES * LSH_BITS_PER_TABLE
     planes = ", ".join(
         f"list_transform(range(0, {dim}), d -> CASE WHEN substr(md5('{p}' || '|' || CAST(d AS STRING)), 1, 1) >= '8' THEN 1.0 ELSE -1.0 END)"
@@ -531,16 +513,14 @@ def _emb_bucket_ctes(dim: int) -> str:
 ),
 eb AS (
   SELECT vec_id, unnest([{table_keys}]) AS bucket FROM e0
-),
-bucket_n AS (SELECT bucket, count(*) AS n FROM eb GROUP BY bucket)"""
+)"""
 
 
 def embedding_dropped_sql(dim: int) -> str:
     from .operators.ann import EMB_MAX_BUCKET
 
     return f"""WITH {_emb_bucket_ctes(dim)}
-SELECT bucket, CAST(n AS BIGINT) AS bucket_n, CAST(n * (n - 1) / 2 AS BIGINT) AS pairs_dropped
-FROM bucket_n WHERE n > {EMB_MAX_BUCKET}"""
+{over_cap_sql("eb", "bucket", EMB_MAX_BUCKET, "bucket_n")}"""
 
 
 def embedding_dup_sql(dim: int) -> str:
@@ -552,15 +532,7 @@ round(CASE WHEN sqrt(list_dot_product(a.emb, a.emb)) * sqrt(list_dot_product(b.e
            / (sqrt(list_dot_product(a.emb, a.emb)) * sqrt(list_dot_product(b.emb, b.emb))) END, 6)
 """
     return f"""WITH {_emb_bucket_ctes(dim)},
-kept AS (
-  SELECT eb.vec_id, eb.bucket FROM eb
-  JOIN bucket_n s USING (bucket) WHERE s.n <= {EMB_MAX_BUCKET}
-),
-cand AS (
-  SELECT DISTINCT a.vec_id AS vec_id_a, b.vec_id AS vec_id_b
-  FROM kept a JOIN kept b USING (bucket)
-  WHERE a.vec_id < b.vec_id
-)
+{capped_pairs_cte("cand", "eb", "bucket", "vec_id", EMB_MAX_BUCKET, "vec_id")}
 SELECT c.vec_id_a, c.vec_id_b, {cos} AS cosine, {cos} >= {EMB_COSINE_DUP} AS is_dup
 FROM cand c
 JOIN e0 a ON a.vec_id = c.vec_id_a
@@ -585,9 +557,8 @@ UNION ALL
 SELECT family, bucket AS key, bucket_n AS group_n, pairs_dropped
 FROM ({dropped_buckets_sql()})
 UNION ALL
-SELECT 'substring_df' AS family, key, df AS group_n,
-       CAST(df * (df - 1) / 2 AS BIGINT) AS pairs_dropped
-FROM ({oracle.hot_index_keys_sql()})
+SELECT 'substring_df' AS family, key, df AS group_n, pairs_dropped
+FROM ({oracle.index_over_cap_sql()})
 UNION ALL
 SELECT 'embedding_lsh' AS family, bucket AS key, bucket_n AS group_n, pairs_dropped
 FROM ({embedding_dropped_sql(dim)})"""

@@ -330,7 +330,7 @@ def ops_cap_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket caps, substring df cap, embedding-LSH bucket cap)."""
     from .operators.ann import EMB_DIM, embedding_dropped_buckets
     from .operators.dedup import dropped_buckets
-    from .operators.substring_join import hot_keys
+    from .operators.substring_join import RARE_DF_CAP, token_index
 
     a = pairs_op.dropped_blocks(_blocks(spark, sf_dir)).select(
         F.lit("block_cap").alias("family"),
@@ -344,11 +344,11 @@ def ops_cap_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bucket_n").alias("group_n"),
         "pairs_dropped",
     )
-    c = hot_keys(_profiles(spark, sf_dir)).select(
+    c = pairs_op.over_cap(token_index(_profiles(spark, sf_dir)), "key", RARE_DF_CAP).select(
         F.lit("substring_df").alias("family"),
         "key",
-        F.col("df").alias("group_n"),
-        ((F.col("df") * (F.col("df") - 1)) / 2).cast("bigint").alias("pairs_dropped"),
+        F.col("n").alias("group_n"),
+        "pairs_dropped",
     )
     d = embedding_dropped_buckets(_embeddings(spark, sf_dir), dim=EMB_DIM).select(
         F.lit("embedding_lsh").alias("family"),

@@ -7,6 +7,7 @@ import random
 
 from pyspark.sql import functions as F
 
+from addressparser_spark.operators import ann
 from addressparser_spark.operators.ann import (
     embedding_dropped_buckets,
     embedding_dup_pairs,
@@ -40,12 +41,13 @@ def test_near_duplicates_detected(spark):
             assert not dup, (pair, cos)
 
 
-def test_bucket_cap_counted_not_silent(spark):
+def test_bucket_cap_counted_not_silent(spark, monkeypatch):
     # many identical vectors -> one hot bucket per table, all over the cap
+    monkeypatch.setattr(ann, "EMB_MAX_BUCKET", 10)
     rows = [(i, [1.0] * DIM) for i in range(30)]
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    dropped = embedding_dropped_buckets(df, dim=DIM, max_bucket=10).collect()
+    dropped = embedding_dropped_buckets(df, dim=DIM).collect()
     assert len(dropped) > 0
     assert all(r["bucket_n"] == 30 and r["pairs_dropped"] == 435 for r in dropped)
     # capped: the quadratic pair set must not materialize
-    assert embedding_dup_pairs(df, dim=DIM, max_bucket=10).count() == 0
+    assert embedding_dup_pairs(df, dim=DIM).count() == 0

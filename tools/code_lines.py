@@ -1,12 +1,17 @@
 """Count the package's code lines: non-blank lines that are not comments or
-docstrings, per file and in total.
+docstrings, per file and in total. With ``--params``, list the defaulted
+parameters of each function in the given modules instead, with a total.
 
     python tools/code_lines.py [root]    # default root: addressparser_spark/
+    python tools/code_lines.py --params FILE.py[::FUNC] ...
 
 A line counts when it holds at least one token other than a comment, a
 newline or indentation, and lies outside every docstring (the leading
-string statement of a module, class or function). Uses only ``ast`` and
-``tokenize``, so two commits can be compared with the same script.
+string statement of a module, class or function). A parameter counts when
+it has a default value (positional or keyword-only); ``::FUNC`` restricts a
+module to one function (nested functions print as ``outer.inner``). Uses
+only ``ast`` and ``tokenize``, so two commits can be compared with the same
+script.
 """
 
 from __future__ import annotations
@@ -49,7 +54,44 @@ def code_lines(path: str) -> int:
     return len(lines - docs)
 
 
+def defaulted_params(path: str) -> dict[str, list[str]]:
+    """{qualified function name: its parameters that have a default}."""
+    with open(path, "rb") as f:
+        tree = ast.parse(f.read())
+    out: dict[str, list[str]] = {}
+
+    def visit(node: ast.AST, prefix: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            name = prefix
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                name = f"{prefix}{child.name}"
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = child.args
+                positional = a.posonlyargs + a.args
+                names = [p.arg for p in positional[len(positional) - len(a.defaults):]]
+                names += [p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+                out[name] = names
+            visit(child, f"{name}." if name != prefix else prefix)
+
+    visit(tree, "")
+    return out
+
+
+def print_params(specs: list[str]) -> None:
+    total = 0
+    for spec in specs:
+        path, _, only = spec.partition("::")
+        for func, names in defaulted_params(path).items():
+            if names and (not only or func == only):
+                print(f"{len(names):3d}  {path}::{func}({', '.join(names)})")
+                total += len(names)
+    print(f"{total:3d}  total")
+
+
 def main(argv: list[str]) -> None:
+    if argv[:1] == ["--params"]:
+        print_params(argv[1:])
+        return
     root = argv[0] if argv else os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "addressparser_spark"
     )
