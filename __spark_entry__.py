@@ -37,6 +37,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "er_linkage_clusters": q.er_linkage_clusters,
         "er_parse_udtf_roundtrip": q.er_parse_udtf_roundtrip,
         "er_cluster_summary": q.er_cluster_summary,
+        # the one resolver (resolve_cascade) over an empty registry
         "er_resolve_entities": q.er_resolve_entities,
         "er_resolve_cascade": q.er_resolve_cascade,
         "er_eval_f1": q.er_eval_f1,
@@ -87,7 +88,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # watermark-advancing sentinels; closed-session set == rel_sessionize
         "stream_sessionize": stream_q.stream_sessionize,
         # foreachBatch incremental linkage + registry MERGE over 2 disjoint
-        # micro-batches; union of epochs == er_resolve_entities
+        # micro-batches, each resolved through resolve_cascade as cli link
+        # does; union of epochs == er_resolve_entities while no epoch-1
+        # cluster hits an epoch-0 entity, i.e. every row resolves 'new'
         "stream_incremental_linkage": stream_q.stream_incremental_linkage,
         # entries past the 50th still run in the local parity gate
         # (tests/test_oracle_parity.py) even if the driver records only 50.

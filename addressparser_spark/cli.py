@@ -21,11 +21,16 @@ Commands:
 - ``package``  build the --py-files zip
 
 ``link`` and ``stream`` run the one linkage plan,
-``plans.pipeline.run_linkage``: ``link`` over its whole input, ``stream``
-once per micro-batch.
+``plans.pipeline.run_linkage``, and the one resolver,
+``operators.resolve.resolve_cascade``, against a registry in
+``CASCADE_REGISTRY_SCHEMA``: ``link`` over its whole input, ``stream``
+once per micro-batch. So, against the same registry rows, a later ``link``
+and a later micro-batch give a conversation the same entity id and stage.
 
 ``link`` writes the tables ``clusters``, ``resolved``, ``registry`` and
-``dropped_blocks`` under ``--output``, and ``metrics.json`` with the keys:
+``dropped_blocks`` under ``--output``, and ``metrics.json``, and nothing
+else; a rerun recomputes connected components from its input. The metrics
+keys are:
 
 - ``turns.rows``, ``pairs.candidates``, ``scored.rows``, ``scored.matches``:
   the pipeline's row counts (``PipelineMetrics``)
@@ -89,11 +94,7 @@ def _cmd_link(args: argparse.Namespace) -> None:
     apply_sql_settings(spark)
     register_kernels(spark)
     store = TableStore(spark, args.output)
-    transcripts = spark.read.parquet(args.input)
-    result = run_linkage(
-        transcripts,
-        checkpoint_dir=os.path.join(args.output, "cc_checkpoints"),
-    )
+    result = run_linkage(spark.read.parquet(args.input))
     # MERGE seam: Iceberg MERGE INTO when --registry-table names a catalog
     # table and the jar is present; parquet anti-join+union emulation here
     writer = registry_writer(

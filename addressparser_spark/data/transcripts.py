@@ -156,6 +156,33 @@ def truth_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def demo_registry(profiles: DataFrame) -> DataFrame:
+    """Deterministic partially-populated registry derived from the data.
+
+    Buckets conversations by the first hex char of ``md5(conv_id)``:
+    '0'-'3' are registered at full signature strength, '4'-'7' only at
+    prefix strength, '8'-'b' only at synonym strength, 'c'-'f' are absent.
+    Gives the resolve cascade real work at every stage with zero external
+    state — the DuckDB oracle (the ``registry`` CTE of
+    ``oracle.resolve_cascade_sql``) rebuilds the identical registry from the
+    same parquet.
+    """
+    from ..operators.resolve import profile_keys
+
+    k = profile_keys(profiles).withColumn(
+        "h", F.substring(F.md5(F.col("conv_id")), 1, 1)
+    )
+    return k.filter(F.col("h") <= "b").select(
+        F.md5(F.concat(F.lit("reg|"), F.col("conv_id"))).alias("entity_id"),
+        F.col("conv_id").alias("rep_conv_id"),
+        F.when(F.col("h") <= "3", F.col("sig")).alias("sig"),
+        F.when((F.col("h") >= "4") & (F.col("h") <= "7"), F.col("prefix_key")).alias(
+            "prefix_key"
+        ),
+        F.when(F.col("h") >= "8", F.col("syn_key")).alias("syn_key"),
+    )
+
+
 # ---------------------------------------------------------------------------
 # DuckDB side (driver oracle). Semantically identical to transcripts_df.
 # ---------------------------------------------------------------------------

@@ -12,18 +12,19 @@ Determinism: components are labeled by their lexicographic min node id, so
 cluster ids are stable across runs/partitionings (replacing the reference's
 order-dependent ``First()`` tie-breaks, ``AddressChooser.cs:30,62``).
 
-Resumability: every iteration checkpoints its edge frontier to
-``<checkpoint_dir>/iter_<k>`` (parquet here; Iceberg table-per-iteration in a
-catalog deployment) and ``connected_components`` resumes from the newest
-complete checkpoint — kill it at iteration k, rerun, and it continues from k.
+Each round's edge frontier is truncated with ``localCheckpoint``: the loop
+needs lineage truncation per round, not durable state, so a failed run
+recomputes from its input rather than resuming from files that could belong
+to another input.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# rounds before the loop gives up; it converges in O(log n) rounds
+MAX_ITER = 25
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -92,78 +93,42 @@ def _is_star_forest(edges: DataFrame) -> bool:
     return bad.isEmpty()
 
 
-def _checkpoint(
-    spark: SparkSession, df: DataFrame, checkpoint_dir: str | None, it: int
-) -> DataFrame:
-    # localCheckpoint is LOAD-BEARING, not an optimization knob: each star
-    # round references its input in several subtrees (self-join + union), so
-    # without lineage TRUNCATION the logical plan roughly triples per
-    # iteration and the analyzer/optimizer hangs by iteration ~4. persist()
-    # alone does NOT truncate (caching is a physical-plan concern; the
-    # optimizer still walks the full tree) — measured, do not "simplify".
-    if checkpoint_dir is None:
-        # eager=False: the next round's convergence-check action materializes
-        # the checkpoint, so each round costs ONE job, not two — at small
-        # edge volumes the loop is scheduling-latency bound, and this halves
-        # the sequential job count
-        return df.localCheckpoint(eager=False)
-    path = os.path.join(checkpoint_dir, f"iter_{it:03d}")
-    df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
-
-
-def _resume_iteration(spark: SparkSession, checkpoint_dir: str) -> tuple[int, DataFrame | None]:
-    if not os.path.isdir(checkpoint_dir):
-        return 0, None
-    done = sorted(
-        d for d in os.listdir(checkpoint_dir)
-        if d.startswith("iter_") and os.path.exists(os.path.join(checkpoint_dir, d, "_SUCCESS"))
-    )
-    if not done:
-        return 0, None
-    last = done[-1]
-    return int(last.split("_")[1]) + 1, spark.read.parquet(os.path.join(checkpoint_dir, last))
-
-
-def connected_components(
-    edges: DataFrame,
-    checkpoint_dir: str | None = None,
-    max_iter: int = 25,
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """(node, component) for every node appearing in ``edges``.
 
     ``component`` is the lexicographic min node id of the connected component.
     """
-    spark = edges.sparkSession
     # normalize in CONVERGED orientation (big -> small): an input that is
     # already a min-labeled star forest then exits below with zero rounds
     e = edges.select(
         F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
     ).filter(F.col("src") != F.col("dst")).distinct()
 
-    start_it = 0
-    resumed = None
-    if checkpoint_dir is not None:
-        start_it, resumed = _resume_iteration(spark, checkpoint_dir)
-    if resumed is not None:
-        e = resumed
-    else:
-        # materialize the (possibly expensive) upstream plan ONCE: the
-        # convergence check and round 1 both consume this frontier
-        e = e.localCheckpoint(eager=False)
+    # materialize the (possibly expensive) upstream plan ONCE: the
+    # convergence check and round 1 both consume this frontier
+    e = e.localCheckpoint(eager=False)
 
-    for it in range(start_it, max_iter):
+    for _ in range(MAX_ITER):
         # structural check BEFORE each round: fires on the converged round
         # itself (fingerprint-equality needs one extra confirming round) and
         # doubles as the action that materializes the lazy checkpoint
         if _is_star_forest(e):
             break
-        e = _small_star(_large_star(e))
-        e = _checkpoint(spark, e, checkpoint_dir, it)
+        # localCheckpoint is LOAD-BEARING, not an optimization knob: each
+        # star round references its input in several subtrees (self-join +
+        # union), so without lineage TRUNCATION the logical plan roughly
+        # triples per iteration and the analyzer/optimizer hangs by
+        # iteration ~4. persist() alone does NOT truncate (caching is a
+        # physical-plan concern; the optimizer still walks the full tree) —
+        # measured, do not "simplify". eager=False: the next round's
+        # convergence-check action materializes the checkpoint, so each
+        # round costs ONE job, not two — at small edge volumes the loop is
+        # scheduling-latency bound, and this halves the sequential job count
+        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
     else:
         if not _is_star_forest(e):
             raise RuntimeError(
-                f"connected_components: no convergence in {max_iter} iterations"
+                f"connected_components: no convergence in {MAX_ITER} iterations"
             )
 
     # Converged: every edge points node -> component min. Reps map to themselves.

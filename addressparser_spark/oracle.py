@@ -276,7 +276,8 @@ FROM clusters c JOIN profiles p ON p.conv_id = c.cluster_id""",
 def resolve_cascade_sql() -> str:
     """Multi-stage resolve cascade vs the deterministic demo registry.
 
-    Mirrors ``operators/resolve.py::resolve_cascade`` + ``demo_registry``:
+    Mirrors ``operators/resolve.py::resolve_cascade`` +
+    ``data/transcripts.py::demo_registry``:
     buckets by the first hex char of md5(conv_id) decide the key strength a
     registry entry is known at; each stage dedupes to min(entity_id) per key;
     coalesce picks the strongest hit, else a new deterministic id.

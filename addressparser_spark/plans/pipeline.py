@@ -29,11 +29,7 @@ def sig_representatives(profiles: DataFrame) -> DataFrame:
     return profiles.select("conv_id", F.min("conv_id").over(w).alias("rep"))
 
 
-def funnel_clusters_from(
-    profiles: DataFrame,
-    heavy_edges: DataFrame,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
+def funnel_clusters_from(profiles: DataFrame, heavy_edges: DataFrame) -> DataFrame:
     """(conv_id, cluster_id): light/heavy funnel clustering via contraction.
 
     Exact-duplicate (same-sig) stars are converged by construction — every
@@ -63,7 +59,7 @@ def funnel_clusters_from(
         )
         .select(F.col("rep_src").alias("src"), F.col("rep_dst").alias("dst"))
     )
-    comp = connected_components(contracted, checkpoint_dir=checkpoint_dir)
+    comp = connected_components(contracted)
     return rep.join(
         comp.withColumnRenamed("node", "rep"), "rep", "left"
     ).select("conv_id", F.coalesce("component", "rep").alias("cluster_id"))
@@ -127,7 +123,7 @@ class LinkageResult:
             df.unpersist()
 
 
-def run_linkage(transcripts: DataFrame, checkpoint_dir: str | None = None) -> LinkageResult:
+def run_linkage(transcripts: DataFrame) -> LinkageResult:
     """The linkage plan: normalize -> profile -> block -> pair -> score ->
     cluster, as a light->heavy funnel.
 
@@ -173,9 +169,7 @@ def run_linkage(transcripts: DataFrame, checkpoint_dir: str | None = None) -> Li
     metrics.observations["scored"] = obs_scored
 
     # contraction shortcut: same-sig stars never enter the CC loop
-    clusters = funnel_clusters_from(
-        profiles, scoring.matched_edges(scored), checkpoint_dir=checkpoint_dir
-    )
+    clusters = funnel_clusters_from(profiles, scoring.matched_edges(scored))
 
     return LinkageResult(
         profiles=profiles,

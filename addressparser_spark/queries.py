@@ -221,11 +221,15 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def er_resolve_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.resolve import resolve_entities
+    """The resolver over an empty registry: every cluster mints its id."""
+    from .operators.resolve import resolve_cascade
+    from .sources.registry_writer import read_registry
 
     p = _profiles(spark, sf_dir)
     clusters = _funnel_clusters(p, _blocks(spark, sf_dir))
-    return resolve_entities(clusters, p, registry=None)
+    return resolve_cascade(clusters, p, read_registry(spark, [])).select(
+        "conv_id", "cluster_id", "entity_id"
+    )
 
 
 def er_eval_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -312,12 +316,14 @@ def er_dropped_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
 def er_resolve_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J7/G3 proper: multi-stage resolve against a partially-known registry.
 
-    The registry is a deterministic derivation of the data (``demo_registry``)
+    The registry is a deterministic derivation of the data
+    (``data.transcripts.demo_registry``)
     so every cascade stage — sig hit, prefix fallback, synonym fallback, new
     id — fires on real rows and the driver's value hash proves stage
     assignment, not just row counts.
     """
-    from .operators.resolve import demo_registry, resolve_cascade
+    from .data.transcripts import demo_registry
+    from .operators.resolve import resolve_cascade
 
     p = _profiles(spark, sf_dir)
     clusters = sig_representatives(p).withColumnRenamed("rep", "cluster_id")

@@ -31,6 +31,23 @@ from ..operators.resolve import CASCADE_REGISTRY_SCHEMA
 from .tables import TableStore, iceberg_available
 
 
+def read_registry(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """The registry rows stored under ``paths``, in ``CASCADE_REGISTRY_SCHEMA``.
+
+    Read with the full schema, files written by the pre-cascade layout
+    (``entity_id, rep_conv_id, sig`` only) come back with NULL ``prefix_key``
+    and ``syn_key`` — key strengths that never hit — so they read side by
+    side with current files, in one directory or across several. With no
+    paths it is the empty registry: the false filter makes it an empty
+    LocalRelation to Catalyst, which then prunes every join, aggregate and
+    union over it (an empty registry costs no jobs) instead of scanning an
+    empty parallelize.
+    """
+    if not paths:
+        return spark.createDataFrame([], CASCADE_REGISTRY_SCHEMA).where(F.lit(False))
+    return spark.read.schema(CASCADE_REGISTRY_SCHEMA).parquet(*paths)
+
+
 class RegistryWriter:
     """Interface: read the current registry; merge a batch of additions.
 
@@ -54,20 +71,14 @@ class ParquetRegistryWriter(RegistryWriter):
     semantics), atomic-enough through the store's staging replace.
     """
 
-    def __init__(self, store: TableStore, name: str = "registry",
-                 schema: str = CASCADE_REGISTRY_SCHEMA):
+    name = "registry"
+
+    def __init__(self, store: TableStore):
         self.store = store
-        self.name = name
-        self.schema = schema
 
     def read(self) -> DataFrame:
-        registry = self.store.read_or_empty(self.name, self.schema)
-        for c in ("prefix_key", "syn_key"):
-            # registries written by the pre-cascade layout carry only `sig`;
-            # they upgrade in place (missing key strengths read as never-hit)
-            if c not in registry.columns:
-                registry = registry.withColumn(c, F.lit(None).cast("string"))
-        return registry
+        paths = [self.store._path(self.name)] if self.store.exists(self.name) else []
+        return read_registry(self.store.spark, paths)
 
     def merge(self, additions: DataFrame) -> None:
         current = self.read()
@@ -87,13 +98,12 @@ class IcebergRegistryWriter(RegistryWriter):
     (``Db/DataContextBase_AddrObject.cs:182-183``).
     """
 
-    def __init__(self, spark: SparkSession, table: str,
-                 schema: str = CASCADE_REGISTRY_SCHEMA):
+    def __init__(self, spark: SparkSession, table: str):
         self.spark = spark
         self.table = table
-        self.schema = schema
-        cols = ", ".join(schema.split(", "))
-        spark.sql(f"CREATE TABLE IF NOT EXISTS {table} ({cols}) USING iceberg")
+        spark.sql(
+            f"CREATE TABLE IF NOT EXISTS {table} ({CASCADE_REGISTRY_SCHEMA}) USING iceberg"
+        )
 
     def read(self) -> DataFrame:
         return self.spark.table(self.table)
@@ -114,13 +124,10 @@ class IcebergRegistryWriter(RegistryWriter):
 
 
 def registry_writer(
-    spark: SparkSession,
-    store: TableStore,
-    name: str = "registry",
-    iceberg_table: str | None = None,
+    spark: SparkSession, store: TableStore, iceberg_table: str | None = None
 ) -> RegistryWriter:
     """Backend selection: Iceberg when the classpath + a table ident allow,
     parquet emulation otherwise. Call sites never branch on the backend."""
     if iceberg_table is not None and iceberg_available(spark):
         return IcebergRegistryWriter(spark, iceberg_table)
-    return ParquetRegistryWriter(store, name)
+    return ParquetRegistryWriter(store)

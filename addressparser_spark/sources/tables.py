@@ -1,13 +1,12 @@
 """Table IO layer: catalog-style access with an Iceberg slot and parquet fallback.
 
 The engine's durable tables (transcripts input, entity registry, cluster
-output, checkpoints) are defined here behind one interface so the storage
+output) are defined here behind one interface so the storage
 backend is a deployment choice:
 
 - **Iceberg** (production): snapshot isolation replaces the reference's
   ``with (nolock)`` dirty reads (`Db/DataContextBase_AddrObject.cs:182-183`),
-  MERGE INTO replaces the T-SQL MERGE (`Db/DataContextBase_Address.cs:396-440`),
-  and per-iteration table snapshots give the clustering loop its resume points.
+  and MERGE INTO replaces the T-SQL MERGE (`Db/DataContextBase_Address.cs:396-440`).
   Activated when the runtime has the Iceberg Spark extension on the classpath.
 - **Parquet directories** (sandbox/tests): same layout, overwrite-by-staging
   for atomic-enough replacement, `_SUCCESS` markers as completeness signals.
@@ -21,7 +20,6 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def read_parallel(spark: SparkSession, path: str) -> DataFrame:
@@ -78,14 +76,6 @@ class TableStore:
 
     def read(self, name: str) -> DataFrame:
         return self.spark.read.parquet(self._path(name))
-
-    def read_or_empty(self, name: str, schema: str) -> DataFrame:
-        if self.exists(name):
-            return self.read(name)
-        # the false filter makes it an empty LocalRelation to Catalyst, which
-        # then prunes every join, aggregate and union over it (an empty
-        # registry costs no jobs) instead of scanning an empty parallelize
-        return self.spark.createDataFrame([], schema).where(F.lit(False))
 
     def write(self, name: str, df: DataFrame, partition_by: list[str] | None = None) -> None:
         w = df.write.mode("overwrite")

@@ -1,11 +1,11 @@
 """Driver-graded Structured Streaming queries — oracle-hash-matched.
 
 The two streaming operator families (custom stateful sessionization via
-``applyInPandasWithState``; incremental linkage + registry MERGE via
-``foreachBatch``) previously had only pytest evidence. Each wrapper here
-gives them the standard ``(spark, sf_dir) -> DataFrame`` driver surface
-whose result is BYTE-COMPARABLE to the same DuckDB oracle as its batch
-twin — the hardest correctness gate available:
+``applyInPandasWithState``; incremental linkage + ``resolve_cascade`` +
+registry MERGE via ``foreachBatch``) previously had only pytest evidence.
+Each wrapper here gives them the standard ``(spark, sf_dir) -> DataFrame``
+driver surface whose result is BYTE-COMPARABLE to the same DuckDB oracle as
+its batch twin — the hardest correctness gate available:
 
 - the input table is split into deterministic micro-batch FILES (so state
   must survive real batch boundaries, exactly-once seams must hold),
@@ -155,11 +155,18 @@ def stream_incremental_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``substring(conv_id, 1, 11)`` — variants ``*_v1/_v2/_v3/_d1`` share
     their base's prefix), so every true entity's members arrive in the same
     micro-batch while the registry still mediates everything across batches:
-    epoch 1 resolves against (and extends) the registry epoch 0 wrote.
-    Entity ids are content-derived (md5 of cluster signature,
-    ``operators/resolve.py``), so the union of per-epoch resolutions must
-    equal the one-shot batch resolution EXACTLY — the same
-    ``resolve_entities_sql()`` oracle as ``er_resolve_entities`` grades it.
+    epoch 1 resolves against (and extends) the registry epoch 0 wrote,
+    through ``resolve_cascade`` as ``cli link`` does.
+
+    Entity ids minted at stage 'new' are content-derived (md5 of cluster
+    signature, ``operators/resolve.py``), so while no epoch-1 cluster shares
+    a ``sig``, ``prefix_key`` or ``syn_key`` with an epoch-0 entity — every
+    row resolves at stage 'new', as at sf0.001, sf0.01 and sf0.1 — the union
+    of per-epoch resolutions equals the one-shot batch resolution EXACTLY,
+    and the same ``resolve_entities_sql()`` oracle as ``er_resolve_entities``
+    grades it. A split that puts a prefix or synonym match across the epochs
+    would resolve that cluster to the earlier entity's id instead, as a
+    second ``cli link`` against the same registry does.
     """
     from ..data.transcripts import transcripts_df
 

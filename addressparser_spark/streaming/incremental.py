@@ -4,8 +4,9 @@ Two streaming shapes:
 
 1. :func:`incremental_linkage` — ``readStream`` over a transcripts directory;
    each micro-batch runs ``run_linkage`` (the same light->heavy funnel as
-   ``cli link``) in ``foreachBatch`` and resolves against (then extends) the
-   persistent entity registry — the streaming MERGE pattern.
+   ``cli link``) in ``foreachBatch``, resolves through ``resolve_cascade``
+   (the same resolver and registry schema as ``cli link``) and then extends
+   the persistent entity registry — the streaming MERGE pattern.
    ``foreachBatch`` is the exactly-once seam: every on-disk write is
    per-epoch and overwrite-idempotent, and entity ids are content-derived
    (md5 of signature, see operators/resolve.py), so replaying a batch after
@@ -28,9 +29,11 @@ union is rewritten as a new base and ``_CURRENT`` is flipped via atomic
 rename; old deltas/base are removed only AFTER the flip. A crash at any
 point leaves either the old pointer (deltas still present) or the new one —
 ``_load_registry`` unions base+deltas and dedupes by ``entity_id``, so both
-states read identically. On Iceberg this whole dance is ``MERGE INTO`` +
-snapshot expiry; the layout above is the same semantics on a plain object
-store.
+states read identically. Every directory reads through ``read_registry``,
+so deltas and bases written in the pre-cascade ``sig``-only layout read
+next to current ones, their weaker keys NULL. On Iceberg this whole dance
+is ``MERGE INTO`` + snapshot expiry; the layout above is the same semantics
+on a plain object store.
 """
 
 from __future__ import annotations
@@ -42,12 +45,9 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.resolve import (
-    REGISTRY_SCHEMA,
-    registry_additions,
-    resolve_entities,
-)
+from ..operators.resolve import cascade_registry_additions, resolve_cascade
 from ..plans.pipeline import LinkageResult, run_linkage
+from ..sources.registry_writer import read_registry
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -73,11 +73,9 @@ def _registry_parts(registry_dir: str) -> tuple[str | None, list[str]]:
 def _load_registry(spark: SparkSession, registry_dir: str) -> DataFrame:
     base, deltas = _registry_parts(registry_dir)
     dirs = ([base] if base else []) + deltas
-    if not dirs:
-        return spark.createDataFrame([], REGISTRY_SCHEMA)
     # entity_id is content-derived, so dedup makes any crash state (delta
     # survived but compaction half-done, or vice versa) read identically
-    return spark.read.parquet(*dirs).dropDuplicates(["entity_id"])
+    return read_registry(spark, dirs).dropDuplicates(["entity_id"])
 
 
 def _maybe_compact(spark: SparkSession, registry_dir: str, epoch_id: int) -> None:
@@ -107,18 +105,21 @@ def _maybe_compact(spark: SparkSession, registry_dir: str, epoch_id: int) -> Non
 def link_batch(
     batch: DataFrame, registry: DataFrame
 ) -> tuple[DataFrame, DataFrame, LinkageResult]:
-    """Run ``run_linkage`` on one micro-batch against the current registry.
+    """Run ``run_linkage`` on one micro-batch and resolve it against the
+    current registry, as ``cli link`` does.
 
-    Returns ``(resolved, additions, result)``. ``additions`` are the
-    O(batch) registry delta rows (see ``registry_additions``) — the streaming
-    writer appends them as a per-epoch delta. ``result`` holds the frames
-    ``run_linkage`` persisted; the caller must ``unpersist()`` it once the
-    epoch's actions have run. Registry lookup is the broadcast
-    reference-dictionary join.
+    Returns ``(resolved, additions, result)``. ``resolved`` comes from
+    ``resolve_cascade``, so a cluster that shares only its ``prefix_key`` or
+    ``syn_key`` with an entity an earlier batch registered takes that
+    entity's id at that stage. ``additions`` are the O(batch) registry delta
+    rows (see ``cascade_registry_additions``) — the streaming writer appends
+    them as a per-epoch delta. ``result`` holds the frames ``run_linkage``
+    persisted; the caller must ``unpersist()`` it once the epoch's actions
+    have run. Registry lookup is the broadcast reference-dictionary join.
     """
     result = run_linkage(batch)
-    resolved = resolve_entities(result.clusters, result.profiles, registry)
-    additions = registry_additions(resolved, result.profiles, registry)
+    resolved = resolve_cascade(result.clusters, result.profiles, registry)
+    additions = cascade_registry_additions(resolved, result.profiles, registry)
     return resolved, additions, result
 
 

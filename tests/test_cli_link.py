@@ -9,6 +9,7 @@ the idempotent-rerun guarantee the deterministic md5 ids exist for.
 from __future__ import annotations
 
 import json
+import os
 import shutil
 
 import pytest
@@ -136,3 +137,117 @@ def test_cli_raises_without_kernels(spark, tmp_path, monkeypatch, cmd):
     with pytest.raises(RuntimeError, match="jw-udf.jar"):
         cli.main([cmd, "--input", str(tmp_path / "missing"), "--output", str(tmp_path / "out")])
     assert not (tmp_path / "out").exists()
+
+
+def _words(tag: str, n: int) -> str:
+    return " ".join(f"{tag}{i}" for i in range(n))
+
+
+def _transcripts(spark, convs: dict[str, list[str]]):
+    """A transcripts frame with one row per turn of each ``conv_id -> texts``."""
+    from datetime import datetime
+
+    from addressparser_spark.streaming.incremental import TRANSCRIPT_SCHEMA
+
+    ts = datetime(2024, 1, 1)
+    rows = [
+        (conv_id, i, ("user", "assistant")[i % 2], text, None, ts)
+        for conv_id, texts in convs.items()
+        for i, text in enumerate(texts)
+    ]
+    return spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
+
+
+def _chain(tag: str) -> dict[str, list[str]]:
+    """Three conversations that share their first two turns, so prefix
+    blocking makes them candidates, and whose matched graph is the chain
+    a - b - c: ``a`` and ``c`` are each within containment 0.9 of ``b``, but
+    not of each other, so node ``b`` is on both sides of an edge and
+    connected components need at least one round."""
+    head = [_words(f"{tag}h", 8), _words(f"{tag}g", 8)]
+    x, y = _words(f"{tag}x", 40), _words(f"{tag}y", 40)
+    return {
+        f"{tag}_a": head + [x],
+        f"{tag}_b": head + [x, y],
+        f"{tag}_c": head + [y],
+    }
+
+
+def _link(tdir: str, out) -> None:
+    cli.main(["link", "--input", tdir, "--output", str(out)])
+
+
+def test_relink_into_used_output_recomputes_components(spark, tmp_path):
+    """A second input linked into an output that already holds a finished
+    link gets its own clusters, never the earlier input's components."""
+    x_dir, y_dir = str(tmp_path / "x"), str(tmp_path / "y")
+    _transcripts(spark, _chain("p")).write.parquet(x_dir)
+    _transcripts(spark, _chain("q")).write.parquet(y_dir)
+
+    out, fresh = tmp_path / "out", tmp_path / "fresh"
+    _link(x_dir, out)
+    _link(y_dir, out)
+    _link(y_dir, fresh)
+
+    def clusters(d):
+        return {tuple(r) for r in spark.read.parquet(str(d / "clusters")).collect()}
+
+    want = {("q_a", "q_a"), ("q_b", "q_a"), ("q_c", "q_a")}
+    assert clusters(fresh) == want
+    assert clusters(out) == want
+    assert not (out / "cc_checkpoints").exists()
+
+
+def test_stream_resolves_like_link_against_the_same_registry(spark, tmp_path):
+    """A micro-batch resolves through the same cascade as ``cli link``: a
+    conversation sharing only its ``prefix_key`` with an unlinked entity of
+    an earlier batch takes that entity's id at stage 'prefix', in the
+    stream and in a ``link`` against the first batch's registry alike."""
+    from addressparser_spark.streaming.driver_queries import _stage_file
+    from addressparser_spark.streaming.incremental import incremental_linkage
+
+    head = [_words("sh", 8), _words("sg", 8)]
+    # each batch also holds a linked pair (a conversation and its truncated
+    # resumption), so it has candidate pairs
+    batch1 = _transcripts(spark, {
+        "s1_p": head + [_words("sp", 40)],
+        "s1_r": [_words("sr", 30), _words("ss", 30)],
+        "s1_r2": [_words("sr", 30)],
+    })
+    batch2 = _transcripts(spark, {
+        "s2_q": head + [_words("sq", 40)],
+        "s2_t": [_words("st", 30), _words("su", 30)],
+        "s2_t2": [_words("st", 30)],
+    })
+
+    link_out = tmp_path / "link"
+    for i, batch in enumerate((batch1, batch2)):
+        d = str(tmp_path / f"batch{i}")
+        batch.write.parquet(d)
+        _link(d, link_out)
+    linked = spark.read.parquet(str(link_out / "resolved"))
+
+    in_dir = str(tmp_path / "in")
+    os.makedirs(in_dir)
+    for i, batch in enumerate((batch1, batch2)):
+        _stage_file(batch, str(tmp_path / "stage"), in_dir, f"b{i}", i)
+    out_dir = str(tmp_path / "stream_out")
+    q = incremental_linkage(
+        spark, in_dir, out_dir, str(tmp_path / "reg"), str(tmp_path / "ck")
+    )
+    assert q.awaitTermination(300), "stream did not finish"
+    streamed = spark.read.parquet(out_dir).filter("epoch = 1")
+
+    def entities(df):
+        return {r["conv_id"]: r["entity_id"] for r in df.collect()}
+
+    assert entities(streamed) == entities(linked)
+    p_entity = entities(spark.read.parquet(out_dir).filter("epoch = 0"))["s1_p"]
+    assert entities(linked)["s2_q"] == p_entity
+
+    def stages(df):
+        return {r["conv_id"]: r["resolve_stage"] for r in df.collect()}
+
+    assert stages(streamed) == stages(linked) == {
+        "s2_q": "prefix", "s2_t": "new", "s2_t2": "new"
+    }

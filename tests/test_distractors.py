@@ -58,7 +58,7 @@ def test_distractor_pairs_rejected_with_margin(spark, sf_dir):
         assert r["jaccard"] < 0.8 and r["containment"] < 0.8, r
 
 
-def test_synth_generator_mirrors_the_distractor_contract(spark, tmp_path):
+def test_synth_generator_mirrors_the_distractor_contract(spark):
     """data/synth.py (bench + scale-linearity input) injects the same _d1
     hard negatives; its F1 must also be measured against real negatives."""
     from addressparser_spark.data.synth import synth_transcripts, synth_truth
@@ -66,7 +66,7 @@ def test_synth_generator_mirrors_the_distractor_contract(spark, tmp_path):
     from addressparser_spark.plans.evaluate import pairwise_f1
 
     t = synth_transcripts(spark, n_convs=240)
-    res = run_linkage(t, checkpoint_dir=str(tmp_path / "cc"))
+    res = run_linkage(t)
     d1 = res.scored.filter(
         F.col("conv_a").endswith("_d1") | F.col("conv_b").endswith("_d1")
     )

@@ -9,6 +9,7 @@ import shutil
 from pyspark.sql import functions as F
 
 from addressparser_spark.data.transcripts import transcripts_df
+from addressparser_spark.operators.resolve import CASCADE_REGISTRY_SCHEMA
 from addressparser_spark.streaming import incremental as inc
 
 
@@ -51,14 +52,39 @@ def test_compaction_folds_deltas_and_flips_pointer(spark, sf_dir, tmp_path, monk
     assert n == resolved.select("entity_id").distinct().count()
 
 
+# the sig-only layout that stream deltas and bases had before the stream
+# resolved through the cascade
+LEGACY_SCHEMA = "entity_id string, rep_conv_id string, sig string"
+
+
 def test_load_registry_dedupes_crash_state(spark, tmp_path):
     """Base + a not-yet-deleted delta holding the same entity reads as one row."""
     reg_dir = str(tmp_path / "reg")
     os.makedirs(reg_dir)
     row = [("e1", "c1", "sig1")]
-    df = spark.createDataFrame(row, inc.REGISTRY_SCHEMA)
+    df = spark.createDataFrame(row, LEGACY_SCHEMA)
     df.write.parquet(os.path.join(reg_dir, "base_v000001"))
     df.write.parquet(os.path.join(reg_dir, "delta_epoch=5"))
     with open(os.path.join(reg_dir, "_CURRENT"), "w") as f:
         f.write("base_v000001")
     assert inc._load_registry(spark, reg_dir).count() == 1
+
+
+def test_load_registry_reads_legacy_and_cascade_deltas(spark, tmp_path):
+    """A sig-only delta and a cascade delta in one registry directory: every
+    row reads, in the cascade schema, with NULL for the keys a file lacks."""
+    reg_dir = str(tmp_path / "reg")
+    spark.createDataFrame([("e1", "c1", "sig1")], LEGACY_SCHEMA).write.parquet(
+        os.path.join(reg_dir, "delta_epoch=0")
+    )
+    spark.createDataFrame(
+        [("e2", "c2", "sig2", "pk2", "sk2")], CASCADE_REGISTRY_SCHEMA
+    ).write.parquet(os.path.join(reg_dir, "delta_epoch=1"))
+    registry = inc._load_registry(spark, reg_dir)
+    assert registry.columns == [
+        "entity_id", "rep_conv_id", "sig", "prefix_key", "syn_key"
+    ]
+    assert {tuple(r) for r in registry.collect()} == {
+        ("e1", "c1", "sig1", None, None),
+        ("e2", "c2", "sig2", "pk2", "sk2"),
+    }

@@ -11,11 +11,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from addressparser_spark.data.transcripts import transcripts_df
+from addressparser_spark.data.transcripts import demo_registry, transcripts_df
 from addressparser_spark.operators.blocking import conv_profiles, normalize_turns
 from addressparser_spark.operators.resolve import (
     cascade_registry_additions,
-    demo_registry,
     merge_registry_cascade,
     resolve_cascade,
 )

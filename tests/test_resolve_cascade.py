@@ -14,12 +14,9 @@ import hashlib
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from addressparser_spark.data.transcripts import demo_registry
 from addressparser_spark.operators import blocking
-from addressparser_spark.operators.resolve import (
-    demo_registry,
-    profile_keys,
-    resolve_cascade,
-)
+from addressparser_spark.operators.resolve import profile_keys, resolve_cascade
 
 
 def _profiles(spark, rows):

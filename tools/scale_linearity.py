@@ -35,18 +35,18 @@ def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def run_scale(spark, n_convs: int, checkpoint_base: str) -> dict:
+def run_scale(spark, n_convs: int, work_dir: str) -> dict:
     # Materialize the synthetic table to parquet FIRST: the input-table shape
     # the north rule specifies is a stored table, and measuring over the
     # in-plan generator would charge the engine for re-evaluating the
     # generation expression tree inside the aggregation. The write is
     # excluded from every timed stage.
-    src = os.path.join(checkpoint_base, f"transcripts_{n_convs}")
+    src = os.path.join(work_dir, f"transcripts_{n_convs}")
     synth_transcripts(spark, n_convs=n_convs).write.mode("overwrite").parquet(src)
     t = spark.read.parquet(src)
     stages: dict[str, float] = {}
     t0 = time.monotonic()
-    result = run_linkage(t, checkpoint_dir=os.path.join(checkpoint_base, f"cc_{n_convs}"))
+    result = run_linkage(t)
     n_profiles = result.profiles.count()
     stages["profiles"] = round(time.monotonic() - t0, 2)
 
