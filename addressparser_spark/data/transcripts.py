@@ -222,8 +222,3 @@ transcripts AS (
   FROM base_turns WHERE conv_num % 6 = 1
 )
 """
-
-
-def with_transcripts_cte(sql: str, extra_ctes: str = "") -> str:
-    """Wrap an oracle query so it can reference the ``transcripts`` view."""
-    return f"WITH {TRANSCRIPTS_CTE_DUCKDB}{extra_ctes}\n{sql}"

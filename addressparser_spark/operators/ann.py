@@ -8,14 +8,22 @@
   md5-derived ±1 hyperplanes, candidate generation within buckets, exact
   re-rank inside. At 10^9 vectors the bucket join replaces the full cross
   product; the hyperplanes are data-independent and engine-reproducible.
+- ``ivf_topk``: the inverted-file scale path — probe only the lists of the
+  nearest centroids.
+
+The three top-k paths differ only in their candidates; each ends in the
+one exact re-rank, ``_rerank``. The probe set, ``k`` and the IVF shape are
+module constants (``N_QUERIES``, ``TOP_K``, ``IVF_CENTROIDS``,
+``IVF_PROBES``) read at call time, as in the DuckDB oracle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
-from .pairs import bucket_pairs, over_cap
+from .pairs import bucket_pairs, over_cap, with_sides
 
 TOP_K = 5
 N_QUERIES = 10
@@ -47,39 +55,54 @@ def cosine_col(a: Column, b: Column) -> Column:
     return F.when(d == 0, F.lit(0.0)).otherwise(_dot(a, b) / d)
 
 
-def _as_double(df: DataFrame, col: str = "embedding") -> DataFrame:
-    return df.withColumn(col, F.col(col).cast("array<double>"))
+def _as_double(df: DataFrame) -> DataFrame:
+    return df.withColumn("embedding", F.col("embedding").cast("array<double>"))
 
 
-def cosine_topk(
-    embeddings: DataFrame, k: int = TOP_K, n_queries: int = N_QUERIES
-) -> DataFrame:
-    """(query_id, neighbor_id, cosine, rank): exact top-k for the probe set.
-
-    Probe set = vec_id < n_queries (deterministic). The probe side is tiny and
-    broadcast; the corpus side streams — at 10^9 vectors this is one scan.
-    Ties broken by neighbor_id so ranks are total-order deterministic.
-    """
-    e = _as_double(embeddings).select("vec_id", "embedding")
-    q = e.filter(F.col("vec_id") < n_queries).select(
+def _probes(e: DataFrame) -> DataFrame:
+    """(query_id, q_emb): the probe set, vec_id < ``N_QUERIES``
+    (deterministic)."""
+    return e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
-    j = e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-    scored = j.select(
+
+
+def _rerank(cand: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, cosine, rank): the ``TOP_K`` candidates
+    ``(query_id, q_emb, vec_id, embedding)`` of each probe by exact cosine
+    against its ``q_emb`` — the re-rank every top-k path ends in.
+
+    Ties break by neighbor_id, so ranks are total-order deterministic.
+    """
+    scored = cand.select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
         F.round(cosine_col(F.col("q_emb"), F.col("embedding")), 6).alias("cosine"),
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id", "cosine", "rank")
     )
+
+
+def _neighbors(e: DataFrame, probes: DataFrame, key: str) -> DataFrame:
+    """The corpus rows ``e`` joined to each broadcast probe row
+    ``(query_id, key, ...)`` that shares their ``key``, the query itself
+    left out."""
+    return e.join(F.broadcast(probes), key).filter(F.col("vec_id") != F.col("query_id"))
+
+
+def cosine_topk(embeddings: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, cosine, rank): exact top-k for the probe set.
+
+    Every other vector is a candidate of every probe: the probe side is
+    tiny and broadcast, the corpus side streams past it — at 10^9 vectors
+    this is one scan.
+    """
+    e = _as_double(embeddings).select("vec_id", "embedding")
+    return _rerank(e.join(F.broadcast(_probes(e)), F.col("vec_id") != F.col("query_id")))
 
 
 def _hyperplane_values(plane: int, dim: int) -> list[float]:
@@ -157,23 +180,12 @@ def embedding_dup_pairs(embeddings: DataFrame, dim: int) -> DataFrame:
     (``pairs.bucket_pairs``) is the only quadratic step and it is bounded by
     ``EMB_MAX_BUCKET**2`` per bucket.
     """
-    from pyspark.storagelevel import StorageLevel
-
     # the bucket rows feed three consumers (sizes and both join sides)
     e = _lsh_rows(embeddings, dim).persist(StorageLevel.MEMORY_AND_DISK)
     cand = bucket_pairs(e.select("bucket", "vec_id"), "bucket", "vec_id", EMB_MAX_BUCKET)
     emb = _as_double(embeddings).select("vec_id", "embedding")
-    j = (
-        cand.join(
-            emb.select(F.col("vec_id").alias("vec_id_a"), F.col("embedding").alias("emb_a")),
-            "vec_id_a",
-        )
-        .join(
-            emb.select(F.col("vec_id").alias("vec_id_b"), F.col("embedding").alias("emb_b")),
-            "vec_id_b",
-        )
-    )
-    cos = F.round(cosine_col(F.col("emb_a"), F.col("emb_b")), 6)
+    j = with_sides(cand, emb, "vec_id")
+    cos = F.round(cosine_col(F.col("embedding_a"), F.col("embedding_b")), 6)
     return j.select(
         "vec_id_a",
         "vec_id_b",
@@ -189,9 +201,7 @@ def embedding_dropped_buckets(embeddings: DataFrame, dim: int) -> DataFrame:
     return dropped.withColumnRenamed("n", "bucket_n")
 
 
-def lsh_topk(
-    embeddings: DataFrame, dim: int, k: int = TOP_K, n_queries: int = N_QUERIES
-) -> DataFrame:
+def lsh_topk(embeddings: DataFrame, dim: int) -> DataFrame:
     """(query_id, neighbor_id, cosine, rank): top-k among multi-table LSH candidates.
 
     Approximate: recall < 1 vs ``cosine_topk`` by construction; the exploded
@@ -199,31 +209,16 @@ def lsh_topk(
     on the bucket key, candidates deduped across tables, exact re-rank inside).
     """
     e = _lsh_rows(embeddings, dim)
-    q = e.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("bucket"),
+    q = e.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"), "bucket"
     )
     cand = (
-        e.join(F.broadcast(q.select("query_id", "bucket")), "bucket")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "embedding")
-        .dropDuplicates(["query_id", "neighbor_id"])
+        _neighbors(e, q.select("query_id", "bucket"), "bucket")
+        .select("query_id", "vec_id", "embedding")
+        .dropDuplicates(["query_id", "vec_id"])
     )
     q_emb = q.select("query_id", "q_emb").dropDuplicates(["query_id"])
-    scored = cand.join(F.broadcast(q_emb), "query_id").select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine_col(F.col("q_emb"), F.col("embedding")), 6).alias("cosine"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rerank(cand.join(F.broadcast(q_emb), "query_id"))
 
 
 # ---------------------------------------------------------------------------
@@ -234,9 +229,7 @@ IVF_CENTROIDS = 16
 IVF_PROBES = 4
 
 
-def ivf_centroids(
-    embeddings: DataFrame, n_centroids: int = IVF_CENTROIDS
-) -> list[tuple[int, list[float]]]:
+def ivf_centroids(embeddings: DataFrame) -> list[tuple[int, list[float]]]:
     """Collect the coarse-quantizer centroids (the IVF *model*) driver-side.
 
     An IVF index is a two-phase structure: a small learned model (K
@@ -255,7 +248,7 @@ def ivf_centroids(
     """
     rows = (
         _as_double(embeddings)
-        .filter(F.col("vec_id") < n_centroids)
+        .filter(F.col("vec_id") < IVF_CENTROIDS)
         .select("vec_id", "embedding")
         .collect()
     )
@@ -293,7 +286,7 @@ def ivf_assign(
 
     At 10^9 vectors this column is the table's physical partition/bucket key:
     write the corpus ``partitionBy("list_id")`` and probing prunes to
-    ``n_probe/K`` of the data at scan time (partition pruning, no shuffle).
+    ``IVF_PROBES/K`` of the data at scan time (partition pruning, no shuffle).
     """
     e = _as_double(embeddings)
     return e.withColumn(
@@ -301,51 +294,25 @@ def ivf_assign(
     )
 
 
-def ivf_topk(
-    embeddings: DataFrame,
-    k: int = TOP_K,
-    n_queries: int = N_QUERIES,
-    n_centroids: int = IVF_CENTROIDS,
-    n_probe: int = IVF_PROBES,
-) -> DataFrame:
+def ivf_topk(embeddings: DataFrame) -> DataFrame:
     """(query_id, neighbor_id, cosine, rank): IVF top-k — the second ANN
     scale path beside multi-table LSH (``lsh_topk``).
 
     Shape: assign every vector to its nearest of K centroids (inverted
-    file); per query, probe only the ``n_probe`` nearest lists; exact
+    file); per query, probe only the ``IVF_PROBES`` nearest lists; exact
     cosine re-rank inside the probed lists. The probe side is
-    (n_queries x n_probe) rows and broadcast; the corpus side streams with
+    (``N_QUERIES`` x ``IVF_PROBES``) rows and broadcast; the corpus side streams with
     partition pruning on ``list_id``. Because lists partition the corpus,
     candidates need NO cross-table dedup (contrast: LSH's multi-table
     union does). Approximate by construction: a true neighbor assigned to
     an unprobed list is missed — recall vs ``cosine_topk`` is measured in
-    tests, tunable via ``n_probe``.
+    tests, tunable via ``IVF_PROBES``.
     """
-    cents = ivf_centroids(embeddings, n_centroids)
+    cents = ivf_centroids(embeddings)
     e = ivf_assign(embeddings, cents).select("vec_id", "embedding", "list_id")
-    q = e.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.explode(
-            _nearest_lists_col(F.col("embedding"), cents, n_probe)
-        ).alias("list_id"),
-    )
-    cand = (
-        e.join(F.broadcast(q.select("query_id", "list_id")), "list_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "embedding")
-    )
-    q_emb = q.select("query_id", "q_emb").dropDuplicates(["query_id"])
-    scored = cand.join(F.broadcast(q_emb), "query_id").select(
+    lists = _probes(e).select(
         "query_id",
-        "neighbor_id",
-        F.round(cosine_col(F.col("q_emb"), F.col("embedding")), 6).alias("cosine"),
+        "q_emb",
+        F.explode(_nearest_lists_col(F.col("q_emb"), cents, IVF_PROBES)).alias("list_id"),
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rerank(_neighbors(e, lists, "list_id"))

@@ -31,7 +31,7 @@ from ..functions.normalize import normalize_col
 from ..functions.tokens import distinct_shingles_col, tokens_col
 from ..session import INTERSECT_FUNC, kernel
 from .blocking import band_key, minhash_col
-from .pairs import bucket_pairs, over_cap
+from .pairs import bucket_pairs, over_cap, with_sides
 from .scoring import jaccard_col
 
 DOC_NUM_HASHES = 12
@@ -51,14 +51,14 @@ def normalized_docs(docs: DataFrame) -> DataFrame:
     )
 
 
-def doc_shingle_sets(docs: DataFrame, k: int = DOC_SHINGLE_K) -> DataFrame:
+def doc_shingle_sets(docs: DataFrame) -> DataFrame:
     # tokens materialized as a column before the shingle lambda references it
     # (outer expressions inside higher-order lambdas re-evaluate per element)
     n = normalized_docs(docs).withColumn("toks", tokens_col(F.col("norm_text")))
     return n.select(
         "doc_id",
         "norm_text",
-        distinct_shingles_col(F.col("toks"), k).alias("sh"),
+        distinct_shingles_col(F.col("toks"), DOC_SHINGLE_K).alias("sh"),
     )
 
 
@@ -142,10 +142,7 @@ def _jaccard_pairs(cand: DataFrame, sets: DataFrame) -> DataFrame:
     """(doc_id_a, doc_id_b, jaccard) of each candidate pair over ``sets``
     rows ``(doc_id, h)``: one ``intersect_count_java`` call per pair, the
     kernel pairwise ER scoring uses."""
-    def side(s: str) -> DataFrame:
-        return sets.select(F.col("doc_id").alias(f"doc_id_{s}"), F.col("h").alias(f"h_{s}"))
-
-    j = cand.join(side("a"), "doc_id_a").join(side("b"), "doc_id_b").select(
+    j = with_sides(cand, sets, "doc_id").select(
         "doc_id_a",
         "doc_id_b",
         F.size("h_a").alias("na"),
@@ -218,14 +215,11 @@ def simhash_pairs(docs: DataFrame) -> DataFrame:
     """
     sh = doc_simhash(docs)
     cand = _candidates(simhash_buckets(sh))
-    j = (
-        cand.join(sh.select(F.col("doc_id").alias("doc_id_a"), F.col("simhash").alias("s_a")), "doc_id_a")
-        .join(sh.select(F.col("doc_id").alias("doc_id_b"), F.col("simhash").alias("s_b")), "doc_id_b")
-    )
+    j = with_sides(cand, sh, "doc_id")
     # Hamming over the 0/1 strings: count positions where chars differ
     ham = F.size(
         F.filter(
-            F.zip_with(F.split("s_a", ""), F.split("s_b", ""), lambda x, y: x != y),
+            F.zip_with(F.split("simhash_a", ""), F.split("simhash_b", ""), lambda x, y: x != y),
             lambda d: d,
         )
     )
@@ -262,20 +256,19 @@ def dropped_buckets(docs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def char_ngrams_col(text, n: int = CHAR_NGRAM):
-    ln = F.length(text)
+def char_ngrams_col(text: Column) -> Column:
     grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(ln - n + 1, F.lit(1))),
-        lambda i: text.substr(i, F.lit(n)),
+        F.sequence(F.lit(1), F.greatest(F.length(text) - CHAR_NGRAM + 1, F.lit(1))),
+        lambda i: text.substr(i, F.lit(CHAR_NGRAM)),
     )
     return F.array_distinct(grams)
 
 
-def ngram_jaccard_pairs(docs: DataFrame, n: int = CHAR_NGRAM) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
     """(doc_id_a, doc_id_b, ngram_jaccard): char-n-gram sets on LSH candidates."""
     nd = (
         normalized_docs(docs)
-        .withColumn("g0", char_ngrams_col(F.col("norm_text"), n))
+        .withColumn("g0", char_ngrams_col(F.col("norm_text")))
         .select("doc_id", _hashed_set(F.col("g0")).alias("h"))
     )
     j = _jaccard_pairs(_candidates(doc_band_keys(doc_minhash(docs))), nd)

@@ -19,6 +19,11 @@ Every family binds the same two operators with its own key, id and cap:
 The pair join is a self equi-join on the key; ``id_a < id_b`` canonicalizes
 orientation and ``distinct`` merges pairs found under several keys (a pair
 found by both ``sig`` and an LSH band scores once).
+
+The step after it is one operator too: :func:`with_sides` joins a family's
+per-id payload (ER's hashed shingles and text, a document's hashed set or
+simhash, a vector's embedding, the ground-truth or predicted cluster) onto
+both sides of its pairs, as ``<col>_a``/``<col>_b``.
 """
 
 from __future__ import annotations
@@ -63,6 +68,30 @@ def bucket_pairs(rows: DataFrame, key: str, id: str, cap: int) -> DataFrame:
         .filter(F.col(f"{id}_a") < F.col(f"{id}_b"))
         .select(*[f"{c}_{s}" for c in (id, *attrs) for s in "ab"])
         .distinct()
+    )
+
+
+def with_sides(pairs: DataFrame, rows: DataFrame, id: str) -> DataFrame:
+    """``pairs`` with ``rows`` joined onto both of their sides: every column
+    of ``pairs``, then each payload column ``c`` of ``rows`` as ``c_a`` and
+    ``c_b``.
+
+    ``rows`` is keyed by ``id`` and the pairs carry ``<id>_a``/``<id>_b``;
+    a pair whose side has no row drops (inner joins), and a pair column
+    named like a payload column out (ER's carried ``sig_a``) gives way to
+    it. Both sides are aliases of the one ``rows`` frame, so a join hint on
+    ``rows`` (``broadcast``, ``shuffle_hash``) holds for both joins.
+    """
+    sides = [(c, s) for c in rows.columns if c != id for s in "ab"]
+    kept = [c for c in pairs.columns if c not in {f"{c}_{s}" for c, s in sides}]
+    p, a, b = pairs.alias("_p"), rows.alias("_a"), rows.alias("_b")
+    return (
+        p.join(a, F.col(f"_p.{id}_a") == F.col(f"_a.{id}"))
+        .join(b, F.col(f"_p.{id}_b") == F.col(f"_b.{id}"))
+        .select(
+            *[F.col(f"_p.{c}") for c in kept],
+            *[F.col(f"_{s}.{c}").alias(f"{c}_{s}") for c, s in sides],
+        )
     )
 
 

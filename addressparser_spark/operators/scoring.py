@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import INTERSECT_FUNC, TEXTSIM_FUNC, kernel
+from .pairs import with_sides
 
 JACCARD_NEAR = 0.9
 CONTAIN_NEAR = 0.9
@@ -44,15 +45,12 @@ TEXT_CAP = 96  # chars of concat_text carried into the pair join (lev/jw cap)
 def _slim_profiles(profiles: DataFrame) -> DataFrame:
     # project the join payload down to what scoring needs: hashed shingles +
     # capped text — the pair join shuffles millions of rows, payload width is
-    # the dominant cost at scale. Neutral column names so BOTH pair-side
-    # lookups share one canonical plan (broadcast path: ReuseExchange builds
-    # the hash relation once for the a- and b-side joins).
+    # the dominant cost at scale
     return profiles.select(
-        "conv_id",
+        F.col("conv_id").alias("conv"),
         "sig",
         F.col("sh_hash").alias("sh"),
         F.substring("concat_text", 1, TEXT_CAP).alias("text"),
-        "n_turns",
     )
 
 
@@ -79,6 +77,12 @@ def score_pairs(
     ``broadcast_profiles=True`` when the profile batch is dimension-sized
     (incremental runs, benchmarks) to skip shuffling pair rows entirely.
 
+    Both pair sides read one slim profile frame (``pairs.with_sides``), but
+    on the shuffle-hash path each side still exchanges it on its own: the
+    executed sf0.01 plan of ``er_scored_pairs`` holds no ``ReusedExchange``.
+    Exchange reuse shows where a side is broadcast: the doc-dedup families'
+    second side reuses the first side's broadcast.
+
     The feature columns are one ``select`` over the joined pairs. The
     kernels are registered in the pairs' session first, so any session with
     the jar on its classpath can score; one without it raises ``RuntimeError``.
@@ -86,25 +90,20 @@ def score_pairs(
     spark = pairs.sparkSession
     slim = _slim_profiles(profiles)
     slim = F.broadcast(slim) if broadcast_profiles else slim.hint("shuffle_hash")
-    a, b = slim.alias("A"), slim.alias("B")
     # the join's one select runs both kernels: one set-intersection count per
     # pair (the merge walk needs the sh_hash arrays sorted, which
     # blocking.conv_profiles does), and the fused text kernel, whose one
     # string decode per side yields [lev_sim, jw] and keeps the per-pair
     # allocation rate (what GC-bound core scaling sees) low
-    j = (
-        pairs.join(a, F.col("conv_a") == F.col("A.conv_id"))
-        .join(b, F.col("conv_b") == F.col("B.conv_id"))
-        .select(
-            "conv_a",
-            "conv_b",
-            F.col("A.sig").alias("sig_a"),
-            F.col("B.sig").alias("sig_b"),
-            F.size("A.sh").alias("na"),
-            F.size("B.sh").alias("nb"),
-            kernel(spark, INTERSECT_FUNC, F.col("A.sh"), F.col("B.sh")).alias("inter"),
-            kernel(spark, TEXTSIM_FUNC, F.col("A.text"), F.col("B.text")).alias("ts"),
-        )
+    j = with_sides(pairs, slim, "conv").select(
+        "conv_a",
+        "conv_b",
+        "sig_a",
+        "sig_b",
+        F.size("sh_a").alias("na"),
+        F.size("sh_b").alias("nb"),
+        kernel(spark, INTERSECT_FUNC, F.col("sh_a"), F.col("sh_b")).alias("inter"),
+        kernel(spark, TEXTSIM_FUNC, F.col("text_a"), F.col("text_b")).alias("ts"),
     )
     # Jaccard and containment both derive from the intersection count
     # arithmetically (|A∪B| = |A|+|B|-|A∩B| since the sets are distinct) —

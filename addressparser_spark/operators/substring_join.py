@@ -35,16 +35,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from ..functions.tokens import distinct_shingles_col, stem_tokens_col
-from .pairs import bucket_pairs, over_cap
+from .pairs import bucket_pairs, over_cap, with_sides
 
 RARE_DF_CAP = 10
 ANCHOR_TOKENS = 8
 INDEX_SHINGLE_K = 3
 
 
-def token_index(profiles: DataFrame, stem: bool = True) -> DataFrame:
+def token_index(profiles: DataFrame) -> DataFrame:
     """(conv_id, key): distinct-shingle inverted index.
 
     Tokens are suffix-stemmed before shingling (``stem_tokens_col``), so
@@ -55,10 +56,11 @@ def token_index(profiles: DataFrame, stem: bool = True) -> DataFrame:
     candidate fetch, verification stays exact (same fetch-wide/verify-exact
     split as the reference's CONTAINS -> LIKE).
     """
-    toks = stem_tokens_col(F.col("tokens")) if stem else F.col("tokens")
     return profiles.select(
         "conv_id",
-        F.explode(distinct_shingles_col(toks, INDEX_SHINGLE_K)).alias("key"),
+        F.explode(
+            distinct_shingles_col(stem_tokens_col(F.col("tokens")), INDEX_SHINGLE_K)
+        ).alias("key"),
     )
 
 
@@ -75,37 +77,17 @@ def substring_pairs(profiles: DataFrame) -> DataFrame:
     text (and vice versa); only pairs where at least one direction holds
     survive — exactly the reference's token-candidates-then-LIKE shape.
     """
-    from pyspark.storagelevel import StorageLevel
-
     # the index feeds three consumers (df counts and both join sides)
     idx = token_index(profiles).persist(StorageLevel.MEMORY_AND_DISK)
     cand = bucket_pairs(
         idx.select("key", F.col("conv_id").alias("conv")), "key", "conv", RARE_DF_CAP
     )
     payload = profiles.select(
-        "conv_id",
-        F.col("concat_text").alias("full_text"),
+        F.col("conv_id").alias("conv"),
+        F.col("concat_text").alias("text"),
         F.array_join(F.slice("tokens", 1, ANCHOR_TOKENS), " ").alias("anchor"),
     )
-    j = (
-        cand.join(
-            payload.select(
-                F.col("conv_id").alias("conv_a"),
-                F.col("full_text").alias("text_a"),
-                F.col("anchor").alias("anchor_a"),
-            ),
-            "conv_a",
-        )
-        .join(
-            payload.select(
-                F.col("conv_id").alias("conv_b"),
-                F.col("full_text").alias("text_b"),
-                F.col("anchor").alias("anchor_b"),
-            ),
-            "conv_b",
-        )
-    )
-    j = j.select(
+    j = with_sides(cand, payload, "conv").select(
         "conv_a",
         "conv_b",
         F.contains("text_a", F.col("anchor_b")).alias("a_contains_b"),

@@ -361,7 +361,7 @@ def kilometer_parse(docs: DataFrame) -> DataFrame:
     )
 
 
-def doc_fingerprints(docs: DataFrame, n: int = FINGERPRINT_NGRAM, k: int = FINGERPRINT_K) -> DataFrame:
+def doc_fingerprints(docs: DataFrame) -> DataFrame:
     """Bottom-k sketch of char-n-gram md5s: a compact content fingerprint.
 
     Two docs sharing most of their text share most of their bottom-k set —
@@ -371,12 +371,11 @@ def doc_fingerprints(docs: DataFrame, n: int = FINGERPRINT_NGRAM, k: int = FINGE
     # normalize once into a column: the gram lambda references it per element
     d = docs.select("doc_id", normalize_col(F.col("text")).alias("norm_text"))
     norm = F.col("norm_text")
-    ln = F.length(norm)
     grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(ln - n + 1, F.lit(1))),
-        lambda i: F.md5(norm.substr(i, F.lit(n))),
+        F.sequence(F.lit(1), F.greatest(F.length(norm) - FINGERPRINT_NGRAM + 1, F.lit(1))),
+        lambda i: F.md5(norm.substr(i, F.lit(FINGERPRINT_NGRAM))),
     )
-    bottom = F.slice(F.array_sort(F.array_distinct(grams)), 1, k)
+    bottom = F.slice(F.array_sort(F.array_distinct(grams)), 1, FINGERPRINT_K)
     return d.select(
         "doc_id",
         F.array_join(bottom, "|").alias("fingerprint"),

@@ -11,23 +11,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.pairs import with_sides
+
+
+def _by_conv(assignment: DataFrame, name: str) -> DataFrame:
+    """(conv, <name>) from a (conv_id, cluster_id) assignment."""
+    return assignment.select(F.col("conv_id").alias("conv"), F.col("cluster_id").alias(name))
+
 
 def labeled_pairs(pairs: DataFrame, truth: DataFrame) -> DataFrame:
     """(conv_a, conv_b, is_match): candidate pairs labeled by ground truth."""
-    ta = truth.select(
-        F.col("conv_id").alias("conv_a"), F.col("cluster_id").alias("truth_a")
-    )
-    tb = truth.select(
-        F.col("conv_id").alias("conv_b"), F.col("cluster_id").alias("truth_b")
-    )
-    return (
-        pairs.join(ta, "conv_a")
-        .join(tb, "conv_b")
-        .select(
-            "conv_a",
-            "conv_b",
-            (F.col("truth_a") == F.col("truth_b")).alias("is_match"),
-        )
+    return with_sides(pairs, _by_conv(truth, "truth"), "conv").select(
+        "conv_a", "conv_b", (F.col("truth_a") == F.col("truth_b")).alias("is_match")
     )
 
 
@@ -39,19 +34,8 @@ def pairwise_f1(
     ``predicted``: (conv_id, cluster_id) assignment. A labeled pair is
     predicted-positive iff both sides land in the same predicted cluster.
     """
-    pa = predicted.select(
-        F.col("conv_id").alias("conv_a"), F.col("cluster_id").alias("pred_a")
-    )
-    pb = predicted.select(
-        F.col("conv_id").alias("conv_b"), F.col("cluster_id").alias("pred_b")
-    )
-    j = (
-        labels.join(pa, "conv_a")
-        .join(pb, "conv_b")
-        .select(
-            "is_match",
-            (F.col("pred_a") == F.col("pred_b")).alias("pred_match"),
-        )
+    j = with_sides(labels, _by_conv(predicted, "pred"), "conv").select(
+        "is_match", (F.col("pred_a") == F.col("pred_b")).alias("pred_match")
     )
     agg = j.agg(
         F.sum(F.when(F.col("is_match") & F.col("pred_match"), 1).otherwise(0)).alias("tp"),

@@ -14,7 +14,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -48,17 +49,10 @@ def funnel_clusters_from(profiles: DataFrame, heavy_edges: DataFrame) -> DataFra
     this equivalence).
     """
     rep = sig_representatives(profiles)
-    contracted = (
-        heavy_edges.join(
-            rep.select(F.col("conv_id").alias("src"), F.col("rep").alias("rep_src")),
-            "src",
-        )
-        .join(
-            rep.select(F.col("conv_id").alias("dst"), F.col("rep").alias("rep_dst")),
-            "dst",
-        )
-        .select(F.col("rep_src").alias("src"), F.col("rep_dst").alias("dst"))
-    )
+    edges = heavy_edges.select(F.col("src").alias("conv_a"), F.col("dst").alias("conv_b"))
+    contracted = pairs_op.with_sides(
+        edges, rep.withColumnRenamed("conv_id", "conv"), "conv"
+    ).select(F.col("rep_a").alias("src"), F.col("rep_b").alias("dst"))
     comp = connected_components(contracted)
     return rep.join(
         comp.withColumnRenamed("node", "rep"), "rep", "left"
@@ -81,11 +75,32 @@ def heavy_pairs(blocks: DataFrame) -> DataFrame:
 @dataclass
 class PipelineMetrics:
     counts: dict[str, int] = field(default_factory=dict)
-    observations: dict[str, Observation] = field(default_factory=dict)
+    observations: dict[str, tuple[Observation, DataFrame, list[Column]]] = field(
+        default_factory=dict
+    )
+
+    def observe(self, df: DataFrame, name: str, **counts: Column) -> DataFrame:
+        """``df`` observed under ``name``: each ``counts`` column is the
+        metric ``<name>.<key>`` once the frame has run."""
+        aggs = [c.alias(k) for k, c in counts.items()]
+        obs = Observation(name)
+        self.observations[name] = (obs, df, aggs)
+        return df.observe(obs, *aggs)
 
     def resolve(self) -> dict[str, int]:
-        for name, obs in self.observations.items():
-            for k, v in obs.get.items():
+        for name, (obs, df, aggs) in self.observations.items():
+            # the first query whose plan holds an observed frame completes
+            # its observation. When AQE prunes the frame from that query (an
+            # input with no candidate pairs has no matched edges, so the
+            # first clustering query runs neither the profiles nor the
+            # scored pairs), the observation completes with an empty row,
+            # and Observation.get fails converting it. The counts are then
+            # aggregated from the frame itself, at the cost of its jobs
+            try:
+                row = obs.get
+            except Py4JJavaError:
+                row = df.agg(*aggs).first().asDict()
+            for k, v in row.items():
                 self.counts[f"{name}.{k}"] = int(v)
         self.observations.clear()
         return dict(self.counts)
@@ -143,10 +158,8 @@ def run_linkage(transcripts: DataFrame) -> LinkageResult:
     """
     metrics = PipelineMetrics()
 
-    turns = blocking.normalize_turns(transcripts)
-    obs_turns = Observation("turns")
-    turns = turns.observe(obs_turns, F.count(F.lit(1)).alias("rows"))
-    metrics.observations["turns"] = obs_turns
+    rows = F.count(F.lit(1))
+    turns = metrics.observe(blocking.normalize_turns(transcripts), "turns", rows=rows)
 
     profiles = blocking.conv_profiles(turns).cache()
     # the MinHash sketch is the most expensive blocking step: persist the
@@ -154,19 +167,13 @@ def run_linkage(transcripts: DataFrame) -> LinkageResult:
     # both read it
     blocks = blocking.block_table(profiles).persist(StorageLevel.MEMORY_AND_DISK)
     dropped = pairs_op.dropped_blocks(blocks)
-    cand = heavy_pairs(blocks)
-    obs_pairs = Observation("pairs")
-    cand = cand.observe(obs_pairs, F.count(F.lit(1)).alias("candidates")).cache()
-    metrics.observations["pairs"] = obs_pairs
-
-    scored = scoring.score_pairs(cand, profiles)
-    obs_scored = Observation("scored")
-    scored = scored.observe(
-        obs_scored,
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(F.when(F.col("verdict").isin(*scoring.MATCH_VERDICTS), 1).otherwise(0)).alias("matches"),
+    cand = metrics.observe(heavy_pairs(blocks), "pairs", candidates=rows).cache()
+    scored = metrics.observe(
+        scoring.score_pairs(cand, profiles),
+        "scored",
+        rows=rows,
+        matches=F.count(F.when(F.col("verdict").isin(*scoring.MATCH_VERDICTS), 1)),
     ).cache()
-    metrics.observations["scored"] = obs_scored
 
     # contraction shortcut: same-sig stars never enter the CC loop
     clusters = funnel_clusters_from(profiles, scoring.matched_edges(scored))

@@ -46,7 +46,10 @@ SQL_SETTINGS = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # let AQE right-size the output partitioning of cached plans too
-    # (cached conv profiles feed every downstream stage)
+    # (cached conv profiles feed every downstream stage). Without it, on a
+    # 4-CPU host, run_s of the link_batch benchmark was worse in 4 of 4
+    # pairs (8.55/7.63/7.27/8.06 s against 6.24/7.26/6.33/7.15 s) and of
+    # queries_sf0.01 in 3 of 3 (13.70/15.29/15.18 against 13.35/13.66/11.73 s)
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",

@@ -12,14 +12,17 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
+from addressparser_spark.operators import ann
 from addressparser_spark.operators.ann import (
     IVF_CENTROIDS,
     cosine_topk,
     ivf_assign,
     ivf_centroids,
     ivf_topk,
+    lsh_topk,
 )
 
 DIM = 16
@@ -61,16 +64,17 @@ def test_assignment_is_a_partition(spark):
     assert own == {lid: lid for lid, _ in cents}
 
 
-def test_recall_vs_exact(spark):
+def test_recall_vs_exact(spark, monkeypatch):
     df = _clustered_corpus(spark)
-    k, nq = 5, 10
+    monkeypatch.setattr(ann, "TOP_K", 5)
+    monkeypatch.setattr(ann, "N_QUERIES", 10)
     exact = {
         (r["query_id"], r["neighbor_id"])
-        for r in cosine_topk(df, k=k, n_queries=nq).collect()
+        for r in cosine_topk(df).collect()
     }
     approx = {
         (r["query_id"], r["neighbor_id"])
-        for r in ivf_topk(df, k=k, n_queries=nq).collect()
+        for r in ivf_topk(df).collect()
     }
     recall = len(exact & approx) / len(exact)
     # clustered data: a query's true neighbors share its anchor, so they
@@ -103,17 +107,19 @@ def test_written_index_partition_prunes(spark, tmp_path):
     assert q.count() == expected > 0
 
 
-def test_probe_bound_limits_candidates(spark):
-    # n_probe=1 searches only the query's own list: results are a subset of
-    # the n_probe=K (exhaustive-probe) results, which equal exact top-k
+def test_probe_bound_limits_candidates(spark, monkeypatch):
+    # IVF_PROBES=1 searches only the query's own list: results are a subset
+    # of the IVF_PROBES=K (exhaustive-probe) results, which equal exact top-k
     df = _clustered_corpus(spark)
+    monkeypatch.setattr(ann, "IVF_PROBES", 1)
     narrow = {
         (r["query_id"], r["neighbor_id"], r["cosine"])
-        for r in ivf_topk(df, n_probe=1).collect()
+        for r in ivf_topk(df).collect()
     }
+    monkeypatch.setattr(ann, "IVF_PROBES", IVF_CENTROIDS)
     exhaustive = {
         (r["query_id"], r["neighbor_id"], r["cosine"])
-        for r in ivf_topk(df, n_probe=IVF_CENTROIDS).collect()
+        for r in ivf_topk(df).collect()
     }
     exact = {
         (r["query_id"], r["neighbor_id"], r["cosine"])
@@ -126,3 +132,27 @@ def test_probe_bound_limits_candidates(spark):
     for q, n, c in narrow:
         if (q, n) in ex_by_pair:
             assert ex_by_pair[(q, n)] == c
+
+
+TOPK_PATHS = {
+    "cosine": cosine_topk,
+    "lsh": lambda df: lsh_topk(df, dim=DIM),
+    "ivf": ivf_topk,
+}
+
+
+@pytest.mark.parametrize("path", sorted(TOPK_PATHS))
+def test_equal_cosines_rank_by_neighbor_id(spark, monkeypatch, path):
+    """Every top-k path ends in the one re-rank: equal cosines rank by
+    neighbor_id ascending, and the cut at k keeps the lowest ids."""
+    monkeypatch.setattr(ann, "TOP_K", 3)
+    monkeypatch.setattr(ann, "N_QUERIES", 1)
+    v = [1.0] + [0.5] * (DIM - 1)
+    # vec 0 is the query; 9, 3, 7 and 5 are copies of it (cosine 1.0), 2 a
+    # different vector
+    rows = [(i, v) for i in (0, 9, 3, 7, 5)] + [(2, [0.5] * (DIM - 1) + [1.0])]
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    got = sorted(
+        (r["rank"], r["neighbor_id"], r["cosine"]) for r in TOPK_PATHS[path](df).collect()
+    )
+    assert got == [(1, 3, 1.0), (2, 5, 1.0), (3, 7, 1.0)]

@@ -1,6 +1,7 @@
 """The capped-bucket pair operator every family binds: ``pairs.bucket_pairs``
 generates the pairs of the keys within the cap, ``pairs.over_cap`` counts the
-keys beyond it."""
+keys beyond it, and ``pairs.with_sides`` joins a payload onto both sides of
+the pairs."""
 
 from __future__ import annotations
 
@@ -8,7 +9,7 @@ import importlib
 
 import pytest
 
-from addressparser_spark.operators.pairs import bucket_pairs, over_cap
+from addressparser_spark.operators.pairs import bucket_pairs, over_cap, with_sides
 
 # (module, cap constant, key column, id column) of each family's binding
 FAMILIES = [
@@ -69,4 +70,33 @@ def test_bucket_pairs_carries_attrs_and_dedups(spark):
         ["block_key", "conv", "sig"],
     )
     got = [r.asDict() for r in bucket_pairs(rows, "block_key", "conv", 2).collect()]
+    assert got == [{"conv_a": "a", "conv_b": "b", "sig_a": "sa", "sig_b": "sb"}]
+
+
+def test_with_sides_names_each_payload_column_per_side(spark):
+    """Each payload column ``c`` of the rows comes out as ``c_a`` and
+    ``c_b``, read from that side's row; every pair column is kept, but one
+    named like a payload column out (a carried ``len_a``) gives way to it."""
+    pairs = spark.createDataFrame(
+        [("a", "b", 1, -1), ("a", "c", 2, -1)], ["doc_id_a", "doc_id_b", "n", "len_a"]
+    )
+    rows = spark.createDataFrame(
+        [("a", "ta", 10), ("b", "tb", 20), ("c", "tc", 30)], ["doc_id", "text", "len"]
+    )
+    out = with_sides(pairs, rows, "doc_id")
+    assert out.columns == [
+        "doc_id_a", "doc_id_b", "n", "text_a", "text_b", "len_a", "len_b"
+    ]
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == [("a", "b", 1, "ta", "tb", 10, 20), ("a", "c", 2, "ta", "tc", 10, 30)]
+
+
+def test_with_sides_drops_a_pair_whose_side_has_no_row(spark):
+    """Both joins are inner: a pair with either side missing from the rows
+    drops, as every family's hand-written side joins did."""
+    pairs = spark.createDataFrame(
+        [("a", "b"), ("a", "x"), ("y", "b")], ["conv_a", "conv_b"]
+    )
+    rows = spark.createDataFrame([("a", "sa"), ("b", "sb")], ["conv", "sig"])
+    got = [r.asDict() for r in with_sides(pairs, rows, "conv").collect()]
     assert got == [{"conv_a": "a", "conv_b": "b", "sig_a": "sa", "sig_b": "sb"}]

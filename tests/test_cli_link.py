@@ -251,3 +251,20 @@ def test_stream_resolves_like_link_against_the_same_registry(spark, tmp_path):
     assert stages(streamed) == stages(linked) == {
         "s2_q": "prefix", "s2_t": "new", "s2_t2": "new"
     }
+
+
+def test_link_without_candidate_pairs(spark, tmp_path):
+    """Two unrelated two-turn conversations share no blocking key, so the
+    pipeline has no candidate pairs: its pair and score counts read 0 and
+    each conversation is its own new entity."""
+    tdir = str(tmp_path / "in")
+    _transcripts(spark, {
+        "u1": [_words("ua", 6), _words("ub", 6)],
+        "u2": [_words("va", 6), _words("vb", 6)],
+    }).write.parquet(tdir)
+    _link(tdir, tmp_path / "out")
+    m = json.loads(open(tmp_path / "out" / "metrics.json").read())
+    assert m["turns.rows"] == 4
+    assert (m["pairs.candidates"], m["scored.rows"], m["scored.matches"]) == (0, 0, 0)
+    assert m["n_clusters"] == 2
+    assert m["resolve_stages"] == {"new": 2}

@@ -64,7 +64,8 @@ def test_stemming_inflected_variant_lands_in_same_bucket(spark):
     """Metamorphic (the CONTAINS stemming arm): a conversation differing only
     by inflection shares index keys with its base form, so the candidate
     fetch finds the pair even though no verbatim shingle matches."""
-    from addressparser_spark.operators.substring_join import token_index
+    from addressparser_spark.functions.tokens import distinct_shingles_col
+    from addressparser_spark.operators.substring_join import INDEX_SHINGLE_K, token_index
 
     rows = [
         ("base", 0, "user", "run the query match fast now please", None, None),
@@ -78,10 +79,15 @@ def test_stemming_inflected_variant_lands_in_same_bucket(spark):
         keys.setdefault(r["conv_id"], set()).add(r["key"])
     assert keys["base"] & keys["infl"]  # stemmed shingles collide
     assert not (keys["base"] & keys["other"])
-    # stem=False is the pre-stemming behavior: no verbatim shingle survives
-    # the inflection differences in the first 3-gram region
+    # the same index over the raw tokens is the pre-stemming behavior: no
+    # verbatim shingle survives the inflection differences in the first
+    # 3-gram region
+    raw_idx = p.select(
+        "conv_id",
+        F.explode(distinct_shingles_col(F.col("tokens"), INDEX_SHINGLE_K)).alias("key"),
+    )
     raw = {}
-    for r in token_index(p, stem=False).collect():
+    for r in raw_idx.collect():
         raw.setdefault(r["conv_id"], set()).add(r["key"])
     assert len(raw["base"] & raw["infl"]) < len(keys["base"] & keys["infl"])
 
