@@ -15,10 +15,13 @@ UNION, ``Db/DataContextBase_AddrObject.cs:59-77``):
 3. ``mh<b>``   — MinHash LSH bands over distinct token 3-gram shingles:
                  probabilistic near-duplicate recall.
 
-The only shuffle is the groupBy(conv_id) that builds the profiles. The
-block table is one narrow projection of them: the MinHash sketch is one JVM
-kernel call per conversation (``minhash_md5``, java/MinHashMd5.java; no
-shingle explode, no aggregation), and one explode over an array of
+The only shuffle is the groupBy(conv_id) that builds the profiles. Each
+distinct shingle is hashed once there, into the profile's sorted
+``sh_hash`` (:func:`shingle_hashes`); scoring intersects those integers,
+and the MinHash sketch derives every minhash from them. The block table is
+one narrow projection of the profiles: the sketch is one JVM kernel call
+per conversation (``minhash_java``, java/MinHash.java; no shingle explode,
+no aggregation, no string rebuilt), and one explode over an array of
 ``(src, block_key)`` structs emits every key family in a single scan. Each
 block row carries its conversation's ``sig`` so the heavy stage can drop
 same-sig pairs without joining the profiles again. Hot blocking keys are
@@ -26,13 +29,15 @@ handled downstream by the block-size cap + AQE skew-join (see pairs.py).
 
 Scale notes (100 TB): signatures are one map-side-combinable aggregation over
 conv_id — convs are bounded (<=~10^3 turns), so collect_list per key is safe;
-the sketch costs NUM_HASHES md5s per distinct shingle inside one task, with
-no row multiplication; the block table has 2 + NUM_HASHES/ROWS_PER_BAND rows
-per conversation, and band keys are fixed-width md5 strings that
-hash-partition uniformly.
+a distinct shingle costs one md5, and the sketch NUM_HASHES multiply-reduces
+of its hash inside one task, with no row multiplication; the block table has
+2 + NUM_HASHES/ROWS_PER_BAND rows per conversation, and band keys are
+fixed-width md5 strings that hash-partition uniformly.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,6 +50,20 @@ NUM_HASHES = 16
 ROWS_PER_BAND = 2
 PREFIX_TURNS = 2
 SHINGLE_K = 3
+MERSENNE_61 = (1 << 61) - 1
+
+
+def _md5_60(s: str) -> int:
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+
+# (a_i, b_i) of minhash i, 1 <= a_i < p and 0 <= b_i < p: ER blocking uses
+# the first NUM_HASHES, doc dedup the first DOC_NUM_HASHES, and the DuckDB
+# oracle reads the same table
+MINHASH_PARAMS = [
+    (_md5_60(f"minhash|a|{i}") % (MERSENNE_61 - 1) + 1, _md5_60(f"minhash|b|{i}"))
+    for i in range(NUM_HASHES)
+]
 
 
 def normalize_turns(transcripts: DataFrame) -> DataFrame:
@@ -89,18 +108,15 @@ def conv_profiles(turns_norm: DataFrame) -> DataFrame:
         F.transform(F.col("turns"), lambda t: t["role"]).alias("role_seq"),
     )
     prof = prof.withColumn("tokens", tokens_col(F.col("concat_text")))
-    # 64-bit hashed shingles: the scoring join carries these instead of the
-    # string set — ~8x smaller shuffle payload, integer intersects, and
-    # set-overlap measures (Jaccard/containment) are hash-invariant. Sorted
-    # ascending so the scorer's merge-walk intersect kernel (O(n+m), no
-    # per-row hash set — java/IntersectCount.java) can consume them directly.
-    # The STRING shingle set is deliberately NOT kept in the profile: it
-    # nearly doubles the cached/shuffled row (it's the text re-materialized)
-    # and only the MinHash sketch needs it — that one consumer re-derives it
-    # from ``tokens`` (a cheap zip_with) instead.
-    prof = prof.withColumn("shingles", distinct_shingles_col(F.col("tokens"), SHINGLE_K))
+    # the shingles as their hashes, the one form every consumer reads: the
+    # scoring join carries them instead of the string set (~8x smaller
+    # shuffle payload, integer intersects; Jaccard and containment are
+    # hash-invariant), and the MinHash sketch derives its minhashes from
+    # them. The string set is not kept in the profile: it would nearly
+    # double the cached row (it is the text re-materialized), and no
+    # consumer reads it.
     prof = prof.withColumn(
-        "sh_hash", F.array_sort(F.transform(F.col("shingles"), lambda s: F.xxhash64(s)))
+        "sh_hash", shingle_hashes(distinct_shingles_col(F.col("tokens"), SHINGLE_K))
     )
     return prof.select(
         "conv_id", "n_turns", "sig", "prefix_key", "concat_text",
@@ -108,30 +124,38 @@ def conv_profiles(turns_norm: DataFrame) -> DataFrame:
     )
 
 
-def minhash_col(spark: SparkSession, shingles: Column, num_hashes: int) -> Column:
-    """MinHash sketch of a shingle array: element i is the lexicographic min
-    of md5('<i>|' || shingle). md5-hex min is an order-preserving stand-in
-    for integer MinHash and is reproducible in any engine (the DuckDB oracle
-    computes the identical value with ``min(md5(...))``). NULL for a null or
+def shingle_hashes(shingles: Column) -> Column:
+    """The one hash of a shingle: a distinct-string array as the sorted
+    60-bit md5 prefixes of its elements (the DuckDB twin is
+    ``oracle.minhash_cte``). Sorted ascending for the merge-walk
+    intersect kernel (java/IntersectCount.java); below 2^60, as the MinHash
+    kernel requires."""
+    return F.array_sort(
+        F.transform(shingles, lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint"))
+    )
+
+
+def minhash_col(spark: SparkSession, hashes: Column, num_hashes: int) -> Column:
+    """MinHash sketch of a :func:`shingle_hashes` array: element i is the
+    min of ``(a_i * x + b_i) mod (2^61 - 1)`` over its hashes x, with the
+    first ``num_hashes`` pairs of ``MINHASH_PARAMS``. NULL for a null or
     empty array, i.e. when there is no sketch.
     """
-    return kernel(spark, MINHASH_FUNC, shingles, F.lit(num_hashes))
+    a, b = zip(*MINHASH_PARAMS[:num_hashes])
+    return kernel(
+        spark, MINHASH_FUNC, hashes,
+        F.lit(list(a)).cast("array<bigint>"), F.lit(list(b)).cast("array<bigint>"),
+    )
 
 
 def _profile_sketch(profiles: DataFrame) -> Column:
-    # shingle strings re-derived from tokens (kept out of the cached profile
-    # row on purpose — see conv_profiles)
-    return minhash_col(
-        profiles.sparkSession,
-        distinct_shingles_col(F.col("tokens"), SHINGLE_K),
-        NUM_HASHES,
-    ).alias("mh")
+    return minhash_col(profiles.sparkSession, F.col("sh_hash"), NUM_HASHES).alias("mh")
 
 
 def band_key(b: int, hashes: list[Column]) -> Column:
     """LSH band key = md5('<b>|' || the band's minhashes, '|'-joined):
     collision iff the band's minhashes all agree."""
-    return F.md5(F.concat_ws("|", F.lit(str(b)), *hashes))
+    return F.md5(F.concat_ws("|", F.lit(str(b)), *(h.cast("string") for h in hashes)))
 
 
 def band_keys(mh: Column) -> list[Column]:

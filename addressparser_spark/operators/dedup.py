@@ -12,9 +12,12 @@ standard large-corpus dedup strategies:
 
 Everything is Catalyst expressions (md5 / array ops / windows) except two
 JVM kernels shared with conversation linkage: the MinHash sketch, one call
-per document (``blocking.minhash_col``, java/MinHashMd5.java: no shingle
+per document (``blocking.minhash_col``, java/MinHash.java: no shingle
 explode and no shuffle), and both Jaccards' intersection count, one
-merge walk per pair over sorted hashes (``intersect_count_java``). Each
+merge walk per pair over sorted hashes (``intersect_count_java``). A
+document's shingles and character n-grams are hashed once each, by
+``blocking.shingle_hashes``: the sketch and the Jaccard read the same
+integers. Each
 operator has an exact DuckDB oracle in ``oracle_docs.py``. At 100 TB the
 shapes hold: the MinHash sketch is narrow, SimHash is one groupBy,
 candidates are one exploded band join, and the bucket cap
@@ -30,7 +33,7 @@ from pyspark.storagelevel import StorageLevel
 from ..functions.normalize import normalize_col
 from ..functions.tokens import distinct_shingles_col, tokens_col
 from ..session import INTERSECT_FUNC, kernel
-from .blocking import band_key, minhash_col
+from .blocking import band_key, minhash_col, shingle_hashes
 from .pairs import bucket_pairs, over_cap, with_sides
 from .scoring import jaccard_col
 
@@ -52,13 +55,13 @@ def normalized_docs(docs: DataFrame) -> DataFrame:
 
 
 def doc_shingle_sets(docs: DataFrame) -> DataFrame:
+    """(doc_id, h): each document's distinct token shingles as their
+    sorted hashes."""
     # tokens materialized as a column before the shingle lambda references it
     # (outer expressions inside higher-order lambdas re-evaluate per element)
     n = normalized_docs(docs).withColumn("toks", tokens_col(F.col("norm_text")))
     return n.select(
-        "doc_id",
-        "norm_text",
-        distinct_shingles_col(F.col("toks"), DOC_SHINGLE_K).alias("sh"),
+        "doc_id", shingle_hashes(distinct_shingles_col(F.col("toks"), DOC_SHINGLE_K)).alias("h")
     )
 
 
@@ -91,14 +94,16 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
 
 
 def doc_minhash(docs: DataFrame) -> DataFrame:
-    """(doc_id, mh_00..mh_NN): per-hash-family min of md5('<i>|' || shingle).
+    """(doc_id, mh_00..mh_NN): the first ``DOC_NUM_HASHES`` minhashes of
+    ``blocking.minhash_col`` over each document's shingle hashes.
 
     ``doc_id`` is the documents' key. A document without shingles (null
     text) has no sketch and so no row: the kernel returns NULL for it, and
-    the explode of the compacted one-element array emits nothing.
+    the explode of the compacted one-element array emits nothing. Text
+    with no tokens has the one shingle ``''``, and so a sketch.
     """
     sets = doc_shingle_sets(docs)
-    mh = minhash_col(sets.sparkSession, F.col("sh"), DOC_NUM_HASHES)
+    mh = minhash_col(sets.sparkSession, F.col("h"), DOC_NUM_HASHES)
     sk = sets.select("doc_id", F.explode(F.array_compact(F.array(mh))).alias("mh"))
     return sk.select(
         "doc_id", *[F.col("mh")[i].alias(f"mh_{i:02d}") for i in range(DOC_NUM_HASHES)]
@@ -133,11 +138,6 @@ def _candidates(buckets: DataFrame) -> DataFrame:
     return bucket_pairs(buckets.select("bucket", "doc_id"), "bucket", "doc_id", MAX_BUCKET)
 
 
-def _hashed_set(strings: Column) -> Column:
-    # the intersect kernel merge-walks sorted int64 arrays
-    return F.array_sort(F.transform(strings, lambda s: F.xxhash64(s)))
-
-
 def _jaccard_pairs(cand: DataFrame, sets: DataFrame) -> DataFrame:
     """(doc_id_a, doc_id_b, jaccard) of each candidate pair over ``sets``
     rows ``(doc_id, h)``: one ``intersect_count_java`` call per pair, the
@@ -156,8 +156,7 @@ def _jaccard_pairs(cand: DataFrame, sets: DataFrame) -> DataFrame:
 
 def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
     """(doc_id_a, doc_id_b, jaccard, is_dup): LSH candidates + exact Jaccard."""
-    sets = doc_shingle_sets(docs).select("doc_id", _hashed_set(F.col("sh")).alias("h"))
-    j = _jaccard_pairs(_candidates(doc_band_keys(doc_minhash(docs))), sets)
+    j = _jaccard_pairs(_candidates(doc_band_keys(doc_minhash(docs))), doc_shingle_sets(docs))
     return j.select(
         "doc_id_a", "doc_id_b", "jaccard", (F.col("jaccard") >= DOC_JACCARD_DUP).alias("is_dup")
     )
@@ -269,7 +268,7 @@ def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
     nd = (
         normalized_docs(docs)
         .withColumn("g0", char_ngrams_col(F.col("norm_text")))
-        .select("doc_id", _hashed_set(F.col("g0")).alias("h"))
+        .select("doc_id", shingle_hashes(F.col("g0")).alias("h"))
     )
     j = _jaccard_pairs(_candidates(doc_band_keys(doc_minhash(docs))), nd)
     return j.withColumnRenamed("jaccard", "ngram_jaccard")

@@ -55,12 +55,14 @@ def token_index(profiles: DataFrame) -> DataFrame:
     ``contains`` post-filter downstream is unchanged: stemming widens the
     candidate fetch, verification stays exact (same fetch-wide/verify-exact
     split as the reference's CONTAINS -> LIKE).
+
+    The stems are projected before the shingling references them: the
+    shingle expression names its token array several times, and an inline
+    stemming chain would be copied into each reference.
     """
-    return profiles.select(
-        "conv_id",
-        F.explode(
-            distinct_shingles_col(stem_tokens_col(F.col("tokens")), INDEX_SHINGLE_K)
-        ).alias("key"),
+    stems = profiles.select("conv_id", stem_tokens_col(F.col("tokens")).alias("stems"))
+    return stems.select(
+        "conv_id", F.explode(distinct_shingles_col(F.col("stems"), INDEX_SHINGLE_K)).alias("key")
     )
 
 

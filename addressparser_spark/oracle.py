@@ -14,7 +14,9 @@ from __future__ import annotations
 from .data.synonyms import synonym_case_sql
 from .data.transcripts import TRANSCRIPTS_CTE_DUCKDB
 from .functions.normalize import normalize_sql_duckdb
-from .operators.blocking import NUM_HASHES, PREFIX_TURNS, ROWS_PER_BAND, SHINGLE_K
+from .operators.blocking import (
+    MERSENNE_61, MINHASH_PARAMS, NUM_HASHES, PREFIX_TURNS, ROWS_PER_BAND, SHINGLE_K,
+)
 from .operators.pairs import MAX_BLOCK_SIZE
 from .operators.scoring import CONTAIN_NEAR, JACCARD_NEAR, JACCARD_PARTIAL, VERDICT_RANK
 from .data.stemming import stem_case_sql
@@ -41,18 +43,42 @@ profiles AS (
 )
 """
 
+
+def shingles_sql(toks: str, k: int) -> str:
+    """The distinct k-token shingles of the token list ``toks`` (twin of
+    ``tokens.distinct_shingles_col``): text with fewer than ``k`` tokens is
+    one shingle, and text with no tokens the shingle ``''``."""
+    return f"""list_distinct(
+           CASE WHEN len({toks}) <= {k} THEN [coalesce(array_to_string({toks}, ' '), '')]
+                ELSE list_transform(range(1, len({toks}) - {k - 2}),
+                                    i -> array_to_string({toks}[i:i+{k - 1}], ' '))
+           END)"""
+
+
+def minhash_cte(name: str, shingles: str, id_: str, n: int) -> str:
+    """CTE ``name(id_, mh_00..)``: the first ``n`` minhashes of each
+    ``id_``'s shingles in ``shingles(id_, s)`` (twin of
+    ``blocking.minhash_col``) over their 60-bit md5 prefixes ``x`` (twin of
+    ``blocking.shingle_hashes``), in HUGEINT so ``a * x`` is exact."""
+    cols = ",\n         ".join(
+        f"CAST(min(({a}::HUGEINT * x + {b}) % {MERSENNE_61}) AS BIGINT) AS mh_{i:02d}"
+        for i, (a, b) in enumerate(MINHASH_PARAMS[:n])
+    )
+    return f"""{name} AS (
+  SELECT {id_},
+         {cols}
+  FROM (SELECT {id_}, ('0x' || substr(md5(s), 1, 15))::BIGINT AS x FROM {shingles})
+  GROUP BY {id_}
+)"""
+
+
 SHINGLES_CTE = f"""
 tok_lists AS (
   SELECT conv_id, list_filter(string_split(concat_text, ' '), t -> t <> '') AS toks
   FROM profiles
 ),
 shingle_sets AS (
-  SELECT conv_id,
-         list_distinct(
-           CASE WHEN len(toks) <= {SHINGLE_K} THEN [array_to_string(toks, ' ')]
-                ELSE list_transform(range(1, len(toks) - {SHINGLE_K - 2}),
-                                    i -> array_to_string(toks[i:i+{SHINGLE_K - 1}], ' '))
-           END) AS sh
+  SELECT conv_id, {shingles_sql("toks", SHINGLE_K)} AS sh
   FROM tok_lists
 ),
 conv_shingles AS (
@@ -61,14 +87,9 @@ conv_shingles AS (
 """
 
 
-def _minhash_cte() -> str:
-    cols = ",\n         ".join(
-        f"min(md5('{i:02d}|' || s)) AS mh_{i:02d}" for i in range(NUM_HASHES)
-    )
-    return f"minhash AS (\n  SELECT conv_id,\n         {cols}\n  FROM conv_shingles GROUP BY conv_id\n)"
-
-
 def _bands_cte() -> str:
+    """CTEs ``minhash`` (each conversation's sketch) and ``bands`` (its LSH
+    band keys)."""
     selects = []
     for b in range(NUM_HASHES // ROWS_PER_BAND):
         parts = " || '|' || ".join(
@@ -77,7 +98,10 @@ def _bands_cte() -> str:
         selects.append(
             f"SELECT conv_id, 'mh{b}' AS src, md5('{b}' || '|' || {parts}) AS block_key FROM minhash"
         )
-    return "bands AS (\n  " + "\n  UNION ALL\n  ".join(selects) + "\n)"
+    return (
+        minhash_cte("minhash", "conv_shingles", "conv_id", NUM_HASHES)
+        + ",\nbands AS (\n  " + "\n  UNION ALL\n  ".join(selects) + "\n)"
+    )
 
 
 def capped_pairs_cte(name: str, rows: str, key: str, id_: str, cap: int, out: str) -> str:
@@ -202,7 +226,6 @@ def minhash_bands_sql() -> str:
         NORM_TURNS_CTE,
         PROFILES_CTE,
         SHINGLES_CTE,
-        _minhash_cte(),
         _bands_cte(),
     )
 
@@ -213,7 +236,6 @@ def block_table_sql() -> str:
         NORM_TURNS_CTE,
         PROFILES_CTE,
         SHINGLES_CTE,
-        _minhash_cte(),
         _bands_cte(),
         BLOCKS_CTE,
     )
@@ -225,7 +247,6 @@ def candidate_pairs_sql() -> str:
         NORM_TURNS_CTE,
         PROFILES_CTE,
         SHINGLES_CTE,
-        _minhash_cte(),
         _bands_cte(),
         BLOCKS_CTE,
     )
@@ -237,7 +258,6 @@ def scored_pairs_sql() -> str:
         NORM_TURNS_CTE,
         PROFILES_CTE,
         SHINGLES_CTE,
-        _minhash_cte(),
         _bands_cte(),
         BLOCKS_CTE,
         SCORED_CTE,
@@ -250,7 +270,6 @@ def linkage_clusters_sql() -> str:
         NORM_TURNS_CTE,
         PROFILES_CTE,
         SHINGLES_CTE,
-        _minhash_cte(),
         _bands_cte(),
         BLOCKS_CTE,
         SCORED_CTE,
@@ -265,7 +284,6 @@ FROM clusters c JOIN profiles p ON p.conv_id = c.cluster_id""",
         NORM_TURNS_CTE,
         PROFILES_CTE,
         SHINGLES_CTE,
-        _minhash_cte(),
         _bands_cte(),
         BLOCKS_CTE,
         SCORED_CTE,
@@ -367,7 +385,6 @@ FROM counts""",
         NORM_TURNS_CTE,
         PROFILES_CTE,
         SHINGLES_CTE,
-        _minhash_cte(),
         _bands_cte(),
         BLOCKS_CTE,
         SCORED_CTE,
@@ -397,7 +414,6 @@ def dropped_blocks_sql() -> str:
         NORM_TURNS_CTE,
         PROFILES_CTE,
         SHINGLES_CTE,
-        _minhash_cte(),
         _bands_cte(),
         BLOCKS_CTE,
     )
@@ -412,12 +428,7 @@ stem_lists AS (
   FROM tok_lists
 ),
 sub_shingles AS (
-  SELECT conv_id,
-         unnest(list_distinct(
-           CASE WHEN len(stoks) <= {INDEX_SHINGLE_K} THEN [array_to_string(stoks, ' ')]
-                ELSE list_transform(range(1, len(stoks) - {INDEX_SHINGLE_K - 2}),
-                                    i -> array_to_string(stoks[i:i+{INDEX_SHINGLE_K - 1}], ' '))
-           END)) AS key
+  SELECT conv_id, unnest({shingles_sql("stoks", INDEX_SHINGLE_K)}) AS key
   FROM stem_lists
 ),
 {capped_pairs_cte("sub_cand", "sub_shingles", "key", "conv_id", RARE_DF_CAP, "conv")},
@@ -490,7 +501,6 @@ QUALIFY row_number() OVER (
         NORM_TURNS_CTE,
         PROFILES_CTE,
         SHINGLES_CTE,
-        _minhash_cte(),
         _bands_cte(),
         BLOCKS_CTE,
         SCORED_CTE,
@@ -551,7 +561,6 @@ FROM clusters GROUP BY cluster_id""",
         NORM_TURNS_CTE,
         PROFILES_CTE,
         SHINGLES_CTE,
-        _minhash_cte(),
         _bands_cte(),
         BLOCKS_CTE,
         SCORED_CTE,

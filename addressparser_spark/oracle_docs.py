@@ -8,7 +8,7 @@ assembled from the same constants.
 from __future__ import annotations
 
 from .functions.normalize import normalize_sql_duckdb
-from .oracle import capped_pairs_cte, over_cap_sql
+from .oracle import capped_pairs_cte, minhash_cte, over_cap_sql, shingles_sql
 from .operators.ann import LSH_BITS_PER_TABLE, LSH_TABLES, N_QUERIES, TOP_K
 from .operators.dedup import (
     CHAR_NGRAM,
@@ -46,26 +46,16 @@ doc_toks AS (
   SELECT doc_id, norm_text, {_TOKS} AS toks FROM norm_docs
 ),
 doc_shingle_sets AS (
-  SELECT doc_id,
-         list_distinct(
-           CASE WHEN len(toks) <= {DOC_SHINGLE_K} THEN [array_to_string(toks, ' ')]
-                ELSE list_transform(range(1, len(toks) - {DOC_SHINGLE_K - 2}),
-                                    i -> array_to_string(toks[i:i+{DOC_SHINGLE_K - 1}], ' '))
-           END) AS sh
+  SELECT doc_id, {shingles_sql("toks", DOC_SHINGLE_K)} AS sh
   FROM doc_toks
 ),
 doc_shingles AS (SELECT doc_id, unnest(sh) AS s FROM doc_shingle_sets)
 """
 
 
-def _doc_minhash_cte() -> str:
-    cols = ",\n         ".join(
-        f"min(md5('{i:02d}|' || s)) AS mh_{i:02d}" for i in range(DOC_NUM_HASHES)
-    )
-    return f"doc_minhash AS (\n  SELECT doc_id,\n         {cols}\n  FROM doc_shingles GROUP BY doc_id\n)"
-
-
 def _doc_bands_cte() -> str:
+    """CTEs ``doc_minhash`` (each document's sketch) and ``doc_bands`` (its
+    LSH band keys)."""
     selects = []
     for b in range(DOC_NUM_HASHES // DOC_ROWS_PER_BAND):
         parts = " || '|' || ".join(
@@ -75,7 +65,10 @@ def _doc_bands_cte() -> str:
         selects.append(
             f"SELECT doc_id, {b} AS band, md5('{b}' || '|' || {parts}) AS bucket FROM doc_minhash"
         )
-    return "doc_bands AS (\n  " + "\n  UNION ALL\n  ".join(selects) + "\n)"
+    return (
+        minhash_cte("doc_minhash", "doc_shingles", "doc_id", DOC_NUM_HASHES)
+        + ",\ndoc_bands AS (\n  " + "\n  UNION ALL\n  ".join(selects) + "\n)"
+    )
 
 
 _BUCKET_PAIRS = capped_pairs_cte("cand", "buckets", "bucket", "doc_id", MAX_BUCKET, "doc_id")
@@ -111,7 +104,6 @@ JOIN doc_shingle_sets sa ON sa.doc_id = c.doc_id_a
 JOIN doc_shingle_sets sb ON sb.doc_id = c.doc_id_b""",
         NORM_DOCS_CTE,
         DOC_SHINGLES_CTE,
-        _doc_minhash_cte(),
         _doc_bands_cte(),
         "buckets AS (SELECT doc_id, bucket FROM doc_bands)",
         _BUCKET_PAIRS,
@@ -172,7 +164,6 @@ JOIN grams ga ON ga.doc_id = c.doc_id_a
 JOIN grams gb ON gb.doc_id = c.doc_id_b""",
         NORM_DOCS_CTE,
         DOC_SHINGLES_CTE,
-        _doc_minhash_cte(),
         _doc_bands_cte(),
         "buckets AS (SELECT doc_id, bucket FROM doc_bands)",
         _BUCKET_PAIRS,
@@ -485,7 +476,6 @@ UNION ALL
 SELECT 'simhash' AS family, * FROM ({over_cap_sql("sh_buckets", "bucket", MAX_BUCKET, "bucket_n")})""",
         NORM_DOCS_CTE,
         DOC_SHINGLES_CTE,
-        _doc_minhash_cte(),
         _doc_bands_cte(),
         _SIMHASH_CTE,
         f"sh_buckets AS (\n  {band_selects}\n)",

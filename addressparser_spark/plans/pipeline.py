@@ -132,8 +132,8 @@ class LinkageResult:
     metrics: PipelineMetrics
 
     def unpersist(self) -> None:
-        """Release every frame ``run_linkage`` persisted, and ``clusters``
-        if the caller cached it."""
+        """Release every frame ``run_linkage`` persisted, and any of
+        ``clusters``, ``pairs`` and ``scored`` the caller persisted."""
         for df in (self.clusters, self.scored, self.pairs, self.blocks, self.profiles):
             df.unpersist()
 
@@ -152,9 +152,12 @@ def run_linkage(transcripts: DataFrame) -> LinkageResult:
 
     The full block table is persisted once (``MEMORY_AND_DISK``) and shared
     by ``dropped_blocks`` and the pair generation, so the MinHash sketch
-    runs once per pipeline. ``profiles``, ``blocks``, ``pairs`` and
-    ``scored`` come back persisted; the caller releases them with
-    :meth:`LinkageResult.unpersist` when it is done with the result.
+    runs once per pipeline. ``profiles`` and ``blocks`` come back persisted;
+    the caller releases them with :meth:`LinkageResult.unpersist` when it is
+    done with the result. ``pairs`` and ``scored`` are not persisted: only
+    the clustering query reads them (its edges are checkpointed once), and
+    their observations complete in that query. A caller that reads them
+    again persists them itself.
     """
     metrics = PipelineMetrics()
 
@@ -167,13 +170,13 @@ def run_linkage(transcripts: DataFrame) -> LinkageResult:
     # both read it
     blocks = blocking.block_table(profiles).persist(StorageLevel.MEMORY_AND_DISK)
     dropped = pairs_op.dropped_blocks(blocks)
-    cand = metrics.observe(heavy_pairs(blocks), "pairs", candidates=rows).cache()
+    cand = metrics.observe(heavy_pairs(blocks), "pairs", candidates=rows)
     scored = metrics.observe(
         scoring.score_pairs(cand, profiles),
         "scored",
         rows=rows,
         matches=F.count(F.when(F.col("verdict").isin(*scoring.MATCH_VERDICTS), 1)),
-    ).cache()
+    )
 
     # contraction shortcut: same-sig stars never enter the CC loop
     clusters = funnel_clusters_from(profiles, scoring.matched_edges(scored))

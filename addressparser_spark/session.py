@@ -10,7 +10,7 @@ results compare bit-for-bit against the DuckDB oracle.
 The runtime SQL settings live in one mapping, ``SQL_SETTINGS``:
 ``get_spark`` builds with it, and ``apply_sql_settings`` sets it on a
 session someone else built (``cli`` under spark-submit). The kernels are
-called through ``kernel``, which registers them in the session first.
+called through ``kernel``, which registers the ones the session lacks.
 """
 
 from __future__ import annotations
@@ -20,23 +20,23 @@ import os
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, IntegerType, StringType
+from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType
 
 # The kernel jar (built by java/build.sh, committed): the merge-walk
 # intersect count and the fused [levenshtein_sim, jaro_winkler] text kernel
-# of pairwise scoring, and the MinHash sketch of blocking and dedup. These
+# of pairwise scoring, and the MinHash of blocking and dedup. These
 # operators have no other implementation, so every session that runs them
 # needs the jar on its classpath: get_spark adds it, and spark-submit
 # deployments pass it with --jars.
 JW_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jars", "jw-udf.jar")
 INTERSECT_FUNC = "intersect_count_java"
 TEXTSIM_FUNC = "text_sim_java"  # fused [lev_sim, jw] — one decode per pair
-MINHASH_FUNC = "minhash_md5"  # (shingles, n) -> n md5-hex minhashes
+MINHASH_FUNC = "minhash_java"  # (shingle hashes, a[], b[]) -> minhashes
 
 _JVM_FUNCS = (
     (INTERSECT_FUNC, "addressparser.IntersectCount", IntegerType()),
     (TEXTSIM_FUNC, "addressparser.TextSim", ArrayType(DoubleType())),
-    (MINHASH_FUNC, "addressparser.MinHashMd5", ArrayType(StringType())),
+    (MINHASH_FUNC, "addressparser.MinHash", ArrayType(LongType())),
 )
 
 # runtime SQL settings: get_spark builds with them, apply_sql_settings sets
@@ -58,7 +58,7 @@ SQL_SETTINGS = {
 
 
 def register_kernels(spark: SparkSession) -> None:
-    """Register the JVM kernels in ``spark``; safe to call repeatedly.
+    """Register the JVM kernels ``spark`` lacks; safe to call repeatedly.
 
     ``kernel`` calls it for every kernel column it builds; ``get_spark`` and
     ``cli`` call it once more so a missing jar fails at session build.
@@ -66,6 +66,8 @@ def register_kernels(spark: SparkSession) -> None:
     the session was built without the jar on its classpath.
     """
     for name, cls, rt in _JVM_FUNCS:
+        if spark.catalog.functionExists(name):
+            continue
         try:
             spark.udf.registerJavaFunction(name, cls, rt)
         except AnalysisException as e:
@@ -78,7 +80,8 @@ def register_kernels(spark: SparkSession) -> None:
 
 def kernel(spark: SparkSession, name: str, *cols: Column) -> Column:
     """The JVM kernel ``name`` applied to ``cols``, registered in ``spark``
-    first, so any session with the jar on its classpath can run it."""
+    first if it lacks it, so any session with the jar on its classpath can
+    run it."""
     register_kernels(spark)
     return F.call_function(name, *cols)
 

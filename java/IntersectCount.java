@@ -55,13 +55,17 @@ public class IntersectCount implements UDF2<Object, Object, Integer> {
         if (o instanceof long[]) {
             return (long[]) o;
         }
+        // boxed elements: null elements are skipped
         Seq<Long> s = (Seq<Long>) o;
         long[] r = new long[s.size()];
         scala.collection.Iterator<Long> it = s.iterator();
         int k = 0;
         while (it.hasNext()) {
-            r[k++] = it.next();
+            Long v = it.next();
+            if (v != null) {
+                r[k++] = v;
+            }
         }
-        return r;
+        return k == r.length ? r : java.util.Arrays.copyOf(r, k);
     }
 }

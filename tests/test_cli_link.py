@@ -24,7 +24,7 @@ def _cache_empty(spark) -> bool:
 # Spark jobs of one `link` over the sf0.001 transcripts into an empty
 # registry; deterministic for the test session's fixed cores and shuffle
 # partitions
-LINK_JOBS = 44
+LINK_JOBS = 42
 
 
 @pytest.fixture(scope="module")

@@ -1,10 +1,12 @@
-"""The MinHash sketch kernel (``minhash_md5``, java/MinHashMd5.java) and the
-blocking and dedup sketches built on it.
+"""The MinHash kernel (``minhash_java``, java/MinHash.java), the one
+shingle hash it reads (``blocking.shingle_hashes``), and the blocking and
+dedup sketches built on them.
 
-The kernel must equal ``min(md5('NN|' || s))`` over the non-null shingles
-for every hash index — checked here against ``hashlib`` — and the sketches
-must equal their DuckDB twins on the edge rows the oracle-parity data does
-not have: null, empty and punctuation-only text, 1- and 2-token text, and
+A shingle's hash must equal ``int(md5(s).hexdigest()[:15], 16)``, and
+minhash i the min of ``(a_i * x + b_i) mod (2^61 - 1)`` over those hashes —
+both checked here against a pure-Python reference — and the sketches must
+equal their DuckDB twins on the edge rows the oracle-parity data does not
+have: null, empty and punctuation-only text, 1- and 2-token text, and
 Cyrillic text.
 """
 
@@ -23,13 +25,17 @@ from addressparser_spark.operators import blocking, dedup
 from addressparser_spark.session import MINHASH_FUNC, kernel
 
 
-def _reference(shingles: list[str | None] | None, n: int) -> list[str | None] | None:
+def _hash(s: str | None) -> int | None:
+    return None if s is None else int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+
+def _reference(shingles: list[str | None] | None, n: int) -> list[int | None] | None:
     if not shingles:
         return None
-    present = [s for s in shingles if s is not None]
+    xs = [_hash(s) for s in shingles if s is not None]
     return [
-        min((hashlib.md5(f"{i:02d}|{s}".encode()).hexdigest() for s in present), default=None)
-        for i in range(n)
+        min(((a * x + b) % (2**61 - 1) for x in xs), default=None)
+        for a, b in blocking.MINHASH_PARAMS[:n]
     ]
 
 
@@ -44,12 +50,24 @@ ARRAYS = [
 ]
 
 
+def test_shingle_hashes_match_hashlib(spark):
+    df = spark.createDataFrame(
+        [(i, a) for i, a in enumerate(ARRAYS) if a is None or None not in a], "id int, sh array<string>"
+    )
+    got = {r["id"]: r["h"] for r in df.select("id", blocking.shingle_hashes(F.col("sh")).alias("h")).collect()}
+    for i, h in got.items():
+        want = None if ARRAYS[i] is None else sorted(_hash(s) for s in ARRAYS[i])
+        assert h == want, (ARRAYS[i], h, want)
+    assert all(0 <= x < 2**60 for h in got.values() if h for x in h)
+
+
 @pytest.mark.parametrize("n", [1, 12, 16])
 def test_minhash_kernel_matches_hashlib(spark, n):
-    df = spark.createDataFrame([(i, a) for i, a in enumerate(ARRAYS)], "id int, sh array<string>")
+    rows = [(i, None if a is None else [_hash(s) for s in a]) for i, a in enumerate(ARRAYS)]
+    df = spark.createDataFrame(rows, "id int, h array<bigint>")
     got = {
         r["id"]: r["mh"]
-        for r in df.select("id", kernel(spark, MINHASH_FUNC, F.col("sh"), F.lit(n)).alias("mh")).collect()
+        for r in df.select("id", blocking.minhash_col(spark, F.col("h"), n).alias("mh")).collect()
     }
     for i, a in enumerate(ARRAYS):
         want = _reference(a, n)
@@ -58,6 +76,21 @@ def test_minhash_kernel_matches_hashlib(spark, n):
     # empty or null array -> no sketch at all
     assert list(got[3]) == [None] * n
     assert got[5] is None and got[6] is None
+
+
+def test_minhash_reduction_at_the_bounds(spark):
+    """The Mersenne reduction is exact where the 128-bit product is widest:
+    hashes and multipliers at their maxima, and a sum landing on p."""
+    p = blocking.MERSENNE_61
+    xs = [0, 1, 2**60 - 1, 2**59, p - 2**60]
+    df = spark.createDataFrame([(xs,)], "h array<bigint>")
+    a, b = [p - 1, p - 1, 1, 2**60 + 7], [p - 1, 0, p - 1, 1]
+    mh = kernel(
+        spark, MINHASH_FUNC, F.col("h"),
+        F.lit(a).cast("array<bigint>"), F.lit(b).cast("array<bigint>"),
+    )
+    got = list(df.select(mh.alias("mh")).first()["mh"])
+    assert got == [min((ai * x + bi) % p for x in xs) for ai, bi in zip(a, b)]
 
 
 EDGE_TEXTS = [
@@ -110,22 +143,13 @@ def test_block_table_matches_duckdb_on_edge_rows(spark, edge_dir):
 def test_doc_sketch_matches_duckdb_on_edge_rows(spark, edge_dir):
     docs = spark.read.parquet(f"{edge_dir}/documents.parquet")
     sketch = dedup.doc_minhash(docs)
-    base = [oracle_docs.NORM_DOCS_CTE, oracle_docs.DOC_SHINGLES_CTE, oracle_docs._doc_minhash_cte()]
+    base = [oracle_docs.NORM_DOCS_CTE, oracle_docs.DOC_SHINGLES_CTE, oracle_docs._doc_bands_cte()]
     want = _duck(edge_dir, oracle_docs._assemble("SELECT * FROM doc_minhash", *base))
-    bands = _duck(edge_dir, oracle_docs._assemble(
-        "SELECT doc_id, band, bucket FROM doc_bands", *base, oracle_docs._doc_bands_cte()
-    ))
-    # A known divergence that predates the kernel and lies in the shingle
-    # sets, not the sketch: for text with no tokens (empty or punctuation
-    # only) the engine's shingle set is [""], so it has a sketch row, while
-    # the DuckDB twin's is empty and has none. Those documents are compared
-    # by the rule; every other document by value.
-    no_tokens = {i for i, t in enumerate(EDGE_TEXTS) if t is not None and not any(c.isalnum() for c in t)}
-    assert no_tokens == {2, 7, 12}
+    bands = _duck(edge_dir, oracle_docs._assemble("SELECT doc_id, band, bucket FROM doc_bands", *base))
     got = sketch.toPandas()
-    assert set(got["doc_id"]) == set(want["doc_id"]) | no_tokens
-    # the null-text document has no sketch row in either engine
+    # text with no tokens (empty or punctuation only) has the one shingle
+    # '' in both engines, and so a sketch; the null-text document has none
+    assert {2, 7, 12} <= set(got["doc_id"])
     assert 1 not in set(got["doc_id"])
-    assert _rows(got[~got["doc_id"].isin(no_tokens)]) == _rows(want)
-    got_bands = dedup.doc_band_keys(sketch).toPandas()
-    assert _rows(got_bands[~got_bands["doc_id"].isin(no_tokens)]) == _rows(bands)
+    assert _rows(got) == _rows(want)
+    assert _rows(dedup.doc_band_keys(sketch).toPandas()) == _rows(bands)

@@ -28,7 +28,9 @@ from pyspark.sql.types import DoubleType
 
 from addressparser_spark import session
 from addressparser_spark.functions.similarity import jaro_winkler_py
-from addressparser_spark.session import JW_JAR, TEXTSIM_FUNC, register_kernels
+from addressparser_spark.session import (
+    INTERSECT_FUNC, JW_JAR, TEXTSIM_FUNC, kernel, register_kernels,
+)
 
 
 def _random_pairs(n: int, seed: int = 7, alphabet: str | None = None) -> list[tuple[str, str]]:
@@ -172,6 +174,27 @@ def test_score_pairs_registers_kernels_in_any_session(spark, monkeypatch):
     pairs, profiles = _null_contract_frames(spark.newSession())
     with pytest.raises(RuntimeError, match="jw-udf.jar"):
         scoring.score_pairs(pairs, profiles)
+
+
+def test_kernels_register_once_per_session(spark, monkeypatch):
+    """The first kernel column in a session registers the kernels; a second
+    one finds them and calls registerJavaFunction 0 times."""
+    from pyspark.sql.udf import UDFRegistration
+
+    calls = []
+    register = UDFRegistration.registerJavaFunction
+
+    def counting(self, name, *args, **kwargs):
+        calls.append(name)
+        return register(self, name, *args, **kwargs)
+
+    monkeypatch.setattr(UDFRegistration, "registerJavaFunction", counting)
+    fresh = spark.newSession()
+    kernel(fresh, TEXTSIM_FUNC, F.lit("a"), F.lit("b"))
+    assert sorted(calls) == sorted(name for name, _, _ in session._JVM_FUNCS)
+    calls.clear()
+    kernel(fresh, INTERSECT_FUNC, F.array(F.lit(1)), F.array(F.lit(1)))
+    assert calls == []
 
 
 def test_register_kernels_raises_without_kernel_class(spark, monkeypatch):

@@ -9,6 +9,7 @@ from addressparser_spark.operators.substring_join import (
     RARE_DF_CAP,
     hot_keys,
     substring_pairs,
+    token_index,
 )
 
 SCHEMA = (
@@ -124,3 +125,14 @@ def test_stem_rules_spark_duckdb_twins(spark):
     assert want["matched"] == "match" == want["matches"] == want["matching"]
     assert want["sing"] == "sing"  # stem would be too short
     assert want["улица"] == "улица"  # non-ASCII passthrough
+
+
+def test_token_index_stems_each_token_once(spark):
+    """The stemming chain appears once in the index plan: the stems are
+    projected before the shingle expression, which names its token array
+    several times, references them."""
+    p = _profiles_of(spark, [("c", 0, "user", "flies and ponies", None, None)]).cache()
+    plan = token_index(p)._jdf.queryExecution().optimizedPlan().toString()
+    p.unpersist()
+    # the 'ies' -> 'y' rule (data/stemming.py) is one EndsWith per copy
+    assert plan.count("ies)") == 1

@@ -47,6 +47,10 @@ def run_scale(spark, n_convs: int, work_dir: str) -> dict:
     stages: dict[str, float] = {}
     t0 = time.monotonic()
     result = run_linkage(t)
+    # the stages below read the pairs three times and the scored pairs
+    # twice; run_linkage persists neither
+    result.pairs = result.pairs.cache()
+    result.scored = result.scored.cache()
     n_profiles = result.profiles.count()
     stages["profiles"] = round(time.monotonic() - t0, 2)
 
