@@ -27,10 +27,16 @@ Commands:
 once per micro-batch. So, against the same registry rows, a later ``link``
 and a later micro-batch give a conversation the same entity id and stage.
 
-``link`` writes the tables ``clusters``, ``resolved``, ``registry`` and
-``dropped_blocks`` under ``--output``, and ``metrics.json``, and nothing
-else; a rerun recomputes connected components from its input. The metrics
-keys are:
+``link`` writes the tables ``clusters``, ``resolved`` and
+``dropped_blocks`` under ``--output``, and ``metrics.json``, and extends the
+registry ``--output/registry``, and writes nothing else; a rerun recomputes
+connected components from its input. The registry is the one ``stream``
+extends (``sources.registry_writer.ParquetRegistryWriter``): ``link`` adds
+one ``delta_epoch=<n>`` directory holding only the entities it minted, and
+every few deltas folds them into a ``base_v<n>`` snapshot named by
+``registry/_CURRENT``. So ``link`` and ``stream`` into one ``--output``
+each resolve against every entity the other registered. The metrics keys
+are:
 
 - ``turns.rows``, ``pairs.candidates``, ``scored.rows``, ``scored.matches``:
   the pipeline's row counts (``PipelineMetrics``)
@@ -96,7 +102,8 @@ def _cmd_link(args: argparse.Namespace) -> None:
     store = TableStore(spark, args.output)
     result = run_linkage(spark.read.parquet(args.input))
     # MERGE seam: Iceberg MERGE INTO when --registry-table names a catalog
-    # table and the jar is present; parquet anti-join+union emulation here
+    # table and the jar is present; the append-delta parquet registry under
+    # --output/registry otherwise, the one the stream extends
     writer = registry_writer(
         spark, store, iceberg_table=getattr(args, "registry_table", None)
     )
@@ -153,7 +160,7 @@ def _cmd_stream(args: argparse.Namespace) -> None:
         spark,
         input_dir=args.input,
         output_dir=os.path.join(args.output, "resolved"),
-        registry_dir=os.path.join(args.output, "registry"),
+        tables_dir=args.output,
         checkpoint_dir=os.path.join(args.output, "stream_checkpoint"),
     )
     if not q.awaitTermination(args.timeout):

@@ -111,7 +111,7 @@ def connected_components(edges: DataFrame) -> DataFrame:
     for _ in range(MAX_ITER):
         # structural check BEFORE each round: fires on the converged round
         # itself (fingerprint-equality needs one extra confirming round) and
-        # doubles as the action that materializes the lazy checkpoint
+        # doubles as the action that runs the lazy checkpoint's result stage
         if _is_star_forest(e):
             break
         # localCheckpoint is LOAD-BEARING, not an optimization knob: each
@@ -120,10 +120,13 @@ def connected_components(edges: DataFrame) -> DataFrame:
         # triples per iteration and the analyzer/optimizer hangs by
         # iteration ~4. persist() alone does NOT truncate (caching is a
         # physical-plan concern; the optimizer still walks the full tree) —
-        # measured, do not "simplify". eager=False: the next round's
-        # convergence-check action materializes the checkpoint, so each
-        # round costs ONE job, not two — at small edge volumes the loop is
-        # scheduling-latency bound, and this halves the sequential job count
+        # measured, do not "simplify". eager=False does not defer the
+        # round's work: with AQE on (session.SQL_SETTINGS) the call itself
+        # runs every shuffle stage of its plan as jobs of its own, and only
+        # the result stage waits for the next _is_star_forest action (in
+        # a warm `cli link` of 300 synthetic conversations at local[4], the
+        # first frontier's 20 jobs all ran inside DataFrame.localCheckpoint,
+        # 1.8 s under cProfile). The call stays for the truncation
         e = _small_star(_large_star(e)).localCheckpoint(eager=False)
     else:
         if not _is_star_forest(e):

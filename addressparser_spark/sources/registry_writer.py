@@ -4,7 +4,9 @@ The reference upserts resolved entities with a T-SQL ``MERGE``
 (``Db/DataContextBase_Address.cs:396-440``). The production analog here is
 Iceberg ``MERGE INTO``; the sandbox has no Iceberg jar (verified in
 SCALE.md), so the default backend expresses the identical semantics as
-anti-join + union over a staged parquet table. Both backends implement one
+parquet deltas that are appended and deduped on ``entity_id`` when read
+(``ParquetRegistryWriter``: the one parquet registry, which ``cli link``
+and the stream both read and extend). Both backends implement one
 interface, selected at runtime by classpath probe — every call site is
 backend-agnostic, and a deployment with the Iceberg extension gets real
 snapshot-isolated MERGE with zero engine changes.
@@ -22,6 +24,10 @@ WHEN MATCHED UPDATE clause to emulate.
 
 from __future__ import annotations
 
+import glob
+import os
+import re
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,6 +35,8 @@ from pyspark.sql import functions as F
 
 from ..operators.resolve import CASCADE_REGISTRY_SCHEMA
 from .tables import TableStore, iceberg_available
+
+COMPACT_EVERY = 8  # deltas accumulated before folding into a new base
 
 
 def read_registry(spark: SparkSession, paths: list[str]) -> DataFrame:
@@ -64,11 +72,26 @@ class RegistryWriter:
 
 
 class ParquetRegistryWriter(RegistryWriter):
-    """Sandbox/test backend: staged-overwrite parquet via :class:`TableStore`.
+    """Sandbox/test backend: an append-delta parquet registry under
+    ``<store.base>/registry``, the layout ``cli link`` and every stream
+    micro-batch read and extend:
 
-    ``merge`` is anti-join + union + stage-and-swap — the engine-agnostic
-    equivalent of the MERGE above (same null-safe key, same insert-only
-    semantics), atomic-enough through the store's staging replace.
+        registry/
+          _CURRENT              <- name of the live base snapshot (atomic rename)
+          base_v<n>/            <- compacted snapshot
+          delta_epoch=<n>/      <- one merge's additions
+
+    ``merge`` writes only the batch's additions, as the delta numbered one
+    past every delta and base present (O(batch), not O(registry)). Every
+    ``COMPACT_EVERY`` deltas it folds base and deltas into a new base in the
+    crash-safe order: (1) write the new base, (2) flip ``_CURRENT`` by
+    atomic rename, (3) only then delete the deltas and bases it replaced. A
+    crash before (2) leaves the old pointer and every delta; a crash before
+    (3), or a replayed stream epoch, leaves rows twice. ``read`` unions the
+    live base with every delta and dedupes by the content-derived
+    ``entity_id``, so each of those states reads as the registry it holds.
+    Live data is never removed before its replacement is in place. On
+    Iceberg this is ``MERGE INTO`` plus snapshot expiry.
     """
 
     name = "registry"
@@ -76,16 +99,46 @@ class ParquetRegistryWriter(RegistryWriter):
     def __init__(self, store: TableStore):
         self.store = store
 
+    def _dirs(self) -> tuple[str | None, list[str]]:
+        """(the live base or None, every delta directory)."""
+        root = self.store._path(self.name)
+        cur = os.path.join(root, "_CURRENT")
+        base = None
+        if os.path.isfile(cur):
+            with open(cur) as f:
+                base = os.path.join(root, f.read().strip())
+        base = base if base and os.path.isdir(base) else None
+        return base, glob.glob(os.path.join(root, "delta_epoch=*"))
+
     def read(self) -> DataFrame:
-        paths = [self.store._path(self.name)] if self.store.exists(self.name) else []
-        return read_registry(self.store.spark, paths)
+        base, deltas = self._dirs()
+        # entity_id is content-derived, so a row stored twice (a crash state
+        # or a replayed epoch) is one entity and reads once
+        return read_registry(
+            self.store.spark, ([base] if base else []) + deltas
+        ).dropDuplicates(["entity_id"])
 
     def merge(self, additions: DataFrame) -> None:
-        current = self.read()
-        merged = current.unionByName(
-            additions.join(current.select("entity_id"), "entity_id", "left_anti")
+        root = self.store._path(self.name)
+        base, deltas = self._dirs()
+        seq = 1 + max(
+            (int(re.search(r"\d+$", d)[0]) for d in deltas + ([base] if base else [])),
+            default=-1,
         )
-        self.store.replace(self.name, merged)
+        deltas.append(f"{root}/delta_epoch={seq}")
+        additions.write.mode("overwrite").parquet(deltas[-1])
+        if len(deltas) < COMPACT_EVERY:
+            return
+        new_name = f"base_v{seq:06d}"
+        self.read().write.mode("overwrite").parquet(f"{root}/{new_name}")
+        with open(f"{root}/_CURRENT.tmp", "w") as f:
+            f.write(new_name)
+        os.replace(f"{root}/_CURRENT.tmp", f"{root}/_CURRENT")  # atomic flip
+        # every row read above is in the new base: only now may the deltas
+        # and older bases go (a base a crash left unflipped too)
+        for d in deltas + glob.glob(f"{root}/base_v*"):
+            if os.path.basename(d) != new_name:
+                shutil.rmtree(d, ignore_errors=True)
 
 
 class IcebergRegistryWriter(RegistryWriter):

@@ -8,8 +8,10 @@ backend is a deployment choice:
   ``with (nolock)`` dirty reads (`Db/DataContextBase_AddrObject.cs:182-183`),
   and MERGE INTO replaces the T-SQL MERGE (`Db/DataContextBase_Address.cs:396-440`).
   Activated when the runtime has the Iceberg Spark extension on the classpath.
-- **Parquet directories** (sandbox/tests): same layout, overwrite-by-staging
-  for atomic-enough replacement, `_SUCCESS` markers as completeness signals.
+- **Parquet directories** (sandbox/tests): one directory per table under
+  the store's base, each write an overwrite. The entity registry is the
+  one table that grows in place; ``registry_writer.ParquetRegistryWriter``
+  keeps it as append-only deltas behind an atomic pointer.
 
 Nothing else in the engine imports a storage library directly.
 """
@@ -17,7 +19,6 @@ Nothing else in the engine imports a storage library directly.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -70,21 +71,8 @@ class TableStore:
     def _path(self, name: str) -> str:
         return os.path.join(self.base, name)
 
-    def exists(self, name: str) -> bool:
-        p = self._path(name)
-        return os.path.isdir(p) and os.path.exists(os.path.join(p, "_SUCCESS"))
-
-    def read(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self._path(name))
-
-    def write(self, name: str, df: DataFrame, partition_by: list[str] | None = None) -> None:
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self._path(name))
-
-    def append(self, name: str, df: DataFrame) -> None:
-        df.write.mode("append").parquet(self._path(name))
+    def write(self, name: str, df: DataFrame) -> None:
+        df.write.mode("overwrite").parquet(self._path(name))
 
     def write_bucketed(
         self, name: str, df: DataFrame, key: str, n_buckets: int = 16
@@ -117,16 +105,3 @@ class TableStore:
         ``spark.read.parquet`` on the same path would drop the bucketing
         metadata and re-shuffle on join)."""
         return self.spark.table(name)
-
-    def replace(self, name: str, df: DataFrame) -> None:
-        """Overwrite a table that ``df`` may itself read from (stage + swap).
-
-        ``df`` is written in full to ``<name>.staging`` first, so every read
-        of the old table is over before it is touched; the staged directory
-        then replaces the target by a rename, with no second Spark write.
-        """
-        target = self._path(name)
-        staged = target + ".staging"
-        df.write.mode("overwrite").parquet(staged)
-        shutil.rmtree(target, ignore_errors=True)
-        os.rename(staged, target)

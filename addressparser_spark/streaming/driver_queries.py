@@ -190,7 +190,7 @@ def stream_incremental_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         in_dir,
         out_dir,
-        os.path.join(work, "registry"),
+        work,
         os.path.join(work, "ck"),
     )
     finished = q.awaitTermination(900)

@@ -17,6 +17,14 @@ import pytest
 from addressparser_spark import cli
 
 
+def _registry(spark, out):
+    """The registry under ``out``, read as ``link`` and ``stream`` read it."""
+    from addressparser_spark.sources.registry_writer import ParquetRegistryWriter
+    from addressparser_spark.sources.tables import TableStore
+
+    return ParquetRegistryWriter(TableStore(spark, str(out))).read()
+
+
 def _cache_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
@@ -96,8 +104,7 @@ def test_link_twice_resolves_from_registry(spark, tmp_path, first_link):
     assert r1 == r2  # identical entity assignment across reruns
 
     # registry is stable: run 2 added nothing
-    reg1 = spark.read.parquet(str(out / "registry"))
-    reg2 = spark.read.parquet(str(out2 / "registry"))
+    reg1, reg2 = _registry(spark, out), _registry(spark, out2)
     assert reg1.count() == reg2.count() == 117
     assert set(reg2.columns) >= {"entity_id", "rep_conv_id", "sig", "prefix_key", "syn_key"}
 
@@ -233,7 +240,7 @@ def test_stream_resolves_like_link_against_the_same_registry(spark, tmp_path):
         _stage_file(batch, str(tmp_path / "stage"), in_dir, f"b{i}", i)
     out_dir = str(tmp_path / "stream_out")
     q = incremental_linkage(
-        spark, in_dir, out_dir, str(tmp_path / "reg"), str(tmp_path / "ck")
+        spark, in_dir, out_dir, str(tmp_path / "stream_tables"), str(tmp_path / "ck")
     )
     assert q.awaitTermination(300), "stream did not finish"
     streamed = spark.read.parquet(out_dir).filter("epoch = 1")
@@ -268,3 +275,92 @@ def test_link_without_candidate_pairs(spark, tmp_path):
     assert (m["pairs.candidates"], m["scored.rows"], m["scored.matches"]) == (0, 0, 0)
     assert m["n_clusters"] == 2
     assert m["resolve_stages"] == {"new": 2}
+
+
+def _one_file_input(spark, tmp_path) -> str:
+    """A transcripts directory of one parquet file, so the stream over it
+    runs one micro-batch over the same rows a ``link`` over it reads."""
+    from addressparser_spark.data.synth import synth_transcripts
+    from addressparser_spark.streaming.driver_queries import _stage_file
+
+    in_dir = str(tmp_path / "in")
+    os.makedirs(in_dir)
+    _stage_file(synth_transcripts(spark, 40, seed=7), str(tmp_path / "stage"), in_dir, "b0", 0)
+    return in_dir
+
+
+def _stream(in_dir: str, out) -> None:
+    cli.main(["stream", "--input", in_dir, "--output", str(out)])
+
+
+def _entities(df) -> dict[str, str]:
+    return {r["conv_id"]: r["entity_id"] for r in df.collect()}
+
+
+def test_link_after_stream_resolves_against_its_registry(spark, tmp_path):
+    """`stream` then `link` over one input into one --output: the link finds
+    every conversation in the registry the stream extended, at 'sig', and
+    the registry still holds every entity the stream registered."""
+    in_dir = _one_file_input(spark, tmp_path)
+    out = tmp_path / "out"
+    _stream(in_dir, out)
+    streamed = _entities(spark.read.parquet(str(out / "resolved" / "epoch=0")))
+
+    _link(in_dir, out)
+    m = json.loads(open(out / "metrics.json").read())
+    assert m["resolve_stages"] == {"sig": len(streamed)}
+    assert _entities(spark.read.parquet(str(out / "resolved"))) == streamed
+    registered = {r["entity_id"] for r in _registry(spark, out).collect()}
+    assert set(streamed.values()) <= registered
+
+
+def test_stream_after_link_resolves_against_its_registry(spark, tmp_path):
+    """`link` then `stream` over one input into one --output: the
+    micro-batch resolves every conversation at 'sig' to the link's entity."""
+    in_dir = _one_file_input(spark, tmp_path)
+    out = tmp_path / "out"
+    _link(in_dir, out)
+    linked = _entities(spark.read.parquet(str(out / "resolved")))
+
+    _stream(in_dir, out)
+    streamed = spark.read.parquet(str(out / "resolved" / "epoch=0"))
+    assert {r["resolve_stage"] for r in streamed.collect()} == {"sig"}
+    assert _entities(streamed) == linked
+
+
+def test_link_crash_before_pointer_flip_keeps_the_registry(spark, tmp_path, monkeypatch):
+    """A `link` whose registry merge stops after it wrote its delta and
+    before any rename (the compaction's pointer flip) leaves a registry that
+    reads every earlier row and the crashed link's own; the next merge
+    completes the compaction and removes the base the crash left behind."""
+    from addressparser_spark.sources import registry_writer
+
+    x_dir, y_dir = str(tmp_path / "x"), str(tmp_path / "y")
+    _transcripts(spark, _chain("p")).write.parquet(x_dir)
+    _transcripts(spark, _chain("q")).write.parquet(y_dir)
+    out = tmp_path / "out"
+    _link(x_dir, out)
+    earlier = {tuple(r) for r in _registry(spark, out).collect()}
+
+    class Crash(Exception):
+        pass
+
+    def crash(*_a, **_kw):
+        raise Crash
+
+    monkeypatch.setattr(registry_writer, "COMPACT_EVERY", 2, raising=False)
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crash)
+        m.setattr(os, "rename", crash)
+        with pytest.raises(Crash):
+            _link(y_dir, out)
+    after = {tuple(r) for r in _registry(spark, out).collect()}
+    assert earlier < after
+    assert {r[1] for r in after} == {"p_a", "q_a"}  # each chain's entity
+
+    _link(y_dir, out)
+    assert {tuple(r) for r in _registry(spark, out).collect()} == after
+    reg = out / "registry"
+    assert sorted(p.name for p in reg.iterdir() if not p.name.startswith(".")) == [
+        "_CURRENT", (reg / "_CURRENT").read_text()
+    ]

@@ -10,16 +10,24 @@ from pyspark.sql import functions as F
 
 from addressparser_spark.data.transcripts import transcripts_df
 from addressparser_spark.operators.resolve import CASCADE_REGISTRY_SCHEMA
+from addressparser_spark.sources import registry_writer as rw
+from addressparser_spark.sources.tables import TableStore
 from addressparser_spark.streaming import incremental as inc
 
 
+def _read(spark, tables_dir):
+    """The registry of the table store at ``tables_dir``, as the writer reads it."""
+    return rw.ParquetRegistryWriter(TableStore(spark, tables_dir)).read()
+
+
 def test_compaction_folds_deltas_and_flips_pointer(spark, sf_dir, tmp_path, monkeypatch):
-    monkeypatch.setattr(inc, "COMPACT_EVERY", 2)
+    monkeypatch.setattr(rw, "COMPACT_EVERY", 2)
     t = transcripts_df(spark, sf_dir)
     in_dir = str(tmp_path / "in")
-    out_dir, reg_dir, ck_dir = (
-        str(tmp_path / "out"), str(tmp_path / "reg"), str(tmp_path / "ck"),
+    out_dir, tables_dir, ck_dir = (
+        str(tmp_path / "out"), str(tmp_path / "tables"), str(tmp_path / "ck"),
     )
+    reg_dir = os.path.join(tables_dir, "registry")
     os.makedirs(in_dir)
     slices = [
         t.filter(F.col("conv_id") < "conv_000030"),
@@ -32,7 +40,7 @@ def test_compaction_folds_deltas_and_flips_pointer(spark, sf_dir, tmp_path, monk
         src = glob.glob(f"{d}/part-*.parquet")[0]
         shutil.copy(src, f"{in_dir}/batch_{i}.parquet")
 
-    q = inc.incremental_linkage(spark, in_dir, out_dir, reg_dir, ck_dir)
+    q = inc.incremental_linkage(spark, in_dir, out_dir, tables_dir, ck_dir)
     q.awaitTermination(180)
 
     # epoch 0 -> delta0; epoch 1 -> delta1, 2 deltas >= COMPACT_EVERY ->
@@ -44,7 +52,7 @@ def test_compaction_folds_deltas_and_flips_pointer(spark, sf_dir, tmp_path, monk
     deltas = glob.glob(f"{reg_dir}/delta_epoch=*")
     assert len(deltas) == 1, deltas
 
-    registry = inc._load_registry(spark, reg_dir)
+    registry = _read(spark, tables_dir)
     n = registry.count()
     assert n == registry.select("sig").distinct().count()
     # registry covers every entity resolved across all epochs
@@ -59,7 +67,7 @@ LEGACY_SCHEMA = "entity_id string, rep_conv_id string, sig string"
 
 def test_load_registry_dedupes_crash_state(spark, tmp_path):
     """Base + a not-yet-deleted delta holding the same entity reads as one row."""
-    reg_dir = str(tmp_path / "reg")
+    reg_dir = str(tmp_path / "registry")
     os.makedirs(reg_dir)
     row = [("e1", "c1", "sig1")]
     df = spark.createDataFrame(row, LEGACY_SCHEMA)
@@ -67,20 +75,20 @@ def test_load_registry_dedupes_crash_state(spark, tmp_path):
     df.write.parquet(os.path.join(reg_dir, "delta_epoch=5"))
     with open(os.path.join(reg_dir, "_CURRENT"), "w") as f:
         f.write("base_v000001")
-    assert inc._load_registry(spark, reg_dir).count() == 1
+    assert _read(spark, str(tmp_path)).count() == 1
 
 
 def test_load_registry_reads_legacy_and_cascade_deltas(spark, tmp_path):
     """A sig-only delta and a cascade delta in one registry directory: every
     row reads, in the cascade schema, with NULL for the keys a file lacks."""
-    reg_dir = str(tmp_path / "reg")
+    reg_dir = str(tmp_path / "registry")
     spark.createDataFrame([("e1", "c1", "sig1")], LEGACY_SCHEMA).write.parquet(
         os.path.join(reg_dir, "delta_epoch=0")
     )
     spark.createDataFrame(
         [("e2", "c2", "sig2", "pk2", "sk2")], CASCADE_REGISTRY_SCHEMA
     ).write.parquet(os.path.join(reg_dir, "delta_epoch=1"))
-    registry = inc._load_registry(spark, reg_dir)
+    registry = _read(spark, str(tmp_path))
     assert registry.columns == [
         "entity_id", "rep_conv_id", "sig", "prefix_key", "syn_key"
     ]

@@ -1,6 +1,7 @@
 """The pluggable registry MERGE seam (sources/registry_writer.py).
 
-The parquet backend must be value-identical to the in-plan emulation
+The parquet backend (the append-delta registry ``cli link`` and the stream
+share) must be value-identical to the in-plan emulation
 (merge_registry_cascade) and idempotent; the Iceberg backend runs only when
 the jar + a configured catalog exist (skip-marker otherwise — the sandbox
 has no Iceberg jar, see SCALE.md).
@@ -44,9 +45,8 @@ def _rows(df):
 
 def test_parquet_merge_matches_inplan_emulation(spark, tmp_path, linked):
     resolved, profiles, registry = linked
-    store = TableStore(spark, str(tmp_path))
-    store.write("registry", registry)
-    writer = ParquetRegistryWriter(store)
+    writer = ParquetRegistryWriter(TableStore(spark, str(tmp_path)))
+    writer.merge(registry)  # seed
     writer.merge(cascade_registry_additions(resolved, profiles, registry))
     want = merge_registry_cascade(resolved, profiles, registry)
     assert _rows(writer.read()) == _rows(want)
@@ -54,9 +54,8 @@ def test_parquet_merge_matches_inplan_emulation(spark, tmp_path, linked):
 
 def test_parquet_merge_idempotent(spark, tmp_path, linked):
     resolved, profiles, registry = linked
-    store = TableStore(spark, str(tmp_path))
-    store.write("registry", registry)
-    writer = ParquetRegistryWriter(store)
+    writer = ParquetRegistryWriter(TableStore(spark, str(tmp_path)))
+    writer.merge(registry)  # seed
     additions = cascade_registry_additions(resolved, profiles, registry)
     writer.merge(additions)
     once = _rows(writer.read())
@@ -66,12 +65,12 @@ def test_parquet_merge_idempotent(spark, tmp_path, linked):
 
 
 def test_parquet_read_upgrades_legacy_schema(spark, tmp_path):
-    store = TableStore(spark, str(tmp_path))
+    writer = ParquetRegistryWriter(TableStore(spark, str(tmp_path)))
     legacy = spark.createDataFrame(
         [("e1", "conv_1", "s1")], "entity_id string, rep_conv_id string, sig string"
     )
-    store.write("registry", legacy)
-    reg = ParquetRegistryWriter(store).read()
+    writer.merge(legacy)  # a delta in the pre-cascade layout
+    reg = writer.read()
     assert {"prefix_key", "syn_key"} <= set(reg.columns)
     row = reg.collect()[0]
     assert row["prefix_key"] is None and row["syn_key"] is None

@@ -89,12 +89,17 @@ def run_scale(spark, n_convs: int, work_dir: str) -> dict:
 
 
 def main() -> None:
+    import shutil
     import tempfile
 
     spark = get_spark(app="scale-linearity", cores=CPUS,
                       shuffle_partitions=max(16, CPUS), driver_memory="48g")
+    # each scale's synthetic transcripts parquet lives here until the run ends
     base = tempfile.mkdtemp(prefix="scale_lin_")
-    results = [run_scale(spark, n, base) for n in SCALES]
+    try:
+        results = [run_scale(spark, n, base) for n in SCALES]
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
     summary: dict = {"cpus": CPUS, "scales": results}
     if len(results) >= 2:
         a, b = results[0], results[-1]
