@@ -20,36 +20,27 @@ Commands:
                raises if it does not finish within ``--timeout`` seconds
 - ``package``  build the --py-files zip
 
-``link`` and ``stream`` run the one linkage plan,
-``plans.pipeline.run_linkage``, and the one resolver,
-``operators.resolve.resolve_cascade``, against a registry in
-``CASCADE_REGISTRY_SCHEMA``: ``link`` over its whole input, ``stream``
-once per micro-batch. So, against the same registry rows, a later ``link``
-and a later micro-batch give a conversation the same entity id and stage.
+``link`` and ``stream`` run the one link step,
+``plans.pipeline.link_into``: the linkage plan (``run_linkage``), one
+resolve through ``operators.resolve.resolve_cascade`` against the registry,
+the table writes, the registry merge and ``metrics.json``. ``link`` runs it
+once over its whole input into ``--output``; ``stream`` runs it once per
+micro-batch into ``--output/epoch=<n>``. So, against the same registry
+rows, a later ``link`` and a later micro-batch give a conversation the same
+entity id and stage.
 
-``link`` writes the tables ``clusters``, ``resolved`` and
-``dropped_blocks`` under ``--output``, and ``metrics.json``, and extends the
-registry ``--output/registry``, and writes nothing else; a rerun recomputes
-connected components from its input. The registry is the one ``stream``
-extends (``sources.registry_writer.ParquetRegistryWriter``): ``link`` adds
-one ``delta_epoch=<n>`` directory holding only the entities it minted, and
-every few deltas folds them into a ``base_v<n>`` snapshot named by
+Each run of the step writes the tables ``clusters``, ``resolved`` and
+``dropped_blocks`` and ``metrics.json`` (its keys: ``link_into``'s
+docstring) under its directory, and extends the one registry
+``--output/registry``, and writes nothing else; a rerun recomputes
+connected components from its input. The registry
+(``sources.registry_writer.ParquetRegistryWriter``) grows by one
+``delta_epoch=<n>`` directory per run, holding only the entities it minted,
+and every few deltas folds them into a ``base_v<n>`` snapshot named by
 ``registry/_CURRENT``. So ``link`` and ``stream`` into one ``--output``
-each resolve against every entity the other registered. The metrics keys
-are:
-
-- ``turns.rows``, ``pairs.candidates``, ``scored.rows``, ``scored.matches``:
-  the pipeline's row counts (``PipelineMetrics``)
-- ``n_clusters``: the number of clusters
-- ``resolve_stages``: conversations per resolve stage
-  (``sig``/``prefix``/``synonym``/``new``), stages with none left out
-- ``profile_partitions``: rows per partition of the profiles
-- ``dropped_blocks``: blocks dropped for exceeding the size cap
-
-The tail's counts (``n_clusters``, ``resolve_stages``, ``dropped_blocks``)
-are ``Observation``s on the table writes the command does anyway, so they
-add no Spark jobs; only ``profile_partitions`` runs an aggregation of its
-own.
+each resolve against every entity the other registered, and neither's
+tables hide the other's: ``link`` writes ``--output/resolved``, a
+micro-batch ``--output/epoch=<n>/resolved``.
 """
 
 from __future__ import annotations
@@ -78,15 +69,9 @@ def _cmd_package(args: argparse.Namespace) -> None:
 
 
 def _cmd_link(args: argparse.Namespace) -> None:
-    from pyspark.sql import Observation, SparkSession
-    from pyspark.sql import functions as F
+    from pyspark.sql import SparkSession
 
-    from addressparser_spark.plans.pipeline import partition_histogram, run_linkage
-    from addressparser_spark.operators.resolve import (
-        RESOLVE_STAGES,
-        cascade_registry_additions,
-        resolve_cascade,
-    )
+    from addressparser_spark.plans.pipeline import link_into
     from addressparser_spark.session import apply_sql_settings, register_kernels
     from addressparser_spark.sources.registry_writer import registry_writer
     from addressparser_spark.sources.tables import TableStore
@@ -100,49 +85,13 @@ def _cmd_link(args: argparse.Namespace) -> None:
     apply_sql_settings(spark)
     register_kernels(spark)
     store = TableStore(spark, args.output)
-    result = run_linkage(spark.read.parquet(args.input))
     # MERGE seam: Iceberg MERGE INTO when --registry-table names a catalog
     # table and the jar is present; the append-delta parquet registry under
     # --output/registry otherwise, the one the stream extends
     writer = registry_writer(
         spark, store, iceberg_table=getattr(args, "registry_table", None)
     )
-    registry = writer.read()
-    # clusters feed their own write and resolve; resolved feeds its write and
-    # the registry merge. The try/finally releases every persisted frame when
-    # main() is called in-process — without it a second link on the same
-    # SparkSession pins executor memory
-    clusters = result.clusters.cache()
-    resolved = resolve_cascade(clusters, result.profiles, registry).cache()
-    try:
-        store.write("clusters", clusters)
-        # a cluster_id is its members' min conv_id: one row per cluster has
-        # conv_id == cluster_id
-        obs_resolved = Observation("resolved")
-        store.write("resolved", resolved.observe(
-            obs_resolved,
-            F.count(F.when(F.col("conv_id") == F.col("cluster_id"), 1)).alias("n_clusters"),
-            *(F.count(F.when(F.col("resolve_stage") == s, 1)).alias(s) for s in RESOLVE_STAGES),
-        ))
-        writer.merge(cascade_registry_additions(resolved, result.profiles, registry))
-        obs_dropped = Observation("dropped_blocks")
-        store.write("dropped_blocks", result.dropped_blocks.observe(
-            obs_dropped, F.count(F.lit(1)).alias("rows")
-        ))
-        metrics = result.metrics.resolve()
-        observed = obs_resolved.get
-        metrics["n_clusters"] = int(observed["n_clusters"])
-        metrics["resolve_stages"] = {
-            s: int(observed[s]) for s in RESOLVE_STAGES if observed[s]
-        }
-        metrics["profile_partitions"] = partition_histogram(result.profiles)
-        metrics["dropped_blocks"] = int(obs_dropped.get["rows"])
-    finally:
-        resolved.unpersist()
-        result.unpersist()
-    with open(os.path.join(args.output, "metrics.json"), "w") as f:
-        json.dump(metrics, f)
-    print(json.dumps(metrics))
+    print(json.dumps(link_into(spark.read.parquet(args.input), store, writer)))
 
 
 def _cmd_stream(args: argparse.Namespace) -> None:
@@ -159,8 +108,7 @@ def _cmd_stream(args: argparse.Namespace) -> None:
     q = incremental_linkage(
         spark,
         input_dir=args.input,
-        output_dir=os.path.join(args.output, "resolved"),
-        tables_dir=args.output,
+        output_dir=args.output,
         checkpoint_dir=os.path.join(args.output, "stream_checkpoint"),
     )
     if not q.awaitTermination(args.timeout):

@@ -46,14 +46,11 @@ DOUBLED = ("bb", "dd", "ff", "gg", "ll", "mm", "nn", "pp", "rr", "tt")
 MIN_STEM = 3
 
 
-def ordered_rules(
-    rules: list[tuple[str, str]] | None = None,
-) -> list[tuple[str, str]]:
-    r = DEFAULT_STEM_RULES if rules is None else rules
-    return sorted(r, key=lambda sr: (-len(sr[0]), sr[0]))
+# DEFAULT_STEM_RULES in the order they are tried: longest suffix first
+ORDERED_RULES = sorted(DEFAULT_STEM_RULES, key=lambda sr: (-len(sr[0]), sr[0]))
 
 
-def stem_case_sql(var: str, rules: list[tuple[str, str]] | None = None) -> str:
+def stem_case_sql(var: str) -> str:
     """DuckDB CASE expression stemming one token expression ``var``."""
 
     def undouble(expr: str) -> str:
@@ -64,7 +61,7 @@ def stem_case_sql(var: str, rules: list[tuple[str, str]] | None = None) -> str:
         return f"(CASE {whens} ELSE {expr} END)"
 
     whens = []
-    for suf, rep in ordered_rules(rules):
+    for suf, rep in ORDERED_RULES:
         stem = f"left({var}, len({var}) - {len(suf)})"
         if rep:
             stem = f"({stem} || '{rep}')"

@@ -34,10 +34,9 @@ DEFAULT_SYNONYMS: dict[str, str] = {
 }
 
 
-def synonym_case_sql(var: str, synonyms: dict[str, str] | None = None) -> str:
+def synonym_case_sql(var: str) -> str:
     """DuckDB CASE expression canonicalizing one token expression ``var``."""
-    syn = DEFAULT_SYNONYMS if synonyms is None else synonyms
     whens = " ".join(
-        f"WHEN {var} = '{k}' THEN '{v}'" for k, v in sorted(syn.items())
+        f"WHEN {var} = '{k}' THEN '{v}'" for k, v in sorted(DEFAULT_SYNONYMS.items())
     )
     return f"(CASE {whens} ELSE {var} END)"

@@ -50,9 +50,7 @@ def distinct_shingles_col(tokens: Column, k: int = 3) -> Column:
     return F.array_distinct(shingles_col(tokens, k))
 
 
-def stem_tokens_col(
-    tokens: Column, rules: list[tuple[str, str]] | None = None
-) -> Column:
+def stem_tokens_col(tokens: Column) -> Column:
     """Fold each token to its suffix-stripped stem (heavy-mode CONTAINS arm).
 
     Pure Catalyst when-chain built from ``data/stemming.py``'s rule table
@@ -62,7 +60,7 @@ def stem_tokens_col(
     reference's full-text ``CONTAINS`` candidate fetch
     (``Db/DataContextBase_AddrObject.cs:115-141``).
     """
-    from ..data.stemming import DOUBLED, MIN_STEM, UNDOUBLE_AFTER, ordered_rules
+    from ..data.stemming import DOUBLED, MIN_STEM, ORDERED_RULES, UNDOUBLE_AFTER
 
     def undouble(expr: Column) -> Column:
         out = expr
@@ -74,7 +72,7 @@ def stem_tokens_col(
 
     def stem_one(t: Column) -> Column:
         chain = None
-        for suf, rep in ordered_rules(rules):
+        for suf, rep in ORDERED_RULES:
             stem = t.substr(F.lit(1), F.length(t) - len(suf))
             if rep:
                 stem = F.concat(stem, F.lit(rep))

@@ -42,6 +42,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..data.synonyms import DEFAULT_SYNONYMS
 from ..functions.normalize import normalize_col
 from ..functions.tokens import distinct_shingles_col, tokens_col
 from ..session import MINHASH_FUNC, kernel
@@ -187,55 +188,48 @@ def minhash_bands(profiles: DataFrame) -> DataFrame:
     return _key_rows(keyed, band_keys(F.col("mh")))
 
 
-def canonical_tokens_col(tokens, synonyms: dict[str, str] | None = None):
-    """Fold each token to its canonical form via the synonym dictionary.
+def canonical_tokens_col(tokens: Column) -> Column:
+    """Fold each token to its canonical form via ``DEFAULT_SYNONYMS``.
 
     The dictionary is applied as a Catalyst ``map`` literal (no shuffle, no
     Python): synonym tables are dimension-sized, the classic broadcast-dim
     shape. Mirrors ``PushCrutch`` (``Parser.cs:367-520``) — variant terms
     collapse to one spelling before key generation.
     """
-    from ..data.synonyms import DEFAULT_SYNONYMS
-
-    syn = DEFAULT_SYNONYMS if synonyms is None else synonyms
-    m = F.create_map(*[F.lit(x) for kv in sorted(syn.items()) for x in kv])
+    m = F.create_map(*[F.lit(x) for kv in sorted(DEFAULT_SYNONYMS.items()) for x in kv])
     return F.transform(tokens, lambda t: F.coalesce(m[t], t))
 
 
-def synonym_key_col(tokens: Column, synonyms: dict[str, str] | None = None) -> Column:
-    """md5 of the synonym-canonical token sequence."""
-    return F.md5(F.array_join(canonical_tokens_col(tokens, synonyms), " "))
+def synonym_key_col(tokens: Column) -> Column:
+    """md5 of the synonym-canonical token sequence: the 'syn' block key and
+    the resolver's ``syn_key``."""
+    return F.md5(F.array_join(canonical_tokens_col(tokens), " "))
 
 
-def synonym_blocks(
-    profiles: DataFrame, synonyms: dict[str, str] | None = None
-) -> DataFrame:
+def synonym_blocks(profiles: DataFrame) -> DataFrame:
     """(conv_id, src='syn', block_key): synonym-canonical signature keys.
 
     Two conversations whose texts differ only by dictionary variants get the
     SAME key (metamorphic property tested in tests/test_synonyms.py) — the
     recall mechanism the sig/prefix/minhash families can't provide when a
-    variant changes many shingles at once.
+    variant changes many shingles at once. The linkage plan does not block
+    on it (its oracle stays byte-stable); the resolver's weakest stage keys
+    on it.
     """
     return profiles.select(
         "conv_id",
         F.lit("syn").alias("src"),
-        synonym_key_col(F.col("tokens"), synonyms).alias("block_key"),
+        synonym_key_col(F.col("tokens")).alias("block_key"),
     )
 
 
-def block_table(
-    profiles: DataFrame, synonyms: dict[str, str] | None = None
-) -> DataFrame:
+def block_table(profiles: DataFrame) -> DataFrame:
     """All blocking keys: (conv_id, src, block_key, sig).
 
     One select of the profiles computes the sketch, and one explode emits
     the sig, prefix and band keys; a conversation without a sketch gets no
     band rows. ``sig`` is the row's conversation signature, carried so the
     pair self-join can compare it without another profile join.
-
-    ``synonyms``: pass a variant->canonical dict to add the 'syn' key family
-    (opt-in so the default pipeline's oracle stays byte-stable).
     """
     keyed = profiles.select(
         "conv_id", "sig", "prefix_key", _profile_sketch(profiles)
@@ -245,12 +239,4 @@ def block_table(
         F.struct(F.lit("prefix").alias("src"), F.col("prefix_key").alias("block_key")),
         *band_keys(F.col("mh")),
     ]
-    out = _key_rows(keyed, keys, "sig")
-    if synonyms is not None:
-        out = out.unionByName(profiles.select(
-            "conv_id",
-            F.lit("syn").alias("src"),
-            synonym_key_col(F.col("tokens"), synonyms).alias("block_key"),
-            "sig",
-        ))
-    return out
+    return _key_rows(keyed, keys, "sig")

@@ -7,11 +7,15 @@ engine's one resolver — key equality at full signature strength first, then
 at the weaker prefix and synonym strengths (the reference's fallback
 cascade, ``Parser.cs:867-936``); clusters that miss at every stage get new
 deterministic entity ids. ``cli link`` and every streaming micro-batch
-resolve through it over the one registry schema,
-:data:`CASCADE_REGISTRY_SCHEMA`. In production the registry is an Iceberg
-table and the write is a ``MERGE INTO``; here the same semantics are
-expressed as broadcast-join + anti-join + union so the sandbox (no Iceberg
-jar) can run it.
+resolve through it once, in their one link step
+(``plans.pipeline.link_into``), over the one registry schema,
+:data:`CASCADE_REGISTRY_SCHEMA`; the step's registry additions
+(:func:`cascade_registry_additions`) are a projection of the resolved rows,
+which carry their representative's keys. In production the registry is an
+Iceberg table and the write is a ``MERGE INTO``; here the same semantics
+are expressed as broadcast joins + an anti-join, appended as a registry
+delta (``sources/registry_writer.py``), so the sandbox (no Iceberg jar) can
+run it.
 
 Determinism: a new entity id is ``md5('entity|' + cluster signature)``, never
 ``uuid()`` — reruns and resumed runs assign identical ids (the reference's
@@ -24,12 +28,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .blocking import synonym_key_col
+
 # the registry: any key column may be NULL (an entry known only at a weaker
 # key strength)
 CASCADE_REGISTRY_SCHEMA = (
     "entity_id string, rep_conv_id string, sig string, prefix_key string, "
     "syn_key string"
 )
+
+# the columns of every written ``resolved`` table
+RESOLVED_COLUMNS = ("conv_id", "cluster_id", "entity_id", "resolve_stage")
 
 # the values of ``resolve_cascade``'s ``resolve_stage``, strongest first
 RESOLVE_STAGES = ("sig", "prefix", "synonym", "new")
@@ -38,26 +47,23 @@ RESOLVE_STAGES = ("sig", "prefix", "synonym", "new")
 def profile_keys(profiles: DataFrame) -> DataFrame:
     """(conv_id, sig, prefix_key, syn_key): the three cascade key strengths.
 
-    ``syn_key`` is the synonym-canonical signature (same expression as the
-    'syn' blocking family) — the weakest key: two texts differing only by
-    dictionary variants share it.
+    ``syn_key`` is the 'syn' blocking family's key
+    (``blocking.synonym_key_col``) — the weakest key: two texts differing
+    only by dictionary variants share it.
     """
-    from .blocking import canonical_tokens_col
-
     return profiles.select(
-        "conv_id",
-        "sig",
-        "prefix_key",
-        F.md5(F.array_join(canonical_tokens_col(F.col("tokens")), " ")).alias(
-            "syn_key"
-        ),
+        "conv_id", "sig", "prefix_key", synonym_key_col(F.col("tokens")).alias("syn_key")
     )
 
 
 def resolve_cascade(
     clusters: DataFrame, profiles: DataFrame, registry: DataFrame
 ) -> DataFrame:
-    """(conv_id, cluster_id, entity_id, resolve_stage): multi-stage resolve.
+    """(conv_id, cluster_id, entity_id, resolve_stage, sig, prefix_key,
+    syn_key): multi-stage resolve; the three keys are those of the row's
+    cluster representative (its ``cluster_id`` conversation), the keys a new
+    entity is registered under. The first four columns are the contract
+    every written ``resolved`` table projects.
 
     The reference resolves against a partially-populated registry by
     retrying at progressively weaker key strengths before giving up
@@ -97,6 +103,9 @@ def resolve_cascade(
     )
     resolved = m.select(
         "cluster_id",
+        "sig",
+        "prefix_key",
+        "syn_key",
         F.coalesce(
             "e_sig",
             "e_prefix",
@@ -110,25 +119,27 @@ def resolve_cascade(
         .alias("resolve_stage"),
     )
     return clusters.join(resolved, "cluster_id").select(
-        "conv_id", "cluster_id", "entity_id", "resolve_stage"
+        *RESOLVED_COLUMNS, "sig", "prefix_key", "syn_key"
     )
 
 
-def cascade_registry_additions(
-    resolved: DataFrame, profiles: DataFrame, registry: DataFrame
-) -> DataFrame:
+def cascade_registry_additions(resolved: DataFrame, registry: DataFrame) -> DataFrame:
     """This batch's NEW entities (``resolve_stage == 'new'``), keyed at FULL
     strength (sig + prefix_key + syn_key of the cluster representative), so a
-    later batch can hit them at any stage of the funnel. Rows already in the
-    registry (by ``entity_id``) are excluded — this is the USING side of the
-    production ``MERGE INTO``, O(batch) regardless of registry size.
+    later batch can hit them at any stage of the funnel. ``resolved`` is
+    :func:`resolve_cascade`'s output, which carries those keys, so this is a
+    projection of its representative rows. Rows already in the registry (by
+    ``entity_id``) are excluded — this is the USING side of the production
+    ``MERGE INTO``, O(batch) regardless of registry size. A cluster resolved
+    at a weaker stage adds nothing: the registry keeps its original entry,
+    as the reference's crosswalk never rewrites a resolved row
+    (``Db/DataContextBase_Address.cs:131-173``).
     """
     return (
         resolved.filter(
             (F.col("resolve_stage") == "new")
             & (F.col("conv_id") == F.col("cluster_id"))
         )
-        .join(profile_keys(profiles), "conv_id")
         .select(
             "entity_id",
             F.col("conv_id").alias("rep_conv_id"),
@@ -138,22 +149,4 @@ def cascade_registry_additions(
         )
         .dropDuplicates(["entity_id"])
         .join(registry.select("entity_id"), "entity_id", "left_anti")
-    )
-
-
-def merge_registry_cascade(
-    resolved: DataFrame, profiles: DataFrame, registry: DataFrame
-) -> DataFrame:
-    """Cascade-registry MERGE emulation: existing rows kept verbatim; this
-    batch's additions (see :func:`cascade_registry_additions`) appended.
-
-    In production this is one ``MERGE INTO`` on ``entity_id`` (see
-    ``sources/registry_writer.py`` for the pluggable writer seam);
-    anti-join+union is the engine-agnostic equivalent. Entities resolved at a weaker stage ('prefix'/'synonym')
-    are NOT re-keyed — the registry keeps its original entry, mirroring the
-    reference's crosswalk which never rewrites a resolved row
-    (``Db/DataContextBase_Address.cs:131-173``).
-    """
-    return registry.unionByName(
-        cascade_registry_additions(resolved, profiles, registry)
     )

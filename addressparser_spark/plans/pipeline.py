@@ -1,4 +1,5 @@
-"""End-to-end linkage pipeline: normalize -> block -> pair -> score -> cluster.
+"""End-to-end linkage pipeline: normalize -> block -> pair -> score -> cluster,
+and the one link step that resolves, writes and merges its result.
 
 Mirrors the reference lifecycle (``Parser.ParseAddress``,
 ``AddressParser/Core/Parser.cs:93-153``) but set-based: where the reference
@@ -12,6 +13,8 @@ Lineage/metrics: each stage reports row counts + dropped-block accounting via
 
 from __future__ import annotations
 
+import json
+import os
 from dataclasses import dataclass, field
 
 from py4j.protocol import Py4JJavaError
@@ -20,8 +23,10 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..operators import blocking, pairs as pairs_op, scoring
+from ..operators import blocking, pairs as pairs_op, resolve, scoring
 from ..operators.clustering import connected_components
+from ..sources.registry_writer import RegistryWriter
+from ..sources.tables import TableStore
 
 
 def sig_representatives(profiles: DataFrame) -> DataFrame:
@@ -190,3 +195,58 @@ def run_linkage(transcripts: DataFrame) -> LinkageResult:
         clusters=clusters,
         metrics=metrics,
     )
+
+
+def link_into(transcripts: DataFrame, store: TableStore, writer: RegistryWriter) -> dict:
+    """The link step of ``cli link`` and of every stream micro-batch: link
+    ``transcripts``, resolve them against ``writer``'s registry, write
+    ``clusters``, ``resolved`` and ``dropped_blocks`` to ``store``, merge the
+    new entities into the registry, and write ``metrics.json`` under
+    ``store.base``. Returns the metrics:
+
+    - ``turns.rows``, ``pairs.candidates``, ``scored.rows``,
+      ``scored.matches``: the linkage plan's row counts
+    - ``n_clusters``: the number of clusters
+    - ``resolve_stages``: conversations per resolve stage, stages with none
+      left out
+    - ``profile_partitions``: rows per partition of the profiles
+    - ``dropped_blocks``: blocks dropped for exceeding the size cap
+
+    The step resolves once: the resolved frame is cached, and the
+    ``clusters`` table and the registry additions are projections of it.
+    Every count is an observation on a frame the step runs anyway; only
+    ``profile_partitions`` runs an aggregation of its own. Every frame the
+    step persists is released before it returns, also when it fails.
+    """
+    result = run_linkage(transcripts)
+    metrics = result.metrics
+    registry = writer.read()
+    resolved = resolve.resolve_cascade(result.clusters, result.profiles, registry).cache()
+    try:
+        store.write("clusters", resolved.select("conv_id", "cluster_id"))
+        # a cluster_id is its members' min conv_id: one row per cluster has
+        # conv_id == cluster_id
+        store.write("resolved", metrics.observe(
+            resolved.select(*resolve.RESOLVED_COLUMNS),
+            "resolved",
+            n_clusters=F.count(F.when(F.col("conv_id") == F.col("cluster_id"), 1)),
+            **{s: F.count(F.when(F.col("resolve_stage") == s, 1)) for s in resolve.RESOLVE_STAGES},
+        ))
+        store.write("dropped_blocks", metrics.observe(
+            result.dropped_blocks, "dropped_blocks", rows=F.count(F.lit(1))
+        ))
+        writer.merge(resolve.cascade_registry_additions(resolved, registry))
+        out = metrics.resolve()
+        stages = {s: out.pop(f"resolved.{s}") for s in resolve.RESOLVE_STAGES}
+        out.update(
+            n_clusters=out.pop("resolved.n_clusters"),
+            resolve_stages={s: n for s, n in stages.items() if n},
+            profile_partitions=partition_histogram(result.profiles),
+            dropped_blocks=out.pop("dropped_blocks.rows"),
+        )
+    finally:
+        resolved.unpersist()
+        result.unpersist()
+    with open(os.path.join(store.base, "metrics.json"), "w") as f:
+        json.dump(out, f)
+    return out

@@ -323,11 +323,11 @@ def er_resolve_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment, not just row counts.
     """
     from .data.transcripts import demo_registry
-    from .operators.resolve import resolve_cascade
+    from .operators.resolve import RESOLVED_COLUMNS, resolve_cascade
 
     p = _profiles(spark, sf_dir)
     clusters = sig_representatives(p).withColumnRenamed("rep", "cluster_id")
-    return resolve_cascade(clusters, p, demo_registry(p))
+    return resolve_cascade(clusters, p, demo_registry(p)).select(*RESOLVED_COLUMNS)
 
 
 def ops_cap_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -73,35 +73,3 @@ class TableStore:
 
     def write(self, name: str, df: DataFrame) -> None:
         df.write.mode("overwrite").parquet(self._path(name))
-
-    def write_bucketed(
-        self, name: str, df: DataFrame, key: str, n_buckets: int = 16
-    ) -> None:
-        """Persist ``df`` hash-bucketed (and per-bucket sorted) by ``key``.
-
-        The co-located-join lever: two tables bucketed the same way join
-        WITHOUT an Exchange on either side (the scan itself satisfies the
-        join's partitioning requirement), and the per-bucket sort feeds
-        SortMergeJoin without a Sort. The production shape for the entity
-        registry: resolve's registry-lookup join on ``sig`` becomes
-        shuffle-free for the registry side no matter how large it grows —
-        the analog of the reference's clustered index on the Addresses
-        search key (``Db/DataContextBase_Address.cs``). Registered in the
-        session catalog as an external table at this store's path
-        (bucket metadata lives in the catalog; on a production Hive/Iceberg
-        metastore it is durable across sessions).
-        """
-        (
-            df.write.mode("overwrite")
-            .bucketBy(n_buckets, key)
-            .sortBy(key)
-            .option("path", self._path(name))
-            .format("parquet")
-            .saveAsTable(name)
-        )
-
-    def read_bucketed(self, name: str) -> DataFrame:
-        """Read a bucketed table WITH its bucket spec (via the catalog —
-        ``spark.read.parquet`` on the same path would drop the bucketing
-        metadata and re-shuffle on join)."""
-        return self.spark.table(name)

@@ -1,8 +1,10 @@
 """Driver-graded Structured Streaming queries — oracle-hash-matched.
 
 The two streaming operator families (custom stateful sessionization via
-``applyInPandasWithState``; incremental linkage + ``resolve_cascade`` +
-registry MERGE via ``foreachBatch``) previously had only pytest evidence.
+``applyInPandasWithState``; incremental linkage via ``foreachBatch``, one
+``plans.pipeline.link_into`` step per micro-batch: the linkage plan,
+``resolve_cascade`` and the registry MERGE) previously had only pytest
+evidence.
 Each wrapper here gives them the standard ``(spark, sf_dir) -> DataFrame``
 driver surface whose result is BYTE-COMPARABLE to the same DuckDB oracle as
 its batch twin — the hardest correctness gate available:
@@ -156,7 +158,8 @@ def stream_incremental_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     their base's prefix), so every true entity's members arrive in the same
     micro-batch while the registry still mediates everything across batches:
     epoch 1 resolves against (and extends) the registry epoch 0 wrote,
-    through ``resolve_cascade`` as ``cli link`` does.
+    through ``link_into`` as ``cli link`` does. The result is the union of
+    the epochs' ``resolved`` tables (``out/epoch=<n>/resolved``).
 
     Entity ids minted at stage 'new' are content-derived (md5 of cluster
     signature, ``operators/resolve.py``), so while no epoch-1 cluster shares
@@ -186,13 +189,7 @@ def stream_incremental_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     _stage_file(t.filter(part == 0), stage, in_dir, "b0", 0)
     _stage_file(t.filter(part == 1), stage, in_dir, "b1", 1)
 
-    q = incremental_linkage(
-        spark,
-        in_dir,
-        out_dir,
-        work,
-        os.path.join(work, "ck"),
-    )
+    q = incremental_linkage(spark, in_dir, out_dir, os.path.join(work, "ck"))
     finished = q.awaitTermination(900)
     if q.exception() is not None:
         raise q.exception()
@@ -201,4 +198,6 @@ def stream_incremental_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise TimeoutError(
             "stream_incremental_linkage did not finish within 900s"
         )
-    return spark.read.parquet(out_dir).select("conv_id", "cluster_id", "entity_id")
+    return spark.read.parquet(os.path.join(out_dir, "epoch=*", "resolved")).select(
+        "conv_id", "cluster_id", "entity_id"
+    )

@@ -3,11 +3,11 @@
 Two streaming shapes:
 
 1. :func:`incremental_linkage` — ``readStream`` over a transcripts directory;
-   each micro-batch runs ``run_linkage`` (the same light->heavy funnel as
-   ``cli link``) in ``foreachBatch``, resolves through ``resolve_cascade``
-   (the same resolver and registry schema as ``cli link``) and then extends
-   the persistent entity registry — the streaming MERGE pattern.
-   ``foreachBatch`` is the exactly-once seam: the resolved output is
+   each micro-batch runs the link step of ``cli link``,
+   ``plans.pipeline.link_into`` (the linkage plan, one resolve through
+   ``resolve_cascade``, the table writes, the registry merge and the
+   metrics), in ``foreachBatch`` — the streaming MERGE pattern.
+   ``foreachBatch`` is the exactly-once seam: each epoch's tables are
    per-epoch and overwrite-idempotent, the registry is insert-only and
    deduped on read, and entity ids are content-derived (md5 of signature,
    see operators/resolve.py), so replaying a batch after failure converges
@@ -16,22 +16,31 @@ Two streaming shapes:
 2. :func:`turn_rate_stream` — watermarked sliding-window aggregation over
    turn arrivals (the windowed-agg + late-data operator family).
 
-The registry is the ``registry`` table of the table store at
-``tables_dir``, read and extended through
+Layout under the stream's output directory::
+
+    registry/                 <- the registry ``cli link`` into the same
+                                 directory reads and extends
+    epoch=<n>/clusters/       <- each micro-batch's link step
+    epoch=<n>/resolved/
+    epoch=<n>/dropped_blocks/
+    epoch=<n>/metrics.json
+
+The registry is read and extended through
 ``sources.registry_writer.registry_writer`` as ``cli link`` does: each
 batch appends only its additions as one delta (O(batch)), and a later
-``cli link`` into the same store resolves against every entity the stream
-registered, and vice versa. The layout and its crash-safe compaction are
-``ParquetRegistryWriter``'s; a replayed epoch's rows dedupe on read.
+``cli link`` into the same directory resolves against every entity the
+stream registered, and vice versa. The layout and its crash-safe compaction
+are ``ParquetRegistryWriter``'s; a replayed epoch's rows dedupe on read.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.resolve import cascade_registry_additions, resolve_cascade
-from ..plans.pipeline import LinkageResult, run_linkage
+from ..plans.pipeline import link_into
 from ..sources.registry_writer import registry_writer
 from ..sources.tables import TableStore
 
@@ -41,57 +50,26 @@ TRANSCRIPT_SCHEMA = (
 )
 
 
-def link_batch(
-    batch: DataFrame, registry: DataFrame
-) -> tuple[DataFrame, DataFrame, LinkageResult]:
-    """Run ``run_linkage`` on one micro-batch and resolve it against the
-    current registry, as ``cli link`` does.
-
-    Returns ``(resolved, additions, result)``. ``resolved`` comes from
-    ``resolve_cascade``, so a cluster that shares only its ``prefix_key`` or
-    ``syn_key`` with an entity an earlier batch registered takes that
-    entity's id at that stage. ``additions`` are the O(batch) registry delta
-    rows (see ``cascade_registry_additions``) — the registry writer appends
-    them as one delta. ``result`` holds the frames ``run_linkage``
-    persisted; the caller must ``unpersist()`` it once the epoch's actions
-    have run. Registry lookup is the broadcast reference-dictionary join.
-    """
-    result = run_linkage(batch)
-    resolved = resolve_cascade(result.clusters, result.profiles, registry)
-    additions = cascade_registry_additions(resolved, result.profiles, registry)
-    return resolved, additions, result
-
-
 def incremental_linkage(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    tables_dir: str,
-    checkpoint_dir: str,
+    spark: SparkSession, input_dir: str, output_dir: str, checkpoint_dir: str
 ):
-    """Streaming query: new transcript files -> resolved entities, registry grows.
+    """Streaming query: new transcript files -> one link step per micro-batch.
 
-    The registry is ``<tables_dir>/registry``, the table ``cli link
-    --output <tables_dir>`` reads and extends. Returns the StreamingQuery
-    (caller drives with processAllAvailable/stop).
+    Epoch ``n`` writes ``<output_dir>/epoch=<n>/`` (``clusters``,
+    ``resolved``, ``dropped_blocks``, ``metrics.json``) and extends
+    ``<output_dir>/registry``, the registry ``cli link --output
+    <output_dir>`` reads and extends. Returns the StreamingQuery (caller
+    drives with processAllAvailable/stop).
     """
-    writer = registry_writer(spark, TableStore(spark, tables_dir))
+    writer = registry_writer(spark, TableStore(spark, output_dir))
 
     def process(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
             return
-        registry = writer.read()
-        resolved, additions, result = link_batch(batch, registry)
-        # unpersist in finally: a long-running stream otherwise accumulates
-        # one set of persisted linkage frames per epoch in the block manager
-        try:
-            # per-epoch overwrite => replaying an epoch after a crash rewrites
-            # the same dir instead of appending duplicates
-            resolved.write.mode("overwrite").parquet(f"{output_dir}/epoch={epoch_id}")
-            # registry: append ONLY this batch's additions (O(batch))
-            writer.merge(additions)
-        finally:
-            result.unpersist()
+        # per-epoch overwrite => replaying an epoch after a crash rewrites
+        # the same tables instead of appending duplicates
+        epoch = TableStore(spark, os.path.join(output_dir, f"epoch={epoch_id}"))
+        link_into(batch, epoch, writer)
 
     stream = (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)

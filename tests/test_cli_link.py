@@ -239,17 +239,15 @@ def test_stream_resolves_like_link_against_the_same_registry(spark, tmp_path):
     for i, batch in enumerate((batch1, batch2)):
         _stage_file(batch, str(tmp_path / "stage"), in_dir, f"b{i}", i)
     out_dir = str(tmp_path / "stream_out")
-    q = incremental_linkage(
-        spark, in_dir, out_dir, str(tmp_path / "stream_tables"), str(tmp_path / "ck")
-    )
+    q = incremental_linkage(spark, in_dir, out_dir, str(tmp_path / "ck"))
     assert q.awaitTermination(300), "stream did not finish"
-    streamed = spark.read.parquet(out_dir).filter("epoch = 1")
+    streamed = spark.read.parquet(f"{out_dir}/epoch=1/resolved")
 
     def entities(df):
         return {r["conv_id"]: r["entity_id"] for r in df.collect()}
 
     assert entities(streamed) == entities(linked)
-    p_entity = entities(spark.read.parquet(out_dir).filter("epoch = 0"))["s1_p"]
+    p_entity = entities(spark.read.parquet(f"{out_dir}/epoch=0/resolved"))["s1_p"]
     assert entities(linked)["s2_q"] == p_entity
 
     def stages(df):
@@ -304,7 +302,7 @@ def test_link_after_stream_resolves_against_its_registry(spark, tmp_path):
     in_dir = _one_file_input(spark, tmp_path)
     out = tmp_path / "out"
     _stream(in_dir, out)
-    streamed = _entities(spark.read.parquet(str(out / "resolved" / "epoch=0")))
+    streamed = _entities(spark.read.parquet(str(out / "epoch=0" / "resolved")))
 
     _link(in_dir, out)
     m = json.loads(open(out / "metrics.json").read())
@@ -323,9 +321,56 @@ def test_stream_after_link_resolves_against_its_registry(spark, tmp_path):
     linked = _entities(spark.read.parquet(str(out / "resolved")))
 
     _stream(in_dir, out)
-    streamed = spark.read.parquet(str(out / "resolved" / "epoch=0"))
+    streamed = spark.read.parquet(str(out / "epoch=0" / "resolved"))
     assert {r["resolve_stage"] for r in streamed.collect()} == {"sig"}
     assert _entities(streamed) == linked
+
+
+def test_link_then_stream_keep_their_own_tables(spark, tmp_path):
+    """`link` then `stream` into one --output: the link's tables stay at
+    the top level and the micro-batch's sit under ``epoch=0``, so each
+    reads back every row it wrote."""
+    in_dir = _one_file_input(spark, tmp_path)
+    out = tmp_path / "out"
+    _link(in_dir, out)
+    _stream(in_dir, out)
+    assert spark.read.parquet(str(out / "resolved")).count() == 67
+    assert spark.read.parquet(str(out / "epoch=0" / "resolved")).count() == 67
+    assert sorted(p.name for p in (out / "epoch=0").iterdir()) == [
+        "clusters", "dropped_blocks", "metrics.json", "resolved"
+    ]
+
+
+def test_stream_reports_dropped_blocks(spark, tmp_path):
+    """A micro-batch of MAX_BLOCK_SIZE + 1 identical conversations and one
+    other: the epoch's ``dropped_blocks`` lists every block of the
+    identical group and its ``metrics.json`` counts them, as ``link``'s
+    do."""
+    from addressparser_spark.operators.pairs import MAX_BLOCK_SIZE
+    from addressparser_spark.streaming.driver_queries import _stage_file
+
+    dup = [
+        "how do i reset my router password after the firmware update",
+        "open the admin page choose security then pick reset password and confirm",
+    ]
+    other = [
+        "what is the capital of australia and when was it chosen",
+        "canberra was chosen as a compromise and became the capital in 1913",
+    ]
+    convs = {f"dup_{i:03d}": dup for i in range(MAX_BLOCK_SIZE + 1)} | {"other": other}
+    in_dir = str(tmp_path / "in")
+    os.makedirs(in_dir)
+    _stage_file(_transcripts(spark, convs), str(tmp_path / "stage"), in_dir, "b0", 0)
+    out = tmp_path / "out"
+    _stream(in_dir, out)
+
+    epoch = out / "epoch=0"
+    dropped = spark.read.parquet(str(epoch / "dropped_blocks")).collect()
+    assert len(dropped) == 10  # the sig, prefix and 8 MinHash band blocks
+    assert {r["block_n"] for r in dropped} == {MAX_BLOCK_SIZE + 1}
+    m = json.loads((epoch / "metrics.json").read_text())
+    assert m["dropped_blocks"] == 10
+    assert m["n_clusters"] == 2
 
 
 def test_link_crash_before_pointer_flip_keeps_the_registry(spark, tmp_path, monkeypatch):

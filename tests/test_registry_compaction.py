@@ -15,19 +15,17 @@ from addressparser_spark.sources.tables import TableStore
 from addressparser_spark.streaming import incremental as inc
 
 
-def _read(spark, tables_dir):
-    """The registry of the table store at ``tables_dir``, as the writer reads it."""
-    return rw.ParquetRegistryWriter(TableStore(spark, tables_dir)).read()
+def _read(spark, out_dir):
+    """The registry of the table store at ``out_dir``, as the writer reads it."""
+    return rw.ParquetRegistryWriter(TableStore(spark, out_dir)).read()
 
 
 def test_compaction_folds_deltas_and_flips_pointer(spark, sf_dir, tmp_path, monkeypatch):
     monkeypatch.setattr(rw, "COMPACT_EVERY", 2)
     t = transcripts_df(spark, sf_dir)
     in_dir = str(tmp_path / "in")
-    out_dir, tables_dir, ck_dir = (
-        str(tmp_path / "out"), str(tmp_path / "tables"), str(tmp_path / "ck"),
-    )
-    reg_dir = os.path.join(tables_dir, "registry")
+    out_dir, ck_dir = str(tmp_path / "out"), str(tmp_path / "ck")
+    reg_dir = os.path.join(out_dir, "registry")
     os.makedirs(in_dir)
     slices = [
         t.filter(F.col("conv_id") < "conv_000030"),
@@ -40,7 +38,7 @@ def test_compaction_folds_deltas_and_flips_pointer(spark, sf_dir, tmp_path, monk
         src = glob.glob(f"{d}/part-*.parquet")[0]
         shutil.copy(src, f"{in_dir}/batch_{i}.parquet")
 
-    q = inc.incremental_linkage(spark, in_dir, out_dir, tables_dir, ck_dir)
+    q = inc.incremental_linkage(spark, in_dir, out_dir, ck_dir)
     q.awaitTermination(180)
 
     # epoch 0 -> delta0; epoch 1 -> delta1, 2 deltas >= COMPACT_EVERY ->
@@ -52,11 +50,11 @@ def test_compaction_folds_deltas_and_flips_pointer(spark, sf_dir, tmp_path, monk
     deltas = glob.glob(f"{reg_dir}/delta_epoch=*")
     assert len(deltas) == 1, deltas
 
-    registry = _read(spark, tables_dir)
+    registry = _read(spark, out_dir)
     n = registry.count()
     assert n == registry.select("sig").distinct().count()
     # registry covers every entity resolved across all epochs
-    resolved = spark.read.parquet(out_dir)
+    resolved = spark.read.parquet(f"{out_dir}/epoch=*/resolved")
     assert n == resolved.select("entity_id").distinct().count()
 
 

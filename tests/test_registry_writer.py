@@ -1,8 +1,8 @@
 """The pluggable registry MERGE seam (sources/registry_writer.py).
 
 The parquet backend (the append-delta registry ``cli link`` and the stream
-share) must be value-identical to the in-plan emulation
-(merge_registry_cascade) and idempotent; the Iceberg backend runs only when
+share) must read as the registry plus the batch's additions and be
+idempotent; the Iceberg backend runs only when
 the jar + a configured catalog exist (skip-marker otherwise — the sandbox
 has no Iceberg jar, see SCALE.md).
 """
@@ -16,7 +16,6 @@ from addressparser_spark.data.transcripts import demo_registry, transcripts_df
 from addressparser_spark.operators.blocking import conv_profiles, normalize_turns
 from addressparser_spark.operators.resolve import (
     cascade_registry_additions,
-    merge_registry_cascade,
     resolve_cascade,
 )
 from addressparser_spark.plans.pipeline import run_linkage
@@ -36,7 +35,7 @@ def linked(spark, sf_dir):
     registry = demo_registry(profiles)
     resolved = resolve_cascade(result.clusters, profiles, registry).cache()
     resolved.count()
-    return resolved, profiles, registry
+    return resolved, registry
 
 
 def _rows(df):
@@ -44,19 +43,21 @@ def _rows(df):
 
 
 def test_parquet_merge_matches_inplan_emulation(spark, tmp_path, linked):
-    resolved, profiles, registry = linked
+    resolved, registry = linked
     writer = ParquetRegistryWriter(TableStore(spark, str(tmp_path)))
     writer.merge(registry)  # seed
-    writer.merge(cascade_registry_additions(resolved, profiles, registry))
-    want = merge_registry_cascade(resolved, profiles, registry)
-    assert _rows(writer.read()) == _rows(want)
+    additions = cascade_registry_additions(resolved, registry)
+    writer.merge(additions)
+    # MERGE ... WHEN NOT MATCHED THEN INSERT: the registry rows verbatim,
+    # plus the additions
+    assert _rows(writer.read()) == _rows(registry.unionByName(additions))
 
 
 def test_parquet_merge_idempotent(spark, tmp_path, linked):
-    resolved, profiles, registry = linked
+    resolved, registry = linked
     writer = ParquetRegistryWriter(TableStore(spark, str(tmp_path)))
     writer.merge(registry)  # seed
-    additions = cascade_registry_additions(resolved, profiles, registry)
+    additions = cascade_registry_additions(resolved, registry)
     writer.merge(additions)
     once = _rows(writer.read())
     assert len(once) > len(_rows(registry))  # the batch added something
@@ -94,15 +95,14 @@ def test_iceberg_merge_into(spark, tmp_path, linked):
     ]
     if not catalogs:
         pytest.skip("no Iceberg catalog configured on this session")
-    resolved, profiles, registry = linked
+    resolved, registry = linked
     table = "local.db.test_registry"
     writer = IcebergRegistryWriter(spark, table)
     writer.merge(registry)  # seed
-    additions = cascade_registry_additions(resolved, profiles, registry)
+    additions = cascade_registry_additions(resolved, registry)
     writer.merge(additions)
     once = _rows(writer.read())
     writer.merge(additions)
     assert _rows(writer.read()) == once
-    want = merge_registry_cascade(resolved, profiles, registry)
-    assert once == _rows(want)
+    assert once == _rows(registry.unionByName(additions))
     spark.sql(f"DROP TABLE IF EXISTS {table}")

@@ -87,15 +87,14 @@ def test_stream_incremental_linkage_removes_temp_tree(spark, sf_dir, monkeypatch
 @pytest.fixture(scope="module")
 def two_epochs(spark, sf_dir, tmp_path_factory):
     """``incremental_linkage`` over two files of the same conversations:
-    (output dir, table store dir holding the registry, whether the
-    session's cache was empty once the stream finished)."""
+    (output dir, whether the session's cache was empty once the stream
+    finished)."""
     import glob
     import shutil
 
     t = transcripts_df(spark, sf_dir)
     base = tmp_path_factory.mktemp("two_epochs")
-    in_dir, out_dir = str(base / "in"), str(base / "out")
-    tables_dir, ck_dir = str(base / "tables"), str(base / "ck")
+    in_dir, out_dir, ck_dir = str(base / "in"), str(base / "out"), str(base / "ck")
 
     first = t.filter(F.col("conv_id") < "conv_000050")
     second = t  # superset: re-delivers batch 1 convs plus the rest
@@ -109,16 +108,16 @@ def two_epochs(spark, sf_dir, tmp_path_factory):
     shutil.rmtree(f"{in_dir}/b2")
 
     spark.catalog.clearCache()  # frames other tests left cached
-    q = incremental_linkage(spark, in_dir, out_dir, tables_dir, ck_dir)
+    q = incremental_linkage(spark, in_dir, out_dir, ck_dir)
     assert q.awaitTermination(120), "stream did not finish"
     released = spark._jsparkSession.sharedState().cacheManager().isEmpty()
-    return out_dir, tables_dir, released
+    return out_dir, released
 
 
 def test_incremental_linkage_releases_every_persisted_frame(two_epochs):
     """Each epoch releases everything its linkage persisted: a long-running
     stream must not pin one set of frames per micro-batch."""
-    assert two_epochs[2]
+    assert two_epochs[1]
 
 
 def test_incremental_linkage_two_batches(spark, two_epochs):
@@ -126,9 +125,9 @@ def test_incremental_linkage_two_batches(spark, two_epochs):
     entity ids are stable across batches (content-derived, idempotent)."""
     import glob
 
-    out_dir, tables_dir, _ = two_epochs
-    resolved = spark.read.parquet(out_dir)
-    registry = ParquetRegistryWriter(TableStore(spark, tables_dir)).read()
+    out_dir, _ = two_epochs
+    resolved = spark.read.parquet(f"{out_dir}/epoch=*/resolved")
+    registry = ParquetRegistryWriter(TableStore(spark, out_dir)).read()
     # registry sigs unique (idempotent merge across overlapping batches)
     assert registry.count() == registry.select("sig").distinct().count()
     # same conv resolved in both epochs -> same entity id
@@ -139,11 +138,13 @@ def test_incremental_linkage_two_batches(spark, two_epochs):
         .count()
     )
     assert dup == 0
-    assert resolved.select("epoch").distinct().count() == 2
+    assert sorted(glob.glob(f"{out_dir}/epoch=*/resolved")) == [
+        f"{out_dir}/epoch=0/resolved", f"{out_dir}/epoch=1/resolved"
+    ]
 
     # append-shaped registry: one delta dir per epoch, and epoch 1's delta
     # holds ONLY additions (no rewrite of epoch 0's entities)
-    deltas = sorted(glob.glob(f"{tables_dir}/registry/delta_epoch=*"))
+    deltas = sorted(glob.glob(f"{out_dir}/registry/delta_epoch=*"))
     assert len(deltas) == 2, deltas
     d0 = spark.read.parquet(deltas[0]).select("entity_id")
     d1 = spark.read.parquet(deltas[1]).select("entity_id")
